@@ -99,10 +99,8 @@ object Dims {
         case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "PATH_NOT_FOUND" => None
       }
-    def write(df: DataFrame, name: String): Long = {
+    def write(df: DataFrame, name: String): Long =
       graft.sources.Sinks.atomicOverwrite(spark, df, s"$dwhDir/$name")
-      spark.read.parquet(s"$dwhDir/$name").count()
-    }
 
     val r = routes(Tables.csvAllString(spark, s"$csvDir/dummy_routes.csv", Schemas.routesColumns))
     val s = shelterCorridor(Tables.csvAllString(spark, s"$csvDir/dummy_shelter_corridor.csv", Schemas.shelterCorridorColumns))

@@ -40,9 +40,14 @@ object Sinks {
     * table afterwards. At 100 TB that removes one full partition scan
     * per audited sink (the reference logs exactly this count after
     * every insert; see etl.Daily). */
-  def writePartitionedCounted(df: DataFrame, path: String, partitionCol: String): Long = {
+  def writePartitionedCounted(df: DataFrame, path: String, partitionCol: String): Long =
+    countedWrite(df)(writePartitioned(_, path, partitionCol))
+
+  /** Run `write` over `df` and return the rows it wrote, counted by
+    * `Dataset.observe` during the write job itself. */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
     val obs = new org.apache.spark.sql.Observation(s"write_audit_${obsId.incrementAndGet()}")
-    writePartitioned(df.observe(obs, count(lit(1)).as("rows")), path, partitionCol)
+    write(df.observe(obs, count(lit(1)).as("rows")))
     obs.get("rows").asInstanceOf[Long]
   }
 
@@ -112,15 +117,18 @@ object Sinks {
     * not exist, so a concurrent reader can fail transiently, and two
     * concurrent writers can interleave the rename sequence. A table
     * format with a transaction log (Delta/Iceberg, below) is the
-    * answer when concurrent readers/writers are in play. */
-  def atomicOverwrite(spark: SparkSession, df: DataFrame, path: String): Unit = {
+    * answer when concurrent readers/writers are in play.
+    *
+    * Returns the rows written, counted in flight like
+    * [[writePartitionedCounted]]. */
+  def atomicOverwrite(spark: SparkSession, df: DataFrame, path: String): Long = {
     val target = new Path(path)
     val fs = fsOf(spark, target)
     val staging = new Path(target.getParent, target.getName + "._staging")
     val old = new Path(target.getParent, target.getName + "._old")
     recoverSwap(fs, target)
     fs.delete(staging, true)
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val rows = countedWrite(df)(_.write.mode(SaveMode.Overwrite).parquet(staging.toString))
     // a crash after a previous swap-in can leave a stale `._old` while
     // the target exists; renaming onto an existing dir would move the
     // live dir INSIDE it (Hadoop rename semantics) — clear it first
@@ -134,6 +142,7 @@ object Sinks {
       throw new IOException(s"atomicOverwrite: failed to move $staging into place at $target")
     }
     fs.delete(old, true) // best-effort; a leftover is cleaned next call
+    rows
   }
 
   /** Recovery for a crash between atomicOverwrite's two renames: the

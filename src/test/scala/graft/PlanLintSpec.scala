@@ -108,15 +108,31 @@ class PlanLintSpec extends SparkSpec {
     * round introducing a genuinely hot shuffle key fails HERE. */
   private val skewWhitelist: Map[String, String] = Map.empty
 
-  test("EVERY registered query passes the data-aware skew rule at sf0.001") {
+  /** Bounded fan-out crosses (k-means centroid tables, ≤64-row
+    * constant frames) are the engine's documented idiom — the bound
+    * is the largest such table any operator builds. */
+  private val SmallSide = 64L
+
+  /** One sweep of the registry at sf0.001 shared by the three
+    * registry-wide tests: each query is built once, its plan linted
+    * once (only the cartesian-join rule reads `SmallSide`) and its
+    * join keys measured once by the data-aware skew rule. */
+  private lazy val registryFindings: Seq[(String, Seq[PlanLint.Finding])] = {
     val sf = "/root/testdata/sf0.001"
-    val failures = Seq.newBuilder[String]
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) yield {
       try {
-        val found = PlanLint.lintSkew(fn(spark, sf))
-        if (found.nonEmpty && !skewWhitelist.contains(name))
-          failures += s"$name: ${found.mkString("; ")}"
+        val df = fn(spark, sf)
+        name -> (PlanLint.lint(df, SmallSide) ++ PlanLint.lintSkew(df))
       } finally spark.catalog.clearCache()
+    }
+  }
+
+  test("EVERY registered query passes the data-aware skew rule at sf0.001") {
+    val failures = Seq.newBuilder[String]
+    for ((name, all) <- registryFindings) {
+      val found = all.filter(_.rule == "skewed-shuffle-join")
+      if (found.nonEmpty && !skewWhitelist.contains(name))
+        failures += s"$name: ${found.mkString("; ")}"
     }
     val out = failures.result()
     assert(out.isEmpty, s"\n${out.mkString("\n")}")
@@ -137,19 +153,11 @@ class PlanLintSpec extends SparkSpec {
         "fan-out map-side before the only shuffle (TextAnalysis.langIdNgramOf)"))
 
   test("EVERY registered query lints clean of unbounded cross-joins and Scala UDFs") {
-    val sf = "/root/testdata/sf0.001"
-    // bounded fan-out crosses (k-means centroid tables, ≤64-row
-    // constant frames) are the engine's documented idiom — the bound
-    // here is the largest such table any operator builds
-    val SmallSide = 64L
     val failures = Seq.newBuilder[String]
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      try {
-        val found = PlanLint.lint(fn(spark, sf), SmallSide)
-          .filter(f => f.rule == "cartesian-join" || f.rule == "scala-udf")
-        if (found.nonEmpty && !cartesianWhitelist.contains(name))
-          failures += s"$name: ${found.mkString("; ")}"
-      } finally spark.catalog.clearCache()
+    for ((name, all) <- registryFindings) {
+      val found = all.filter(f => f.rule == "cartesian-join" || f.rule == "scala-udf")
+      if (found.nonEmpty && !cartesianWhitelist.contains(name))
+        failures += s"$name: ${found.mkString("; ")}"
     }
     val out = failures.result()
     assert(out.isEmpty, s"\n${out.mkString("\n")}")
@@ -205,15 +213,11 @@ class PlanLintSpec extends SparkSpec {
       "superbucket-level prefix sum: corpus/bucketSize^2 rows (Packing two-level hierarchy)")
 
   test("EVERY registered query's unpartitioned windows are bounded (whitelisted) or absent") {
-    val sf = "/root/testdata/sf0.001"
     val failures = Seq.newBuilder[String]
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      try {
-        val found = PlanLint.lint(fn(spark, sf))
-          .filter(_.rule == "unpartitioned-window")
-        if (found.nonEmpty && !windowWhitelist.contains(name))
-          failures += s"$name: ${found.map(_.node).distinct.mkString("; ")}"
-      } finally spark.catalog.clearCache()
+    for ((name, all) <- registryFindings) {
+      val found = all.filter(_.rule == "unpartitioned-window")
+      if (found.nonEmpty && !windowWhitelist.contains(name))
+        failures += s"$name: ${found.map(_.node).distinct.mkString("; ")}"
     }
     val out = failures.result()
     assert(out.isEmpty, s"\n${out.mkString("\n")}")

@@ -85,6 +85,14 @@ class SinksSpec extends SparkSpec {
       Seq((9L, "a")).toDF("id", "p"), s"$dir/t", "p")
     assert(counted2 === 1L)
     assert(spark.read.parquet(s"$dir/t").count() === 2L) // a replaced, b kept
+    // atomicOverwrite counts the same way: a first write, a swap over
+    // that table from its own rows, and an empty replacement
+    assert(Sinks.atomicOverwrite(spark, df, s"$dir/u") === 3L)
+    val self = spark.read.parquet(s"$dir/u").filter($"p" === "a")
+    assert(Sinks.atomicOverwrite(spark, self, s"$dir/u") === 2L)
+    assert(spark.read.parquet(s"$dir/u").count() === 2L)
+    assert(Sinks.atomicOverwrite(spark, df.filter($"id" < 0), s"$dir/u") === 0L)
+    assert(spark.read.parquet(s"$dir/u").count() === 0L)
   }
 
   test("atomicOverwrite: a failing staging write leaves the target readable and unchanged") {
