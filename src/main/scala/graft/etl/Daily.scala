@@ -93,16 +93,19 @@ object Daily {
     * (cached — reproduces the reference's shared CTE scan, D:172-234,
     * without re-reading per sink), three aggregate sinks written with
     * dynamic partition overwrite of the `tanggal=ds` slice, audit
-    * counts returned (D:236-248). */
+    * counts returned (D:236-248).
+    *
+    * The two slice counts (which fill the caches) run at the same
+    * time, then the three sinks do, through [[Pipeline.concurrently]];
+    * the dimension reads sit inside the `agg_by_route` task so their
+    * schema inference overlaps the other sinks. The caches are dropped
+    * whether or not a sink failed. */
   def run(spark: SparkSession, csvDir: String, dwhDir: String, ds: LocalDate): RunReport = {
     val bus = daySlice(cleanseBus(
       Tables.csvAllString(spark, s"$csvDir/dummy_transaksi_bus.csv", Schemas.busColumns)), ds).cache()
     val halte = daySlice(cleanseHalte(
       Tables.csvAllString(spark, s"$csvDir/dummy_transaksi_halte.csv", Schemas.halteColumns)), ds).cache()
-
-    val realisasi = spark.read.parquet(s"$dwhDir/realisasi_bus")
-    val shelter = spark.read.parquet(s"$dwhDir/shelter_corridor")
-    val routes = spark.read.parquet(s"$dwhDir/routes")
+    def dim(name: String): DataFrame = spark.read.parquet(s"$dwhDir/$name")
 
     // audit counts ride the write job itself (Dataset.observe) — the
     // df holds exactly the ds slice, so rows-written IS the
@@ -110,12 +113,15 @@ object Daily {
     def writePartitioned(df: DataFrame, name: String): Long =
       graft.sources.Sinks.writePartitionedCounted(df, s"$dwhDir/$name", "tanggal")
 
-    val report = RunReport(ds.toString,
-      busRows = bus.count(), halteRows = halte.count(),
-      aggByCard = writePartitioned(aggByCard(bus, halte), "agg_by_card"),
-      aggByRoute = writePartitioned(aggByRoute(bus, halte, realisasi, shelter, routes), "agg_by_route"),
-      aggByTariff = writePartitioned(aggByTariff(bus, halte), "agg_by_tariff"))
-    bus.unpersist(); halte.unpersist()
-    report
+    try {
+      val rows = Pipeline.concurrently(spark, Seq(() => bus.count(), () => halte.count()))
+      val aggs = Pipeline.concurrently(spark, Seq(
+        () => writePartitioned(aggByCard(bus, halte), "agg_by_card"),
+        () => writePartitioned(aggByRoute(bus, halte,
+          dim("realisasi_bus"), dim("shelter_corridor"), dim("routes")), "agg_by_route"),
+        () => writePartitioned(aggByTariff(bus, halte), "agg_by_tariff")))
+      RunReport(ds.toString, busRows = rows(0), halteRows = rows(1),
+        aggByCard = aggs(0), aggByRoute = aggs(1), aggByTariff = aggs(2))
+    } finally { bus.unpersist(); halte.unpersist() }
   }
 }

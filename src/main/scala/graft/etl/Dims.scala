@@ -82,14 +82,19 @@ object Dims {
 
   /** Full DAG-1 run: stage the three CSVs, transform, upsert/reload
     * into `dwhDir` parquet tables. Returns per-table row counts (the
-    * reference's logged audit counts). */
+    * reference's logged audit counts).
+    *
+    * Crash recovery runs first, for all three tables; then the three
+    * loads — they share nothing — run at the same time through
+    * [[Pipeline.concurrently]]. A failing load does not stop the other
+    * two, and its own exception is rethrown once all three ended. */
   def run(spark: SparkSession, csvDir: String, dwhDir: String): Map[String, Long] = {
+    val tables = Seq("routes", "shelter_corridor", "realisasi_bus")
     // a previous run may have crashed mid-swap, leaving the table
     // only under `<name>._old` — restore BEFORE the existence check,
     // or the upsert below silently degrades to truncate-load and
     // discards every previously merged row
-    Seq("routes", "shelter_corridor", "realisasi_bus")
-      .foreach(n => graft.sources.Sinks.recover(spark, s"$dwhDir/$n"))
+    tables.foreach(n => graft.sources.Sinks.recover(spark, s"$dwhDir/$n"))
     // only a missing table means "first load" — any other read error
     // must propagate, or the upsert silently degrades to truncate-load
     // and discards previously merged rows
@@ -99,24 +104,26 @@ object Dims {
         case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "PATH_NOT_FOUND" => None
       }
-    def write(df: DataFrame, name: String): Long =
-      graft.sources.Sinks.atomicOverwrite(spark, df, s"$dwhDir/$name")
-
-    val r = routes(Tables.csvAllString(spark, s"$csvDir/dummy_routes.csv", Schemas.routesColumns))
-    val s = shelterCorridor(Tables.csvAllString(spark, s"$csvDir/dummy_shelter_corridor.csv", Schemas.shelterCorridorColumns))
-    val b = realisasiBus(Tables.csvAllString(spark, s"$csvDir/dummy_realisasi_bus.csv", Schemas.realisasiColumns))
-
+    def staged(file: String, columns: Seq[String]): DataFrame =
+      Tables.csvAllString(spark, s"$csvDir/$file", columns)
     // upsert reads the existing table and replaces it — atomicOverwrite
     // materializes the merge into a staging dir BEFORE the swap touches
     // the source, which both breaks the read-overwrite cycle (no
     // localCheckpoint) and survives a crash at any step
-    val routesMerged = upsert(existing("routes"), r, "route_code")
-    val shelterMerged = upsert(existing("shelter_corridor"), s, "shelter_name_var")
+    def upserted(name: String, incoming: DataFrame, key: String): Long =
+      write(upsert(existing(name), incoming, key), name)
+    def write(df: DataFrame, name: String): Long =
+      graft.sources.Sinks.atomicOverwrite(spark, df, s"$dwhDir/$name")
 
-    Map(
-      "routes" -> write(routesMerged, "routes"),
-      "shelter_corridor" -> write(shelterMerged, "shelter_corridor"),
-      "realisasi_bus" -> write(b, "realisasi_bus")) // truncate-reload, no upsert
+    val counts = Pipeline.concurrently(spark, Seq(
+      () => upserted("routes",
+        routes(staged("dummy_routes.csv", Schemas.routesColumns)), "route_code"),
+      () => upserted("shelter_corridor",
+        shelterCorridor(staged("dummy_shelter_corridor.csv", Schemas.shelterCorridorColumns)),
+        "shelter_name_var"),
+      () => write( // truncate-reload, no upsert
+        realisasiBus(staged("dummy_realisasi_bus.csv", Schemas.realisasiColumns)), "realisasi_bus")))
+    tables.zip(counts).toMap
   }
 
   /** Partition-scoped merge-upsert over a directory-partitioned
