@@ -27,6 +27,21 @@ import scala.util.control.NonFatal
   *      lands a contaminated row in the artifact at all (round 10: 230
   *      of 260 driver rows ran at loadavg > 4 and the artifact was
   *      unusable as a signal).
+  *
+  * Environment (all optional; the gates' other bars are constants):
+  *   - `SPARK_GRAFT_SF_DIR` — the input tables (default: the sf0.1
+  *     test data);
+  *   - `SPARK_GRAFT_BENCH_REPS` — timed runs per query (default 5);
+  *   - `SPARK_GRAFT_BENCH_REQUEUE_LOAD` — the per-row requeue load
+  *     threshold (default 6.0);
+  *   - `SPARK_GRAFT_BENCH_ONLY` — comma-separated query names to run
+  *     (default: all);
+  *   - `SPARK_GRAFT_BENCH_ACTION` — timed action, `count` (default) or
+  *     `noop`;
+  *   - `SPARK_GRAFT_BENCH_OUT` — where the JSON line is also written
+  *     (default: `graft_bench_last.json` in java.io.tmpdir);
+  *   - `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_SHUFFLE_PARTITIONS`, read by
+  *     [[GraftSession]].
   */
 object Bench {
   private def loadavg: String =
@@ -153,10 +168,8 @@ object Bench {
   /** Suite-total wait budget (seconds) shared by the start gate and
     * every requeue gate: 272 queries × a 600 s-per-gate wait cannot fit
     * any driver time box (BENCH_r11–r14 all ended rc=124 inside these
-    * loops). Default 120 s for the WHOLE suite; env-overridable for
-    * humans who want the old patient behaviour. */
-  private var budgetLeft: Int =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_WAIT_BUDGET", "120").toInt
+    * loops). 120 s for the WHOLE suite. */
+  private var budgetLeft: Int = 120
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -168,10 +181,10 @@ object Bench {
     // but tag the artifact "loaded" so no one mistakes it for a clean
     // measurement. Enforced here, in the artifact producer, so every
     // emitted JSON is self-labelling.
-    val gateMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "2.0").toDouble
-    val gateWaitSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_WAIT", "600").toInt
+    val gateMax = 2.0
+    val gateWaitSec = 600
     // Per-query requeue: a row whose observed load (max of start/end
-    // 1-min loadavg) exceeds this is re-run up to BENCH_REQUEUE times,
+    // 1-min loadavg) exceeds this is re-run up to `requeueTries` times,
     // keeping the least-loaded attempt. The threshold must sit ABOVE
     // the bench's own steady-state contribution, which the start gate
     // does not: a multi-second query keeps local[32] busy long enough
@@ -185,7 +198,7 @@ object Bench {
     // co-tenant is still visible in the artifact.
     val requeueMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_REQUEUE_LOAD",
       "6.0").toDouble
-    val requeueTries = sys.env.getOrElse("SPARK_GRAFT_BENCH_REQUEUE", "2").toInt
+    val requeueTries = 2
     // Sibling guard: two graft.Bench JVMs on one host contaminate
     // each other's timings AND the start gate below can loop its full
     // 600 s against the sibling's own load (rounds 12-13: the

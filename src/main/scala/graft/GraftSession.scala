@@ -12,6 +12,19 @@ import org.apache.spark.sql.SparkSession
   *   - ANSI off: the engine mirrors PostgreSQL's guarded-cast semantics
   *     (SURVEY.md §2.6 #33) — casts are pre-guarded by regex/NULLIF so
   *     silent-NULL matches the reference's behavior.
+  *
+  * The shuffle/spill/broadcast codec (`spark.io.compression.codec`)
+  * is left at Spark's own default, lz4, so local bench rows stay
+  * comparable round over round. Choose zstd the standard way —
+  * `spark-submit --conf spark.io.compression.codec=zstd`, or
+  * `-Dspark.io.compression.codec=zstd` in `SPARK_EXTRA_JAVA_OPTS` for
+  * the sbt-forked mains — wherever the core budget is real or shuffle
+  * crosses the network: the ×100-unique A/B
+  * (bench_x100u_codec_ab.json) measured zstd at ×0.53-0.57 the
+  * shuffle bytes of lz4 on four shuffle-heavy queries; wall-clock
+  * flips with the core budget — at local[4] the compression CPU
+  * competes with the query (−24%..+26%), at 32 cores the halved bytes
+  * win outright (q87 ×0.66).
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -29,19 +42,6 @@ object GraftSession {
   def shufflePartitions: String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
 
-  /** Shuffle/spill/broadcast compression codec — parameterised
-    * (guide §2.3: "there is no universal answer — measure both") with
-    * the Spark default lz4 kept locally so the bench's round-over-round
-    * continuity is untouched. The round-16 ×100-unique A/B
-    * (bench_x100u_codec_ab.json) measured zstd at ×0.53-0.57 the
-    * shuffle BYTES of lz4 on four shuffle-heavy queries; wall-clock
-    * flips with the core budget — at the harness's local[4] the
-    * compression CPU competes with the query (−24%..+26%), at 32
-    * cores the halved bytes win outright (q87 ×0.66). On a real
-    * cluster the bytes also cross network/disks — set
-    * SPARK_GRAFT_IO_CODEC=zstd wherever the core budget is real. */
-  def ioCodec: String = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
-
   /** Per-JVM warehouse for managed (e.g. bucketed) tables — keeps
     * runs isolated and the repo clean. */
   private lazy val warehouseDir: String =
@@ -52,7 +52,6 @@ object GraftSession {
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.io.compression.codec", ioCodec)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Cleansing / normalization column expressions.
   *
@@ -68,7 +67,4 @@ object Normalize {
   /** `NULLIF(trim(x),'')::integer` (stage_csv_dims_to_pg.py:134). */
   def nullifEmptyInt(c: Column): Column =
     nullif(trim(c), lit("")).cast("int")
-
-  /** text → numeric(18,2) for money columns (dag_datapelangan.py:72). */
-  def toAmount(c: Column): Column = c.cast(DecimalType(18, 2))
 }

@@ -72,16 +72,6 @@ object TextFunctions {
     }
   }
 
-  /** One-shot form for callers that don't control the projection —
-    * prefer langScores + detectLangFromScores in hot paths. */
-  def detectLang(w: Column): Column = {
-    val s = langs.map(l => l -> stopwordCount(w, l))
-    def rest(excl: String) = s.collect { case (l, c) if l != excl => c }
-    s.init.foldRight(lit(s.last._1)) { case ((l, c), els) =>
-      when(c >= greatest(rest(l): _*), lit(l)).otherwise(els)
-    }
-  }
-
   /** Mean word length (separator-adjusted). Shared by quality scoring
     * and the corpus pipeline so the formula lives in exactly one
     * place (its DuckDB mirror lives in the q19/q31 oracles). */

@@ -97,50 +97,6 @@ object Urls {
   def hostOf(u: Column): Column =
     lower(regexp_extract(u, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?:]*)", 1))
 
-  /** Multi-label public suffixes — RETIRED as the lookup table
-    * ([[registeredDomain]] now delegates to the native
-    * [[graft.plans.RegisteredDomain]] expression backed by the FULL
-    * ~9.5k-rule Public Suffix List, embedded from publicsuffix.org's
-    * public data); kept as documentation of the motivating cases and
-    * as the fixture list for parity tests. A host under one of these
-    * registers one label DEEPER: the registrable domain of
-    * `shop.example.co.uk` is `example.co.uk`, not `co.uk` — the
-    * two-label rule would fold every UK site into one pseudo-domain
-    * and a docs-per-domain cap (q267) would then throttle the whole
-    * country as a single "site". */
-  val MultiLabelSuffixes: Seq[String] = Seq(
-    "co.uk", "org.uk", "ac.uk", "gov.uk", "net.uk", "me.uk", "ltd.uk",
-    "plc.uk", "sch.uk", "nhs.uk",
-    "com.au", "net.au", "org.au", "edu.au", "gov.au", "asn.au", "id.au",
-    "co.jp", "ne.jp", "or.jp", "ac.jp", "go.jp", "ad.jp", "ed.jp", "lg.jp",
-    "gr.jp",
-    "co.nz", "net.nz", "org.nz", "govt.nz", "ac.nz", "geek.nz", "school.nz",
-    "com.br", "net.br", "org.br", "gov.br", "edu.br",
-    "com.cn", "net.cn", "org.cn", "gov.cn", "edu.cn", "ac.cn",
-    "com.mx", "org.mx", "net.mx", "gob.mx", "edu.mx",
-    "co.in", "net.in", "org.in", "gen.in", "firm.in", "ind.in", "ac.in",
-    "edu.in", "res.in", "gov.in", "nic.in",
-    "co.za", "net.za", "org.za", "gov.za", "ac.za", "web.za",
-    "com.sg", "net.sg", "org.sg", "edu.sg", "gov.sg",
-    "com.tr", "net.tr", "org.tr", "gen.tr", "web.tr", "edu.tr", "gov.tr",
-    "com.ar", "net.ar", "org.ar", "gob.ar", "edu.ar",
-    "com.tw", "net.tw", "org.tw", "edu.tw", "gov.tw", "idv.tw",
-    "co.kr", "ne.kr", "or.kr", "re.kr", "go.kr", "ac.kr", "pe.kr",
-    "com.hk", "net.hk", "org.hk", "edu.hk", "gov.hk", "idv.hk",
-    "com.my", "net.my", "org.my", "edu.my", "gov.my",
-    "co.id", "net.id", "or.id", "web.id", "ac.id", "sch.id", "go.id",
-    "com.ua", "net.ua", "org.ua", "edu.ua", "gov.ua", "in.ua",
-    "co.il", "net.il", "org.il", "ac.il", "gov.il", "muni.il",
-    "com.pl", "net.pl", "org.pl", "edu.pl", "gov.pl", "waw.pl",
-    "com.vn", "net.vn", "org.vn", "edu.vn", "gov.vn",
-    "com.ph", "net.ph", "org.ph", "edu.ph", "gov.ph",
-    "co.th", "in.th", "ac.th", "go.th", "or.th", "net.th",
-    "com.eg", "net.eg", "org.eg", "edu.eg", "gov.eg",
-    "com.ng", "net.ng", "org.ng", "edu.ng", "gov.ng",
-    "com.pk", "net.pk", "org.pk", "edu.pk", "gov.pk",
-    "com.bd", "net.bd", "org.bd", "edu.bd", "gov.bd",
-    "co.ke", "or.ke", "ne.ke", "go.ke", "ac.ke")
-
   /** Registrable domain of a (lowercased) host — the aggregation key
     * domain-level curation uses (docs-per-domain caps, reputation
     * scores key on the SITE, not each subdomain): the public suffix

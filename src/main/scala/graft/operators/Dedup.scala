@@ -119,12 +119,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** MinHash signatures: 12 independent min-aggregates over the
-    * shingle rows (no per-hash explode — 12 agg expressions in one
-    * shuffle), then 4 band signatures of 3 hashes each. */
-  def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    minhashSignaturesFrom(shingleRows(spark, dir))
-
   /** Raw per-document minhash components (doc_id, h0..h11) — the
     * signature BEFORE banding; [[signatureJaccard]] compares these
     * component-wise to estimate Jaccard without touching shingles. */
@@ -182,7 +176,7 @@ object Dedup {
   /** Exact Jaccard for a set of candidate pairs via the shingle
     * inverted index. */
   private def verifyJaccardOn(sh: DataFrame, candidates: DataFrame,
-                              ordered: Boolean = true): DataFrame = {
+                              ordered: Boolean): DataFrame = {
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = candidates
       .join(sh.select(col("doc_id").as("da"), col("s")), Seq("da"))
@@ -421,46 +415,40 @@ object Dedup {
     * sides; the anti-join shuffles on the 128-bit fingerprint — the
     * natural key, uniformly distributed by construction (no skew
     * possible); within-batch dedup is the same keyed min-aggregate.
-    * When the historical store dwarfs the batch, the [[bloomContamination]]
-    * bit-set machinery drops in as a broadcast pre-filter so only
-    * probable-duplicate fingerprints reach the shuffle. */
+    * The [[bloomContamination]] bit-set machinery runs as a broadcast
+    * pre-filter so only probable-duplicate fingerprints reach the
+    * shuffle. */
   def incrementalIngest(spark: SparkSession, dir: String,
-                        histMod: Int = 10, histKeep: Int = 8,
-                        bloomPrefilter: Boolean = true): DataFrame = {
+                        histMod: Int = 10, histKeep: Int = 8): DataFrame = {
     val f = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), md5(normalizeText(col("text"))).as("fp"))
       .cache()
     val hist = f.filter(col("doc_id") % histMod < histKeep)
       .select(col("fp")).distinct()
     val inc = f.filter(col("doc_id") % histMod >= histKeep)
-    // Bloom pre-filter (EXACT rewrite — same output, gated against the
-    // same oracle as the plain path): the historical store collapses
-    // to a ≤2^20-position bit set that broadcasts; incoming rows
+    // Bloom pre-filter (EXACT rewrite of a plain fp left_anti join —
+    // same output, gated by the same oracle): the historical store
+    // collapses to a ≤2^20-position bit set that broadcasts; incoming rows
     // missing ANY position are definitely novel and never enter the
     // anti-join shuffle. Only the possible-duplicates (bloom hits —
     // true dups + deterministic false positives) shuffle against the
     // store. When the store dwarfs the batch this turns a
     // store-sized shuffle into a store-sized *local* bit-set scan
     // plus a batch-hit-sized shuffle.
-    val novel =
-      if (!bloomPrefilter) inc.join(hist, Seq("fp"), "left_anti")
-      else {
-        val positions = (0 until BloomK).map(j => bloomPos(col("fp"), j))
-        val bits = hist
-          .select(explode(array(positions: _*)).as("pos")).distinct()
-          .withColumn("hit", lit(1))
-        val probed = inc
-          .select(col("doc_id"), col("fp"), explode(array(positions: _*)).as("pos"))
-          .join(broadcast(bits), Seq("pos"), "left")
-          .groupBy(col("doc_id"), col("fp"))
-          .agg(sum(coalesce(col("hit"), lit(0))).as("hits"))
-        val definitelyNovel = probed.filter(col("hits") < BloomK)
-          .select(col("doc_id"), col("fp"))
-        val possibleDup = probed.filter(col("hits") === BloomK)
-          .select(col("doc_id"), col("fp"))
-        definitelyNovel.unionByName(possibleDup.join(hist, Seq("fp"), "left_anti"))
-      }
-    novel
+    val positions = (0 until BloomK).map(j => bloomPos(col("fp"), j))
+    val bits = hist
+      .select(explode(array(positions: _*)).as("pos")).distinct()
+      .withColumn("hit", lit(1))
+    val probed = inc
+      .select(col("doc_id"), col("fp"), explode(array(positions: _*)).as("pos"))
+      .join(broadcast(bits), Seq("pos"), "left")
+      .groupBy(col("doc_id"), col("fp"))
+      .agg(sum(coalesce(col("hit"), lit(0))).as("hits"))
+    val definitelyNovel = probed.filter(col("hits") < BloomK)
+      .select(col("doc_id"), col("fp"))
+    val possibleDup = probed.filter(col("hits") === BloomK)
+      .select(col("doc_id"), col("fp"))
+    definitelyNovel.unionByName(possibleDup.join(hist, Seq("fp"), "left_anti"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), col("fp"))
       .orderBy(col("doc_id"))

@@ -823,43 +823,6 @@ object Multimodal {
       .orderBy(col("da"), col("db"))
   }
 
-  /** The retired round-15 id-level band self-join formulation of
-    * [[pHashNearDup]] — kept ONLY as the Round16Spec differential
-    * witness; not on any query path. */
-  private[graft] def pHashNearDupIdJoin(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val h = Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      .as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions(_.map { id =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(encodePatternPng(id)))
-        val hex = aHashOf(img)
-        (id, java.lang.Long.parseLong(hex.substring(0, 8), 16),
-          java.lang.Long.parseLong(hex.substring(8, 16), 16))
-      })
-      .toDF("id", "hi", "lo")
-      .withColumn("bands", array(
-        (col("hi") / 65536L).cast("long"), pmod(col("hi"), lit(65536L)),
-        (col("lo") / 65536L).cast("long"), pmod(col("lo"), lit(65536L))))
-      .select(col("id"), col("hi"), col("lo"),
-        posexplode(col("bands")).as(Seq("band", "bk")))
-      .cache()
-    val l = h.select(col("band"), col("bk"), col("id").as("da"),
-      col("hi").as("hia"), col("lo").as("loa"))
-    val r = h.select(col("band"), col("bk"), col("id").as("db"),
-      col("hi").as("hib"), col("lo").as("lob"))
-    l.join(r, Seq("band", "bk"))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db"), col("hia"), col("loa"),
-        col("hib"), col("lob")).distinct()
-      .withColumn("hamming",
-        expr("bit_count(hia ^ hib) + bit_count(loa ^ lob)").cast("long"))
-      .filter(col("hamming") >= 1 && col("hamming") <= MaxHamming)
-      .select(col("da"), col("db"), col("hamming"))
-      .orderBy(col("da"), col("db"))
-  }
-
   /** Frame sampling via binary slicing — every `stride` bytes take an
     * 8-byte "frame" window; pure column expressions, no decode. */
   def frameSample(spark: SparkSession, dir: String, stride: Int = 64): DataFrame =

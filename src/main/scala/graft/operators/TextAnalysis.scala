@@ -45,7 +45,7 @@ object TextAnalysis {
   val LangIdNgrams: Seq[Int] = Seq(2, 3, 4)
 
   /** Bucket of one n-gram: first 3 hex digits of md5("n|gram"). */
-  private def gramBucket(g: Column): Column =
+  private[graft] def gramBucket(g: Column): Column =
     conv(substring(md5(g), 1, 3), 16, 10).cast("long")
 
   /** Hashed char-n-gram language classifier — the production-shaped
@@ -128,57 +128,6 @@ object TextAnalysis {
       .crossJoin(broadcast(docs.filter(!held).agg(count(lit(1)).as("d_all"))))
       .select(col("lang").as("cand_lang"),
         (length(bin(expr("d_all div d_l"))) - 1).cast("long").as("prior_bits"))
-    val scored = gcounts
-      .crossJoin(broadcast(totals))
-      .join(broadcast(model), Seq("bucket", "cand_lang"), "left")
-      .withColumn("b_", col("n_l") + lit(LangIdBuckets.toLong))
-      .withColumn("a_", coalesce(col("c"), lit(0L)) + lit(1L))
-      .withColumn("bits", (length(bin(expr("b_ div a_"))) - 1).cast("long"))
-      .groupBy(col("doc_id"), col("lang"), col("cand_lang"))
-      .agg(sum(col("bits") * col("gcnt")).as("gram_bits"))
-      .join(broadcast(priors), Seq("cand_lang"))
-      .withColumn("cost", col("gram_bits") + col("prior_bits"))
-    scored.groupBy(col("doc_id"), col("lang"))
-      .agg(min(struct(col("cost"), col("cand_lang"))).as("m"))
-      .select(col("doc_id"), col("lang"),
-        col("m.cand_lang").as("detected"),
-        held.cast("int").as("heldout"))
-      .groupBy(col("heldout"), col("lang"), col("detected"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("heldout"), col("lang"), col("detected"))
-  }
-
-  /** The retired round-15 formulation of [[langIdNgramOf]] — three
-    * unioned gram scans, model/totals re-deriving the gram pipeline —
-    * kept ONLY as the Round16Spec differential witness; not registered
-    * as a query. */
-  private[graft] def langIdNgramThreePass(docsIn: DataFrame): DataFrame = {
-    val d = docsIn
-      .select(col("doc_id"), col("lang"),
-        substring(normalizeText(col("text")), 1, LangIdMaxChars).as("t"))
-    val grams = LangIdNgrams.map { n =>
-      d.select(col("doc_id"), col("lang"), col("t"),
-          explode(when(length(col("t")) >= n,
-              sequence(lit(1), length(col("t")) - (n - 1)))
-            .otherwise(expr("CAST(array() AS ARRAY<INT>)"))).as("i"))
-        .select(col("doc_id"), col("lang"),
-          gramBucket(concat(lit(s"$n|"), expr(s"substring(t, i, $n)"))).as("bucket"))
-    }.reduce(_ unionByName _)
-    val held = pmod(col("doc_id"), lit(LangIdTrainMod)) === 0
-    val train = grams.filter(!held)
-    val model = train.groupBy(col("bucket"), col("lang")).agg(count(lit(1)).as("c"))
-      .select(col("bucket"), col("lang").as("cand_lang"), col("c"))
-    val totals = train.groupBy(col("lang")).agg(count(lit(1)).as("n_l"))
-      .select(col("lang").as("cand_lang"), col("n_l"))
-    val docs = docsIn.select(col("doc_id"), col("lang"))
-    val priors = docs.filter(!held)
-      .groupBy(col("lang")).agg(count(lit(1)).as("d_l"))
-      .crossJoin(broadcast(docs.filter(!held).agg(count(lit(1)).as("d_all"))))
-      .select(col("lang").as("cand_lang"),
-        (length(bin(expr("d_all div d_l"))) - 1).cast("long").as("prior_bits"))
-    val gcounts = grams
-      .groupBy(col("doc_id"), col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("gcnt"))
     val scored = gcounts
       .crossJoin(broadcast(totals))
       .join(broadcast(model), Seq("bucket", "cand_lang"), "left")
@@ -1012,35 +961,6 @@ object TextAnalysis {
       .select(col("src_a").as("source"), col("cnt").as("sz"))
     val pairs = melted.filter(col("src_b").isNotNull)
       .select(col("src_a"), col("src_b"), col("cnt").as("inter"))
-    pairs
-      .join(sizes.select(col("source").as("src_a"), col("sz").as("sz_a")), Seq("src_a"))
-      .join(sizes.select(col("source").as("src_b"), col("sz").as("sz_b")), Seq("src_b"))
-      .select(col("src_a"), col("src_b"), col("inter"), col("sz_a"), col("sz_b"),
-        round(col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")).cast("double"), 6).as("jaccard"))
-      .orderBy(col("src_a"), col("src_b"))
-  }
-
-  /** The retired round-15 formulation of [[sourceOverlap]] — kept
-    * ONLY as the Round16Spec differential witness (explicit 4-pass
-    * distinct + self-join); not registered as a query. */
-  private[graft] def sourceOverlapSelfJoin(spark: SparkSession, dir: String,
-                                           maxSources: Int = 32): DataFrame = {
-    val d = Tables.loadSpread(spark, dir, "documents")
-    val sh = d.select(col("source"), explode(
-        graft.functions.TextFunctions.shingles(words(col("text")), 3)).as("sh"))
-      .distinct()
-    val hot = sh.groupBy(col("sh"))
-      .agg(countDistinct(col("source")).as("n_src"))
-      .filter(col("n_src") > maxSources)
-      .select(col("sh"))
-    val cool = sh.join(broadcast(hot), Seq("sh"), "left_anti")
-    val sizes = cool.groupBy(col("source")).agg(count(lit(1)).as("sz"))
-    val pairs = cool.select(col("sh"), col("source").as("src_a"))
-      .join(cool.select(col("sh"), col("source").as("src_b")), Seq("sh"))
-      .filter(col("src_a") < col("src_b"))
-      .groupBy(col("src_a"), col("src_b"))
-      .agg(count(lit(1)).as("inter"))
     pairs
       .join(sizes.select(col("source").as("src_a"), col("sz").as("sz_a")), Seq("src_a"))
       .join(sizes.select(col("source").as("src_b"), col("sz").as("sz_b")), Seq("src_b"))

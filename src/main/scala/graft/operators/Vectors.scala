@@ -161,10 +161,6 @@ object Vectors {
       .limit(k)
   }
 
-  /** IVF assignment of every corpus vector to its nearest centroid. */
-  def ivfAssignment(spark: SparkSession, dir: String): DataFrame =
-    ivfAssignmentWith(emb(spark, dir), firstKCentroids(spark, dir))
-
   /** Two-level (coarse-quantized) assignment preparation, driver-side
     * over the MODEL (k centroids — the same bounded-model contract as
     * the Lloyd sum collect): coarse seeds are the centroids with

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -76,29 +75,6 @@ object Winnowing {
         explode(array_distinct(transform(
           sequence(lit(1), greatest(size(col("hs")) - (W - 1), lit(1))),
           p => array_min(slice(col("hs"), p, lit(W)))))).as("fp"))
-      .distinct()
-  }
-
-  /** The retired round-15 formulation of [[fingerprints]]
-    * (posexplode + doc-partitioned window min) — kept ONLY as the
-    * Round16Spec differential witness; not on any query path. */
-  private[graft] def fingerprintsWindowed(d: DataFrame): DataFrame = {
-    val grams = d
-      .select(col("doc_id"), normalizeText(col("text")).as("norm"))
-      .filter(length(col("norm")) >= K)
-      .select(col("doc_id"),
-        posexplode(transform(
-          sequence(lit(1), length(col("norm")) - (K - 1)),
-          i => md5(col("norm").substr(i, lit(K))))))
-      .select(col("doc_id"), (col("pos") + 1).as("p"), col("col").as("h"))
-    val perDoc = Window.partitionBy(col("doc_id"))
-    val frame = Window.partitionBy(col("doc_id")).orderBy(col("p"))
-      .rowsBetween(Window.currentRow, W - 1)
-    grams
-      .withColumn("n", count(lit(1)).over(perDoc))
-      .withColumn("fp", min(col("h")).over(frame))
-      .filter(col("p") <= greatest(col("n") - (W - 1), lit(1)))
-      .select(col("doc_id"), col("fp"))
       .distinct()
   }
 

@@ -1244,38 +1244,6 @@ object Snapshots {
     claimExactlyAfter(spark, tableDir, live, m)
   }
 
-  /** Zero-copy SHALLOW CLONE — the `CREATE TABLE dst SHALLOW CLONE
-    * src` analog (Delta/Iceberg snapshot-reference clones): publish,
-    * as the clone's v1, the source's LIVE manifest with every
-    * data-dir / deletion-vector / stat-file reference rewritten
-    * relative to the clone root (`../src/d-…`). O(manifest) work,
-    * zero data bytes copied — cloning a 100 TB table costs one small
-    * file write. Every reader resolves dirs through the same
-    * `new Path(tableDir, dir)` seam, so plain reads, time travel,
-    * min/max- and bitmap-pruned reads and DV application all work on
-    * the clone unchanged. Divergence is copy-on-write by
-    * construction: commits to the clone write their OWN data dirs
-    * under the clone root; commits to the source are invisible to the
-    * clone (it pinned one manifest). The caveat is Delta's too:
-    * vacuuming the SOURCE can reclaim dirs a live clone still
-    * references — source retention policy must cover clones. */
-  def shallowClone(spark: SparkSession, srcTableDir: String,
-                   dstTableDir: String): String = {
-    val srcLive = currentVersion(spark, srcTableDir).getOrElse(
-      throw new IOException(s"Snapshots.shallowClone: no committed version at $srcTableDir"))
-    val m = readManifest(spark, srcTableDir, srcLive)
-    val rel = java.nio.file.Paths.get(dstTableDir).toAbsolutePath.normalize()
-      .relativize(java.nio.file.Paths.get(srcTableDir).toAbsolutePath.normalize())
-      .toString.replace(java.io.File.separatorChar, '/')
-    def re(d: String) = s"$rel/$d"
-    val cloned = m.copy(
-      dataDir = m.dataDir.map(re),
-      partitions = m.partitions.map { case (v, d) => (v, re(d)) },
-      stats = m.stats.map(s => s.copy(relPath = re(s.relPath))),
-      dvs = m.dvs.map { case (dv, owner) => (re(dv), re(owner)) })
-    claimExactly(spark, dstTableDir, 1, cloned)
-  }
-
   // --------------------------------------------------- change data feed
 
   /** Change-data-feed rows between two retained versions: one row per
@@ -1402,30 +1370,38 @@ object Snapshots {
       if (nDirs > maxDirs) Some(compact(spark, tableDir)) else None
     }
 
-  /** Zero-copy SHALLOW CLONE (Delta-style): publish `targetDir` as a
-    * new snapshot table whose v1 manifest references the SOURCE
-    * table's data files by absolute path — no bytes are copied, the
-    * clone commits in manifest-write time however large the source.
-    * Subsequent commits on the clone write their data dirs locally
-    * and diverge freely: a partition-scoped merge rewrites only the
-    * touched partitions into the clone's own dirs while untouched
-    * partitions keep reading the source's files; the source never
-    * observes any of it. File stats and deletion vectors are carried
-    * (absolutized), so data skipping and DV masking survive the clone.
+  /** Zero-copy SHALLOW CLONE — the `CREATE TABLE dst SHALLOW CLONE
+    * src` analog (Delta/Iceberg snapshot-reference clones): publish,
+    * as `targetDir`'s v1, the source's LIVE manifest with every
+    * data-dir / deletion-vector / stat-file reference rewritten to the
+    * source's fully-qualified ABSOLUTE path (`file:/…/src/d-…`). No
+    * bytes are copied — the clone commits in manifest-write time
+    * however large the source. Every reader resolves dirs through the
+    * same `new Path(tableDir, dir)` seam, so plain reads, time travel,
+    * min/max- and bitmap-pruned reads and DV application all work on
+    * the clone unchanged, and a clone of a clone keeps pointing at the
+    * original files. Subsequent commits on the clone write their data
+    * dirs locally and diverge freely: a partition-scoped merge
+    * rewrites only the touched partitions into the clone's own dirs
+    * while untouched partitions keep reading the source's files; the
+    * source never observes any of it.
+    *
+    * Two guards refuse a clone that would publish a broken manifest:
+    *   - the target must have NO commit history — not even a vacuumed
+    *     one, whose later versions survive and would sit on top of a
+    *     re-claimed v1 as spliced foreign history;
+    *   - no borrowed dir path may contain a manifest delimiter (`=` or
+    *     a newline), which the partition-line parser would split on.
     *
     * Lifetime contract (same as Delta/Iceberg shallow clones): the
     * clone borrows the source's files, so a `vacuum` on the SOURCE
     * that drops the cloned version's dirs breaks the clone — pin the
     * source's retention for as long as the clone (or any of its
     * descendant versions) lives. `vacuum` on the CLONE is always safe:
-    * it only ever deletes dirs under the clone's own root.
-    *
-    * The target must not already be a snapshot table (the bootstrap
-    * claims exactly v1, CAS-protected like any bootstrap). */
-  def cloneShallow(spark: SparkSession, sourceDir: String, targetDir: String,
-                   version: Option[String] = None): String = {
-    val v = version.getOrElse(currentVersion(spark, sourceDir).getOrElse(
-      throw new IOException(s"cloneShallow: $sourceDir has no committed version")))
+    * it only ever deletes dirs under the clone's own root. */
+  def shallowClone(spark: SparkSession, sourceDir: String, targetDir: String): String = {
+    val v = currentVersion(spark, sourceDir).getOrElse(
+      throw new IOException(s"Snapshots.shallowClone: no committed version at $sourceDir"))
     val m = readManifest(spark, sourceDir, v)
     // fully-QUALIFIED source root (file:/… / hdfs://…): file listings
     // compare qualified paths, so borrowed-dir names must be stored in
@@ -1441,7 +1417,7 @@ object Snapshots {
     def absDir(d: String): String = {
       val a = abs(d)
       require(!a.contains("=") && !a.contains("\n"),
-        s"cloneShallow: source dir '$a' contains a manifest delimiter")
+        s"Snapshots.shallowClone: source dir '$a' contains a manifest delimiter")
       a
     }
     val cloned = m.copy(
@@ -1454,7 +1430,7 @@ object Snapshots {
     // its later versions, and claiming a retired low number would
     // splice foreign history under them
     require(listVersions(spark, targetDir).isEmpty,
-      s"cloneShallow: target $targetDir is already a snapshot table")
+      s"Snapshots.shallowClone: target $targetDir is already a snapshot table")
     fsOf(spark, tgt).mkdirs(tgt)
     claimExactly(spark, targetDir, 1, cloned)
   }

@@ -304,11 +304,6 @@ object Warc {
       }
     }
 
-  /** Parse one whole in-memory (decompressed) WARC buffer — the
-    * spec/fixture convenience wrapper over [[recordIterator]]. */
-  private[graft] def parseWarc(file: String, stream: Array[Byte]): Seq[WarcRecord] =
-    recordIterator(file, new java.io.ByteArrayInputStream(stream)).toSeq
-
   /** Split an HTTP response payload into (status, content-type,
     * x-robots-tag, body). */
   private def parseHttp(file: String,

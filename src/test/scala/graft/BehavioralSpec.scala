@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{Affinity, Behavioral, Dedup}
 
 /** Semantic tests for the behavioral-analytics (funnel, cohort,

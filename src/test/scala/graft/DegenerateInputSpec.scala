@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{Sharding, TextAnalysis}
 
 /** Degenerate-input hardening for the text/ordering operators behind

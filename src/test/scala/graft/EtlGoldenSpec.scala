@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions._
 import graft.etl.{Daily, Dims}
 
 /** Golden end-to-end test of both pipelines over the reference's own
-  * five CSVs (read-only at /root/reference/data), asserting the
+  * five CSVs (read-only at [[SparkSpec.ReferenceDataDir]]), asserting the
   * FIXTURES.md golden sample for ds=2025-07-15 plus the documented
   * faithful weirdness (all-NULL realisasi dates, fan-out join
   * inflation).
   */
 class EtlGoldenSpec extends SparkSpec {
-  private val csvDir = "/root/reference/data"
+  private val csvDir = SparkSpec.ReferenceDataDir
   private lazy val dwhDir = Files.createTempDirectory("graft_dwh").toString
 
   test("DAG1: dims load with reference row counts") {

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 /** SimplifyRedundantCase: injected rule folds idempotent string
   * normalization stacks and preserves semantics. */
 class OptimizerRuleSpec extends SparkSpec {
-  import spark.implicits._
-
   test("upper(upper(x)) folds to a single upper in the optimized plan") {
     // read from parquet so ConvertToLocalRelation can't pre-evaluate
     val src = spark.read.parquet("/root/testdata/sf0.001/region.parquet")

@@ -8,8 +8,6 @@ import graft.plans.PlanLint
 /** The plan linter must catch each anti-pattern it names and stay
   * silent on the engine's own (policed) query shapes. */
 class PlanLintSpec extends SparkSpec {
-  import spark.implicits._
-
   private def rules(df: org.apache.spark.sql.DataFrame): Set[String] =
     PlanLint.lint(df).map(_.rule).toSet
 

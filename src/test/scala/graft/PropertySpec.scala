@@ -111,7 +111,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("chunk windows cover [1,n] exactly with stride starts and bounded lengths") {
-    import graft.functions.TextFunctions.words
     val size = graft.operators.TextAnalysis.ChunkSize
     val stride = graft.operators.TextAnalysis.ChunkStride
     // random token counts incl. the edges: 0-ish (empty text → 1 token), < size, = size, size+1

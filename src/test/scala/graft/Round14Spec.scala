@@ -99,7 +99,7 @@ class Round14Spec extends SparkSpec {
     // subset was simply wrong: the real PSL rule is the WILDCARD
     // `*.sch.uk` (every school is its own registry), so
     // www.example.sch.uk is itself registrable, not example.sch.uk
-    val suffixes = functions.Urls.MultiLabelSuffixes.filterNot(_ == "sch.uk")
+    val suffixes = RetiredFormulations.MultiLabelSuffixes.filterNot(_ == "sch.uk")
     val hosts = suffixes.map(s => s"www.example.$s")
     val got = hosts.toDF("h")
       .select(functions.Urls.registeredDomain(col("h")).as("d"))

@@ -19,8 +19,6 @@ import graft.operators.{QualityClassifier, TextAnalysis, Vectors}
   *  - q168 collocations: TakeOrdered top-k ≡ the global rank filter.
   */
 class Round15Spec extends SparkSpec {
-  import spark.implicits._
-
   private val sf = "/root/testdata/sf0.001"
 
   test("adaptiveBandBits: fixture scales stay on 3 bits / 20 bands; growth is ceil-log") {

@@ -6,8 +6,8 @@ import graft.operators.{Multimodal, TextAnalysis, Winnowing}
 
 /** Round-16 optimization proofs: every rewrite in this round must
   * produce BIT-IDENTICAL results to the formulation it replaces —
-  * the retired formulation stays in the codebase as a private
-  * witness and these tests diff against it.
+  * the retired formulation stays in test scope
+  * ([[RetiredFormulations]]) and these tests diff against it.
   *
   *  - q169 source overlap: single-pass per-shingle source-set melt
   *    ≡ the 4-pass distinct + self-join;
@@ -25,7 +25,7 @@ class Round16Spec extends SparkSpec {
   test("q169 source overlap: source-set melt ≡ the retired self-join") {
     val got = TextAnalysis.sourceOverlap(spark, sf).collect().toSeq
     spark.catalog.clearCache()
-    val want = TextAnalysis.sourceOverlapSelfJoin(spark, sf).collect().toSeq
+    val want = RetiredFormulations.sourceOverlapSelfJoin(spark, sf).collect().toSeq
     assert(got === want)
     assert(got.nonEmpty) // the diff must not pass vacuously
     spark.catalog.clearCache()
@@ -39,7 +39,7 @@ class Round16Spec extends SparkSpec {
       val got = TextAnalysis.sourceOverlap(spark, sf, maxSources = cap)
         .collect().toSeq
       spark.catalog.clearCache()
-      val want = TextAnalysis.sourceOverlapSelfJoin(spark, sf, maxSources = cap)
+      val want = RetiredFormulations.sourceOverlapSelfJoin(spark, sf, maxSources = cap)
         .collect().toSeq
       assert(got === want, s"cap=$cap")
       spark.catalog.clearCache()
@@ -50,7 +50,7 @@ class Round16Spec extends SparkSpec {
     val docs = sources.Tables.loadSpread(spark, sf, "documents")
     val got = TextAnalysis.langIdNgramOf(docs).collect().toSeq
     spark.catalog.clearCache()
-    val want = TextAnalysis.langIdNgramThreePass(docs).collect().toSeq
+    val want = RetiredFormulations.langIdNgramThreePass(docs).collect().toSeq
     assert(got === want)
     assert(got.nonEmpty)
     spark.catalog.clearCache()
@@ -61,7 +61,7 @@ class Round16Spec extends SparkSpec {
     val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getString(1))
     val got = Winnowing.fingerprintsOf(docs).collect().map(key).sortBy(identity).toSeq
     spark.catalog.clearCache()
-    val want = Winnowing.fingerprintsWindowed(docs).collect().map(key).sortBy(identity).toSeq
+    val want = RetiredFormulations.fingerprintsWindowed(docs).collect().map(key).sortBy(identity).toSeq
     assert(got === want)
     assert(got.nonEmpty)
     spark.catalog.clearCache()
@@ -82,7 +82,7 @@ class Round16Spec extends SparkSpec {
     ).toDF("doc_id", "text")
     val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getString(1))
     val got = Winnowing.fingerprintsOf(docs).collect().map(key).sortBy(identity).toSeq
-    val want = Winnowing.fingerprintsWindowed(docs).collect().map(key).sortBy(identity).toSeq
+    val want = RetiredFormulations.fingerprintsWindowed(docs).collect().map(key).sortBy(identity).toSeq
     assert(got === want)
     assert(!got.exists(_._1 == 1L))
     assert(got.count(_._1 == 2L) === 1) // single truncated-window min
@@ -92,7 +92,7 @@ class Round16Spec extends SparkSpec {
   test("q226 phash near-dup: value-level band join ≡ the retired id-level self-join") {
     val got = Multimodal.pHashNearDup(spark, sf).collect().toSeq
     spark.catalog.clearCache()
-    val want = Multimodal.pHashNearDupIdJoin(spark, sf).collect().toSeq
+    val want = RetiredFormulations.pHashNearDupIdJoin(spark, sf).collect().toSeq
     assert(got === want)
     assert(got.nonEmpty)
     spark.catalog.clearCache()
@@ -104,7 +104,7 @@ class Round16Spec extends SparkSpec {
     val got = Winnowing.sharedFingerprintPairs(spark, sf).collect().toSeq
     spark.catalog.clearCache()
     val docs = sources.Tables.loadSpread(spark, sf, "documents")
-    val fp = Winnowing.fingerprintsWindowed(docs).cache()
+    val fp = RetiredFormulations.fingerprintsWindowed(docs).cache()
     val counts = fp.groupBy(col("doc_id")).agg(count(lit(1)).as("nfp"))
     val rare = fp.groupBy(col("fp")).agg(count(lit(1)).as("docs"))
       .filter(col("docs") <= Winnowing.FpHotCap)

@@ -273,8 +273,15 @@ class Round3Spec extends SparkSpec {
     val out = Dedup.incrementalIngest(spark, dir)
       .select(col("doc_id")).as[Long].collect().toSet
     assert(out === Set(9L, 19L))
-    // the bloom pre-filter is an exact rewrite: identical output
-    val plain = Dedup.incrementalIngest(spark, dir, bloomPrefilter = false)
+    // the bloom pre-filter is an exact rewrite: identical output to a
+    // plain left_anti against the historical fingerprints, then the
+    // within-batch min
+    val f = sources.Tables.loadSpread(spark, dir, "documents")
+      .select(col("doc_id"), md5(functions.TextFunctions.normalizeText(col("text"))).as("fp"))
+    val hist = f.filter(col("doc_id") % 10 < 8).select(col("fp")).distinct()
+    val plain = f.filter(col("doc_id") % 10 >= 8)
+      .join(hist, Seq("fp"), "left_anti")
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id")).as[Long].collect().toSet
     assert(plain === out)
   }

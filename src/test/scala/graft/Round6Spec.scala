@@ -274,7 +274,7 @@ class Round6Spec extends SparkSpec {
   test("linear interpolation fills interior gaps from both neighbors") {
     import java.sql.Timestamp
     val dir = Files.createTempDirectory("graft_interp").toString
-    def t(h: Int, m: Int = 0) = Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
+    def t(h: Int, m: Int) = Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
     // user 1: hours 0,1,3 observed (hour 1 from two events summing to
     // 20), hour 2 missing -> (2-1)/(3-1)=0.5 between 20 and 40 = 30
     Seq((1L, t(0, 10), 10.0), (1L, t(1, 5), 8.0), (1L, t(1, 40), 12.0),

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{Linkage, Relational, Sketches, TextAnalysis, TimeSeries}
 
 /** Degenerate-input hardening for the q172–q191 family: empty tables,

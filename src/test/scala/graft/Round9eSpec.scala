@@ -205,6 +205,8 @@ class Round9eSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, s"$root/src",
       (1L to 10L).map(k => (k, s"v$k")).toDF("k", "name"))
     Snapshots.shallowClone(spark, s"$root/src", s"$root/c1")
+    // c1's borrowed references are already absolute, so c2 carries
+    // them through unchanged and reads the original files
     Snapshots.shallowClone(spark, s"$root/c1", s"$root/c2")
     assert(Snapshots.readVersion(spark, s"$root/c2", "v00000001").count() === 10L)
     assert(new java.io.File(s"$root/c2").listFiles().map(_.getName).toSet ===

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{Sampling, TextAnalysis, Vectors}
 
 /** Round-9 seventh batch: kNN graph, IVF health stats, corpus

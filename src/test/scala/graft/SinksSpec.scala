@@ -163,7 +163,7 @@ class SinksSpec extends SparkSpec {
     import graft.etl.Dims
     val dwh = Files.createTempDirectory("graft_dims_recover").toString
     // first load populates the dims
-    Dims.run(spark, "/root/reference/data", dwh)
+    Dims.run(spark, SparkSpec.ReferenceDataDir, dwh)
     val before = spark.read.parquet(s"$dwh/routes").count()
     assert(before > 0)
     // simulate a crash between atomicOverwrite's two renames: the live
@@ -173,7 +173,7 @@ class SinksSpec extends SparkSpec {
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dwh/routes"),
       new org.apache.hadoop.fs.Path(s"$dwh/routes._old")))
     // rerun: must restore ._old BEFORE the existence check, then merge
-    val counts = Dims.run(spark, "/root/reference/data", dwh)
+    val counts = Dims.run(spark, SparkSpec.ReferenceDataDir, dwh)
     assert(counts("routes") === before) // nothing lost to truncate-load
   }
 

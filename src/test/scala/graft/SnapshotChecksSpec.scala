@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.sources.{CheckConstraintViolationException, Snapshots}
 
 /** CHECK constraints on snapshot tables: install-time validation of

@@ -366,7 +366,7 @@ class SnapshotsSpec extends SparkSpec {
       Seq((1L, "A", 1.0), (2L, "B", 2.0), (3L, "B", 3.0)).toDF("k", "p", "amount"),
       "k", "p")
     val tgt = freshDir()
-    val v1 = Snapshots.cloneShallow(spark, src, tgt)
+    val v1 = Snapshots.shallowClone(spark, src, tgt)
     assert(v1 === "v00000001")
     // zero bytes copied: no data dirs exist under the clone root
     assert(fileStates(tgt, "d-").isEmpty)
@@ -393,7 +393,7 @@ class SnapshotsSpec extends SparkSpec {
     // versions were vacuumed (re-claiming a retired number would
     // splice foreign history under the live versions)
     intercept[IllegalArgumentException] {
-      Snapshots.cloneShallow(spark, src, tgt)
+      Snapshots.shallowClone(spark, src, tgt)
     }
   }
 
@@ -404,7 +404,7 @@ class SnapshotsSpec extends SparkSpec {
         "CAST(id AS DOUBLE) AS amount"),
       "p", statsCols = Seq("k"))
     val tgt = freshDir()
-    Snapshots.cloneShallow(spark, src, tgt)
+    Snapshots.shallowClone(spark, src, tgt)
     val pruned = Snapshots.readVersionPruned(spark, tgt, "v00000001",
       "k", BigDecimal(7), BigDecimal(7))
     assert(pruned.count() === 1)
@@ -417,6 +417,19 @@ class SnapshotsSpec extends SparkSpec {
     val hit = scannedFiles(pruned)
     assert(hit.size < all.size,
       s"clone stats skipping must prune: scanned ${hit.size} of ${all.size}")
+  }
+
+  test("shallow clone refuses a source whose borrowed dir path carries a manifest delimiter") {
+    // the partition manifest line splits dir from value on the last
+    // '=', so an absolute borrowed dir under `p=1/` would not round-trip
+    val src = s"${freshDir()}/p=1/src"
+    Snapshots.commitOverwrite(spark, src, Seq((1L, "a")).toDF("k", "name"))
+    val tgt = freshDir()
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.shallowClone(spark, src, tgt)
+    }
+    assert(e.getMessage.contains("manifest delimiter"))
+    assert(Snapshots.currentVersion(spark, tgt) === None, "nothing was claimed")
   }
 
   test("OCC auto-rebase: a merge that lost the CAS race to a DISJOINT-partition commit retries and lands") {

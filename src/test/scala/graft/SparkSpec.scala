@@ -14,4 +14,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   lazy val session: SparkSession =
     GraftSession.builder(master = "local[4]").getOrCreate()
+
+  /** The reference's own five CSVs (read-only), read by the
+    * reference-count goldens in EtlGoldenSpec and SinksSpec. */
+  val ReferenceDataDir = "/root/reference/data"
 }
