@@ -26,10 +26,19 @@ object SparkEntry {
     * discipline as q60's bucketed copies). The queries stay pure
     * functions of the source dir because the per-call operation on the
     * fixture is idempotent (delta-wins merge of a delta derived from
-    * the immutable source). */
+    * the immutable source).
+    *
+    * Every build starts clean: the target dir is deleted before
+    * `build` runs, so a builder that crashed part-way — or a dir left
+    * by an earlier JVM with the same pid — never leaks a partial chain
+    * into the next build (the snapshot fixtures pin version NAMES).
+    * A build that throws is not memoised; the next call rebuilds.
+    *
+    * One kind is built once and shared by every query that names it,
+    * so a shared kind must stay read-only: its callers only read it. */
   private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def fixture(kind: String, s: SparkSession, d: String, srcTable: String)
-                     (build: String => Unit): String = {
+  private[graft] def fixture(kind: String, s: SparkSession, d: String, srcTable: String)
+                            (build: String => Unit): String = {
     val p = new org.apache.hadoop.fs.Path(graft.sources.Tables.path(d, srcTable))
     val mtime = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       .getFileStatus(p).getModificationTime
@@ -38,18 +47,75 @@ object SparkEntry {
       val dir = s"${sys.props("java.io.tmpdir")}/graft_${kind}_${jvmTag}_" +
         java.security.MessageDigest.getInstance("MD5")
           .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+      val target = new org.apache.hadoop.fs.Path(dir)
+      target.getFileSystem(s.sparkContext.hadoopConfiguration).delete(target, true)
       build(dir)
       dir
     })
   }
 
-  /** Delete a fixture path recursively (builders that must not inherit
-    * a crashed predecessor's partial state start from this). */
-  private def wipe(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
+  /** `orders` as (o_orderkey, o_orderstatus, price), the price cast to
+    * DECIMAL(18,2): the input of the merge and snapshot queries. */
+  private def ordersPriced(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    graft.sources.Tables.load(s, d, "orders")
+      .select(col("o_orderkey"), col("o_orderstatus"),
+        col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)).as("price"))
   }
+
+  /** The daily delta of q62/q79: the status-F orders whose key is a
+    * multiple of 97, each price raised by 50. */
+  private def q79Delta(o: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    o.filter(col("o_orderstatus") === "F" && col("o_orderkey") % 97 === 0)
+      .withColumn("price",
+        col("price") + lit(50).cast(org.apache.spark.sql.types.DecimalType(18, 2)))
+  }
+
+  /** Row count and price total per `key` value, in key order. */
+  private def priceTotalsBy(key: String)(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    df.groupBy(col(key))
+      .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
+      .orderBy(col(key))
+  }
+
+  /** A fixture of `kind`: the priced orders committed as v1 of a
+    * snapshot table partitioned by status. */
+  private def ordersByStatus(kind: String, s: SparkSession, d: String): String =
+    fixture(kind, s, d, "orders")(path => graft.sources.Snapshots
+      .commitOverwritePartitioned(s, path, ordersPriced(s, d), "o_orderstatus"))
+
+  /** A fixture of `kind`: (o_orderkey, o_orderstatus) committed as v1
+    * partitioned by status with per-file row counts. Every call then
+    * deletes the status-O orders whose key is a multiple of 5: only
+    * partition O is rewritten with fresh counts, F and P carry their
+    * stat lines byte-identically, and a rerun matches nothing and
+    * publishes no version. */
+  private def countedOrdersAfterDelete(kind: String, s: SparkSession, d: String): String = {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.Snapshots
+    val table = fixture(kind, s, d, "orders")(path => Snapshots.commitOverwritePartitioned(s, path,
+      graft.sources.Tables.load(s, d, "orders").select(col("o_orderkey"), col("o_orderstatus")),
+      "o_orderstatus", statsCols = Seq(Snapshots.RowCountCol)))
+    Snapshots.commitDelete(s, table,
+      col("o_orderstatus") === "O" && col("o_orderkey") % 5 === 0)
+    table
+  }
+
+  /** A snapshot table partitioned by status with two pinned versions:
+    * v1 holds the orders whose key is not a multiple of 3, and v2
+    * merges the q79 delta into v1. q80, q91 and q111 share it and
+    * only read those two versions. */
+  private def snapshotV1V2(s: SparkSession, d: String): String =
+    fixture("snapcdf", s, d, "orders") { path =>
+      import org.apache.spark.sql.functions.col
+      val o = ordersPriced(s, d)
+      graft.sources.Snapshots.commitOverwritePartitioned(s, path,
+        o.filter(col("o_orderkey") % 3 =!= 0), "o_orderstatus")
+      graft.sources.Snapshots.commitMergePartitioned(s, path, q79Delta(o),
+        "o_orderkey", "o_orderstatus")
+    }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -860,9 +926,7 @@ object SparkEntry {
         graft.sources.Bucketing.writeBucketed(c, s"b_customer_$sfx", "o_custkey", 8)
       }
       graft.sources.Bucketing.bucketedJoin(s, s"b_orders_$sfx", s"b_customer_$sfx", "o_custkey")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("c_mktsegment"))
+        .transform(priceTotalsBy("c_mktsegment"))
     }, oracle =
       """SELECT c_mktsegment, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS price_sum
@@ -905,11 +969,7 @@ object SparkEntry {
     // rewritten (dynamic partition overwrite; untouched-file proof in
     // MergeSpec) — gated on the merged table's per-status totals
     "q62_partition_merge" -> Query((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
+      val o = ordersPriced(s, d)
       // the base write is SETUP, memoized once per (sf dir, JVM) so
       // Bench times the MERGE itself; re-applying the merge on later
       // calls is idempotent (delta wins by key, delta derived from the
@@ -917,13 +977,9 @@ object SparkEntry {
       // of the source dir
       val base = fixture("pmerge", s, d, "orders")(path =>
         o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path))
-      val delta = o.filter(col("o_orderstatus") === "F" && col("o_orderkey") % 97 === 0)
-        .withColumn("price", col("price") + lit(50).cast(DecimalType(18, 2)))
+      val delta = q79Delta(o)
       graft.etl.Dims.partitionScopedMerge(s, base, delta, "o_orderkey", "o_orderstatus")
-      s.read.parquet(base)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+      priceTotalsBy("o_orderstatus")(s.read.parquet(base))
     }, oracle =
       // merge semantics expressed directly; the Spark side additionally
       // proves only the touched partition was rewritten (MergeSpec)
@@ -1118,26 +1174,19 @@ object SparkEntry {
     "q75_snapshot_merge" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
+      val o = ordersPriced(s, d)
       // the seed commit is SETUP, memoized once per (sf dir, JVM) so
       // Bench times the upsert-commit itself; re-upserting the same
       // delta is idempotent (delta wins by key), and vacuum below
       // bounds version accumulation across repeated calls
       val table = fixture("snap", s, d, "orders") { path =>
-        wipe(s, path) // a crashed builder + pid reuse could leave a partial chain
         graft.sources.Snapshots.commitOverwrite(s, path,
           o.filter(col("o_orderkey") % 3 =!= 0))
-        ()
       }
       val delta = o.filter(col("o_orderkey") % 3 === 0 || col("o_orderkey") % 97 === 0)
         .withColumn("price", col("price") + lit(50).cast(DecimalType(18, 2)))
       graft.sources.Snapshots.commitUpsert(s, table, delta, "o_orderkey")
-      val out = graft.sources.Snapshots.read(s, table)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+      val out = priceTotalsBy("o_orderstatus")(graft.sources.Snapshots.read(s, table))
       graft.sources.Snapshots.vacuum(s, table) // live version is protected
       out
     }, oracle =
@@ -1210,24 +1259,12 @@ object SparkEntry {
     // in SnapshotsSpec). Merge semantics equal q62's, so the oracle
     // states them identically; the timed region is the merge commit
     "q79_snapshot_partition_merge" -> Query((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-      val table = fixture("snapp", s, d, "orders") { path =>
-        wipe(s, path) // a crashed builder + pid reuse could leave a partial chain
-        graft.sources.Snapshots.commitOverwritePartitioned(s, path, o, "o_orderstatus")
-        ()
-      }
-      val delta = o.filter(col("o_orderstatus") === "F" && col("o_orderkey") % 97 === 0)
-        .withColumn("price", col("price") + lit(50).cast(DecimalType(18, 2)))
+      val o = ordersPriced(s, d)
+      val table = ordersByStatus("snapp", s, d)
+      val delta = q79Delta(o)
       graft.sources.Snapshots.commitMergePartitioned(s, table, delta,
         "o_orderkey", "o_orderstatus")
-      val out = graft.sources.Snapshots.read(s, table)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+      val out = priceTotalsBy("o_orderstatus")(graft.sources.Snapshots.read(s, table))
       graft.sources.Snapshots.vacuum(s, table) // manifests bounded across reps
       out
     }, oracle =
@@ -1243,22 +1280,7 @@ object SparkEntry {
     // immutable versions
     "q80_snapshot_diff" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-      val table = fixture("snapd", s, d, "orders") { path =>
-        // q80 pins version NAMES v1/v2, so a leftover chain from a
-        // crashed builder (pid reuse) would shift them — start clean
-        wipe(s, path)
-        graft.sources.Snapshots.commitOverwritePartitioned(s, path,
-          o.filter(col("o_orderkey") % 3 =!= 0), "o_orderstatus")
-        val delta = o.filter(col("o_orderstatus") === "F" && col("o_orderkey") % 97 === 0)
-          .withColumn("price", col("price") + lit(50).cast(DecimalType(18, 2)))
-        graft.sources.Snapshots.commitMergePartitioned(s, path, delta,
-          "o_orderkey", "o_orderstatus")
-        ()
-      }
+      val table = snapshotV1V2(s, d)
       graft.sources.Snapshots.diffVersionsPartitioned(s, table,
           "v00000001", "v00000002", "o_orderkey")
         .filter(col("change") =!= "unchanged")
@@ -1381,7 +1403,6 @@ object SparkEntry {
         StructField("lang", StringType), StructField("source", StringType),
         StructField("n_chars", LongType)))
       val table = fixture("jsonl", s, d, "documents") { path =>
-        wipe(s, path)
         graft.sources.Tables.load(s, d, "documents")
           .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
           .write.json(path)
@@ -1408,22 +1429,15 @@ object SparkEntry {
     // in SnapshotsSpec) and must return exactly the filtered rows
     "q82_snapshot_skip" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
+      val o = ordersPriced(s, d)
       val table = fixture("snapskip", s, d, "orders") { path =>
-        wipe(s, path) // a crashed builder + pid reuse could leave a partial chain
         graft.sources.Snapshots.commitOverwrite(s, path,
           o.repartitionByRange(8, col("o_orderkey")),
           statsCols = Seq("o_orderkey"))
-        ()
       }
       graft.sources.Snapshots.readVersionPruned(s, table, "v00000001",
           "o_orderkey", BigDecimal(1000), BigDecimal(5000))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+        .transform(priceTotalsBy("o_orderstatus"))
     }, oracle =
       // the pruned snapshot range read must equal the plain filter —
       // data skipping is an optimization, never a semantics change
@@ -1450,14 +1464,12 @@ object SparkEntry {
         min(col("o_custkey")).cast("long"), max(col("o_custkey")).cast("long")).head()
       val (xlo, xhi, ylo, yhi) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
       val table = fixture("snapz", s, d, "orders") { path =>
-        wipe(s, path) // a crashed builder + pid reuse could leave a partial chain
         val keyed = o.withColumn("z", ZOrder.zkey2(
           ZOrder.scaled(col("o_orderkey"), xlo, xhi, 16),
           ZOrder.scaled(col("o_custkey"), ylo, yhi, 16), 16))
         Snapshots.commitOverwrite(s, path,
           keyed.repartitionByRange(16, col("z")).sortWithinPartitions(col("z")),
           statsCols = Seq("z"))
-        ()
       }
       // box: second quarter of each dimension (integer arithmetic the
       // oracle mirrors with DuckDB's // operator)
@@ -1471,9 +1483,7 @@ object SparkEntry {
           "z", BigDecimal(zlo), BigDecimal(zhi))
         .filter(col("o_orderkey").between(bx1, bx2) &&
           col("o_custkey").between(by1, by2))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+        .transform(priceTotalsBy("o_orderstatus"))
     }, oracle =
       // the z-range is a conservative superset refined by the exact box
       // filter, so the oracle is the PLAIN box query — data skipping can
@@ -1493,21 +1503,10 @@ object SparkEntry {
     // and commitDelete is a no-op that publishes no version
     "q88_snapshot_delete" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-      val table = fixture("snapdel", s, d, "orders") { path =>
-        wipe(s, path) // a crashed builder + pid reuse could leave a partial chain
-        graft.sources.Snapshots.commitOverwritePartitioned(s, path, o, "o_orderstatus")
-        ()
-      }
+      val table = ordersByStatus("snapdel", s, d)
       graft.sources.Snapshots.commitDelete(s, table,
         col("o_orderstatus") === "O" && col("o_orderkey") % 7 === 0)
-      graft.sources.Snapshots.read(s, table)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+      priceTotalsBy("o_orderstatus")(graft.sources.Snapshots.read(s, table))
     }, oracle =
       // DELETE removes rows where the predicate is TRUE; the engine-side
       // partition-scoped rewrite is proved in SnapshotsSpec
@@ -1525,22 +1524,12 @@ object SparkEntry {
     "q89_snapshot_update" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-      val table = fixture("snapupd", s, d, "orders") { path =>
-        wipe(s, path)
-        graft.sources.Snapshots.commitOverwritePartitioned(s, path, o, "o_orderstatus")
-        ()
-      }
+      val table = ordersByStatus("snapupd", s, d)
       graft.sources.Snapshots.commitUpdate(s, table,
         col("o_orderstatus") === "O" && col("o_orderkey") % 11 === 0,
         Seq("o_orderstatus" -> lit("F"),
           "price" -> (col("price") + lit(7).cast(DecimalType(18, 2)))))
-      graft.sources.Snapshots.read(s, table)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+      priceTotalsBy("o_orderstatus")(graft.sources.Snapshots.read(s, table))
     }, oracle =
       // UPDATE stated as a projection over the old rows (SQL UPDATE
       // semantics: every RHS sees the pre-update row)
@@ -1559,21 +1548,13 @@ object SparkEntry {
     // exactly, so the oracle is the PLAIN base aggregation
     "q90_snapshot_restore" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
+      val o = ordersPriced(s, d)
       val table = fixture("snaprst", s, d, "orders") { path =>
-        wipe(s, path)
         val v1 = graft.sources.Snapshots.commitOverwritePartitioned(s, path, o, "o_orderstatus")
         graft.sources.Snapshots.commitDelete(s, path, col("o_orderstatus") === "F")
         graft.sources.Snapshots.restore(s, path, v1)
-        ()
       }
-      graft.sources.Snapshots.read(s, table)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+      priceTotalsBy("o_orderstatus")(graft.sources.Snapshots.read(s, table))
     }, oracle =
       // restore(v1) after a delete → the live table IS v1 again, so the
       // oracle is the plain base aggregation; the zero-copy manifest
@@ -1588,26 +1569,10 @@ object SparkEntry {
     // q80 pruning). The gate aggregates per change type over the
     // inline payload
     "q91_snapshot_cdf" -> Query((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-      val table = fixture("snapcdf", s, d, "orders") { path =>
-        wipe(s, path) // version NAMES v1/v2 are pinned — start clean
-        graft.sources.Snapshots.commitOverwritePartitioned(s, path,
-          o.filter(col("o_orderkey") % 3 =!= 0), "o_orderstatus")
-        val delta = o.filter(col("o_orderstatus") === "F" && col("o_orderkey") % 97 === 0)
-          .withColumn("price", col("price") + lit(50).cast(DecimalType(18, 2)))
-        graft.sources.Snapshots.commitMergePartitioned(s, path, delta,
-          "o_orderkey", "o_orderstatus")
-        ()
-      }
+      val table = snapshotV1V2(s, d)
       graft.sources.Snapshots.changeFeed(s, table,
           "v00000001", "v00000002", "o_orderkey")
-        .groupBy(col("_change_type"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("_change_type"))
+        .transform(priceTotalsBy("_change_type"))
     }, oracle =
       // CDF of v1→v2 stated naively: full-outer join of the two version
       // contents, updates exploded into pre+post image rows; the engine
@@ -1643,22 +1608,14 @@ object SparkEntry {
     // is the plain NOT-filter
     "q97_snapshot_dv" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
+      val o = ordersPriced(s, d)
       val table = fixture("snapdv", s, d, "orders") { path =>
-        wipe(s, path)
         graft.sources.Snapshots.commitOverwritePartitioned(s, path, o, "o_orderstatus")
         graft.sources.Snapshots.commitDeleteVector(s, path,
           o.filter(col("o_orderkey") % 13 === 0).select(col("o_orderkey")),
           "o_orderkey")
-        ()
       }
-      graft.sources.Snapshots.read(s, table)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+      priceTotalsBy("o_orderstatus")(graft.sources.Snapshots.read(s, table))
     }, oracle =
       // the deletion vector must behave exactly as a row delete
       """SELECT o_orderstatus, count(*) AS n,
@@ -1789,20 +1746,7 @@ object SparkEntry {
     // incremental ≡ recompute exactly (decimal sums, no rounding)
     "q111_incremental_agg" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-      val table = fixture("snapcdf", s, d, "orders") { path =>
-        wipe(s, path) // version NAMES v1/v2 are pinned — start clean
-        graft.sources.Snapshots.commitOverwritePartitioned(s, path,
-          o.filter(col("o_orderkey") % 3 =!= 0), "o_orderstatus")
-        val delta = o.filter(col("o_orderstatus") === "F" && col("o_orderkey") % 97 === 0)
-          .withColumn("price", col("price") + lit(50).cast(DecimalType(18, 2)))
-        graft.sources.Snapshots.commitMergePartitioned(s, path, delta,
-          "o_orderkey", "o_orderstatus")
-        ()
-      }
+      val table = snapshotV1V2(s, d)
       val baseAgg = graft.sources.Snapshots.readVersion(s, table, "v00000001")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), sum(col("price")).as("value_sum"))
@@ -1913,7 +1857,6 @@ object SparkEntry {
         min(col("o_day")), max(col("o_day"))).head()
       val dom = (0 until 3).map(i => (r.getLong(2 * i), r.getLong(2 * i + 1)))
       val table = fixture("snapz3", s, d, "orders") { path =>
-        wipe(s, path) // a crashed builder + pid reuse could leave a partial chain
         val keyed = o.withColumn("z", ZOrder.zkeyN(Seq(
           ZOrder.scaled(col("o_orderkey"), dom(0)._1, dom(0)._2, 16),
           ZOrder.scaled(col("o_custkey"), dom(1)._1, dom(1)._2, 16),
@@ -1921,7 +1864,6 @@ object SparkEntry {
         Snapshots.commitOverwrite(s, path,
           keyed.repartitionByRange(16, col("z")).sortWithinPartitions(col("z")),
           statsCols = Seq("z"))
-        ()
       }
       // box: second quarter of each dimension (integer arithmetic)
       val lo = dom.map { case (l, h) => l + (h - l) / 4 }
@@ -1935,9 +1877,7 @@ object SparkEntry {
         .filter(col("o_orderkey").between(lo(0), hi(0)) &&
           col("o_custkey").between(lo(1), hi(1)) &&
           col("o_day").between(lo(2), hi(2)))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+        .transform(priceTotalsBy("o_orderstatus"))
     }, oracle =
       // the z-range is a conservative superset refined by the exact 3D
       // box filter, so the oracle is the PLAIN box query
@@ -1974,7 +1914,6 @@ object SparkEntry {
     "q95_orc_roundtrip" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
       val table = fixture("orc", s, d, "documents") { path =>
-        wipe(s, path)
         graft.sources.Tables.load(s, d, "documents")
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
           .write.orc(path)
@@ -2241,12 +2180,8 @@ object SparkEntry {
     // delta lands — the final aggregate proves the refusal by content
     "q125_snapshot_check" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
+      val o = ordersPriced(s, d)
       val table = fixture("snapcheck", s, d, "orders") { path =>
-        wipe(s, path)
         graft.sources.Snapshots.commitOverwrite(s, path,
           o.filter(col("o_orderkey") % 2 === 0))
         graft.sources.Snapshots.setCheck(s, path, "price_positive", "price >= 0")
@@ -2259,12 +2194,8 @@ object SparkEntry {
         graft.sources.Snapshots.commitUpsert(s, path,
           o.filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 3 === 0),
           "o_orderkey")
-        ()
       }
-      graft.sources.Snapshots.read(s, table)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+      priceTotalsBy("o_orderstatus")(graft.sources.Snapshots.read(s, table))
     }, oracle =
       // the refused delta (odd keys, negative prices) must be absent:
       // the surviving table is evens + odd multiples of 3, unmodified
@@ -2480,7 +2411,6 @@ object SparkEntry {
       val c = graft.sources.Tables.load(s, d, "customer")
         .select(col("c_custkey"), col("c_nationkey"))
       val root = fixture("snapjoin", s, d, "orders") { path =>
-        wipe(s, path)
         graft.sources.Snapshots.commitOverwrite(s, s"$path/a",
           o.filter(col("o_orderkey") % 3 =!= 0))
         graft.sources.Snapshots.commitUpsert(s, s"$path/a",
@@ -2491,7 +2421,6 @@ object SparkEntry {
         graft.sources.Snapshots.commitUpsert(s, s"$path/b",
           c.filter(col("c_custkey") % 13 === 0)
             .withColumn("c_nationkey", (col("c_nationkey") + 7) % 25), "c_custkey")
-        ()
       }
       val baseAgg = graft.sources.Snapshots.readVersion(s, s"$root/a", "v00000001")
         .join(graft.sources.Snapshots.readVersion(s, s"$root/b", "v00000001"),
@@ -2590,7 +2519,6 @@ object SparkEntry {
     // pairs involving the delta — proving the incremental algebra
     "q141_incremental_lsh" -> Query((s: SparkSession, d: String) => {
       val idx = fixture("lshidx", s, d, "documents") { path =>
-        wipe(s, path)
         operators.Dedup.lshIndexSignatures(s, d).write.parquet(path)
       }
       operators.Dedup.incrementalLsh(s, d, idx)
@@ -3300,20 +3228,7 @@ object SparkEntry {
     // O(manifest) driver read, zero data files opened (the audit-count
     // query at lakehouse scale; DV-free precondition enforced)
     "q176_metadata_count" -> Query((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.functions._
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"))
-      val table = fixture("snapmeta", s, d, "orders") { path =>
-        wipe(s, path)
-        graft.sources.Snapshots.commitOverwritePartitioned(s, path, o,
-          "o_orderstatus", statsCols = Seq(graft.sources.Snapshots.RowCountCol))
-        ()
-      }
-      // partition O rewritten with fresh counts; F and P carry their
-      // stat lines byte-identically. Idempotent: a rerun matches
-      // nothing and publishes no version
-      graft.sources.Snapshots.commitDelete(s, table,
-        col("o_orderstatus") === "O" && col("o_orderkey") % 5 === 0)
+      val table = countedOrdersAfterDelete("snapmeta", s, d)
       val v = graft.sources.Snapshots.currentVersion(s, table).get
       graft.sources.Snapshots.metadataRowCounts(s, table, v)
     }, oracle =
@@ -3329,15 +3244,10 @@ object SparkEntry {
     // semantics republish identical content
     "q177_snapshot_wap" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
       import graft.sources.Snapshots
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
+      val o = ordersPriced(s, d)
       val table = fixture("snapwap", s, d, "orders") { path =>
-        wipe(s, path)
         Snapshots.commitOverwrite(s, path, o.filter(col("o_orderkey") % 3 === 1))
-        ()
       }
       def auditAndLand(batch: org.apache.spark.sql.DataFrame): Unit = {
         val staged = Snapshots.stageOverwrite(s, table, batch)
@@ -3351,10 +3261,7 @@ object SparkEntry {
       auditAndLand(o.withColumn("o_orderkey", // poisoned: NULL keys
         when(col("o_orderkey") % 97 === 0, lit(null)).otherwise(col("o_orderkey"))))
       auditAndLand(o.filter(col("o_orderkey") % 3 === 0)) // clean
-      Snapshots.read(s, table)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("price_sum"))
-        .orderBy(col("o_orderstatus"))
+      priceTotalsBy("o_orderstatus")(Snapshots.read(s, table))
     }, oracle =
       // the poisoned batch (NULL keys at %97) fails its audit and never
       // publishes; the live table is the LAST published batch — the
@@ -3377,9 +3284,7 @@ object SparkEntry {
         .select(col("event_id"), col("event_type"),
           col("user_id").cast("string").as("u"))
       val table = fixture("snapcmsivm", s, d, "events") { path =>
-        wipe(s, path)
         Snapshots.commitOverwrite(s, path, e)
-        ()
       }
       // both DMLs are SELF-idempotent (second run matches nothing):
       // the delete predicate finds its rows already gone, and the
@@ -3445,18 +3350,8 @@ object SparkEntry {
     // alone: row counts, delta, and touched/untouched status in
     // O(manifest) — the pre-flight audit before reading a real delta
     "q180_metadata_drift" -> Query((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.functions._
       import graft.sources.Snapshots
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"))
-      val table = fixture("snapdrift", s, d, "orders") { path =>
-        wipe(s, path)
-        Snapshots.commitOverwritePartitioned(s, path, o,
-          "o_orderstatus", statsCols = Seq(Snapshots.RowCountCol))
-        ()
-      }
-      Snapshots.commitDelete(s, table,
-        col("o_orderstatus") === "O" && col("o_orderkey") % 5 === 0)
+      val table = countedOrdersAfterDelete("snapdrift", s, d)
       Snapshots.metadataPartitionDrift(s, table, "v00000001",
         Snapshots.currentVersion(s, table).get)
     }, oracle =
@@ -3582,7 +3477,6 @@ object SparkEntry {
       import graft.sources.Snapshots
       val o = graft.sources.Tables.load(s, d, "orders")
       val table = fixture("snapschema", s, d, "orders") { path =>
-        wipe(s, path)
         // v1: three columns; v2: one dropped, one added, one widened
         Snapshots.commitOverwrite(s, path, o.select(
           col("o_orderkey"), col("o_orderstatus"),
@@ -3591,7 +3485,6 @@ object SparkEntry {
           col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("decimal(18,2)").as("price"),
           col("o_orderpriority")))
-        ()
       }
       Snapshots.metadataSchemaDrift(s, table, "v00000001", "v00000002")
     }, oracle =
@@ -3615,10 +3508,8 @@ object SparkEntry {
       val o = graft.sources.Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
       val table = fixture("snapevo", s, d, "orders") { path =>
-        wipe(s, path)
         Snapshots.commitOverwritePartitioned(s, path, o, "o_orderstatus")
         Snapshots.commitOverwritePartitioned(s, path, o, "o_orderpriority")
-        ()
       }
       Snapshots.read(s, table)
         .groupBy(col("o_orderstatus"), col("o_orderpriority"))
@@ -3997,13 +3888,11 @@ object SparkEntry {
       val o = graft.sources.Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val table = fixture("snapbm", s, d, "orders") { path =>
-        wipe(s, path)
         // hash layout: min/max ranges overlap across every file, so
         // ONLY the membership bitmap can skip here
         graft.sources.Snapshots.commitOverwrite(s, path,
           o.repartition(8, col("o_orderkey")),
           statsCols = Seq(graft.sources.Snapshots.BitmapStatPrefix + "o_orderkey"))
-        ()
       }
       val v = graft.sources.Snapshots.currentVersion(s, table).get
       val keys: Seq[Any] = o.filter(col("o_orderkey") % 997 === 0)
@@ -4197,10 +4086,8 @@ object SparkEntry {
       val o = graft.sources.Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val table = fixture("snapmm", s, d, "orders") { path =>
-        wipe(s, path)
         graft.sources.Snapshots.commitOverwritePartitioned(s, path, o,
           "o_orderstatus", statsCols = Seq("o_totalprice"))
-        ()
       }
       val v = graft.sources.Snapshots.currentVersion(s, table).get
       graft.sources.Snapshots.metadataMinMax(s, table, v, "o_totalprice")
@@ -4289,7 +4176,6 @@ object SparkEntry {
     // lists intersected with pos+1 adjacency
     "q215_phrase_search" -> Query((s: SparkSession, d: String) => {
       val idx = fixture("postings", s, d, "documents") { path =>
-        wipe(s, path)
         operators.PhraseSearch.postings(s, d)
           .write.partitionBy("tb").parquet(path)
       }
@@ -4485,7 +4371,6 @@ object SparkEntry {
     "q223_tar_webdataset" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
       val tarDir = fixture("tarshards", s, d, "documents") { path =>
-        wipe(s, path)
         val members = graft.sources.Tables.load(s, d, "documents")
           .select(expr(s"doc_id div ${graft.sources.TarShards.MembersPerShard}").as("shard"),
             explode(array(
@@ -4631,7 +4516,6 @@ object SparkEntry {
     // transported bytes — tar round trip × image decode in one gate
     "q230_tar_multimodal" -> Query((s: SparkSession, d: String) => {
       val tarDir = fixture("tarmm", s, d, "documents") { path =>
-        wipe(s, path)
         graft.sources.TarShards.writeShards(s,
           Multimodal.multimodalMembers(s, d), path)
       }
@@ -4914,17 +4798,12 @@ object SparkEntry {
     // copy-on-write while the source's full data stays intact
     "q244_snapshot_clone" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val o = graft.sources.Tables.load(s, d, "orders")
-        .select(col("o_orderkey"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
+      val o = ordersPriced(s, d).drop("o_orderstatus")
       val root = fixture("snapclone", s, d, "orders") { path =>
-        wipe(s, path)
         graft.sources.Snapshots.commitOverwrite(s, s"$path/src", o)
         graft.sources.Snapshots.shallowClone(s, s"$path/src", s"$path/clone")
         graft.sources.Snapshots.commitDelete(s, s"$path/clone",
           col("o_orderkey") % 3 === 0)
-        ()
       }
       def side(tag: String, sub: String) =
         graft.sources.Snapshots.read(s, s"$root/$sub")
@@ -5087,7 +4966,6 @@ object SparkEntry {
     "q251_tfrecord_roundtrip" -> Query((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
       val tfDir = fixture("tfrec", s, d, "documents") { path =>
-        wipe(s, path)
         val recs = graft.sources.Tables.load(s, d, "documents")
           .select(
             expr(s"doc_id div ${graft.sources.TfRecords.RecordsPerShard}")
@@ -5744,22 +5622,26 @@ object SparkEntry {
         |FROM c GROUP BY 1 ORDER BY domain""".stripMargin),
   )
 
+  /** Every documents row as a typed (doc_id, text) pair: the input
+    * each WARC fixture renders into crawl pages. */
+  private def docTexts(s: SparkSession, d: String): org.apache.spark.sql.Dataset[(Long, String)] = {
+    import org.apache.spark.sql.functions.col
+    import s.implicits._
+    graft.sources.Tables.load(s, d, "documents")
+      .select(col("doc_id").cast("long"), col("text").cast("string"))
+      .as[(Long, String)]
+  }
+
   /** Memoized WARC shard fixture: every documents row rendered into a
     * deterministic crawl page and packed into mixed plain/gzip WARC
     * shards (see [[graft.sources.Warc]] / [[operators.HtmlText.renderPage]]). */
   private def warcFixture(s: SparkSession, d: String): String =
     fixture("warcshards", s, d, "documents") { path =>
-      wipe(s, path)
       import s.implicits._
-      val pages = graft.sources.Tables.load(s, d, "documents")
-        .select(org.apache.spark.sql.functions.col("doc_id").cast("long"),
-          org.apache.spark.sql.functions.col("text").cast("string"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          (id / graft.sources.Warc.PagesPerShard, id,
-            s"http://example.org/doc/$id", operators.HtmlText.renderPage(id, text))
-        }
-        .toDF("shard", "doc_id", "url", "html")
+      val pages = docTexts(s, d).map { case (id, text) =>
+        (id / graft.sources.Warc.PagesPerShard, id,
+          s"http://example.org/doc/$id", operators.HtmlText.renderPage(id, text))
+      }.toDF("shard", "doc_id", "url", "html")
       graft.sources.Warc.writeShards(s, pages, path)
     }
 
@@ -5787,26 +5669,20 @@ object SparkEntry {
     *     0x80-0x9F, where cp1252 and latin-1 disagree. */
   private def warcCharsetFixture(s: SparkSession, d: String): String =
     fixture("warccharset", s, d, "documents") { path =>
-      wipe(s, path)
       import s.implicits._
-      val pages = graft.sources.Tables.load(s, d, "documents")
-        .select(org.apache.spark.sql.functions.col("doc_id").cast("long"),
-          org.apache.spark.sql.functions.col("text").cast("string"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val (cs, marker, ctype, meta) = (id % 3) match {
-            case 0 => ("UTF-8", "naïve café übung", "text/html; charset=utf-8", "")
-            case 1 => ("ISO-8859-1", "café déjà vu", "text/html; charset=ISO-8859-1", "")
-            case _ => ("windows-1252", "€uro ’quote café", "text/html",
-              "<meta charset=\"windows-1252\">")
-          }
-          val body = if (text.isEmpty) marker else marker + " " + text
-          val html =
-            s"<html><head>$meta<title>t</title></head><body><p>$body</p></body></html>"
-          (id / graft.sources.Warc.PagesPerShard, id,
-            s"http://example.org/doc/$id", ctype, html.getBytes(cs), "", 200)
+      val pages = docTexts(s, d).map { case (id, text) =>
+        val (cs, marker, ctype, meta) = (id % 3) match {
+          case 0 => ("UTF-8", "naïve café übung", "text/html; charset=utf-8", "")
+          case 1 => ("ISO-8859-1", "café déjà vu", "text/html; charset=ISO-8859-1", "")
+          case _ => ("windows-1252", "€uro ’quote café", "text/html",
+            "<meta charset=\"windows-1252\">")
         }
-        .toDF("shard", "doc_id", "url", "content_type", "body", "x_headers", "status")
+        val body = if (text.isEmpty) marker else marker + " " + text
+        val html =
+          s"<html><head>$meta<title>t</title></head><body><p>$body</p></body></html>"
+        (id / graft.sources.Warc.PagesPerShard, id,
+          s"http://example.org/doc/$id", ctype, html.getBytes(cs), "", 200)
+      }.toDF("shard", "doc_id", "url", "content_type", "body", "x_headers", "status")
       graft.sources.Warc.writeShardsEncoded(s, pages, path)
     }
 
@@ -5824,28 +5700,22 @@ object SparkEntry {
     *       a robots meta must not itself veto). */
   private def warcRobotsFixture(s: SparkSession, d: String): String =
     fixture("warcrobots", s, d, "documents") { path =>
-      wipe(s, path)
       import s.implicits._
-      val pages = graft.sources.Tables.load(s, d, "documents")
-        .select(org.apache.spark.sql.functions.col("doc_id").cast("long"),
-          org.apache.spark.sql.functions.col("text").cast("string"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val (cs, ctype, xh, meta) = (id % 4) match {
-            case 0 => ("UTF-8", "text/html; charset=utf-8", "", "")
-            case 1 => ("UTF-8", "text/html; charset=utf-8",
-              "X-Robots-Tag: noindex", "")
-            case 2 => ("windows-1252", "text/html; charset=windows-1252", "",
-              "<meta name=\"robots\" data-mark=\"’€\" content=\"noindex, nofollow\">")
-            case _ => ("UTF-8", "text/html; charset=utf-8", "",
-              "<meta content=\"index, follow\" name=\"robots\">")
-          }
-          val html =
-            s"<html><head>$meta<title>t</title></head><body><p>$text</p></body></html>"
-          (id / graft.sources.Warc.PagesPerShard, id,
-            s"http://example.org/doc/$id", ctype, html.getBytes(cs), xh, 200)
+      val pages = docTexts(s, d).map { case (id, text) =>
+        val (cs, ctype, xh, meta) = (id % 4) match {
+          case 0 => ("UTF-8", "text/html; charset=utf-8", "", "")
+          case 1 => ("UTF-8", "text/html; charset=utf-8",
+            "X-Robots-Tag: noindex", "")
+          case 2 => ("windows-1252", "text/html; charset=windows-1252", "",
+            "<meta name=\"robots\" data-mark=\"’€\" content=\"noindex, nofollow\">")
+          case _ => ("UTF-8", "text/html; charset=utf-8", "",
+            "<meta content=\"index, follow\" name=\"robots\">")
         }
-        .toDF("shard", "doc_id", "url", "content_type", "body", "x_headers", "status")
+        val html =
+          s"<html><head>$meta<title>t</title></head><body><p>$text</p></body></html>"
+        (id / graft.sources.Warc.PagesPerShard, id,
+          s"http://example.org/doc/$id", ctype, html.getBytes(cs), xh, 200)
+      }.toDF("shard", "doc_id", "url", "content_type", "body", "x_headers", "status")
       graft.sources.Warc.writeShardsEncoded(s, pages, path)
     }
 
@@ -5858,26 +5728,20 @@ object SparkEntry {
     *   4 → `200 application/pdf` (fetch OK but non-HTML — MIME vetoes). */
   private def warcStatusFixture(s: SparkSession, d: String): String =
     fixture("warcstatus", s, d, "documents") { path =>
-      wipe(s, path)
       import s.implicits._
-      val pages = graft.sources.Tables.load(s, d, "documents")
-        .select(org.apache.spark.sql.functions.col("doc_id").cast("long"),
-          org.apache.spark.sql.functions.col("text").cast("string"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val (status, ctype, body) = (id % 5) match {
-            case 0 | 1 => (200, "text/html; charset=utf-8",
-              s"<html><body><p>$text</p></body></html>")
-            case 2 => (301, "text/html; charset=utf-8",
-              "<html><body>Moved</body></html>")
-            case 3 => (404, "text/html; charset=utf-8",
-              "<html><body><h1>Not Found</h1><p>sorry</p></body></html>")
-            case _ => (200, "application/pdf", "%PDF-1.4 stub")
-          }
-          (id / graft.sources.Warc.PagesPerShard, id,
-            s"http://example.org/doc/$id", ctype, body.getBytes("UTF-8"), "", status)
+      val pages = docTexts(s, d).map { case (id, text) =>
+        val (status, ctype, body) = (id % 5) match {
+          case 0 | 1 => (200, "text/html; charset=utf-8",
+            s"<html><body><p>$text</p></body></html>")
+          case 2 => (301, "text/html; charset=utf-8",
+            "<html><body>Moved</body></html>")
+          case 3 => (404, "text/html; charset=utf-8",
+            "<html><body><h1>Not Found</h1><p>sorry</p></body></html>")
+          case _ => (200, "application/pdf", "%PDF-1.4 stub")
         }
-        .toDF("shard", "doc_id", "url", "content_type", "body", "x_headers", "status")
+        (id / graft.sources.Warc.PagesPerShard, id,
+          s"http://example.org/doc/$id", ctype, body.getBytes("UTF-8"), "", status)
+      }.toDF("shard", "doc_id", "url", "content_type", "body", "x_headers", "status")
       graft.sources.Warc.writeShardsEncoded(s, pages, path)
     }
 
@@ -5899,26 +5763,20 @@ object SparkEntry {
     * `*` crawler must NOT obey. */
   private def warcRobotsTxtFixture(s: SparkSession, d: String): String =
     fixture("warcrobotstxt", s, d, "documents") { path =>
-      wipe(s, path)
       import s.implicits._
-      val pages = graft.sources.Tables.load(s, d, "documents")
-        .select(org.apache.spark.sql.functions.col("doc_id").cast("long"),
-          org.apache.spark.sql.functions.col("text").cast("string"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val h = (id / 5) % 6
-          val p = (id % 5) match {
-            case 0 => s"/a/$id"
-            case 1 => s"/private/$id"
-            case 2 => s"/private/pub/$id"
-            case 3 => s"/tmp/$id"
-            case _ => s"/dual/$id"
-          }
-          (id / graft.sources.Warc.PagesPerShard, id,
-            s"http://site$h.example$p", "text/html; charset=utf-8",
-            s"<html><body><p>$text</p></body></html>".getBytes("UTF-8"), "", 200)
+      val pages = docTexts(s, d).map { case (id, text) =>
+        val h = (id / 5) % 6
+        val p = (id % 5) match {
+          case 0 => s"/a/$id"
+          case 1 => s"/private/$id"
+          case 2 => s"/private/pub/$id"
+          case 3 => s"/tmp/$id"
+          case _ => s"/dual/$id"
         }
-        .toDF("shard", "doc_id", "url", "content_type", "body", "x_headers", "status")
+        (id / graft.sources.Warc.PagesPerShard, id,
+          s"http://site$h.example$p", "text/html; charset=utf-8",
+          s"<html><body><p>$text</p></body></html>".getBytes("UTF-8"), "", 200)
+      }.toDF("shard", "doc_id", "url", "content_type", "body", "x_headers", "status")
       val robots = (0 until 6).map { h =>
         val tmpRule = if (h % 2 == 1) "Disallow: /tmp\n" else ""
         val body =

@@ -18,8 +18,8 @@ import graft.functions.Normalize
   *
   * Divergence (deliberate, SURVEY.md §7): the reference plain-appends
   * into pre-created range partitions and double-counts on rerun; we
-  * use dynamic partition overwrite, which replaces exactly the `ds`
-  * slice — rerun-idempotent.
+  * replace exactly the `ds` slice — rerun-idempotent, including a
+  * rerun of a day whose source no longer has any `S` row (see [[run]]).
   */
 object Daily {
   private val D182 = DecimalType(18, 2)
@@ -93,7 +93,11 @@ object Daily {
     * (cached — reproduces the reference's shared CTE scan, D:172-234,
     * without re-reading per sink), three aggregate sinks written with
     * dynamic partition overwrite of the `tanggal=ds` slice, audit
-    * counts returned (D:236-248).
+    * counts returned (D:236-248). A sink that writes no row drops its
+    * `tanggal=ds` dir ([[graft.sources.Sinks.dropPartitions]]): the
+    * dynamic overwrite replaces only partitions present in the frame,
+    * so a rerun of a day that became empty would otherwise keep the
+    * old slice. That costs no Spark job; the count rides the write.
     *
     * The two slice counts (which fill the caches) run at the same
     * time, then the three sinks do, through [[Pipeline.concurrently]];
@@ -110,8 +114,12 @@ object Daily {
     // audit counts ride the write job itself (Dataset.observe) — the
     // df holds exactly the ds slice, so rows-written IS the
     // reference's per-insert audit count, with no read-back scan
-    def writePartitioned(df: DataFrame, name: String): Long =
-      graft.sources.Sinks.writePartitionedCounted(df, s"$dwhDir/$name", "tanggal")
+    def writePartitioned(df: DataFrame, name: String): Long = {
+      val rows = graft.sources.Sinks.writePartitionedCounted(df, s"$dwhDir/$name", "tanggal")
+      if (rows == 0)
+        graft.sources.Sinks.dropPartitions(spark, s"$dwhDir/$name", "tanggal", Seq(ds.toString))
+      rows
+    }
 
     try {
       val rows = Pipeline.concurrently(spark, Seq(() => bus.count(), () => halte.count()))

@@ -80,6 +80,34 @@ object Dims {
     }
   }
 
+  /** The distinct `partCol` values a merge batch touches, as strings —
+    * a driver-sized list by definition (the same cardinality class as
+    * the catalog's partition listing). A NULL or empty value is
+    * refused loudly: it would miss the base's
+    * `__HIVE_DEFAULT_PARTITION__` rows in an `isin` prune while the
+    * write still replaced that partition, dropping existing rows.
+    * `who` names the caller and its batch in the refusal. */
+  private[graft] def touchedPartitions(batch: DataFrame, partCol: String,
+                                       who: String): Seq[String] = {
+    val values = batch.select(col(partCol).cast("string")).distinct()
+      .collect().map(_.getString(0)).toSeq
+    require(!values.contains(null) && !values.contains(""),
+      s"$who has NULL or empty $partCol values; " +
+        "null partitions are not supported — filter or default them first")
+    values
+  }
+
+  /** The partition values of `untouched` rows whose key the `batch`
+    * also carries: the partitions a cross-partition key move pulls
+    * into a merge. A narrow (key, partCol) scan — column-pruned,
+    * map-only — semi-joined against the broadcast batch key set. */
+  private[graft] def movedPartitions(untouched: DataFrame, batch: DataFrame,
+                                     key: String, partCol: String): Seq[String] =
+    untouched.select(col(key), col(partCol).cast("string").as("_p"))
+      .join(broadcast(batch.select(col(key)).distinct()), Seq(key), "left_semi")
+      .select(col("_p")).distinct()
+      .collect().map(_.getString(0)).toSeq
+
   /** Full DAG-1 run: stage the three CSVs, transform, upsert/reload
     * into `dwhDir` parquet tables. Returns per-table row counts (the
     * reference's logged audit counts).
@@ -151,15 +179,7 @@ object Dims {
   def partitionScopedMerge(spark: SparkSession, basePath: String,
                            incoming: DataFrame, key: String, partCol: String,
                            tieBreak: Seq[Column] = Nil): Seq[String] = {
-    val touchedRaw = incoming.select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    // a null partition value would silently miss the base's
-    // __HIVE_DEFAULT_PARTITION__ rows in the isin() prune while dynamic
-    // overwrite still replaced that partition — existing rows would be
-    // dropped. Refuse loudly instead of corrupting.
-    require(!touchedRaw.contains(null) && !touchedRaw.contains(""),
-      s"partitionScopedMerge: incoming batch has NULL or empty $partCol values; " +
-        "null partitions are not supported — filter or default them first")
+    val touchedRaw = touchedPartitions(incoming, partCol, "partitionScopedMerge: incoming batch")
     // empty batch: a no-op — skip the scan/merge/overwrite machinery
     if (touchedRaw.isEmpty) return Nil
     // Cross-partition key moves (an incoming row whose key already
@@ -170,7 +190,6 @@ object Dims {
     // incoming key set; moved-from partitions join the touched set and
     // the delta-wins upsert below drops their stale rows — the
     // Delta/Iceberg MERGE delete-and-reinsert semantics.
-    val incomingKeys = incoming.select(col(key)).distinct()
     // a moved key IS an incoming key, so bounding the scan to the
     // incoming key range is conservative-safe; pushed to parquet it
     // engages row-group pruning on key-clustered bases (numeric keys
@@ -183,12 +202,8 @@ object Dims {
       if (b.isNullAt(0)) lit(false)
       else col(key) >= lit(b.get(0)) && col(key) <= lit(b.get(1))
     }
-    val movedParts = spark.read.parquet(basePath)
-      .filter(!col(partCol).isin(touchedRaw: _*) && keyBounds)
-      .select(col(key), col(partCol).cast("string").as("_p"))
-      .join(broadcast(incomingKeys), Seq(key), "left_semi")
-      .select(col("_p")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    val movedParts = movedPartitions(spark.read.parquet(basePath)
+      .filter(!col(partCol).isin(touchedRaw: _*) && keyBounds), incoming, key, partCol)
     val touched = (touchedRaw ++ movedParts).distinct.sorted
     val base = spark.read.parquet(basePath)
       .filter(col(partCol).isin(touched: _*))
@@ -230,12 +245,7 @@ object Dims {
       // manifest-atomic answer.)
       val present = stagedBack.select(col(partCol).cast("string")).distinct()
         .collect().map(_.getString(0)).toSet
-      touched.filterNot(present).foreach { v =>
-        val dir = new org.apache.hadoop.fs.Path(basePath,
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .getPartitionPathString(partCol, v))
-        fs.delete(dir, true)
-      }
+      graft.sources.Sinks.dropPartitions(spark, basePath, partCol, touched.filterNot(present))
     } finally fs.delete(stagingPath, true) // never leak staging data on failure
     touched
   }

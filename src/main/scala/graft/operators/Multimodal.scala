@@ -212,6 +212,24 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** The document ids as media ids, spread across all cores. The
+    * single-file documents scan is ONE split and the decode loops that
+    * read this source are CPU-heavy per row, so the (tiny) id column
+    * is shuffled first (measured on [[gifFrames]]: 4.5 s -> 1.5 s at
+    * sf0.1). [[audioDecode]], [[imageDecode]] and [[videoProbe]] read
+    * the ids unspread: their per-row cost is too small to amortize the
+    * shuffle. */
+  private def spreadMediaIds(spark: SparkSession, dir: String): Dataset[Long] = {
+    import spark.implicits._
+    Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
+      .as[Long]
+      .repartition(spark.sparkContext.defaultParallelism)
+  }
+
+  /** The [[encodePatternPng]] image of `id`, decoded back to pixels. */
+  private def decodePatternPng(id: Long): java.awt.image.BufferedImage =
+    javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(encodePatternPng(id)))
+
   /** End-to-end REAL multi-frame decode: encode a deterministic
     * animated GIF per document id, decode EVERY frame back with the
     * JDK's `javax.imageio` GIF reader (`getNumImages` + per-index
@@ -222,14 +240,7 @@ object Multimodal {
     * stay behind the documented stub. */
   def gifFrames(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      // the multi-frame codec loop is CPU-heavy and the single-file
-      // scan is ONE split — spread the (tiny) id column across all
-      // cores first (measured 4.5 s -> 1.5 s at sf0.1; the PNG/WAV
-      // decoders below stay unspread: their per-row cost is too small
-      // to amortize the shuffle)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
+    spreadMediaIds(spark, dir)
       .mapPartitions(_.map { id =>
         val gif = encodeGif(id)
         val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
@@ -351,9 +362,7 @@ object Multimodal {
     * correct windowing matches. */
   def audioQuality(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      .as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
+    spreadMediaIds(spark, dir)
       .mapPartitions(_.map { id =>
         val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
           new java.io.ByteArrayInputStream(encodeSpeechWav(id)))
@@ -504,12 +513,9 @@ object Multimodal {
     * encode+decode+hash, one tiny group-by keyed by the 64-bit hash. */
   def aHashDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      .as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
+    spreadMediaIds(spark, dir)
       .mapPartitions(_.map { id =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(encodePatternPng(id)))
+        val img = decodePatternPng(id)
         (id, aHashOf(img))
       })
       .toDF("media_id", "ahash")
@@ -546,12 +552,9 @@ object Multimodal {
   def imageResize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val f = PHashSide / ResizeSide // integer reduction factor (4)
-    Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      .as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
+    spreadMediaIds(spark, dir)
       .mapPartitions(_.map { id =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(encodePatternPng(id)))
+        val img = decodePatternPng(id)
         val box = new StringBuilder(ResizeSide * ResizeSide * 2)
         val nn = new StringBuilder(ResizeSide * ResizeSide * 2)
         var by = 0
@@ -599,9 +602,7 @@ object Multimodal {
     * replay of the PCM formula. Map-only decode per partition. */
   def audioResample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      .as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
+    spreadMediaIds(spark, dir)
       .mapPartitions(_.map { id =>
         val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
           new java.io.ByteArrayInputStream(encodeSpeechWav(id)))
@@ -640,12 +641,9 @@ object Multimodal {
     * — the production shape for a transform stage. */
   def imageAugment(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      .as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
+    spreadMediaIds(spark, dir)
       .mapPartitions(_.map { id =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(encodePatternPng(id)))
+        val img = decodePatternPng(id)
         val side = PHashSide
         def derived(f: (Int, Int) => (Int, Int)) = {
           val o = new java.awt.image.BufferedImage(side, side,
@@ -682,12 +680,9 @@ object Multimodal {
     * only a faithful decode matches. */
   def channelStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      .as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
+    spreadMediaIds(spark, dir)
       .mapPartitions(_.map { id =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(encodePatternPng(id)))
+        val img = decodePatternPng(id)
         var s = 0L
         var s2 = 0L
         var y = 0
@@ -787,12 +782,9 @@ object Multimodal {
     // output-sized work, with the hamming-0 mass (same-value id
     // pairs, the quadratic bulk) never generated at all. Round16Spec
     // pins the two formulations row-for-row equal.
-    val h = Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      .as[Long]
-      .repartition(spark.sparkContext.defaultParallelism)
+    val h = spreadMediaIds(spark, dir)
       .mapPartitions(_.map { id =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(encodePatternPng(id)))
+        val img = decodePatternPng(id)
         val hex = aHashOf(img)
         (id, java.lang.Long.parseLong(hex.substring(0, 8), 16),
           java.lang.Long.parseLong(hex.substring(8, 16), 16))
@@ -1178,9 +1170,7 @@ object Multimodal {
     * the shape carries to 100 TB of real shards unchanged. */
   def mjpegFrames(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.load(spark, dir, "documents").select(col("doc_id").as("media_id"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
+    spreadMediaIds(spark, dir)
       .mapPartitions(_.flatMap { id =>
         val frames = aviVideoChunks(id, encodeMjpegAvi(id))
         val n = frames.length.toLong

@@ -32,6 +32,23 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol).parquet(path)
 
+  /** Delete the `partitionCol=value` directory under `path` of each of
+    * `values`. Dynamic partition overwrite ([[writePartitioned]])
+    * replaces only the partitions present in the written frame, so a
+    * partition that must end up EMPTY keeps its old files unless its
+    * directory is dropped explicitly. A missing directory is a no-op,
+    * and no Spark job runs. Not atomic with the write before it:
+    * single writer, as that write is. */
+  def dropPartitions(spark: SparkSession, path: String, partitionCol: String,
+                     values: Seq[String]): Unit = {
+    val base = new Path(path)
+    val fs = fsOf(spark, base)
+    values.foreach { v =>
+      fs.delete(new Path(base, org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .getPartitionPathString(partitionCol, v)), true)
+    }
+  }
+
   private val obsId = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** [[writePartitioned]] + the rows-written audit count collected

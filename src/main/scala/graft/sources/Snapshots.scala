@@ -783,11 +783,8 @@ object Snapshots {
         val m = readManifest(spark, tableDir, v)
         require(m.dataDir.isEmpty && m.partCol == partCol,
           s"commitMergePartitioned: version $v of $tableDir is not partitioned by $partCol")
-        val touchedRaw = delta.select(col(partCol).cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        require(!touchedRaw.contains(null) && !touchedRaw.contains(""),
-          s"commitMergePartitioned: delta has NULL or empty $partCol values; " +
-            "null partitions are not supported — filter or default them first")
+        val touchedRaw = graft.etl.Dims.touchedPartitions(delta, partCol,
+          "commitMergePartitioned: delta")
         // empty delta: a no-op — don't publish an identical version
         if (touchedRaw.isEmpty) return v
         val owned = m.partitions.toMap
@@ -801,7 +798,6 @@ object Snapshots {
         // partition holding a moved key joins the touched set, and the
         // global delta-wins upsert below then drops its stale rows
         // (delete-and-reinsert, the Delta/Iceberg MERGE semantics).
-        val deltaKeys = delta.select(col(key)).distinct()
         val untouchedVals = owned.keys.toSeq.filterNot(touchedRaw.contains)
         // When the manifest tracks file stats on the merge key, prune
         // the detection scan to files whose key range intersects the
@@ -828,11 +824,7 @@ object Snapshots {
           }
         val movedParts = untouchedScan match {
           case None => Nil
-          case Some(unt) => unt
-            .select(col(key), col(partCol).cast("string").as("_p"))
-            .join(broadcast(deltaKeys), Seq(key), "left_semi")
-            .select(col("_p")).distinct()
-            .collect().map(_.getString(0)).toSeq
+          case Some(unt) => graft.etl.Dims.movedPartitions(unt, delta, key, partCol)
         }
         val touched = (touchedRaw ++ movedParts).distinct.sorted
         val baseSubset = readPartitionsSubset(spark, tableDir, m, touched)
@@ -947,8 +939,8 @@ object Snapshots {
               s"Snapshots: concurrent UNPARTITIONED commit on $tableDir " +
                 s"(${base.getOrElse("<empty>")} -> ${newBase.get}) conflicts with " +
                 "a partition-scoped merge; re-derive the delta from the live snapshot"))
-          val ours = delta.select(col(partCol).cast("string")).distinct()
-            .collect().map(_.getString(0)).toSeq
+          val ours = graft.etl.Dims.touchedPartitions(delta, partCol,
+            "commitMergePartitionedOcc: delta")
           val overlap = changed.intersect(ours)
           if (overlap.nonEmpty) throw new SnapshotWriteConflictException(
             s"Snapshots: concurrent commit ${newBase.get} on $tableDir changed " +

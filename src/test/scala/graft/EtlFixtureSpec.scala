@@ -141,6 +141,41 @@ class EtlFixtureSpec extends SparkSpec {
       "pelanggan_count") === byTariff)
   }
 
+  /** A copy of the fixture CSVs in which every tap of `ds` has status F. */
+  private def csvsWithDayFailed(ds: LocalDate): String = {
+    val out = Files.createTempDirectory("graft_etl_failed_day").toFile
+    new File(csvDir).listFiles().foreach { f =>
+      val lines = Files.readAllLines(f.toPath).asScala.toSeq
+      val rewritten =
+        if (!f.getName.startsWith("dummy_transaksi_")) lines
+        else {
+          val header = lines.head.split(",", -1)
+          val (at, status) = (header.indexOf("waktu_transaksi"), header.indexOf("status_var"))
+          lines.head +: lines.tail.map { l =>
+            val v = l.split(",", -1)
+            if (v(at).startsWith(ds.toString)) v.updated(status, "F").mkString(",") else l
+          }
+        }
+      Files.write(new File(out, f.getName).toPath, rewritten.asJava)
+    }
+    out.getPath
+  }
+
+  test("Daily.run: a rerun of a day whose taps all turned F leaves no row of that day in any aggregate") {
+    val dir = freshDwh()
+    Pipeline.backfill(spark, Pipeline.Config(csvDir, dir), day(15), day(16))
+    assert(Daily.run(spark, csvsWithDayFailed(day(15)), dir, day(15)) ===
+      Daily.RunReport("2025-07-15", 0, 0, 0, 0, 0))
+    // the 2025-07-15 slice is gone from all three; 2025-07-16 is untouched
+    def only16(golden: Set[Seq[Option[String]]]) = golden.filter(_.head.contains("2025-07-16"))
+    assert(rows(table(dir, "agg_by_card"), "tanggal", "card_type", "gate_in_boo",
+      "pelanggan_count", "amount_sum") === only16(byCard))
+    assert(rows(table(dir, "agg_by_route"), "tanggal", "route_code", "route_name",
+      "gate_in_boo", "pelanggan_count", "amount_sum") === only16(byRoute))
+    assert(rows(table(dir, "agg_by_tariff"), "tanggal", "tarif", "gate_in_boo",
+      "pelanggan_count") === only16(byTariff))
+  }
+
   test("Pipeline.concurrently: results in task order; the first failure rethrown as itself after every task ended") {
     assert(Pipeline.concurrently(spark, Seq(() => 1, () => 2, () => 3)) === Seq(1, 2, 3))
     val slowDone = new AtomicBoolean(false)
