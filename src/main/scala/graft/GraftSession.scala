@@ -42,10 +42,19 @@ object GraftSession {
   def shufflePartitions: String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
 
+  /** Per-JVM scratch root in `java.io.tmpdir` for what the engine
+    * writes besides its outputs: the warehouse below and the
+    * registry's fixtures (`SparkEntry.fixture`). It is deleted with
+    * its contents when the JVM exits, so runs leave no dirs behind. */
+  private[graft] lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_jvm_")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
   /** Per-JVM warehouse for managed (e.g. bucketed) tables — keeps
     * runs isolated and the repo clean. */
-  private lazy val warehouseDir: String =
-    java.nio.file.Files.createTempDirectory("graft_warehouse").toString
+  private lazy val warehouseDir: String = scratchRoot.resolve("warehouse").toString
 
   def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
     SparkSession.builder()

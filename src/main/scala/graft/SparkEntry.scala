@@ -12,11 +12,6 @@ import graft.operators.{Dedup, Multimodal, Relational, TextAnalysis, Vectors}
   * sides (the compare sorts columns by name and hash-compares values).
   */
 object SparkEntry {
-  /** Per-JVM discriminator for scratch paths (q62's merge base) —
-    * concurrent JVMs on one machine must not share mutable tmp dirs. */
-  private val jvmTag: String =
-    java.lang.ProcessHandle.current().pid().toString
-
   /** Once-per-(key, JVM) fixture memo. Verify/Bench invoke each query
     * repeatedly, and the BASE builds behind q62/q75/q79 are setup, not
     * the operator under test — they must run outside the timed region
@@ -29,10 +24,11 @@ object SparkEntry {
     * the immutable source).
     *
     * Every build starts clean: the target dir is deleted before
-    * `build` runs, so a builder that crashed part-way — or a dir left
-    * by an earlier JVM with the same pid — never leaks a partial chain
-    * into the next build (the snapshot fixtures pin version NAMES).
-    * A build that throws is not memoised; the next call rebuilds.
+    * `build` runs, so a builder that crashed part-way never leaks a
+    * partial chain into the next build (the snapshot fixtures pin
+    * version NAMES). A build that throws is not memoised; the next
+    * call rebuilds. The dirs live under [[GraftSession.scratchRoot]],
+    * so they go when the JVM exits.
     *
     * One kind is built once and shared by every query that names it,
     * so a shared kind must stay read-only: its callers only read it. */
@@ -44,7 +40,7 @@ object SparkEntry {
       .getFileStatus(p).getModificationTime
     val key = s"$kind|$d|$mtime"
     fixtures.computeIfAbsent(key, { _ =>
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_${kind}_${jvmTag}_" +
+      val dir = s"${GraftSession.scratchRoot}/${kind}_" +
         java.security.MessageDigest.getInstance("MD5")
           .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
       val target = new org.apache.hadoop.fs.Path(dir)

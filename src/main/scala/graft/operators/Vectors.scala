@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.CosineSimilarity
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (Array[Float]
@@ -57,9 +59,6 @@ object Vectors {
     math.min(IvfMaxCentroids.toLong,
       math.max(IvfMinCentroids.toLong,
         math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
-
-  private def resolveK(e: DataFrame, k: Int): Int =
-    if (k == AdaptiveK) adaptiveIvfK(e.count()) else k
 
   val IvfProbes = 4
   val NearDupThreshold = 0.45
@@ -175,8 +174,8 @@ object Vectors {
     val m = math.ceil(math.sqrt(cents.length.toDouble)).toInt
     val seeds = cents.filter(_._1 < m)
     def cosOf(a: Array[Double], b: Array[Double]): Double = {
-      val denom = math.sqrt(dotArr(a, a)) * math.sqrt(dotArr(b, b))
-      if (denom == 0.0) Double.NegativeInfinity else round4(dotArr(a, b) / denom)
+      val c = CosineSimilarity.cosine(a, b)
+      if (c == null) Double.NegativeInfinity else round4(c)
     }
     val cidToGid = cents.toSeq.map { case (cid, cv) =>
       val (_, gid) = seeds.map { case (g, gv) => (cosOf(gv, cv), g) }
@@ -401,11 +400,9 @@ object Vectors {
       .orderBy(col("vec_id"))
   }
 
-  /** Spherical k-means (Lloyd) training over the corpus, pure
-    * DataFrame ops per iteration: assign every vector to its nearest
-    * centroid by rounded cosine (broadcast centroids, one aggregate),
-    * then rebuild each centroid as the element-wise SUM of its
-    * members.
+  /** Spherical k-means (Lloyd) training over the corpus: assign every
+    * vector to its nearest centroid by rounded cosine, then rebuild
+    * each centroid as the element-wise SUM of its members.
     *
     * Two deliberate choices make this exactly portable to the DuckDB
     * oracle (and any engine):
@@ -419,23 +416,117 @@ object Vectors {
     *    engine. round() can never see a .5 tie here because
     *    (k+0.5)·10⁻⁶ is not representable as a float.
     *
-    * Driver traffic per iteration is the MODEL, not data: k×dim sum
-    * rows (k ≤ [[IvfMaxCentroids]] by the adaptive clamp). Seeded
-    * deterministically with the first k vectors; k defaults to the
-    * count-derived [[adaptiveIvfK]] so the cell count grows with the
-    * corpus instead of letting in-cell work go quadratic. Empty
-    * clusters keep their previous centroid. */
+    * Where the loop runs depends on the corpus size ([[fitsDriver]]):
+    * while n·dim·16 B is within `spark.sql.autoBroadcastJoinThreshold`
+    * (64 MB in [[graft.GraftSession]]), the corpus is collected once
+    * and the iterations run on the driver ([[lloydLocal]]); above it,
+    * each iteration is DataFrame work and the driver receives only the
+    * MODEL, k×dim sum rows per iteration ([[lloydDistributed]], k ≤
+    * [[IvfMaxCentroids]] by the adaptive clamp). Both give bit-equal
+    * centroids. Seeded deterministically with the first k vectors; k
+    * defaults to the count-derived [[adaptiveIvfK]] so the cell count
+    * grows with the corpus instead of letting in-cell work go
+    * quadratic. Empty clusters keep their previous centroid. */
   def trainCentroids(spark: SparkSession, dir: String,
-                     k: Int = AdaptiveK, iters: Int = IvfTrainIters): DataFrame = {
-    val e = emb(spark, dir)
-    trainCentroidsOn(spark, e, resolveK(e, k), iters)
+                     k: Int = AdaptiveK, iters: Int = IvfTrainIters): DataFrame =
+    trainCentroidsOn(spark, emb(spark, dir), k, iters)
+
+  /** As [[trainCentroids]] but over any (vec_id, embedding) frame whose
+    * vec_id is a key. One aggregate job reads the row count n (which
+    * resolves [[AdaptiveK]]) and the longest embedding; [[fitsDriver]]
+    * then picks the kernel. */
+  private[graft] def trainCentroidsOn(spark: SparkSession, e: DataFrame,
+                                      k: Int, iters: Int): DataFrame = {
+    import spark.implicits._
+    // one job, no shuffle: a DataFrame agg would add an exchange stage
+    val (n, dim) = e.select(size(col("embedding"))).as[Int].rdd
+      .aggregate((0L, 0))((a, d) => (a._1 + 1, math.max(a._2, d)),
+        (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+    val kk = if (k == AdaptiveK) adaptiveIvfK(n) else k
+    val local = fitsDriver(n, dim, spark.sessionState.conf.autoBroadcastJoinThreshold)
+    val cents = if (local) lloydLocal(e, kk, iters) else lloydDistributed(spark, e, kk, iters)
+    cents.toSeq.toDF("cid", "cv")
   }
 
-  /** As [[trainCentroids]] but over any (vec_id, embedding) frame —
-    * the shared kernel; product quantization trains it per
-    * subvector. Seeded with the first k vec_ids' vectors. */
-  private[graft] def trainCentroidsOn(spark: SparkSession, e0: DataFrame,
-                                      k: Int, iters: Int): DataFrame = {
+  /** The Lloyd size gate: n vectors of dim components, each held on
+    * the driver as a double and its quantized long (16 B), fit within
+    * `threshold` bytes — Spark's broadcast threshold, the size it
+    * already ships whole to every executor. A negative threshold
+    * (broadcast off) keeps every corpus distributed. */
+  private[graft] def fitsDriver(n: Long, dim: Int, threshold: Long): Boolean =
+    BigInt(n) * dim * 16 <= threshold
+
+  /** Spark's ordering of a nullable double inside a struct: NULL
+    * lowest, then `SQLOrderingUtil.compareDoubles` (0.0 == −0.0, NaN
+    * highest). */
+  private def compareNullable(a: java.lang.Double, b: java.lang.Double): Int =
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else SQLOrderingUtil.compareDoubles(a, b)
+
+  /** The driver-side Lloyd kernel: one job collects (vec_id, embedding,
+    * qv), qv computed by Spark with the same projection as
+    * [[lloydDistributed]], then every iteration runs here with that
+    * plan's scalar rules — [[twoLevelParts]], coarse routing to the
+    * [[CoarseProbes]] smallest (−round(cos, 4), gid), the fine argmax
+    * `max_by(cid, (ccos, −cid))` over those groups' members, cosine
+    * through [[CosineSimilarity.cosine]] (NULL for a NULL or
+    * NULL-holding embedding, as the expression gives), rounding
+    * through [[round4]], and exact per-(cid, pos) long sums. */
+  private[graft] def lloydLocal(e: DataFrame, k: Int, iters: Int): Array[(Int, Array[Double])] = {
+    val rows = e.select((col("vec_id") < k).as("seed"), col("vec_id").cast("int").as("cid"),
+        col("embedding"),
+        transform(col("embedding"), x => round(x * lit(1000000.0), 0).cast("long")).as("qv"))
+      .collect()
+    def nullable(r: Row, i: Int): Seq[Any] =
+      if (r.isNullAt(i)) null else r.getSeq[Any](i)
+    val embs = rows.map { r =>
+      val v = nullable(r, 2)
+      if (v == null || v.contains(null)) null else v.map(_.asInstanceOf[Double]).toArray
+    }
+    // a NULL component adds nothing to its sum; a NULL or empty array
+    // adds no sum row (posexplode yields none)
+    val qvs = rows.map(r => Option(nullable(r, 3))
+      .map(_.map(x => if (x == null) 0L else x.asInstanceOf[Long]).toArray).orNull)
+    def cos(a: Array[Double], b: Array[Double]): java.lang.Double =
+      if (a == null || b == null) null else CosineSimilarity.cosine(a, b)
+    def rounded(c: java.lang.Double): java.lang.Double = if (c == null) null else round4(c)
+    def negated(c: java.lang.Double): java.lang.Double = if (c == null) null else -c
+    var cents: Array[(Int, Array[Double])] = rows.indices
+      .filter(i => !rows(i).isNullAt(0) && rows(i).getBoolean(0))
+      .map(i => (rows(i).getInt(1), qvs(i).map(_.toDouble))).toArray.sortBy(_._1)
+    for (_ <- 0 until iters) {
+      val (seeds, cidToGid) = twoLevelParts(cents)
+      val members = cidToGid.groupMap(_._2)(_._1)
+      val cv = cents.toMap
+      val sums = scala.collection.mutable.Map.empty[Int, Array[Long]]
+      embs.indices.foreach { i =>
+        val groups = seeds.map { case (g, gv) => (negated(rounded(cos(gv, embs(i)))), g) }
+          .sortWith { case ((ca, ga), (cb, gb)) =>
+            val c = compareNullable(ca, cb)
+            c < 0 || (c == 0 && ga < gb)
+          }
+          .take(CoarseProbes).map(_._2)
+        val cands = groups.flatMap(members).map(cid => (rounded(cos(cv(cid), embs(i))), cid))
+        if (cands.nonEmpty && qvs(i) != null && qvs(i).nonEmpty) {
+          val (_, cid) = cands.reduceLeft { (best, c) =>
+            val o = compareNullable(c._1, best._1)
+            if (o > 0 || (o == 0 && -c._2 > -best._2)) c else best
+          }
+          val acc = sums.getOrElseUpdate(cid, new Array[Long](cv(cid).length))
+          qvs(i).indices.foreach(p => acc(p) += qvs(i)(p))
+        }
+      }
+      cents = cents.map { case (cid, old) => (cid, sums.get(cid).fold(old)(_.map(_.toDouble))) }
+    }
+    cents
+  }
+
+  /** The distributed Lloyd kernel, pure DataFrame ops per iteration:
+    * [[twoLevelAssign]] (broadcast centroids, one aggregate), then one
+    * per-(cid, pos) sum aggregate whose k×dim rows are collected. */
+  private[graft] def lloydDistributed(spark: SparkSession, e0: DataFrame,
+                                      k: Int, iters: Int): Array[(Int, Array[Double])] = {
     import spark.implicits._
     val e = e0.cache()
     val q = e.select(col("vec_id"),
@@ -466,7 +557,7 @@ object Vectors {
       }
     }
     e.unpersist(); q.unpersist()
-    cents.toSeq.toDF("cid", "cv")
+    cents
   }
 
   val PqSubspaces = 4
@@ -1144,9 +1235,12 @@ object Vectors {
     s
   }
 
-  /** Spark Round semantics for doubles (BigDecimal.valueOf → HALF_UP). */
-  private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+  /** Spark `round(x, 4)` for doubles: NaN and ±Inf pass through, any
+    * other value is rounded HALF_UP from its shortest decimal string
+    * (`BigDecimal.valueOf`), as Spark's `Round` does. */
+  private[graft] def round4(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Pearson correlation matrix over the first `dims` embedding
     * dimensions, as exact-integer sufficient statistics: components

@@ -39,20 +39,11 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    // mismatched dimensions or any NULL element → NULL (silently
-    // truncating to the common prefix or reading nulls as 0.0 would
-    // fabricate similarities)
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = x.getDouble(i); val yi = y.getDouble(i)
-      dot += xi * yi; nx += xi * xi; ny += yi * yi
-      i += 1
-    }
-    val denom = math.sqrt(nx) * math.sqrt(ny)
-    if (denom == 0.0) null else dot / denom
+    // mismatched dimensions or any NULL element → NULL (reading nulls
+    // as 0.0 would fabricate similarities)
+    if (x.numElements() != y.numElements() ||
+        (0 until x.numElements()).exists(i => x.isNullAt(i) || y.isNullAt(i))) return null
+    CosineSimilarity.cosine(x.toDoubleArray(), y.toDoubleArray())
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -89,6 +80,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+  /** The scalar kernel, shared by interpreted evaluation and the
+    * driver-side callers (`Vectors`); the string `doGenCode` emits is
+    * the same loop. NULL when the lengths differ (silently truncating
+    * to the common prefix would fabricate a similarity) or a norm is
+    * zero. */
+  def cosine(x: Array[Double], y: Array[Double]): java.lang.Double = {
+    if (x.length != y.length) return null
+    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+    while (i < x.length) {
+      val xi = x(i); val yi = y(i)
+      dot += xi * yi; nx += xi * xi; ny += yi * yi
+      i += 1
+    }
+    val denom = math.sqrt(nx) * math.sqrt(ny)
+    if (denom == 0.0) null else dot / denom
+  }
+
   val info = new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim")
 
   /** Register into an existing session's function registry. */

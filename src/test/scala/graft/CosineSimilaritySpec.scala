@@ -46,4 +46,66 @@ class CosineSimilaritySpec extends SparkSpec {
     val plan = q.queryExecution.executedPlan.toString
     assert("""\*\(\d+\) Project \[cosine_sim""".r.findFirstIn(plan).isDefined, plan)
   }
+
+  /** `f` with the given session confs set, restored afterwards. */
+  private def withConfs[T](confs: (String, String)*)(f: => T): T = {
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def bits(d: java.lang.Double): Option[Long] =
+    Option(d).map(x => java.lang.Double.doubleToLongBits(x))
+
+  test("scalar, interpreted and codegen cosines are bit-equal; round4 is Spark's round(·, 4)") {
+    val rnd = new scala.util.Random(20261019)
+    def vec(n: Int): Array[Double] =
+      Array.fill(n)(if (rnd.nextInt(50) == 0) -0.0 else rnd.nextGaussian())
+    val random = (0 until 500).map { _ => val n = 1 + rnd.nextInt(64); (vec(n), vec(n)) }
+    val pairs = random ++ Seq(
+      (Array(0.0, 0.0, 0.0), Array(1.0, 2.0, 3.0)), // zero norm → NULL
+      (Array(-0.0, 1.0), Array(1.0, -0.0)),          // −0.0 components, cosine 0
+      (Array(1.0, 2.0), Array(1.0, 2.0, 3.0)))       // length mismatch → NULL
+    val df = pairs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("id", "a", "b")
+    val cos = call_function("cosine_sim", col("a"), col("b"))
+    def run(): (Map[Int, (Option[Long], Option[Long])], String) = {
+      val q = df.repartition(2).select(cos.as("c"), round(cos, 4).as("r"), col("id"))
+      val out = q.collect().map { r =>
+        def at(i: Int) = if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(i)))
+        r.getInt(2) -> (at(0), at(1))
+      }.toMap
+      (out, q.queryExecution.executedPlan.toString)
+    }
+    val (codegen, codegenPlan) = run()
+    assert("""\*\(\d+\) Project \[cosine_sim""".r.findFirstIn(codegenPlan).isDefined, codegenPlan)
+    val (interpreted, interpretedPlan) = withConfs(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
+    assert("""\*\(\d+\)""".r.findFirstIn(interpretedPlan).isEmpty, interpretedPlan)
+    pairs.zipWithIndex.foreach { case ((a, b), i) =>
+      val scalar = graft.plans.CosineSimilarity.cosine(a, b)
+      val rounded = Option(scalar).map(c => java.lang.Double.valueOf(graft.operators.Vectors.round4(c)))
+      assert(codegen(i) === ((bits(scalar), rounded.flatMap(bits(_)))), s"pair $i")
+      assert(interpreted(i) === codegen(i), s"pair $i")
+    }
+    val n = pairs.length
+    assert(codegen(n - 3)._1.isEmpty && codegen(n - 1)._1.isEmpty)
+    assert(codegen(n - 2)._1 === bits(0.0))
+  }
+
+  test("round4 matches Spark's round(·, 4) on half-way ties, signed zeros, NaN and infinities") {
+    val xs = Seq(0.03125, -0.03125, 0.28125, 0.00005, -0.00005, 0.12345, 0.99995, -0.0, 0.0,
+      1e-300, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val spark4 = xs.toDF("x").repartition(2).select(col("x"), round(col("x"), 4).as("r"))
+      .collect().map(r => java.lang.Double.doubleToLongBits(r.getDouble(0)) -> r.getDouble(1)).toMap
+    xs.foreach { x =>
+      val want = spark4(java.lang.Double.doubleToLongBits(x))
+      assert(java.lang.Double.doubleToLongBits(graft.operators.Vectors.round4(x)) ===
+        java.lang.Double.doubleToLongBits(want), s"round4($x)")
+    }
+    assert(graft.operators.Vectors.round4(0.03125) === 0.0313) // HALF_UP, not HALF_EVEN
+  }
 }

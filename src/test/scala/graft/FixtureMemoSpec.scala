@@ -80,6 +80,18 @@ class FixtureMemoSpec extends SparkSpec {
     } finally cleanUp(first, src)
   }
 
+  test("fixtures and the warehouse live under the per-JVM scratch root") {
+    val (src, _) = sourceDir()
+    val root = GraftSession.scratchRoot
+    val path = SparkEntry.fixture(freshKind(), spark, src, "orders")(_ => ())
+    try {
+      assert(new File(path).toPath.startsWith(root), path)
+      assert(spark.conf.get("spark.sql.warehouse.dir").contains(root.resolve("warehouse").toString))
+      assert(root.getFileName.toString.startsWith("graft_jvm_"))
+      assert(root.getParent === new File(sys.props("java.io.tmpdir")).toPath.toAbsolutePath)
+    } finally cleanUp(path, src)
+  }
+
   test("touching the source table's mtime rebuilds the fixture") {
     val (src, table) = sourceDir()
     val kind = freshKind()
