@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -123,7 +123,7 @@ object Vectors {
     * form and the DuckDB oracle. */
   def cosine(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
-  private def emb(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
 
@@ -338,7 +338,7 @@ object Vectors {
       .orderBy(col("qid"))
   }
 
-  private def annIvfWith(spark: SparkSession, dir: String, centsDf: DataFrame): DataFrame = {
+  private[graft] def annIvfWith(spark: SparkSession, dir: String, centsDf: DataFrame): DataFrame = {
     val e = emb(spark, dir)
     val assigned = ivfAssignmentWith(e, centsDf)
     val cents = broadcast(centsDf)
@@ -417,9 +417,10 @@ object Vectors {
     *    (k+0.5)·10⁻⁶ is not representable as a float.
     *
     * Where the loop runs depends on the corpus size ([[fitsDriver]]):
-    * while n·dim·16 B is within `spark.sql.autoBroadcastJoinThreshold`
-    * (64 MB in [[graft.GraftSession]]), the corpus is collected once
-    * and the iterations run on the driver ([[lloydLocal]]); above it,
+    * while the corpus, at [[LocalBytesPerComponent]] a component,
+    * fits the driver's [[driverBudget]] (a quarter of its heap, and
+    * at most `spark.driver.maxResultSize`), it is collected once and
+    * the iterations run on the driver ([[lloydLocal]]); above it,
     * each iteration is DataFrame work and the driver receives only the
     * MODEL, k×dim sum rows per iteration ([[lloydDistributed]], k ≤
     * [[IvfMaxCentroids]] by the adaptive clamp). Both give bit-equal
@@ -429,32 +430,52 @@ object Vectors {
     * quadratic. Empty clusters keep their previous centroid. */
   def trainCentroids(spark: SparkSession, dir: String,
                      k: Int = AdaptiveK, iters: Int = IvfTrainIters): DataFrame =
-    trainCentroidsOn(spark, emb(spark, dir), k, iters)
+    trainCentroidsOn(spark, emb(spark, dir), k, iters, driverBudget(spark))
 
   /** As [[trainCentroids]] but over any (vec_id, embedding) frame whose
     * vec_id is a key. One aggregate job reads the row count n (which
     * resolves [[AdaptiveK]]) and the longest embedding; [[fitsDriver]]
-    * then picks the kernel. */
+    * against `budget` bytes then picks the kernel. */
   private[graft] def trainCentroidsOn(spark: SparkSession, e: DataFrame,
-                                      k: Int, iters: Int): DataFrame = {
+                                      k: Int, iters: Int, budget: Long): DataFrame = {
     import spark.implicits._
     // one job, no shuffle: a DataFrame agg would add an exchange stage
     val (n, dim) = e.select(size(col("embedding"))).as[Int].rdd
       .aggregate((0L, 0))((a, d) => (a._1 + 1, math.max(a._2, d)),
         (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
     val kk = if (k == AdaptiveK) adaptiveIvfK(n) else k
-    val local = fitsDriver(n, dim, spark.sessionState.conf.autoBroadcastJoinThreshold)
+    val local = fitsDriver(n, dim, budget)
     val cents = if (local) lloydLocal(e, kk, iters) else lloydDistributed(spark, e, kk, iters)
     cents.toSeq.toDF("cid", "cv")
   }
 
-  /** The Lloyd size gate: n vectors of dim components, each held on
-    * the driver as a double and its quantized long (16 B), fit within
-    * `threshold` bytes — Spark's broadcast threshold, the size it
-    * already ships whole to every executor. A negative threshold
-    * (broadcast off) keeps every corpus distributed. */
-  private[graft] def fitsDriver(n: Long, dim: Int, threshold: Long): Boolean =
-    BigInt(n) * dim * 16 <= threshold
+  /** Driver heap [[lloydLocal]] takes per corpus component: the
+    * collected double and its quantized long (16 B) plus each row's
+    * array headers and tuple came to 17.0 B retained at dim 64 (×10
+    * and ×100 replicas of sf0.1, heap after GC); the rest is headroom
+    * for the collect's transient result blocks. */
+  private[graft] val LocalBytesPerComponent = 24
+
+  /** The Lloyd size gate: n vectors of dim components, at
+    * [[LocalBytesPerComponent]] each, fit within `budget` bytes. A
+    * negative budget keeps every corpus distributed. The gate is about
+    * memory only: at local[4] the local kernel trained 3.2–3.8× faster
+    * than the distributed one on sf0.1 and on its ×10 and ×100
+    * replicas (0.64 / 1.14 / 10.1 s against 2.40 / 4.85 / 32.0 s), so
+    * the distributed loop is for corpora the driver cannot hold. */
+  private[graft] def fitsDriver(n: Long, dim: Int, budget: Long): Boolean =
+    BigInt(n) * dim * LocalBytesPerComponent <= budget
+
+  /** What [[lloydLocal]] may hold on the driver: a quarter of its
+    * heap (Spark's unified memory takes 60% of it; in local mode the
+    * executors share this heap), and no more than
+    * `spark.driver.maxResultSize` (0 = no cap), above which the one
+    * collect would fail. */
+  private[graft] def driverBudget(spark: SparkSession): Long = {
+    val heap = Runtime.getRuntime.maxMemory / 4
+    val cap = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (cap > 0) math.min(heap, cap) else heap
+  }
 
   /** Spark's ordering of a nullable double inside a struct: NULL
     * lowest, then `SQLOrderingUtil.compareDoubles` (0.0 == −0.0, NaN
@@ -474,50 +495,75 @@ object Vectors {
     * NULL-holding embedding, as the expression gives), rounding
     * through [[round4]], and exact per-(cid, pos) long sums. */
   private[graft] def lloydLocal(e: DataFrame, k: Int, iters: Int): Array[(Int, Array[Double])] = {
+    // converted to primitive arrays on the executors, so the driver
+    // never holds the boxed rows (see LocalBytesPerComponent)
     val rows = e.select((col("vec_id") < k).as("seed"), col("vec_id").cast("int").as("cid"),
         col("embedding"),
         transform(col("embedding"), x => round(x * lit(1000000.0), 0).cast("long")).as("qv"))
+      .rdd.map { r =>
+        def nullable(i: Int): Seq[Any] = if (r.isNullAt(i)) null else r.getSeq[Any](i)
+        val (v, q) = (nullable(2), nullable(3))
+        val seed = !r.isNullAt(0) && r.getBoolean(0)
+        (if (seed) Some(r.getInt(1)) else None,
+          if (v == null || v.contains(null)) null else v.map(_.asInstanceOf[Double]).toArray,
+          // a NULL component adds nothing to its sum; a NULL or empty
+          // array adds no sum row (posexplode yields none)
+          if (q == null) null else q.map(x => if (x == null) 0L else x.asInstanceOf[Long]).toArray)
+      }
       .collect()
-    def nullable(r: Row, i: Int): Seq[Any] =
-      if (r.isNullAt(i)) null else r.getSeq[Any](i)
-    val embs = rows.map { r =>
-      val v = nullable(r, 2)
-      if (v == null || v.contains(null)) null else v.map(_.asInstanceOf[Double]).toArray
-    }
-    // a NULL component adds nothing to its sum; a NULL or empty array
-    // adds no sum row (posexplode yields none)
-    val qvs = rows.map(r => Option(nullable(r, 3))
-      .map(_.map(x => if (x == null) 0L else x.asInstanceOf[Long]).toArray).orNull)
+    val embs = rows.map(_._2)
+    val qvs = rows.map(_._3)
     def cos(a: Array[Double], b: Array[Double]): java.lang.Double =
       if (a == null || b == null) null else CosineSimilarity.cosine(a, b)
     def rounded(c: java.lang.Double): java.lang.Double = if (c == null) null else round4(c)
     def negated(c: java.lang.Double): java.lang.Double = if (c == null) null else -c
-    var cents: Array[(Int, Array[Double])] = rows.indices
-      .filter(i => !rows(i).isNullAt(0) && rows(i).getBoolean(0))
-      .map(i => (rows(i).getInt(1), qvs(i).map(_.toDouble))).toArray.sortBy(_._1)
+    var cents: Array[(Int, Array[Double])] = rows
+      .collect { case (Some(cid), _, qv) => (cid, qv.map(_.toDouble)) }.sortBy(_._1)
     for (_ <- 0 until iters) {
       val (seeds, cidToGid) = twoLevelParts(cents)
-      val members = cidToGid.groupMap(_._2)(_._1)
-      val cv = cents.toMap
-      val sums = scala.collection.mutable.Map.empty[Int, Array[Long]]
+      val slot = cents.map(_._1).zipWithIndex.toMap
+      val groupOf = cidToGid.groupMap(_._2)(c => slot(c._1))
+      val (gids, seedVs) = (seeds.map(_._1).toArray, seeds.map(_._2).toArray)
+      val members = gids.map(g => groupOf(g).toArray)
+      val sums = new Array[Array[Long]](cents.length)
+      val coarse = new Array[java.lang.Double](gids.length)
+      val probed = new Array[Boolean](gids.length)
       embs.indices.foreach { i =>
-        val groups = seeds.map { case (g, gv) => (negated(rounded(cos(gv, embs(i)))), g) }
-          .sortWith { case ((ca, ga), (cb, gb)) =>
-            val c = compareNullable(ca, cb)
-            c < 0 || (c == 0 && ga < gb)
+        val v = embs(i)
+        gids.indices.foreach(g => coarse(g) = negated(rounded(cos(seedVs(g), v))))
+        java.util.Arrays.fill(probed, false)
+        var best = -1
+        var bestCos: java.lang.Double = null
+        (0 until math.min(CoarseProbes, gids.length)).foreach { _ =>
+          // the next smallest (−round(cos, 4), gid) group
+          var g = -1
+          gids.indices.foreach { h =>
+            if (!probed(h) && (g < 0 || {
+              val o = compareNullable(coarse(h), coarse(g))
+              o < 0 || (o == 0 && gids(h) < gids(g))
+            })) g = h
           }
-          .take(CoarseProbes).map(_._2)
-        val cands = groups.flatMap(members).map(cid => (rounded(cos(cv(cid), embs(i))), cid))
-        if (cands.nonEmpty && qvs(i) != null && qvs(i).nonEmpty) {
-          val (_, cid) = cands.reduceLeft { (best, c) =>
-            val o = compareNullable(c._1, best._1)
-            if (o > 0 || (o == 0 && -c._2 > -best._2)) c else best
+          probed(g) = true
+          members(g).foreach { m =>
+            val c = rounded(cos(cents(m)._2, v))
+            // max by (ccos, −cid)
+            if (best < 0 || {
+              val o = compareNullable(c, bestCos)
+              o > 0 || (o == 0 && cents(m)._1 < cents(best)._1)
+            }) { best = m; bestCos = c }
           }
-          val acc = sums.getOrElseUpdate(cid, new Array[Long](cv(cid).length))
-          qvs(i).indices.foreach(p => acc(p) += qvs(i)(p))
+        }
+        val qv = qvs(i)
+        if (best >= 0 && qv != null && qv.nonEmpty) {
+          if (sums(best) == null) sums(best) = new Array[Long](cents(best)._2.length)
+          val acc = sums(best)
+          var p = 0
+          while (p < qv.length) { acc(p) += qv(p); p += 1 }
         }
       }
-      cents = cents.map { case (cid, old) => (cid, sums.get(cid).fold(old)(_.map(_.toDouble))) }
+      cents = cents.indices.map { m =>
+        if (sums(m) == null) cents(m) else (cents(m)._1, sums(m).map(_.toDouble))
+      }.toArray
     }
     cents
   }
@@ -1237,10 +1283,22 @@ object Vectors {
 
   /** Spark `round(x, 4)` for doubles: NaN and ±Inf pass through, any
     * other value is rounded HALF_UP from its shortest decimal string
-    * (`BigDecimal.valueOf`), as Spark's `Round` does. */
-  private[graft] def round4(x: Double): Double =
+    * (`BigDecimal.valueOf`), as Spark's `Round` does.
+    *
+    * The BigDecimal route costs ~0.5 µs, so |x·10⁴| < 10⁵ away from a
+    * half-way point takes a fast path: there the double product is
+    * within 10⁻¹⁰ of the decimal's, so it picks the same integer k,
+    * and k / 10⁴ is what `BigDecimal.doubleValue` returns for k at
+    * scale 4. A long k keeps −0.0 out, as BigDecimal has no −0. */
+  private[graft] def round4(x: Double): Double = {
+    val y = math.abs(x * 1e4)
     if (x.isNaN || x.isInfinite) x
+    else if (y < 1e5 && math.abs(y - math.floor(y) - 0.5) > 1e-9) {
+      val k = math.floor(y + 0.5).toLong
+      (if (x < 0) -k else k) / 1e4
+    }
     else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
 
   /** Pearson correlation matrix over the first `dims` embedding
     * dimensions, as exact-integer sufficient statistics: components

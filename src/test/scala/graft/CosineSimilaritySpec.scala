@@ -108,4 +108,23 @@ class CosineSimilaritySpec extends SparkSpec {
     }
     assert(graft.operators.Vectors.round4(0.03125) === 0.0313) // HALF_UP, not HALF_EVEN
   }
+
+  test("round4 matches Spark's round(·, 4) on both sides of its fast path") {
+    val rnd = new scala.util.Random(4)
+    val xs = (0 until 30000).map { i =>
+      i % 6 match {
+        case 0 => rnd.nextDouble() * 2 - 1                                  // cosines
+        case 1 => (rnd.nextInt(20001) - 10000) / 1e4 + 5e-5                 // half-way ties
+        case 2 => (rnd.nextInt(20001) - 10000) / 1e4 + 5e-5 +
+          (rnd.nextInt(9) - 4) * math.ulp(1.0)                              // a few ulps off a tie
+        case 3 => math.scalb(rnd.nextDouble() * 2 - 1, rnd.nextInt(34) - 30) // tiny up to 8
+        case 4 => (rnd.nextInt(200001) - 100000) / 1e5                     // 5 decimals
+        case _ => java.lang.Float.intBitsToFloat(rnd.nextInt()).toDouble      // any float
+      }
+    }
+    val bitsOf = (x: Double) => java.lang.Double.doubleToLongBits(x)
+    val spark4 = xs.toDF("x").repartition(2).select(col("x"), round(col("x"), 4).as("r"))
+      .collect().map(r => bitsOf(r.getDouble(0)) -> bitsOf(r.getDouble(1))).toMap
+    xs.foreach(x => assert(bitsOf(graft.operators.Vectors.round4(x)) === spark4(bitsOf(x)), s"round4($x)"))
+  }
 }

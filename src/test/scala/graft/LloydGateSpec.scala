@@ -35,7 +35,6 @@ class LloydGateSpec extends SparkSpec {
   private val n = 500
   private val dim = 64
   private val k = Vectors.adaptiveIvfK(n)
-  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
 
   private def planted(cells: (Int, Float)*): Array[Float] = {
     val v = new Array[Float](dim)
@@ -69,7 +68,7 @@ class LloydGateSpec extends SparkSpec {
   }
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_lloyd_gate").toString
+    val d = Files.createTempDirectory(GraftSession.scratchRoot, "lloyd_gate").toString
     corpus.toDF("vec_id", "embedding").repartition(3)
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
     d
@@ -80,12 +79,6 @@ class LloydGateSpec extends SparkSpec {
 
   private def bitsOf(cents: Array[(Int, Array[Double])]): Seq[(Int, Seq[Long])] =
     cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq.map(java.lang.Double.doubleToLongBits)) }
-
-  private def withThreshold[T](value: String)(f: => T): T = {
-    val before = spark.conf.get(threshold)
-    spark.conf.set(threshold, value)
-    try f finally spark.conf.set(threshold, before)
-  }
 
   /** Number of Spark jobs `f` starts; a marker job orders the
     * listener bus, so every job start of `f` has arrived before it. */
@@ -136,29 +129,36 @@ class LloydGateSpec extends SparkSpec {
     assert(cos.doubleValue === 0.03125)
   }
 
-  test("gate predicate: at, just under and just over the bound; off when negative") {
-    val bound = 64L * 1024 * 1024
-    assert(Vectors.fitsDriver(bound / (64 * 16), 64, bound))        // exactly at
-    assert(Vectors.fitsDriver(bound / (64 * 16) - 1, 64, bound))    // 1 row under
-    assert(!Vectors.fitsDriver(bound / (64 * 16) + 1, 64, bound))   // 1 row over
-    assert(Vectors.fitsDriver(1, 1, 16) && !Vectors.fitsDriver(1, 1, 15))
-    assert(Vectors.fitsDriver(2000L * 10, 64, bound))               // ×10 replica of sf0.1
-    assert(!Vectors.fitsDriver(2000L * 100, 64, bound))             // ×100 replica
+  test("gate predicate: at, just under and just over the budget; off when negative") {
+    val per = Vectors.LocalBytesPerComponent.toLong
+    val budget = 512L * 1024 * 1024
+    assert(Vectors.fitsDriver(budget / (64 * per), 64, budget))        // exactly at
+    assert(Vectors.fitsDriver(budget / (64 * per) - 1, 64, budget))    // 1 row under
+    assert(!Vectors.fitsDriver(budget / (64 * per) + 1, 64, budget))   // 1 row over
+    assert(Vectors.fitsDriver(1, 1, per) && !Vectors.fitsDriver(1, 1, per - 1))
     assert(!Vectors.fitsDriver(0, 64, -1) && !Vectors.fitsDriver(1, 64, -1))
-    assert(!Vectors.fitsDriver(Long.MaxValue, 64, Long.MaxValue))   // no overflow
+    assert(!Vectors.fitsDriver(Long.MaxValue, 64, Long.MaxValue))      // no overflow
+    // the budget: a quarter of the heap, capped by maxResultSize (1g by default)
+    val b = Vectors.driverBudget(spark)
+    assert(b > 0 && b <= Runtime.getRuntime.maxMemory / 4 && b <= 1L * 1024 * 1024 * 1024)
   }
 
   test("annIvfTrained returns the same rows on both sides of the gate") {
-    def rows() = Vectors.annIvfTrained(spark, dir).collect().toSeq.map(_.toSeq)
     // the frame is read (one parquet schema job) before counting
-    def train() = { val e = frame(); jobsOf(Vectors.trainCentroidsOn(spark, e, Vectors.AdaptiveK, 3)) }
-    val ((local, localJobs), (distributed, distributedJobs)) = (train(), withThreshold("-1")(train()))
+    def train(budget: Long) = {
+      val e = frame()
+      jobsOf(Vectors.trainCentroidsOn(spark, e, Vectors.AdaptiveK, 3, budget))
+    }
+    val ((local, localJobs), (distributed, distributedJobs)) =
+      (train(Vectors.driverBudget(spark)), train(-1))
     assert(localJobs === 2, "one shape job and one collect")
     assert(distributedJobs > 2 + 3, "a job per iteration at least")
     assert(bitsOf(local.as[(Int, Array[Double])].collect()) ===
       bitsOf(distributed.as[(Int, Array[Double])].collect()))
-    val viaLocal = rows()
-    val viaDistributed = withThreshold("-1")(rows())
+    val viaLocal = Vectors.annIvfTrained(spark, dir).collect().toSeq.map(_.toSeq)
+    val viaDistributed = Vectors.annIvfWith(spark, dir, Vectors.trainCentroidsOn(spark,
+      Vectors.emb(spark, dir), Vectors.AdaptiveK, Vectors.IvfTrainIters, -1))
+      .collect().toSeq.map(_.toSeq)
     assert(viaLocal.nonEmpty)
     assert(viaLocal === viaDistributed)
   }

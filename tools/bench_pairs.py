@@ -2,13 +2,14 @@
 """Paired benchmark runs of a parent and a change checkout.
 
     python3 tools/bench_pairs.py --parent ../parent --change . \\
-        --workload registry --pairs 10 [--first-seed 1] [--seconds 5] [--json out.json]
+        --workload registry --pairs 10 [--first-seed 1] [--json out.json]
 
 For each seed N in [first-seed, first-seed + pairs) it runs
 
-    python3 perfbench/run.py --workload W --seed N --seconds S --trace 0
+    python3 perfbench/run.py --workload W --seed N --trace 0
 
-once in each checkout, one after the other: the parent first on odd
+once in each checkout, one after the other (run.py's own default run
+length applies): the parent first on odd
 seeds, the change first on even ones. It then prints, for every
 end-to-end metric that BENCHMARK.json (read from the change checkout)
 declares:
@@ -32,10 +33,10 @@ import sys
 from pathlib import Path
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed):
     """One benchmark run; returns its parsed result line."""
     cmd = ["python3", "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                        text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
@@ -78,7 +79,6 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=5)
     ap.add_argument("--json", help="also write every run and the summary here")
     a = ap.parse_args()
     if a.pairs < 2:
@@ -89,7 +89,7 @@ def main():
     runs = []
     for seed in range(a.first_seed, a.first_seed + a.pairs):
         order = ["parent", "change"] if seed % 2 else ["change", "parent"]
-        got = {side: run_once(getattr(a, side), a.workload, seed, a.seconds) for side in order}
+        got = {side: run_once(getattr(a, side), a.workload, seed) for side in order}
         runs.append((seed, got["parent"], got["change"]))
         for side in ("parent", "change"):
             r = got[side]
