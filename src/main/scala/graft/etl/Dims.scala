@@ -233,10 +233,7 @@ object Dims {
     try {
       merged.write.mode("overwrite").parquet(staging)
       val stagedBack = spark.read.parquet(staging)
-      stagedBack.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol)
-        .parquet(basePath)
+      graft.sources.Sinks.writePartitioned(stagedBack, basePath, partCol)
       // a moved-from partition can be EMPTIED (every row moved out);
       // dynamic overwrite only replaces partitions PRESENT in the
       // written frame, so the stale dir must be dropped explicitly.

@@ -38,59 +38,13 @@ object Urls {
   /** ONE-pass parse of a URL into
     * `(canon, scheme, host, host_noport, path, query)` — the native
     * [[graft.plans.UrlParts]] expression (registered by
-    * GraftExtensions). Semantically identical to
-    * [[canonicalUrl]]/[[hostOf]] but reads the string once instead of
-    * a split/transform pass plus five regexp passes; q266/q267 route
-    * through this, and the q266 oracle (which restates the REGEX
-    * formulation in DuckDB) gates the equivalence byte-for-byte. */
+    * GraftExtensions). Semantically identical to the retired regex
+    * formulation (`canonicalUrl` ∘ [[hostOf]], now a test-scope
+    * witness) but reads the string once instead of a split/transform
+    * pass plus five regexp passes; q266/q267 route through this, and
+    * the q266 oracle (which restates the REGEX formulation in DuckDB)
+    * gates the equivalence byte-for-byte. */
   def parts(u: Column): Column = call_function("url_parts", u)
-
-  /** Params dropped entirely: the click/campaign trackers every
-    * pipeline strips (they identify the REFERRAL, not the resource). */
-  val TrackingParamRe = "^(utm_[A-Za-z0-9_]*|fbclid|gclid)="
-
-  /** Uppercase hex codes of the RFC 3986 UNRESERVED characters
-    * (ALPHA / DIGIT / `-` `.` `_` `~`) — the escapes §6.2.2.2 says to
-    * decode. Everything else (reserved, non-ASCII bytes of multibyte
-    * escapes) must STAY escaped: decoding `%2F` would change the
-    * path structure. */
-  val UnreservedHexRe = "^(4[1-9A-F]|5[0-9A]|6[1-9A-F]|7[0-9A]|3[0-9]|2[DE]|5F|7E)$"
-
-  /** RFC 3986 §6.2.2 percent-encoding normalization: decode
-    * unreserved `%XX` escapes, uppercase the hex of the rest, leave
-    * malformed escapes (`%4`, `%zz`, trailing `%`) byte-for-byte.
-    * Split on `%`; each following piece's first two chars are the
-    * candidate hex. Pure array/regexp column expression, restated
-    * with the same regexes over DuckDB's `string_split`/
-    * `list_transform` in the q266 oracle. */
-  def pctNormalize(u: Column): Column = {
-    val parts = split(u, "%", -1)
-    val rest = transform(slice(parts, lit(2), size(parts) - 1), p => {
-      val hex = upper(substring(p, 1, 2))
-      val tail = substring(p, 3, Int.MaxValue)
-      when(hex.rlike(UnreservedHexRe), concat(decode(unhex(hex), "UTF-8"), tail))
-        .when(hex.rlike("^[0-9A-F]{2}$"), concat(lit("%"), hex, tail))
-        .otherwise(concat(lit("%"), p))
-    })
-    concat(element_at(parts, 1), array_join(rest, ""))
-  }
-
-  def canonicalUrl(u: Column): Column = {
-    val noFrag = regexp_replace(pctNormalize(u), "#.*$", "")
-    val scheme = lower(regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val hostPort = lower(regexp_extract(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?]*)", 1))
-    val host = when(scheme === "http", regexp_replace(hostPort, ":80$", ""))
-      .when(scheme === "https", regexp_replace(hostPort, ":443$", ""))
-      .otherwise(hostPort)
-    val path = regexp_extract(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://[^/?]*([^?]*)", 1)
-    val query = regexp_extract(noFrag, "\\?(.*)$", 1)
-    val kept = array_join(
-      array_sort(filter(split(query, "&"),
-        p => p =!= lit("") && !p.rlike(TrackingParamRe))), "&")
-    concat(scheme, lit("://"), host,
-      when(path === "", lit("/")).otherwise(path),
-      when(kept === "", lit("")).otherwise(concat(lit("?"), kept)))
-  }
 
   /** Lowercased host of a URL (port stripped) — the grouping key for
     * per-site crawl statistics. Pure regexp column expression. */

@@ -1117,33 +1117,6 @@ object Vectors {
       .orderBy(col("anchor"))
   }
 
-  /** Exact all-pairs near-dup baseline — TEST ORACLE ONLY, not the
-    * gated path (that is [[lshNearDupPairs]]): collects the corpus to
-    * the driver and broadcasts it, so it is bounded by driver memory
-    * and O(n²) work. LshSpec uses it as ground truth to measure the
-    * LSH path's recall on small corpora. */
-  def nearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val vecs = emb(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])]
-    val block = vecs.collect().sortBy(_._1).map { case (id, v) =>
-      (id, v, math.sqrt(dotArr(v, v)))
-    }
-    val bc = spark.sparkContext.broadcast(block)
-    val pairs = vecs.mapPartitions { it =>
-      val b = bc.value
-      it.flatMap { case (da, va) =>
-        val na = math.sqrt(dotArr(va, va))
-        b.iterator
-          .filter(_._1 > da)
-          .map { case (db, vb, nb) => (da, db, round4(dotArr(va, vb) / (na * nb))) }
-          .filter(_._3 >= NearDupThreshold)
-      }
-    }.toDF("da", "db", "cos")
-    pairs.orderBy(col("da"), col("db"))
-  }
-
   /** Random-hyperplane LSH for cosine similarity — the bucketed scale
     * path for embedding near-dup at corpus sizes where all-pairs is
     * impossible. Hyperplane p's component i is ±1 derived from
@@ -1275,7 +1248,7 @@ object Vectors {
 
   /** Sequential primitive dot product — same fold order as the
     * expression path and the oracle's list_dot_product. */
-  private def dotArr(a: Array[Double], b: Array[Double]): Double = {
+  private[graft] def dotArr(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { s += a(i) * b(i); i += 1 }
     s

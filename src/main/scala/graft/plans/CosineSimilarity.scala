@@ -98,12 +98,6 @@ object CosineSimilarity {
   }
 
   val info = new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim")
-
-  /** Register into an existing session's function registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_sim"), info,
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1)))
 }
 
 /** SparkSessionExtensions entry point — enables

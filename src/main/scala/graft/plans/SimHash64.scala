@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -90,10 +89,4 @@ object SimHash64 {
   }
 
   val info = new ExpressionInfo(classOf[SimHash64].getName, "simhash64")
-
-  /** Register into an existing session's function registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash64"), info,
-      (children: Seq[Expression]) => SimHash64(children.head))
 }

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `(canon, scheme, host, host_noport, path, query)`.
   *
   * Why: the column-expression formulation
-  * ([[graft.functions.Urls.canonicalUrl]] ∘ `hostOf` ∘
+  * (the retired regex `canonicalUrl` ∘ `hostOf` ∘
   * `registeredDomain`) re-reads the SAME string many times — a
   * split+transform array pass for percent-normalization plus four
   * `regexp_extract` passes for scheme/host/path/query, then another

@@ -2,12 +2,13 @@ package graft.sources
 
 import java.io.IOException
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cross-TABLE snapshot consistency: a group manifest pins one
   * version of each member table, claimed with the same
-  * create-exclusive CAS rename as [[Snapshots]] version manifests.
+  * create-exclusive CAS rename as [[Snapshots]] version manifests
+  * (one claim, [[Snapshots.claimFile]], serves both).
   * Single-table logs (Delta, and [[Snapshots]]) give per-table
   * atomicity only — a reader joining two tables mid-pipeline can see
   * table A after a coordinated write but table B before it. A writer
@@ -29,21 +30,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SnapshotGroups {
 
-  private val CommitDir = "_commits"
-  private val VersionRe = "^v(\\d{8})$".r
-
-  private def versionName(n: Int): String = f"v$n%08d"
-
-  private def listVersions(spark: SparkSession, groupDir: String): Seq[String] = {
-    val dir = new Path(groupDir, CommitDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(VersionRe.findFirstIn(_).isDefined).sorted
-  }
-
   def currentVersion(spark: SparkSession, groupDir: String): Option[String] =
-    listVersions(spark, groupDir).lastOption
+    Snapshots.currentVersion(spark, groupDir)
 
   /** Pin the given member (name → tableDir) set at each table's
     * CURRENT version. Call after all member commits land. Returns the
@@ -61,31 +49,7 @@ object SnapshotGroups {
       s"$name|$tableDir|$v"
     }
     val body = resolved.mkString("", "\n", "\n")
-    val commits = new Path(groupDir, CommitDir)
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(commits)
-    var n = listVersions(spark, groupDir).lastOption
-      .map { case VersionRe(d) => d.toInt }.getOrElse(0) + 1
-    while (!tryClaim(spark, commits, versionName(n), body)) n += 1
-    versionName(n)
-  }
-
-  private def tryClaim(spark: SparkSession, commits: Path, version: String,
-                       body: String): Boolean = {
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new Path(commits, version)
-    if (fs.exists(target)) return false
-    val tmp = new Path(commits, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(commits.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    try { fc.rename(tmp, target); true }
-    catch {
-      case _: FileAlreadyExistsException | _: org.apache.hadoop.fs.PathExistsException =>
-        false
-      case _: IOException if fs.exists(target) => false
-    } finally if (fs.exists(tmp)) fs.delete(tmp, false)
+    Snapshots.claimNext(spark, groupDir)(Snapshots.claimFile(spark, groupDir, _, body))
   }
 
   /** The (tableDir, tableVersion) each member was pinned at. */
@@ -93,11 +57,11 @@ object SnapshotGroups {
               version: Option[String] = None): Map[String, (String, String)] = {
     val v = version.orElse(currentVersion(spark, groupDir)).getOrElse(
       throw new IOException(s"SnapshotGroups: no pin committed at $groupDir"))
-    val p = new Path(new Path(groupDir, CommitDir), v)
+    val p = new Path(new Path(groupDir, Snapshots.CommitDir), v)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) throw new IOException(
       s"SnapshotGroups: pin $v of $groupDir does not exist; " +
-        s"retained: ${listVersions(spark, groupDir).mkString(", ")}")
+        s"retained: ${Snapshots.listVersions(spark, groupDir).mkString(", ")}")
     val in = fs.open(p)
     val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .map(_.trim).filter(_.nonEmpty).toList finally in.close()

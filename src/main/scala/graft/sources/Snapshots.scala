@@ -97,7 +97,7 @@ class SnapshotWriteConflictException(msg: String)
   */
 object Snapshots {
 
-  private val CommitDir = "_commits"
+  private[sources] val CommitDir = "_commits"
   private val VersionRe = "^v(\\d{8})$".r
   private val DirLine = "dir="
   private val PartColLine = "partcol="
@@ -174,12 +174,7 @@ object Snapshots {
   def liveDataDirCount(spark: SparkSession, tableDir: String): Int =
     currentVersion(spark, tableDir) match {
       case None => 0
-      case Some(v) =>
-        val m = readManifest(spark, tableDir, v)
-        m.dataDir match {
-          case Some(_) => 1
-          case None => m.partitions.map(_._2).distinct.size
-        }
+      case Some(v) => referencedDirs(readManifest(spark, tableDir, v)).size
     }
 
   /** All published version names, ascending (bounded by [[vacuum]]
@@ -198,9 +193,7 @@ object Snapshots {
   /** Read the live snapshot. Fails with a clear message when the table
     * has no published commit yet. */
   def read(spark: SparkSession, tableDir: String): DataFrame = {
-    val v = currentVersion(spark, tableDir).getOrElse(
-      throw new IOException(s"Snapshots.read: no committed version at $tableDir"))
-    readVersion(spark, tableDir, v)
+    readVersion(spark, tableDir, liveVersion(spark, tableDir, "read"))
   }
 
   /** Read a specific retained version (time travel / long-running
@@ -263,7 +256,7 @@ object Snapshots {
       (v, new java.sql.Timestamp(mtime),
         if (m.dataDir.isDefined) "whole-table" else s"partitioned:${m.partCol}",
         m.partitions.size.toLong,
-        (m.dataDir.toSeq ++ m.partitions.map(_._2)).distinct.size.toLong,
+        referencedDirs(m).size.toLong,
         m.dvs.size.toLong,
         manifestSchema(m).map(_.fields.length.toLong).getOrElse(0L))
     }.toDF("version", "committed_at", "layout", "n_partitions",
@@ -280,11 +273,16 @@ object Snapshots {
     * [[readManifest]] rather than silently skipping changes. */
   def pollChanges(spark: SparkSession, tableDir: String, sinceVersion: String,
                   key: String): (String, Option[DataFrame]) = {
-    val live = currentVersion(spark, tableDir).getOrElse(
-      throw new IOException(s"Snapshots.pollChanges: no committed version at $tableDir"))
+    val live = liveVersion(spark, tableDir, "pollChanges")
     if (versionNumber(live) <= versionNumber(sinceVersion)) (sinceVersion, None)
     else (live, Some(changeFeed(spark, tableDir, sinceVersion, live, key)))
   }
+
+  /** The live version, or a loud failure naming `op` when the table
+    * has no published commit yet. */
+  private def liveVersion(spark: SparkSession, tableDir: String, op: String): String =
+    currentVersion(spark, tableDir).getOrElse(
+      throw new IOException(s"Snapshots.$op: no committed version at $tableDir"))
 
   // ------------------------------------------------------------ manifest
 
@@ -310,6 +308,10 @@ object Snapshots {
     * with no stat entry for a column is always read (conservative). */
   private[graft] case class FileStat(col: String, min: String, max: String,
                                      relPath: String)
+
+  /** The data dirs a manifest reads (deletion-vector dirs excluded). */
+  private def referencedDirs(m: Manifest): Seq[String] =
+    (m.dataDir.toSeq ++ m.partitions.map(_._2)).distinct
 
   private def manifestSchema(m: Manifest): Option[org.apache.spark.sql.types.StructType] =
     m.schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
@@ -439,6 +441,65 @@ object Snapshots {
     * On HDFS neither is needed and both are cheap. */
   private val claimLock = new Object
 
+  /** Atomically claim version number `n` of the commit log under
+    * `dir`: write a tmp file and rename it to `_commits/vN` WITHOUT
+    * overwrite, then read the target back and verify it carries OUR
+    * body (data dir names are attempt-unique, so bodies distinguish
+    * claimants). Exactly one of two concurrent claimants of the same
+    * number wins. Returns false when the number was already taken.
+    * The one claim of both table versions and [[SnapshotGroups]]
+    * pins. */
+  private[sources] def claimFile(spark: SparkSession, dir: String, n: Int,
+                                 body: String): Boolean = claimLock.synchronized {
+    val commits = new Path(dir, CommitDir)
+    val fs = fsOf(spark, commits)
+    fs.mkdirs(commits)
+    val target = new Path(commits, versionName(n))
+    if (fs.exists(target)) return false // cheap pre-check; the rename is the gate
+    val tmp = new Path(commits, s".tmp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    val fc = FileContext.getFileContext(commits.toUri,
+      spark.sparkContext.hadoopConfiguration)
+    val renamed =
+      try { fc.rename(tmp, target); true }
+      catch {
+        case _: FileAlreadyExistsException | _: org.apache.hadoop.fs.PathExistsException =>
+          false
+        case _: IOException if fs.exists(target) => // HDFS rename-to-existing variants
+          false
+      } finally {
+        // any failure path (including transient IOExceptions that
+        // propagate) must not leak the tmp manifest forever; vacuum
+        // additionally sweeps aged .tmp-* strays as a backstop
+        if (fs.exists(tmp)) fs.delete(tmp, false)
+      }
+    renamed && {
+      // full read-back (short reads are legal for InputStream.read on
+      // HDFS-like filesystems; a winner that misreports as loser would
+      // double-publish or spuriously fail an already-landed commit)
+      val in = fs.open(target)
+      val readBack = try {
+        val buf = new java.io.ByteArrayOutputStream()
+        val bytes = new Array[Byte](8192)
+        var n = in.read(bytes)
+        while (n >= 0) { buf.write(bytes, 0, n); n = in.read(bytes) }
+        buf.toString("UTF-8")
+      } finally in.close()
+      readBack == body // lost a cross-process replace race → behave as loser
+    }
+  }
+
+  /** Claim the lowest free version number of the log under `dir` —
+    * the retry loop of base-independent commits (overwrite, publish,
+    * group pins): a collision just moves on to the next number. */
+  private[sources] def claimNext(spark: SparkSession, dir: String)(
+      claim: Int => Boolean): String = {
+    var n = listVersions(spark, dir).lastOption.map(versionNumber).getOrElse(0) + 1
+    while (!claim(n)) n += 1
+    versionName(n)
+  }
+
   // ------------------------------------------------- CHECK constraints
 
   /** Table-level CHECK constraints (name → boolean SQL expression),
@@ -515,13 +576,9 @@ object Snapshots {
     // compaction writes a NEW dir, so compacting restored
     // pre-constraint data re-validates — drop the check first if that
     // is intended
-    val prevDirs: Set[String] =
-      listVersions(spark, tableDir).flatMap { v =>
-        val pm = readManifest(spark, tableDir, v)
-        pm.dataDir.toSeq ++ pm.partitions.map(_._2)
-      }.toSet
-    val newDirs = (manifest.dataDir.toSeq ++ manifest.partitions.map(_._2))
-      .distinct.filterNot(prevDirs.contains)
+    val prevDirs: Set[String] = listVersions(spark, tableDir)
+      .flatMap(v => referencedDirs(readManifest(spark, tableDir, v))).toSet
+    val newDirs = referencedDirs(manifest).filterNot(prevDirs.contains)
     newDirs.foreach { dd =>
       val df = spark.read.parquet(new Path(tableDir, dd).toString)
       cs.foreach { case (name, ce) =>
@@ -533,56 +590,69 @@ object Snapshots {
     }
   }
 
-  /** Atomically claim version number `n`: write a tmp manifest and
-    * rename it to `_commits/vN` WITHOUT overwrite, then read the
-    * target back and verify it carries OUR body (data dir names are
-    * attempt-unique, so bodies distinguish claimants). Exactly one of
-    * two concurrent claimants of the same number wins. Returns false
-    * when the number was already taken. */
+  /** Claim version number `n` of the table with `manifest` (see
+    * [[claimFile]]), after the commit-time CHECK validation; both run
+    * under [[claimLock]]. Returns false when the number was already
+    * taken. */
   private[graft] def tryClaim(spark: SparkSession, tableDir: String, n: Int,
                               manifest: Manifest): Boolean = claimLock.synchronized {
     validateChecks(spark, tableDir, manifest)
-    val commits = new Path(tableDir, CommitDir)
-    val fs = fsOf(spark, commits)
-    fs.mkdirs(commits)
-    val target = new Path(commits, versionName(n))
-    if (fs.exists(target)) return false // cheap pre-check; the rename is the gate
-    val tmp = new Path(commits, s".tmp-${java.util.UUID.randomUUID()}")
-    val body = manifestBody(manifest)
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(commits.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val renamed =
-      try { fc.rename(tmp, target); true }
-      catch {
-        case _: FileAlreadyExistsException | _: org.apache.hadoop.fs.PathExistsException =>
-          false
-        case _: IOException if fs.exists(target) => // HDFS rename-to-existing variants
-          false
-      } finally {
-        // any failure path (including transient IOExceptions that
-        // propagate) must not leak the tmp manifest forever; vacuum
-        // additionally sweeps aged .tmp-* strays as a backstop
-        if (fs.exists(tmp)) fs.delete(tmp, false)
-      }
-    renamed && {
-      // full read-back (short reads are legal for InputStream.read on
-      // HDFS-like filesystems; a winner that misreports as loser would
-      // double-publish or spuriously fail an already-landed commit)
-      val in = fs.open(target)
-      val readBack = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val bytes = new Array[Byte](8192)
-        var n = in.read(bytes)
-        while (n >= 0) { buf.write(bytes, 0, n); n = in.read(bytes) }
-        buf.toString("UTF-8")
-      } finally in.close()
-      readBack == body // lost a cross-process replace race → behave as loser
-    }
+    claimFile(spark, tableDir, n, manifestBody(manifest))
   }
 
   // ------------------------------------------------------------- commits
+
+  /** Write `df` into a fresh, attempt-unique data dir of the table —
+    * `partitionBy(partCol)` unless `partCol` is empty — and return the
+    * dir's name. Readers are unaffected: nothing references the dir
+    * until a manifest naming it is claimed. */
+  private def writeDataDir(spark: SparkSession, tableDir: String, df: DataFrame,
+                           partCol: String = ""): String = {
+    val dir = new Path(tableDir)
+    fsOf(spark, dir).mkdirs(dir)
+    val dd = newDataDirName()
+    val w = df.write.mode(SaveMode.ErrorIfExists)
+    (if (partCol.isEmpty) w else w.partitionBy(partCol)).parquet(new Path(dir, dd).toString)
+    dd
+  }
+
+  /** The manifest that publishes data dir `dd` on top of `base` (the
+    * version this commit read, if any). Whole-table (`partCol` empty):
+    * `dd` alone. Partitioned: every partition `dd` holds re-points to
+    * it, the `touched` partitions it does not hold drop out, and all
+    * other partitions of `base` keep their owning dirs, together with
+    * their stat lines and deletion vectors. `dd` is stat-scanned for
+    * the caller's `statsCols`, else whatever `base` tracked. */
+  private def manifestFor(spark: SparkSession, tableDir: String, dd: String,
+                          base: Option[Manifest], schemaJson: Option[String],
+                          statsCols: Seq[String], partCol: String = "",
+                          touched: Seq[String] = Nil): Manifest = {
+    val root = new Path(tableDir)
+    val cols = base.map(effectiveStatsCols(statsCols, _)).getOrElse(statsCols)
+    if (partCol.isEmpty)
+      return Manifest(Some(dd), "", Nil, schemaJson, computeFileStats(spark, root, dd, cols))
+    // a partition left with no row writes no subdir in `dd` and drops
+    // out of the manifest entirely, never pointing at a missing path
+    val present = listPartitionValues(fsOf(spark, root), new Path(root, dd), partCol)
+    require(present.nonEmpty || base.isDefined,
+      "Snapshots: empty dataframe — no partition to publish")
+    val parts = (base.map(_.partitions.toMap).getOrElse(Map.empty[String, String]) --
+      touched ++ present.map(_ -> dd)).toSeq
+    val dvs = base.map(carriedDvs(_, parts.map(_._2).toSet)).getOrElse(Nil)
+    Manifest(None, partCol, parts, schemaJson,
+      base.map(carriedStats(_, parts.toMap)).getOrElse(Nil) ++
+        computeFileStats(spark, root, dd, cols),
+      if (dvs.nonEmpty) base.get.dvKey else "", dvs)
+  }
+
+  /** The one data-dir write path of every rewriting commit:
+    * [[writeDataDir]], then [[manifestFor]] the new dir. */
+  private def writeVersion(spark: SparkSession, tableDir: String, df: DataFrame,
+                           base: Option[Manifest], schemaJson: Option[String],
+                           statsCols: Seq[String] = Nil, partCol: String = "",
+                           touched: Seq[String] = Nil): Manifest =
+    manifestFor(spark, tableDir, writeDataDir(spark, tableDir, df, partCol), base,
+      schemaJson, statsCols, partCol, touched)
 
   /** Publish `df` as the next whole-table version. Safe under
     * concurrent writers: the payload is base-independent, so a claim
@@ -590,19 +660,10 @@ object Snapshots {
     * claimed version name. */
   def commitOverwrite(spark: SparkSession, tableDir: String, df: DataFrame,
                       statsCols: Seq[String] = Nil): String = {
-    val dir = new Path(tableDir)
-    fsOf(spark, dir).mkdirs(dir)
-    val dd = newDataDirName()
-    df.write.mode(SaveMode.ErrorIfExists).parquet(new Path(dir, dd).toString)
     // keep maintaining whatever skipping index the table already tracks
-    val prevCols = currentVersion(spark, tableDir)
-      .map(v => readManifest(spark, tableDir, v)).map(effectiveStatsCols(statsCols, _))
-      .getOrElse(statsCols)
-    val stats = computeFileStats(spark, dir, dd, prevCols)
-    val m = Manifest(Some(dd), "", Nil, Some(df.schema.json), stats)
-    var n = listVersions(spark, tableDir).lastOption.map(versionNumber).getOrElse(0) + 1
-    while (!tryClaim(spark, tableDir, n, m)) n += 1
-    versionName(n)
+    val base = currentVersion(spark, tableDir).map(readManifest(spark, tableDir, _))
+    val m = writeVersion(spark, tableDir, df, base, Some(df.schema.json), statsCols)
+    claimNext(spark, tableDir)(tryClaim(spark, tableDir, _, m))
   }
 
   /** Conform `delta` to a declared base schema for a merge commit:
@@ -649,14 +710,9 @@ object Snapshots {
         // fails loudly instead of silently hiding the other's rows
         // behind a higher version; within-batch duplicate keys are
         // merged the same way a non-empty-table upsert would
-        val dir = new Path(tableDir)
-        fsOf(spark, dir).mkdirs(dir)
-        val dd = newDataDirName()
         val deduped = graft.etl.Dims.upsert(None, delta, key)
-        deduped.write.mode(SaveMode.ErrorIfExists).parquet(new Path(dir, dd).toString)
         claimExactly(spark, tableDir, 1,
-          Manifest(Some(dd), "", Nil, Some(deduped.schema.json),
-            computeFileStats(spark, dir, dd, statsCols)))
+          writeVersion(spark, tableDir, deduped, None, Some(deduped.schema.json), statsCols))
       case Some(v) =>
         val baseDf = readVersion(spark, tableDir, v)
         val aligned = evolveDeltaTo(baseDf.schema, delta)
@@ -665,14 +721,9 @@ object Snapshots {
           // allowMissingColumns: an ADDED delta column reads as NULL on
           // the surviving base rows (add-column schema evolution)
           .unionByName(aligned, allowMissingColumns = true)
-        val dd = newDataDirName()
-        merged.write.mode(SaveMode.ErrorIfExists)
-          .parquet(new Path(new Path(tableDir), dd).toString)
-        val mPrev = readManifest(spark, tableDir, v)
         claimExactlyAfter(spark, tableDir, v,
-          Manifest(Some(dd), "", Nil, Some(merged.schema.json),
-            computeFileStats(spark, new Path(tableDir), dd,
-              effectiveStatsCols(statsCols, mPrev))))
+          writeVersion(spark, tableDir, merged, Some(readManifest(spark, tableDir, v)),
+            Some(merged.schema.json), statsCols))
     }
   }
 
@@ -683,41 +734,10 @@ object Snapshots {
   def commitOverwritePartitioned(spark: SparkSession, tableDir: String,
                                  df: DataFrame, partCol: String,
                                  statsCols: Seq[String] = Nil): String = {
-    val dir = new Path(tableDir)
-    val fs = fsOf(spark, dir)
-    fs.mkdirs(dir)
-    val dd = newDataDirName()
-    val ddPath = new Path(dir, dd)
-    df.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol)
-      .parquet(ddPath.toString)
-    val values = listPartitionValues(fs, ddPath, partCol)
-    require(values.nonEmpty, "commitOverwritePartitioned: empty dataframe")
-    val m = Manifest(None, partCol, values.map(v => v -> dd), Some(df.schema.json),
-      computeFileStats(spark, dir, dd, statsCols))
-    var n = listVersions(spark, tableDir).lastOption.map(versionNumber).getOrElse(0) + 1
-    while (!tryClaim(spark, tableDir, n, m)) n += 1
-    versionName(n)
+    val m = writeVersion(spark, tableDir, df, None, Some(df.schema.json), statsCols, partCol)
+    claimNext(spark, tableDir)(tryClaim(spark, tableDir, _, m))
   }
 
-  /** Partition-scoped merge commit: upsert `delta` by `key` into ONLY
-    * the partitions it touches, inside a NEW data dir, and publish a
-    * manifest where untouched partitions keep referencing their
-    * existing files — which therefore stay byte-identical across the
-    * commit (proved in SnapshotsSpec), while the reader-atomic
-    * single-claim publish is unchanged. Commit cost scales with the
-    * delta: at 100 TB, a daily one-partition delta rewrites one
-    * partition, not the table.
-    *
-    * Cross-partition key moves are handled with full MERGE semantics
-    * (delete-and-reinsert): a delta row whose key already lives in a
-    * DIFFERENT partition pulls that partition into the rewrite and the
-    * stale row is dropped, so a key is never duplicated across
-    * partitions (proved in SnapshotsSpec). The detection scan reads
-    * only the (key, partCol) columns of untouched partitions — when no
-    * key moves (the daily-delta common case) nothing extra is
-    * rewritten and untouched files stay byte-identical.
-    *
-    * Read-modify-write CAS semantics as [[commitUpsert]]. */
   /** Anti-join away the deletion-vector keys targeting rows that were
     * read from `owner`'s files. DVs are scoped to the data dir that
     * existed when the delete committed, so a later re-insert of the
@@ -756,6 +776,25 @@ object Snapshots {
       }.reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 
+  /** Partition-scoped merge commit: upsert `delta` by `key` into ONLY
+    * the partitions it touches, inside a NEW data dir, and publish a
+    * manifest where untouched partitions keep referencing their
+    * existing files — which therefore stay byte-identical across the
+    * commit (proved in SnapshotsSpec), while the reader-atomic
+    * single-claim publish is unchanged. Commit cost scales with the
+    * delta: at 100 TB, a daily one-partition delta rewrites one
+    * partition, not the table.
+    *
+    * Cross-partition key moves are handled with full MERGE semantics
+    * (delete-and-reinsert): a delta row whose key already lives in a
+    * DIFFERENT partition pulls that partition into the rewrite and the
+    * stale row is dropped, so a key is never duplicated across
+    * partitions (proved in SnapshotsSpec). The detection scan reads
+    * only the (key, partCol) columns of untouched partitions — when no
+    * key moves (the daily-delta common case) nothing extra is
+    * rewritten and untouched files stay byte-identical.
+    *
+    * Read-modify-write CAS semantics as [[commitUpsert]]. */
   def commitMergePartitioned(spark: SparkSession, tableDir: String,
                              delta: DataFrame, key: String, partCol: String,
                              tieBreak: Seq[Column] = Nil,
@@ -766,19 +805,9 @@ object Snapshots {
       case None =>
         // bootstrap claims EXACTLY v1 (CAS) — see commitUpsert — and
         // merges within-batch duplicate keys like any later commit
-        val dir = new Path(tableDir)
-        val fs = fsOf(spark, dir)
-        fs.mkdirs(dir)
-        val dd = newDataDirName()
-        val ddPath = new Path(dir, dd)
         val deduped = graft.etl.Dims.upsert(None, delta, key, tieBreak)
-        deduped.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol)
-          .parquet(ddPath.toString)
-        val values = listPartitionValues(fs, ddPath, partCol)
-        require(values.nonEmpty, "commitMergePartitioned: empty bootstrap delta")
-        claimExactly(spark, tableDir, 1,
-          Manifest(None, partCol, values.map(_ -> dd), Some(deduped.schema.json),
-            computeFileStats(spark, dir, dd, statsCols)))
+        claimExactly(spark, tableDir, 1, writeVersion(spark, tableDir, deduped, None,
+          Some(deduped.schema.json), statsCols, partCol))
       case Some(v) =>
         val m = readManifest(spark, tableDir, v)
         require(m.dataDir.isEmpty && m.partCol == partCol,
@@ -847,26 +876,13 @@ object Snapshots {
             .foldLeft(conformed)((df, f) => df.withColumn(f.name, lit(null).cast(f.dataType)))
         }
         val merged = graft.etl.Dims.upsert(paddedBase, aligned, key, tieBreak)
-        val dd = newDataDirName()
-        val ddPath = new Path(new Path(tableDir), dd)
-        merged.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol)
-          .parquet(ddPath.toString)
         // a moved-from partition can end up EMPTY (every row moved
-        // out): it produces no dir in the new data dir and must drop
-        // out of the manifest entirely, not point at a missing path
-        val present = listPartitionValues(fsOf(spark, ddPath), ddPath, partCol)
-        val newParts = ((owned -- touched) ++ present.map(_ -> dd)).toSeq
-        // data-skipping stats: entries for files whose (dir, partition)
-        // the new manifest still references carry forward verbatim
-        // (immutable files, unchanged ranges); the new data dir gets a
-        // fresh delta-sized stats scan
-        val fresh = computeFileStats(spark, new Path(tableDir), dd,
-          effectiveStatsCols(statsCols, m))
-        val dvs = carriedDvs(m, newParts.map(_._2).toSet)
-        claimExactlyAfter(spark, tableDir, v,
-          Manifest(None, partCol, newParts, Some(merged.schema.json),
-            carriedStats(m, newParts.toMap) ++ fresh,
-            if (dvs.nonEmpty) m.dvKey else "", dvs))
+        // out) and drops out of the manifest; data-skipping stats of
+        // files whose (dir, partition) the new manifest still
+        // references carry forward verbatim (immutable files, unchanged
+        // ranges); the new data dir gets a fresh delta-sized stats scan
+        claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir, merged, Some(m),
+          Some(merged.schema.json), statsCols, partCol, touched))
     }
   }
 
@@ -876,17 +892,14 @@ object Snapshots {
     * changed"). A partition differs when it appears/disappears, its
     * owning data dir is re-pointed, or the deletion vectors applied to
     * its owner change. Manifest-only — no data files are read. */
-  private def changedPartitionsBetween(spark: SparkSession, tableDir: String,
-                                       vOld: Option[String],
-                                       vNew: String): Option[Seq[String]] = {
-    val mN = readManifest(spark, tableDir, vNew)
+  private def changedPartitionsBetween(m0Opt: Option[Manifest],
+                                       mN: Manifest): Option[Seq[String]] = {
     if (mN.dataDir.isDefined) return None
     def dvByOwner(m: Manifest): Map[String, Set[String]] =
       m.dvs.groupBy(_._2).map { case (o, s) => o -> s.map(_._1).toSet }
-    vOld match {
+    m0Opt match {
       case None => Some(mN.partitions.map(_._1))
-      case Some(v0) =>
-        val m0 = readManifest(spark, tableDir, v0)
+      case Some(m0) =>
         if (m0.dataDir.isDefined) return None
         val (d0, dN) = (dvByOwner(m0), dvByOwner(mN))
         val (p0, pN) = (m0.partitions.toMap, mN.partitions.toMap)
@@ -934,7 +947,9 @@ object Snapshots {
           if (attempt >= maxAttempts) throw e
           val newBase = currentVersion(spark, tableDir)
           if (newBase == base) throw e // claim raced something non-commit-like
-          val changed = changedPartitionsBetween(spark, tableDir, base, newBase.get)
+          val mN = readManifest(spark, tableDir, newBase.get)
+          val m0 = base.map(readManifest(spark, tableDir, _))
+          val changed = changedPartitionsBetween(m0, mN)
             .getOrElse(throw new SnapshotWriteConflictException(
               s"Snapshots: concurrent UNPARTITIONED commit on $tableDir " +
                 s"(${base.getOrElse("<empty>")} -> ${newBase.get}) conflicts with " +
@@ -949,7 +964,6 @@ object Snapshots {
           // key-level read-set check: a delta key now living in a
           // partition the winner changed means the winner wrote rows
           // this merge would delete-and-reinsert — order matters
-          val mN = readManifest(spark, tableDir, newBase.get)
           val keyHits = readPartitionsSubset(spark, tableDir, mN,
             changed.filter(mN.partitions.toMap.contains)) match {
             case None => 0L
@@ -996,10 +1010,8 @@ object Snapshots {
     * commit → [[ConcurrentSnapshotCommitException]], re-run. */
   def commitDelete(spark: SparkSession, tableDir: String, predicate: Column,
                    prunePreds: Seq[(String, BigDecimal, BigDecimal)] = Nil): String = {
-    val v = currentVersion(spark, tableDir).getOrElse(
-      throw new IOException(s"Snapshots.commitDelete: no committed version at $tableDir"))
+    val v = liveVersion(spark, tableDir, "commitDelete")
     val m = readManifest(spark, tableDir, v)
-    val statsCols = m.stats.map(_.col).distinct
     val detect =
       if (prunePreds.isEmpty) readVersion(spark, tableDir, v).filter(predicate)
       else readVersionPrunedMulti(spark, tableDir, v, prunePreds).filter(predicate)
@@ -1007,34 +1019,19 @@ object Snapshots {
       case Some(_) =>
         if (detect.isEmpty) return v // no match → no-op, don't publish a copy
         val kept = readVersion(spark, tableDir, v).filter(keepCond(predicate))
-        val dd = newDataDirName()
-        kept.write.mode(SaveMode.ErrorIfExists)
-          .parquet(new Path(new Path(tableDir), dd).toString)
         claimExactlyAfter(spark, tableDir, v,
-          Manifest(Some(dd), "", Nil, m.schemaJson,
-            computeFileStats(spark, new Path(tableDir), dd, statsCols)))
+          writeVersion(spark, tableDir, kept, Some(m), m.schemaJson))
       case None =>
         val touched = detect.select(col(m.partCol).cast("string")).distinct()
           .collect().map(_.getString(0)).toSeq.sorted
         if (touched.isEmpty) return v
-        val owned = m.partitions.toMap
         val subset = readPartitionsSubset(spark, tableDir, m, touched)
           .getOrElse(return v)
         val conformed = manifestSchema(m).map(alignTo(subset, _)).getOrElse(subset)
-        val kept = conformed.filter(keepCond(predicate))
-        val dd = newDataDirName()
-        val ddPath = new Path(new Path(tableDir), dd)
-        kept.write.mode(SaveMode.ErrorIfExists).partitionBy(m.partCol)
-          .parquet(ddPath.toString)
         // a fully-deleted partition writes no dir and leaves the manifest
-        val present = listPartitionValues(fsOf(spark, ddPath), ddPath, m.partCol)
-        val newParts = ((owned -- touched) ++ present.map(_ -> dd)).toSeq
-        val dvs = carriedDvs(m, newParts.map(_._2).toSet)
-        claimExactlyAfter(spark, tableDir, v,
-          Manifest(None, m.partCol, newParts, m.schemaJson,
-            carriedStats(m, newParts.toMap) ++
-              computeFileStats(spark, new Path(tableDir), dd, statsCols),
-            if (dvs.nonEmpty) m.dvKey else "", dvs))
+        claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir,
+          conformed.filter(keepCond(predicate)), Some(m), m.schemaJson,
+          partCol = m.partCol, touched = touched))
     }
   }
 
@@ -1056,10 +1053,8 @@ object Snapshots {
   def commitUpdate(spark: SparkSession, tableDir: String, predicate: Column,
                    sets: Seq[(String, Column)]): String = {
     require(sets.nonEmpty, "Snapshots.commitUpdate: no SET assignments")
-    val v = currentVersion(spark, tableDir).getOrElse(
-      throw new IOException(s"Snapshots.commitUpdate: no committed version at $tableDir"))
+    val v = liveVersion(spark, tableDir, "commitUpdate")
     val m = readManifest(spark, tableDir, v)
-    val statsCols = m.stats.map(_.col).distinct
     val setMap = sets.toMap
     require(setMap.size == sets.size,
       s"Snapshots.commitUpdate: duplicate SET column")
@@ -1081,12 +1076,8 @@ object Snapshots {
       case Some(_) =>
         if (readVersion(spark, tableDir, v).filter(predicate).isEmpty) return v
         val updated = applySets(readVersion(spark, tableDir, v))
-        val dd = newDataDirName()
-        updated.write.mode(SaveMode.ErrorIfExists)
-          .parquet(new Path(new Path(tableDir), dd).toString)
         claimExactlyAfter(spark, tableDir, v,
-          Manifest(Some(dd), "", Nil, m.schemaJson,
-            computeFileStats(spark, new Path(tableDir), dd, statsCols)))
+          writeVersion(spark, tableDir, updated, Some(m), m.schemaJson))
       case None =>
         val matched = readVersion(spark, tableDir, v).filter(predicate)
         val srcParts = matched.select(col(m.partCol).cast("string")).distinct()
@@ -1107,19 +1098,9 @@ object Snapshots {
         val subset = readPartitionsSubset(spark, tableDir, m, touched)
           .getOrElse(return v)
         val conformed = manifestSchema(m).map(alignTo(subset, _)).getOrElse(subset)
-        val updated = applySets(conformed)
-        val dd = newDataDirName()
-        val ddPath = new Path(new Path(tableDir), dd)
-        updated.write.mode(SaveMode.ErrorIfExists).partitionBy(m.partCol)
-          .parquet(ddPath.toString)
-        val present = listPartitionValues(fsOf(spark, ddPath), ddPath, m.partCol)
-        val newParts = ((owned -- touched) ++ present.map(_ -> dd)).toSeq
-        val dvs = carriedDvs(m, newParts.map(_._2).toSet)
-        claimExactlyAfter(spark, tableDir, v,
-          Manifest(None, m.partCol, newParts, m.schemaJson,
-            carriedStats(m, newParts.toMap) ++
-              computeFileStats(spark, new Path(tableDir), dd, statsCols),
-            if (dvs.nonEmpty) m.dvKey else "", dvs))
+        claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir,
+          applySets(conformed), Some(m), m.schemaJson, partCol = m.partCol,
+          touched = touched))
     }
   }
 
@@ -1145,20 +1126,17 @@ object Snapshots {
     * semantics as [[commitUpsert]]. */
   def commitDeleteVector(spark: SparkSession, tableDir: String, keys: DataFrame,
                          key: String): String = {
-    val v = currentVersion(spark, tableDir).getOrElse(
-      throw new IOException(s"Snapshots.commitDeleteVector: no committed version at $tableDir"))
+    val v = liveVersion(spark, tableDir, "commitDeleteVector")
     val m = readManifest(spark, tableDir, v)
     require(m.dvKey.isEmpty || m.dvKey == key,
       s"Snapshots.commitDeleteVector: existing deletion vectors use key '${m.dvKey}'")
     val k = keys.select(col(key)).distinct()
     if (k.isEmpty) return v
-    val root = new Path(tableDir)
-    val dd = newDataDirName()
-    k.write.mode(SaveMode.ErrorIfExists).parquet(new Path(root, dd).toString)
+    val dd = writeDataDir(spark, tableDir, k)
     // target every dir the live version references — with per-file key
     // stats a future refinement could skip dirs whose ranges exclude
     // the keys, but an extra target is only a no-op anti-join
-    val targets = (m.dataDir.toSeq ++ m.partitions.map(_._2)).distinct
+    val targets = referencedDirs(m)
     claimExactlyAfter(spark, tableDir, v,
       m.copy(dvKey = key, dvs = m.dvs ++ targets.map(dd -> _)))
   }
@@ -1189,24 +1167,10 @@ object Snapshots {
   /** Stat entries of a previous manifest still valid under a new
     * partition→dir map: files are immutable, so an entry survives iff
     * the new manifest still references its (dir, partition). */
-  /** Stats entries whose (owning dir, partition value) the new
-    * manifest still references. Matching is by dir PREFIX + the
-    * partition subdir segment, not positional path segments, so
-    * clone-borrowed absolute dirs carry their stats too. */
   private def carriedStats(m: Manifest,
                            newParts: Map[String, String]): Seq[FileStat] =
-    m.stats.filter { st =>
-      newParts.exists { case (value, dd) =>
-        st.relPath.startsWith(dd + "/") && {
-          val rest = st.relPath.substring(dd.length + 1).split("/")
-          rest.length == 2 && {
-            val eq = rest(0).lastIndexOf('=')
-            eq > 0 && org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(rest(0).substring(eq + 1)) == value
-          }
-        }
-      }
-    }
+    m.stats.filter(st =>
+      newParts.exists { case (value, dd) => statInPartition(st, value, dd) })
 
   // ------------------------------------------------------------- restore
 
@@ -1222,13 +1186,12 @@ object Snapshots {
     * [[commitUpsert]] — a concurrent commit between resolving the
     * live version and the claim throws, re-run. */
   def restore(spark: SparkSession, tableDir: String, version: String): String = {
-    val live = currentVersion(spark, tableDir).getOrElse(
-      throw new IOException(s"Snapshots.restore: no committed version at $tableDir"))
+    val live = liveVersion(spark, tableDir, "restore")
     if (version == live) return live
     val m = readManifest(spark, tableDir, version)
     val root = new Path(tableDir)
     val fs = fsOf(spark, root)
-    val gone = (m.dataDir.toSeq ++ m.partitions.map(_._2) ++ m.dvs.map(_._1)).distinct
+    val gone = (referencedDirs(m) ++ m.dvs.map(_._1)).distinct
       .filterNot(dd => fs.exists(new Path(root, dd)))
     require(gone.isEmpty,
       s"Snapshots.restore: $version references vacuumed data dir(s) " +
@@ -1288,28 +1251,12 @@ object Snapshots {
     * [[commitUpsert]] — a racing committer makes this throw, re-run.
     * Returns the new version name. */
   def compact(spark: SparkSession, tableDir: String): String = {
-    val v = currentVersion(spark, tableDir).getOrElse(
-      throw new IOException(s"Snapshots.compact: no committed version at $tableDir"))
+    val v = liveVersion(spark, tableDir, "compact")
     val m = readManifest(spark, tableDir, v)
-    val dd = newDataDirName()
-    val ddPath = new Path(new Path(tableDir), dd)
-    val statsCols = m.stats.map(_.col).distinct
-    m.dataDir match {
-      case Some(_) =>
-        readVersion(spark, tableDir, v)
-          .write.mode(SaveMode.ErrorIfExists).parquet(ddPath.toString)
-        claimExactlyAfter(spark, tableDir, v,
-          Manifest(Some(dd), "", Nil, m.schemaJson,
-            computeFileStats(spark, new Path(tableDir), dd, statsCols)))
-      case None =>
-        readVersion(spark, tableDir, v)
-          .write.mode(SaveMode.ErrorIfExists).partitionBy(m.partCol)
-          .parquet(ddPath.toString)
-        val values = listPartitionValues(fsOf(spark, ddPath), ddPath, m.partCol)
-        claimExactlyAfter(spark, tableDir, v,
-          Manifest(None, m.partCol, values.map(_ -> dd), m.schemaJson,
-            computeFileStats(spark, new Path(tableDir), dd, statsCols)))
-    }
+    // every partition is touched, so each one re-points at the new dir
+    claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir,
+      readVersion(spark, tableDir, v), Some(m), m.schemaJson, partCol = m.partCol,
+      touched = m.partitions.map(_._1)))
   }
 
   /** OPTIMIZE ZORDER analog: consolidate the live version into one
@@ -1323,15 +1270,12 @@ object Snapshots {
     * semantics as [[compact]]; existing stats columns stay tracked. */
   def compactZOrdered(spark: SparkSession, tableDir: String, xCol: String,
                       yCol: String, numFiles: Int): String = {
-    val v = currentVersion(spark, tableDir).getOrElse(
-      throw new IOException(s"Snapshots.compactZOrdered: no committed version at $tableDir"))
+    val v = liveVersion(spark, tableDir, "compactZOrdered")
     val m = readManifest(spark, tableDir, v)
     val df = readVersion(spark, tableDir, v)
     val bits = 16
     val r = df.agg(min(col(xCol)).cast("long"), max(col(xCol)).cast("long"),
       min(col(yCol)).cast("long"), max(col(yCol)).cast("long")).head()
-    val dd = newDataDirName()
-    val ddPath = new Path(new Path(tableDir), dd)
     val clustered =
       if (r.isNullAt(0)) df
       else df.withColumn("_zkey", ZOrder.zkey2(
@@ -1340,11 +1284,9 @@ object Snapshots {
         .repartitionByRange(numFiles, col("_zkey"))
         .sortWithinPartitions(col("_zkey"))
         .drop("_zkey")
-    clustered.write.mode(SaveMode.ErrorIfExists).parquet(ddPath.toString)
     val statsCols = (m.stats.map(_.col) ++ Seq(xCol, yCol)).distinct
-    claimExactlyAfter(spark, tableDir, v,
-      Manifest(Some(dd), "", Nil, Some(df.schema.json),
-        computeFileStats(spark, new Path(tableDir), dd, statsCols)))
+    claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir, clustered, Some(m),
+      Some(df.schema.json), statsCols))
   }
 
   /** Auto-OPTIMIZE policy: compact only when the live manifest
@@ -1357,8 +1299,7 @@ object Snapshots {
   def maybeCompact(spark: SparkSession, tableDir: String,
                    maxDirs: Int = 16): Option[String] =
     currentVersion(spark, tableDir).flatMap { v =>
-      val m = readManifest(spark, tableDir, v)
-      val nDirs = (m.dataDir.toSeq ++ m.partitions.map(_._2)).distinct.size
+      val nDirs = referencedDirs(readManifest(spark, tableDir, v)).size
       if (nDirs > maxDirs) Some(compact(spark, tableDir)) else None
     }
 
@@ -1392,8 +1333,7 @@ object Snapshots {
     * descendant versions) lives. `vacuum` on the CLONE is always safe:
     * it only ever deletes dirs under the clone's own root. */
   def shallowClone(spark: SparkSession, sourceDir: String, targetDir: String): String = {
-    val v = currentVersion(spark, sourceDir).getOrElse(
-      throw new IOException(s"Snapshots.shallowClone: no committed version at $sourceDir"))
+    val v = liveVersion(spark, sourceDir, "shallowClone")
     val m = readManifest(spark, sourceDir, v)
     // fully-QUALIFIED source root (file:/… / hdfs://…): file listings
     // compare qualified paths, so borrowed-dir names must be stored in
@@ -1602,7 +1542,7 @@ object Snapshots {
     // resolve each file's owning dir against the manifest's dir set —
     // clone-borrowed dirs are absolute URIs, so "first path segment"
     // would misparse them
-    val dirs = (m.dataDir.toSeq ++ m.partitions.map(_._2)).distinct
+    val dirs = referencedDirs(m)
     def ownerOf(rel: String): String =
       dirs.find(d => rel.startsWith(d + "/")).getOrElse(rel.takeWhile(_ != '/'))
     rels.groupBy(ownerOf).map { case (owner, rs) =>
@@ -1646,6 +1586,17 @@ object Snapshots {
         val colStats = m.stats.filter(_.col == c).map(s => s.relPath -> s).toMap
         filterByStats(colStats, files, lo, hi)
     }
+    readSelected(spark, tableDir, version, m, selected, predicate)
+  }
+
+  /** The tail of every file-pruned read: the `selected` files of
+    * `version` (relative to the table root) with deletion vectors
+    * applied, conformed to the declared schema and filtered by the
+    * row-level `predicate`. No file selected → an empty frame with the
+    * version's schema. */
+  private def readSelected(spark: SparkSession, tableDir: String, version: String,
+                           m: Manifest, selected: Seq[String],
+                           predicate: Column): DataFrame = {
     if (selected.isEmpty)
       return readVersion(spark, tableDir, version).filter(lit(false)).filter(predicate)
     val root = new Path(tableDir)
@@ -1707,19 +1658,10 @@ object Snapshots {
       // index stores only non-null renderings) — drop it from probes
       keys.indices.filterNot(r.isNullAt).map(r.getString)
     }
-    if (probeStrings.isEmpty)
-      return readVersion(spark, tableDir, version).filter(lit(false)).filter(predicate)
-    val selected = bitmapSelectedFiles(m, versionFiles(spark, tableDir, m),
-      keyCol, probeStrings)
-    if (selected.isEmpty)
-      return readVersion(spark, tableDir, version).filter(lit(false)).filter(predicate)
-    val root = new Path(tableDir)
-    val raw = m.dataDir match {
-      case Some(dd) => applyDv(spark, root, m, dd,
-        spark.read.parquet(selected.map(new Path(root, _).toString): _*))
-      case None => readFilesByOwner(spark, root, m, selected)
-    }
-    manifestSchema(m).map(alignTo(raw, _)).getOrElse(raw).filter(predicate)
+    val selected =
+      if (probeStrings.isEmpty) Nil
+      else bitmapSelectedFiles(m, versionFiles(spark, tableDir, m), keyCol, probeStrings)
+    readSelected(spark, tableDir, version, m, selected, predicate)
   }
 
   // ------------------------------------------------ write-audit-publish
@@ -1734,13 +1676,8 @@ object Snapshots {
     * mid-audit is the already-handled orphan-dir case: invisible
     * forever, swept by [[vacuum]] after the grace window — so finish
     * (or abandon) an audit within `orphanGraceMs`, or raise it. */
-  def stageOverwrite(spark: SparkSession, tableDir: String, df: DataFrame): String = {
-    val dir = new Path(tableDir)
-    fsOf(spark, dir).mkdirs(dir)
-    val dd = newDataDirName()
-    df.write.mode(SaveMode.ErrorIfExists).parquet(new Path(dir, dd).toString)
-    dd
-  }
+  def stageOverwrite(spark: SparkSession, tableDir: String, df: DataFrame): String =
+    writeDataDir(spark, tableDir, df)
 
   /** Read a staged (unpublished) data dir for auditing. */
   def readStaged(spark: SparkSession, tableDir: String, staged: String): DataFrame = {
@@ -1760,18 +1697,12 @@ object Snapshots {
   def publishStaged(spark: SparkSession, tableDir: String, staged: String,
                     statsCols: Seq[String] = Nil): String = {
     val dir = new Path(tableDir)
-    val fs = fsOf(spark, dir)
-    require(fs.exists(new Path(dir, staged)),
+    require(fsOf(spark, dir).exists(new Path(dir, staged)),
       s"Snapshots.publishStaged: staged dir $staged is gone (abandoned or vacuumed)")
     val df = readStaged(spark, tableDir, staged)
-    val prevCols = currentVersion(spark, tableDir)
-      .map(v => readManifest(spark, tableDir, v)).map(effectiveStatsCols(statsCols, _))
-      .getOrElse(statsCols)
-    val stats = computeFileStats(spark, dir, staged, prevCols)
-    val m = Manifest(Some(staged), "", Nil, Some(df.schema.json), stats)
-    var n = listVersions(spark, tableDir).lastOption.map(versionNumber).getOrElse(0) + 1
-    while (!tryClaim(spark, tableDir, n, m)) n += 1
-    versionName(n)
+    val base = currentVersion(spark, tableDir).map(readManifest(spark, tableDir, _))
+    val m = manifestFor(spark, tableDir, staged, base, Some(df.schema.json), statsCols)
+    claimNext(spark, tableDir)(tryClaim(spark, tableDir, _, m))
   }
 
   /** Drop a staged dir that failed its audit. Refuses to touch a dir
@@ -1782,7 +1713,7 @@ object Snapshots {
       s"Snapshots.abandonStaged: '$staged' is not a staged data dir name")
     val referenced = listVersions(spark, tableDir).flatMap { v =>
       val m = readManifest(spark, tableDir, v)
-      m.dataDir.toSeq ++ m.partitions.map(_._2) ++ m.dvs.map(_._1)
+      referencedDirs(m) ++ m.dvs.map(_._1)
     }.toSet
     require(!referenced.contains(staged),
       s"Snapshots.abandonStaged: $staged is referenced by a published version")
@@ -1821,12 +1752,10 @@ object Snapshots {
     }
   }
 
-  /** Per-partition sums of `_rows` stat lines: each file attributed to
-    * its (dir, partition) exactly like [[carriedStats]] — dir prefix +
-    * the partition subdir segment. */
   /** Does stat line `st` belong to partition `value` owned by data
-    * dir `dd`? Dir prefix + the partition subdir segment, exactly
-    * like [[carriedStats]]. */
+    * dir `dd`? Matching is by dir PREFIX + the partition subdir
+    * segment, not positional path segments, so clone-borrowed absolute
+    * dirs match too. */
   private def statInPartition(st: FileStat, value: String, dd: String): Boolean =
     st.relPath.startsWith(dd + "/") && {
       val rest = st.relPath.substring(dd.length + 1).split("/")
@@ -1973,9 +1902,22 @@ object Snapshots {
                         vNew: String, key: String, groupCol: String,
                         valCol: String, baseAgg: DataFrame): DataFrame = {
     val cdf = changeFeed(spark, tableDir, vOld, vNew, key)
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
+    mergeSignedDelta(baseAgg, cdf.select(col(groupCol), changeSign.as("_sg"), col(valCol)),
+      groupCol, valCol)
+  }
+
+  /** +1 for a change-feed row that adds to a view (insert, update
+    * post-image), -1 for one that takes away. */
+  private def changeSign: Column =
+    when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
       .otherwise(lit(-1L))
-    val delta = cdf.select(col(groupCol), sign.as("_sg"), col(valCol))
+
+  /** Fold signed `(groupCol, _sg, valCol)` rows into a materialized
+    * `(groupCol, n, value_sum)` aggregate with one full-outer merge;
+    * groups whose count reaches zero drop out. */
+  private def mergeSignedDelta(baseAgg: DataFrame, signed: DataFrame, groupCol: String,
+                               valCol: String): DataFrame = {
+    val delta = signed
       .groupBy(col(groupCol))
       .agg(sum(col("_sg")).as("_dn"),
         sum(col(valCol) * col("_sg")).as("_dsum"))
@@ -2006,13 +1948,10 @@ object Snapshots {
                             dirB: String, vB0: String, vB1: String,
                             keyB: String, groupCol: String,
                             baseAgg: DataFrame): DataFrame = {
-    def signed(cdf: DataFrame): DataFrame = cdf.withColumn("_sg",
-      when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-        .otherwise(lit(-1L)))
-    val dA = signed(changeFeed(spark, dirA, vA0, vA1, keyA))
-      .select(col(fkCol), col(valCol), col("_sg").as("_sa"))
-    val dB = signed(changeFeed(spark, dirB, vB0, vB1, keyB))
-      .select(col(keyB).as(fkCol), col(groupCol), col("_sg").as("_sb"))
+    val dA = changeFeed(spark, dirA, vA0, vA1, keyA)
+      .select(col(fkCol), col(valCol), changeSign.as("_sa"))
+    val dB = changeFeed(spark, dirB, vB0, vB1, keyB)
+      .select(col(keyB).as(fkCol), col(groupCol), changeSign.as("_sb"))
     val a0 = readVersion(spark, dirA, vA0).select(col(fkCol), col(valCol))
     val b0 = readVersion(spark, dirB, vB0).select(col(keyB).as(fkCol), col(groupCol))
     val t1 = broadcast(dA).join(b0, Seq(fkCol))
@@ -2021,16 +1960,7 @@ object Snapshots {
       .select(col(groupCol), col("_sb").as("_sg"), col(valCol))
     val t3 = dA.join(dB, Seq(fkCol))
       .select(col(groupCol), (col("_sa") * col("_sb")).as("_sg"), col(valCol))
-    val delta = t1.unionByName(t2).unionByName(t3)
-      .groupBy(col(groupCol))
-      .agg(sum(col("_sg")).as("_dn"),
-        sum(col(valCol) * col("_sg")).as("_dsum"))
-    baseAgg.join(delta, Seq(groupCol), "full_outer")
-      .select(col(groupCol),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("_dn"), lit(0L))).as("n"),
-        (coalesce(col("value_sum"), lit(0)) + coalesce(col("_dsum"), lit(0)))
-          .as("value_sum"))
-      .filter(col("n") > 0)
+    mergeSignedDelta(baseAgg, t1.unionByName(t2).unionByName(t3), groupCol, valCol)
   }
 
   // ---------------------------------------------------------------- diff
@@ -2062,16 +1992,10 @@ object Snapshots {
     require(mo.dataDir.isEmpty && mn.dataDir.isEmpty && mo.partCol == mn.partCol,
       s"diffVersionsPartitioned: $vOld/$vNew of $tableDir are not partitioned commits " +
         "on the same column")
-    val oldOwn = mo.partitions.toMap
-    val newOwn = mn.partitions.toMap
     // same immutable dir ⇒ same bytes — but only with the SAME
     // deletion vectors targeting it; a DV delete between the versions
     // changes a partition's effective rows without re-pointing its dir
-    def dvsFor(m: Manifest, dir: String): Set[String] =
-      m.dvs.filter(_._2 == dir).map(_._1).toSet
-    val changed = (oldOwn.keySet ++ newOwn.keySet)
-      .filter(v => oldOwn.get(v) != newOwn.get(v) ||
-        dvsFor(mo, oldOwn(v)) != dvsFor(mn, newOwn(v))).toSeq.sorted
+    val changed = changedPartitionsBetween(Some(mo), mn).get.sorted
     def side(m: Manifest, version: String): DataFrame =
       readPartitionsSubset(spark, tableDir, m, changed)
         .getOrElse(readVersion(spark, tableDir, version).filter(lit(false))) // schema-only
@@ -2121,7 +2045,7 @@ object Snapshots {
     doomed.foreach(v => fs.delete(new Path(new Path(tableDir, CommitDir), v), false))
     val referenced: Set[String] = kept.flatMap { v =>
       val m = readManifest(spark, tableDir, v)
-      m.dataDir.toSeq ++ m.partitions.map(_._2) ++ m.dvs.map(_._1)
+      referencedDirs(m) ++ m.dvs.map(_._1)
     }.toSet
     val cutoff = System.currentTimeMillis() - math.max(orphanGraceMs, 0L)
     if (fs.exists(dir)) fs.listStatus(dir).toSeq

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.Affinity
@@ -28,7 +26,7 @@ class AffinitySpec extends SparkSpec {
   /** Path graph 1–2–3 plus isolated 4 — same fixture as
     * BehavioralSpec's hand-unrolled PageRank test. */
   private lazy val prDir: String = {
-    val dir = Files.createTempDirectory("graft_pr_depth").toString
+    val dir = SparkSpec.tempDir("graft_pr_depth").toString
     Seq((10L, 1L), (10L, 2L), (20L, 2L), (20L, 3L))
       .toDF("l_orderkey", "l_suppkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -56,7 +54,7 @@ class AffinitySpec extends SparkSpec {
   }
 
   test("label propagation plan depth is bounded across rounds") {
-    val dir = Files.createTempDirectory("graft_lpa_depth").toString
+    val dir = SparkSpec.tempDir("graft_lpa_depth").toString
     // two disjoint co-purchase pairs, each order twice (minSupport=2)
     Seq((1L, 101L), (1L, 102L), (2L, 101L), (2L, 102L),
         (3L, 201L), (3L, 202L), (4L, 201L), (4L, 202L))
@@ -77,7 +75,7 @@ class AffinitySpec extends SparkSpec {
 
   test("reliable checkpoint mode: with a checkpoint dir set, iterative results survive total cache loss") {
     val sc = spark.sparkContext
-    val ckDir = Files.createTempDirectory("graft_reliable_ck").toString
+    val ckDir = SparkSpec.tempDir("graft_reliable_ck").toString
     try {
       sc.setCheckpointDir(ckDir)
       // run across ≥2 checkpoint rounds in reliable mode
@@ -108,7 +106,7 @@ class AffinitySpec extends SparkSpec {
   }
 
   test("bfs plan depth is bounded across hops, distances exact") {
-    val dir = Files.createTempDirectory("graft_bfs_depth").toString
+    val dir = SparkSpec.tempDir("graft_bfs_depth").toString
     // chain 10-1-2-3-4-5 via consecutive co-supply orders; seed = 10
     Seq((1L, 10L), (1L, 1L), (2L, 1L), (2L, 2L), (3L, 2L), (3L, 3L),
         (4L, 3L), (4L, 4L), (5L, 4L), (5L, 5L))

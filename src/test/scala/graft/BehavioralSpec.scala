@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.operators.{Affinity, Behavioral, Dedup}
@@ -19,7 +18,7 @@ class BehavioralSpec extends SparkSpec {
     * BEFORE its only view (order violation); u3 clicks 8 days after
     * the view (outside the 7-day window); u4 views only. */
   private lazy val funnelDir: String = {
-    val dir = Files.createTempDirectory("graft_funnel").toString
+    val dir = SparkSpec.tempDir("graft_funnel").toString
     Seq(
       (1L, ts("2024-03-01 10:00:00"), 1L, "view", 1.0, "{}"),
       (2L, ts("2024-03-01 11:00:00"), 1L, "click", 1.0, "{}"),
@@ -41,7 +40,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("cohort retention buckets users by first-event week") {
-    val dir = Files.createTempDirectory("graft_cohort").toString
+    val dir = SparkSpec.tempDir("graft_cohort").toString
     // weeks: 2024-03-04 (Mon) and 2024-03-11 (Mon)
     Seq(
       (1L, ts("2024-03-04 10:00:00"), 1L, "view", 1.0, "{}"), // u1 cohort w0
@@ -59,7 +58,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("concurrency: overlap counts, boundary touch does not, midnight splits") {
-    val dir = Files.createTempDirectory("graft_conc").toString
+    val dir = SparkSpec.tempDir("graft_conc").toString
     // value is minutes. u* sessions on 2024-03-01:
     //   e1 10:00+60m, e2 10:30+60m, e3 10:45+60m → 3 open at 10:45
     //   e4 12:00+30m, e5 12:30+30m → touching, never concurrent
@@ -84,7 +83,7 @@ class BehavioralSpec extends SparkSpec {
   /** Orders o1 {B1,B2}, o2 {B2,B3}, o3 {B1,B2} → pair (B1,B2) in two
     * orders, (B2,B3) in one. */
   test("brand pairs: per-order sorted-set expansion and support count") {
-    val dir = Files.createTempDirectory("graft_pairs").toString
+    val dir = SparkSpec.tempDir("graft_pairs").toString
     Seq((10L, 1L), (10L, 2L), (20L, 2L), (20L, 3L), (30L, 1L), (30L, 2L))
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -98,7 +97,7 @@ class BehavioralSpec extends SparkSpec {
   /** Path graph 1–2–3 (via co-supply orders {1,2} and {2,3}) plus the
     * isolated supplier 4; three hand-unrolled integer iterations. */
   test("pagerank: integer-exact scores on a hand-computed path graph") {
-    val dir = Files.createTempDirectory("graft_pr").toString
+    val dir = SparkSpec.tempDir("graft_pr").toString
     Seq((10L, 1L), (10L, 2L), (20L, 2L), (20L, 3L))
       .toDF("l_orderkey", "l_suppkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -110,7 +109,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("event paths: consecutive trigrams within a user stream, never across users") {
-    val dir = Files.createTempDirectory("graft_paths").toString
+    val dir = SparkSpec.tempDir("graft_paths").toString
     Seq(
       (1L, ts("2024-03-01 10:00:00"), 1L, "view", 1.0, "{}"),
       (2L, ts("2024-03-01 10:01:00"), 1L, "click", 1.0, "{}"),
@@ -128,7 +127,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("funnel timing: whole-second transition delays with exact medians") {
-    val dir = Files.createTempDirectory("graft_ftime").toString
+    val dir = SparkSpec.tempDir("graft_ftime").toString
     // u1: view→click 90 s, click→purchase 30 s; u2: view→click 10 s
     Seq(
       (1L, ts("2024-03-01 10:00:00"), 1L, "view", 1.0, "{}"),
@@ -147,7 +146,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("rolling WAU: trailing 7-day distinct users, only observed days emitted") {
-    val dir = Files.createTempDirectory("graft_wau").toString
+    val dir = SparkSpec.tempDir("graft_wau").toString
     Seq(
       (1L, ts("2024-03-01 10:00:00"), 1L, "view", 1.0, "{}"),
       (2L, ts("2024-03-01 11:00:00"), 2L, "view", 1.0, "{}"),
@@ -160,7 +159,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("anomaly days: integer 2-sigma boundary flags exactly the planted spike") {
-    val dir = Files.createTempDirectory("graft_anom").toString
+    val dir = SparkSpec.tempDir("graft_anom").toString
     // 9 days at 10.00, one at 20.00 → (n−1)(nx−Σx)² = 729e6 > 360e6 = 4n(nΣx²−Σx²)
     val rows = (1 to 10).map { d =>
       val v = if (d == 5) 20.0 else 10.0
@@ -193,7 +192,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("triangles: K4 co-purchase clique has 4 triangles; orientation bounds wedges") {
-    val dir = Files.createTempDirectory("graft_tri").toString
+    val dir = SparkSpec.tempDir("graft_tri").toString
     // TWO orders over parts {1,2,3,4} → all 6 K4 edges at support 2;
     // a pendant pair {4,5} twice (edge, no triangle); {1,5} appears
     // only ONCE → below the support threshold, no edge
@@ -224,7 +223,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("attribution: first/last-touch credit per purchase; untouched purchases go to 'direct'") {
-    val dir = Files.createTempDirectory("graft_attr").toString
+    val dir = SparkSpec.tempDir("graft_attr").toString
     Seq(
       (1L, ts("2024-03-01 10:00:00"), 1L, "view", 0.0, "{}"),
       (2L, ts("2024-03-01 11:00:00"), 1L, "click", 0.0, "{}"),
@@ -245,7 +244,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("ewma: dyadic 8-observation window, exact integer num/den, short-history renormalization") {
-    val dir = Files.createTempDirectory("graft_ewma").toString
+    val dir = SparkSpec.tempDir("graft_ewma").toString
     Seq(
       (1L, ts("2024-03-01 10:00:00"), 1L, "a", 1.0, "{}"),
       (2L, ts("2024-03-02 10:00:00"), 1L, "a", 2.0, "{}"),
@@ -266,7 +265,7 @@ class BehavioralSpec extends SparkSpec {
   /** K5 clique (all pairs in 2 orders) + a pendant node 6 attached to
     * node 1: the pendant peels in round 1, the clique is the 4-core. */
   test("k-core: pendant peels, clique survives with in-core degrees") {
-    val dir = Files.createTempDirectory("graft_kcore").toString
+    val dir = SparkSpec.tempDir("graft_kcore").toString
     val clique = for (o <- Seq(10L, 20L); p <- 1L to 5L) yield (o, p)
     val pendant = Seq((30L, 1L), (30L, 6L), (40L, 1L), (40L, 6L))
     (clique ++ pendant).toDF("l_orderkey", "l_partkey")
@@ -277,7 +276,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("bfs hops: min-distance relaxation from the %10 seed, unreached nodes unreported") {
-    val dir = Files.createTempDirectory("graft_bfs").toString
+    val dir = SparkSpec.tempDir("graft_bfs").toString
     // co-supply path 10–1–2; supplier 3 is disconnected
     Seq((100L, 10L), (100L, 1L), (200L, 1L), (200L, 2L))
       .toDF("l_orderkey", "l_suppkey")
@@ -290,7 +289,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("group regression: exact line recovered exactly; degenerate groups are NULL") {
-    val dir = Files.createTempDirectory("graft_regr").toString
+    val dir = SparkSpec.tempDir("graft_regr").toString
     // flag A: y = 200x + 500 cents exactly; B: one point; C: zero variance
     val a = (1 to 5).map(x => ("A", x.toDouble, 2.0 * x + 5.0))
     val b = Seq(("B", 3.0, 11.0))
@@ -306,7 +305,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("duplicated spans: cross-doc island union, clean docs excluded") {
-    val dir = Files.createTempDirectory("graft_spans").toString
+    val dir = SparkSpec.tempDir("graft_spans").toString
     val w = (1 to 20).map(i => s"w$i") // 20 distinct tokens
     val a = w.mkString(" ")            // doc 0: w1..w20
     val b = (w.slice(4, 16) ++ Seq("zz1", "zz2", "zz3", "zz4", "zz5", "zz6", "zz7", "zz8"))

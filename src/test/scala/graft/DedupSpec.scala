@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Skew, TextAnalysis, Vectors}
@@ -16,7 +14,7 @@ class DedupSpec extends SparkSpec {
   /** Tiny corpus: 0/1 exact dups (after normalization), 2/3 heavy
     * overlap (near-dup), 4..9 unrelated. */
   private lazy val corpusDir: String = {
-    val dir = Files.createTempDirectory("graft_docs").toString
+    val dir = SparkSpec.tempDir("graft_docs").toString
     val base = "the quick brown fox jumps over the lazy dog again and again today"
     val docs = Seq(
       (0L, base, "en", "src0", base.length.toLong),
@@ -58,7 +56,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("hot-shingle cap bounds inverted-index candidates under planted boilerplate") {
-    val dir = Files.createTempDirectory("graft_boiler").toString
+    val dir = SparkSpec.tempDir("graft_boiler").toString
     val boiler = "subscribe to our newsletter today" // 5 words → 3 shared shingles
     val docs = (0L until 40L).map { i =>
       (i, s"$boiler unique${i} filler${i} content${i} words${i} body${i} tail${i}",
@@ -158,7 +156,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("trained IVF reaches recall@5 >= 0.8 on a planted clustered corpus") {
-    val dir = Files.createTempDirectory("graft_ivf").toString
+    val dir = SparkSpec.tempDir("graft_ivf").toString
     // 4 tight clusters in dim 16; vec_id % 4 interleaves clusters so
     // the first-16 seeds span all of them
     val vecs = (0L until 480L).map { vid =>
@@ -193,7 +191,7 @@ class DedupSpec extends SparkSpec {
     val pq2 = Vectors.annPq(spark, sf).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"), r.getAs[Double]("cos")))
     assert(pq1.toSeq === pq2.toSeq)
-    val dir = Files.createTempDirectory("graft_pq").toString
+    val dir = SparkSpec.tempDir("graft_pq").toString
     val vecs = (0L until 480L).map { vid =>
       val c = (vid % 4).toInt
       val emb = Array.tabulate(16) { i =>
@@ -276,7 +274,7 @@ class DedupSpec extends SparkSpec {
   test("incremental dedup pipeline: snapshot-persisted index survives two ingest batches") {
     import graft.sources.Snapshots
     val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
-    val table = Files.createTempDirectory("graft_lshidx").toString + "/sig_index"
+    val table = SparkSpec.tempDir("graft_lshidx").toString + "/sig_index"
     // bootstrap: index the initial corpus (docs 4..9)
     val b0 = docs.filter(col("doc_id") >= 4L)
     Snapshots.commitOverwrite(spark, table,

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{Sharding, TextAnalysis}
 
 /** Degenerate-input hardening for the text/ordering operators behind
@@ -14,7 +12,7 @@ class DegenerateInputSpec extends SparkSpec {
   import spark.implicits._
 
   private def corpus(docs: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = Files.createTempDirectory("graft_degen").toString
+    val dir = SparkSpec.tempDir("graft_degen").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -118,7 +116,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("semantic dedup and PQ ANN survive a corpus smaller than the codebook") {
-    val dir = Files.createTempDirectory("graft_degen_vec").toString
+    val dir = SparkSpec.tempDir("graft_degen_vec").toString
     // 3 vectors, k = 16 seeds → codebooks of 3; dim 64 for PQ slicing
     val vecs = (0L until 3L).map(v =>
       (v, Array.tabulate(64)(i => ((v * 31 + i * 7) % 13).toFloat / 13f)))
@@ -132,7 +130,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("behavioral operators on an empty events table return the identity shapes") {
-    val dir = Files.createTempDirectory("graft_degen_ev").toString
+    val dir = SparkSpec.tempDir("graft_degen_ev").toString
     import java.sql.Timestamp
     Seq.empty[(Long, Timestamp, Long, String, Double, String)]
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -152,7 +150,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("zero-duration sessions are dropped from the concurrency sweep") {
-    val dir = Files.createTempDirectory("graft_degen_ev0").toString
+    val dir = SparkSpec.tempDir("graft_degen_ev0").toString
     import java.sql.Timestamp
     Seq((1L, Timestamp.valueOf("2024-03-01 10:00:00"), 1L, "view", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -161,7 +159,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("pagerank: graph with no edges settles every node at the base score") {
-    val dir = Files.createTempDirectory("graft_degen_pr").toString
+    val dir = SparkSpec.tempDir("graft_degen_pr").toString
     // single-supplier orders → no co-supply pairs at all
     Seq((10L, 1L), (20L, 2L)).toDF("l_orderkey", "l_suppkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -172,7 +170,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("attribution/ewma/rolling on empty events; k-core and bfs on edgeless graphs") {
-    val ev = Files.createTempDirectory("graft_degen_ev2").toString
+    val ev = SparkSpec.tempDir("graft_degen_ev2").toString
     import java.sql.Timestamp
     Seq.empty[(Long, Timestamp, Long, String, Double, String)]
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -180,7 +178,7 @@ class DegenerateInputSpec extends SparkSpec {
     assert(graft.operators.Behavioral.attribution(spark, ev).count() === 0L)
     assert(graft.operators.Behavioral.ewmaDaily(spark, ev).count() === 0L)
     assert(graft.operators.Behavioral.rollingDailyStats(spark, ev).count() === 0L)
-    val g = Files.createTempDirectory("graft_degen_g").toString
+    val g = SparkSpec.tempDir("graft_degen_g").toString
     // single-member orders: no co-purchase and no co-supply pairs
     Seq((10L, 1L, 1L), (20L, 2L, 2L))
       .toDF("l_orderkey", "l_partkey", "l_suppkey")
@@ -195,7 +193,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("purchase-only attribution credits 'direct' on both models") {
-    val ev = Files.createTempDirectory("graft_degen_attr").toString
+    val ev = SparkSpec.tempDir("graft_degen_attr").toString
     import java.sql.Timestamp
     Seq((1L, Timestamp.valueOf("2024-03-01 10:00:00"), 1L, "purchase", 2.5, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -207,7 +205,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("single-observation EWMA and rolling stats equal the observation itself") {
-    val ev = Files.createTempDirectory("graft_degen_ewma1").toString
+    val ev = SparkSpec.tempDir("graft_degen_ewma1").toString
     import java.sql.Timestamp
     Seq((1L, Timestamp.valueOf("2024-03-01 10:00:00"), 1L, "a", 3.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -219,7 +217,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("fk audit on empty children; readability/sig-jaccard/k-anonymity on empty inputs") {
-    val dir = Files.createTempDirectory("graft_degen_fk").toString
+    val dir = SparkSpec.tempDir("graft_degen_fk").toString
     def w(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     w(Seq.empty[Long].toDF("r_regionkey"), "region")
@@ -246,7 +244,7 @@ class DegenerateInputSpec extends SparkSpec {
     assert(TextAnalysis.bigramFluency(spark, dir).count() === 0L)
     assert(TextAnalysis.vocabHeavyHitters(spark, dir).count() === 0L)
     assert(graft.operators.Sampling.leakageSafeSplit(spark, dir).count() === 0L)
-    val edir = Files.createTempDirectory("graft_degen_e").toString
+    val edir = SparkSpec.tempDir("graft_degen_e").toString
     Seq.empty[(Long, java.sql.Timestamp, Double)]
       .toDF("user_id", "ts", "value")
       .write.mode("overwrite").parquet(s"$edir/events.parquet")
@@ -281,7 +279,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("decile lift with fewer rows than deciles: each row its own tile") {
-    val dir = Files.createTempDirectory("graft_degen_o").toString
+    val dir = SparkSpec.tempDir("graft_degen_o").toString
     Seq((1L, 100.0, "F"), (2L, 50.0, "O"), (3L, 25.0, "F"))
       .toDF("o_orderkey", "o_totalprice", "o_orderstatus")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")

@@ -31,7 +31,7 @@ import graft.etl.{Daily, Dims, Pipeline}
   */
 class EtlFixtureSpec extends SparkSpec {
   private val csvDir = new File(getClass.getResource("/etl").toURI).getPath
-  private def freshDwh(): String = Files.createTempDirectory("graft_etl_fixture").toString
+  private def freshDwh(): String = SparkSpec.tempDir("graft_etl_fixture").toString
   private def day(d: Int): LocalDate = LocalDate.of(2025, 7, d)
 
   /** Every row of `df`'s `cols`, nulls as None, values as strings. */
@@ -143,7 +143,7 @@ class EtlFixtureSpec extends SparkSpec {
 
   /** A copy of the fixture CSVs in which every tap of `ds` has status F. */
   private def csvsWithDayFailed(ds: LocalDate): String = {
-    val out = Files.createTempDirectory("graft_etl_failed_day").toFile
+    val out = SparkSpec.tempDir("graft_etl_failed_day").toFile
     new File(csvDir).listFiles().foreach { f =>
       val lines = Files.readAllLines(f.toPath).asScala.toSeq
       val rewritten =

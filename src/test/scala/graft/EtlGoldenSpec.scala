@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.LocalDate
 
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ import graft.etl.{Daily, Dims}
   */
 class EtlGoldenSpec extends SparkSpec {
   private val csvDir = SparkSpec.ReferenceDataDir
-  private lazy val dwhDir = Files.createTempDirectory("graft_dwh").toString
+  private lazy val dwhDir = SparkSpec.tempDir("graft_dwh").toString
 
   test("DAG1: dims load with reference row counts") {
     val counts = Dims.run(spark, csvDir, dwhDir)

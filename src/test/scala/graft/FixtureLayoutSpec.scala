@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,7 +28,7 @@ class FixtureLayoutSpec extends SparkSpec {
 
   private def writeLayout(layout: String): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory(s"graft_fixture_$layout").toString
+    val dir = SparkSpec.tempDir(s"graft_fixture_$layout").toString
     val base = micros.zipWithIndex
       .map { case (us, i) => (i.toLong, us, i.toLong % 2, s"ev$i", i.toDouble, "{}") }
       .toDF("event_id", "us", "user_id", "event_type", "value", "props")

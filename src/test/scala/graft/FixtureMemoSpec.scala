@@ -14,7 +14,7 @@ class FixtureMemoSpec extends SparkSpec {
   /** A source dir holding an `orders` table path; the memo reads only
     * that path's modification time. */
   private def sourceDir(): (String, File) = {
-    val dir = Files.createTempDirectory("graft_memo_src").toFile
+    val dir = SparkSpec.tempDir("graft_memo_src").toFile
     val table = new File(dir, "orders.parquet")
     assert(table.mkdir())
     (dir.getPath, table)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.{Date, DriverManager}
 
 import org.apache.spark.sql.functions._
@@ -26,7 +25,7 @@ import graft.sources.Tables
 class JdbcPgParitySpec extends SparkSpec {
 
   private lazy val url: String = {
-    val dbDir = Files.createTempDirectory("graft_derby_pg").resolve("db")
+    val dbDir = SparkSpec.tempDir("graft_derby_pg").resolve("db")
     val u = s"jdbc:derby:$dbDir;create=true"
     val conn = DriverManager.getConnection(u)
     val st = conn.createStatement()

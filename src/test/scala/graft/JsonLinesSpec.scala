@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.types._
 
 import graft.sources.JsonLines
@@ -15,7 +13,7 @@ class JsonLinesSpec extends SparkSpec {
     StructField("id", LongType), StructField("v", StringType)))
 
   test("clean and corrupt rows split losslessly; raw bad lines survive for the dead letter") {
-    val dir = Files.createTempDirectory("graft_jsonl").toString
+    val dir = SparkSpec.tempDir("graft_jsonl").toString
     val f = new java.io.File(s"$dir/data.json")
     val w = new java.io.PrintWriter(f, "UTF-8")
     w.println("""{"id": 1, "v": "a"}""")
@@ -35,7 +33,7 @@ class JsonLinesSpec extends SparkSpec {
   }
 
   test("a type-mismatched field quarantines the line rather than silently nulling it") {
-    val dir = Files.createTempDirectory("graft_jsonl2").toString
+    val dir = SparkSpec.tempDir("graft_jsonl2").toString
     val w = new java.io.PrintWriter(s"$dir/data.json", "UTF-8")
     w.println("""{"id": "not-a-number", "v": "x"}""")
     w.println("""{"id": 3, "v": "y"}""")

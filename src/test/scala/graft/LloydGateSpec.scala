@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -68,7 +67,7 @@ class LloydGateSpec extends SparkSpec {
   }
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory(GraftSession.scratchRoot, "lloyd_gate").toString
+    val d = SparkSpec.tempDir("lloyd_gate").toString
     corpus.toDF("vec_id", "embedding").repartition(3)
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
     d

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.Vectors
 
 /** Random-hyperplane LSH near-dup on planted vectors: identical and
@@ -10,7 +8,7 @@ class LshSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_emb").toString
+    val d = SparkSpec.tempDir("graft_emb").toString
     val dim = 16
     def base(seed: Int): Array[Float] =
       Array.tabulate(dim)(i => math.sin(seed * 31 + i * 7).toFloat)
@@ -35,7 +33,7 @@ class LshSpec extends SparkSpec {
   test("LSH agrees with brute force at the same threshold on planted data") {
     val lsh = Vectors.lshNearDupPairs(spark, dir, threshold = 0.95)
       .collect().map(r => (r.getAs[Long]("da"), r.getAs[Long]("db"))).toSet
-    val brute = Vectors.nearDupPairs(spark, dir)
+    val brute = RetiredFormulations.nearDupPairs(spark, dir)
       .filter($"cos" >= 0.95)
       .collect().map(r => (r.getAs[Long]("da"), r.getAs[Long]("db"))).toSet
     // LSH ⊆ brute force always; with 8 bands of 2 over cos≥0.95 recall ≈ 1

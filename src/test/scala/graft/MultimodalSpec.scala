@@ -42,7 +42,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("mediaFeatures computes features from decoded content (pixel means, last PCM sample, container probe)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_featdocs").toString
+    val dir = SparkSpec.tempDir("graft_featdocs").toString
     // one id per kind branch: 6->image, 7->audio, 8->avi, 11->mp4
     Seq(6L, 7L, 8L, 11L).map(id => (id, s"doc $id", "en", "src", 6L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -61,7 +61,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("audioDecode round trip matches the arithmetic contract (real javax.sound WAV decode)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wavdocs").toString
+    val dir = SparkSpec.tempDir("graft_wavdocs").toString
     val ids = Seq(0L, 1L, 3L, 63L, 64L, 127L, 500L)
     ids.map(id => (id, s"doc $id", "en", "src", 6L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -79,7 +79,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("imageDecode round trip matches the arithmetic contract for every id shape") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_imgdocs").toString
+    val dir = SparkSpec.tempDir("graft_imgdocs").toString
     val ids = Seq(0L, 1L, 31L, 32L, 255L, 256L, 1000L)
     ids.map(id => (id, s"doc $id", "en", "src", 6L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -127,7 +127,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("videoProbe query: even ids AVI, odd ids MP4, metadata from the structure") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_videodocs").toString
+    val dir = SparkSpec.tempDir("graft_videodocs").toString
     val ids = Seq(0L, 1L, 2L, 3L, 100L, 101L)
     ids.map(id => (id, s"doc $id", "en", "src", 6L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -116,7 +116,7 @@ class PropertySpec extends SparkSpec {
     // random token counts incl. the edges: 0-ish (empty text → 1 token), < size, = size, size+1
     val ns = (Seq(1, size - 1, size, size + 1, 2 * stride) ++
       Seq.fill(20)(rnd.nextInt(300) + 1)).distinct
-    val dir = java.nio.file.Files.createTempDirectory("graft_propchunk").toString
+    val dir = SparkSpec.tempDir("graft_propchunk").toString
     ns.zipWithIndex.map { case (n, i) =>
         (i.toLong, (1 to n).map(t => s"w$t").mkString(" "), "en", "s", n.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -140,7 +140,7 @@ class PropertySpec extends SparkSpec {
   test("quantizeInt8 codes are bounded and dequantize within half a step") {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Seq.fill(16)(rnd.nextFloat() * 2f - 1f), 0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_propq").toString
+    val dir = SparkSpec.tempDir("graft_propq").toString
     vecs.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = graft.operators.Vectors.quantizeInt8(spark, dir)

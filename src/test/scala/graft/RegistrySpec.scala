@@ -24,7 +24,7 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("Verify.run returns failed and unknown query names and still writes the oracle") {
-    val out = Files.createTempDirectory("graft_verify").toString
+    val out = SparkSpec.tempDir("graft_verify").toString
     val name = "q01_agg_pricing"
     val failed = Verify.run(spark, s"$out/no_such_sf", out, Set(name, "q999_unknown"))
     assert(failed.toSet === Set(name, "q999_unknown"))

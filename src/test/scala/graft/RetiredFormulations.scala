@@ -1,16 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.{normalizeText, shingles, words}
-import graft.operators.{Multimodal, TextAnalysis, Winnowing}
+import graft.operators.{Multimodal, TextAnalysis, Vectors, Winnowing}
 import graft.sources.Tables
 
 /** Retired formulations of rewritten operators, kept in test scope as
-  * the differential witnesses Round14Spec and Round16Spec diff the
-  * live operators against. None of them is on any query path.
+  * the differential witnesses and oracles that Round12/13/14Spec,
+  * Round16Spec and LshSpec check the live operators against. None of
+  * them is on any query path.
   */
 object RetiredFormulations {
 
@@ -191,4 +192,82 @@ object RetiredFormulations {
     "com.pk", "net.pk", "org.pk", "edu.pk", "gov.pk",
     "com.bd", "net.bd", "org.bd", "edu.bd", "gov.bd",
     "co.ke", "or.ke", "ne.ke", "go.ke", "ac.ke")
+
+  /** Exact all-pairs near-dup baseline, the test oracle of
+    * [[Vectors.lshNearDupPairs]] (the gated path): collects the
+    * whole corpus and broadcasts it, so it is bounded by one JVM's
+    * memory and O(n²) work. LshSpec uses it as ground truth to
+    * measure the LSH path's recall on small corpora. */
+  def nearDupPairs(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val vecs = Vectors.emb(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Long, Array[Double])]
+    val block = vecs.collect().sortBy(_._1).map { case (id, v) =>
+      (id, v, math.sqrt(Vectors.dotArr(v, v)))
+    }
+    val bc = spark.sparkContext.broadcast(block)
+    val pairs = vecs.mapPartitions { it =>
+      val b = bc.value
+      it.flatMap { case (da, va) =>
+        val na = math.sqrt(Vectors.dotArr(va, va))
+        b.iterator
+          .filter(_._1 > da)
+          .map { case (db, vb, nb) =>
+            (da, db, Vectors.round4(Vectors.dotArr(va, vb) / (na * nb))) }
+          .filter(_._3 >= Vectors.NearDupThreshold)
+      }
+    }.toDF("da", "db", "cos")
+    pairs.orderBy(col("da"), col("db"))
+  }
+
+  /** Params dropped entirely: the click/campaign trackers every
+    * pipeline strips (they identify the REFERRAL, not the resource). */
+  val TrackingParamRe = "^(utm_[A-Za-z0-9_]*|fbclid|gclid)="
+
+  /** Uppercase hex codes of the RFC 3986 UNRESERVED characters
+    * (ALPHA / DIGIT / `-` `.` `_` `~`) — the escapes §6.2.2.2 says to
+    * decode. Everything else (reserved, non-ASCII bytes of multibyte
+    * escapes) must STAY escaped: decoding `%2F` would change the
+    * path structure. */
+  val UnreservedHexRe = "^(4[1-9A-F]|5[0-9A]|6[1-9A-F]|7[0-9A]|3[0-9]|2[DE]|5F|7E)$"
+
+  /** RFC 3986 §6.2.2 percent-encoding normalization: decode
+    * unreserved `%XX` escapes, uppercase the hex of the rest, leave
+    * malformed escapes (`%4`, `%zz`, trailing `%`) byte-for-byte.
+    * Split on `%`; each following piece's first two chars are the
+    * candidate hex. Pure array/regexp column expression, restated
+    * with the same regexes over DuckDB's `string_split`/
+    * `list_transform` in the q266 oracle. */
+  def pctNormalize(u: Column): Column = {
+    val parts = split(u, "%", -1)
+    val rest = transform(slice(parts, lit(2), size(parts) - 1), p => {
+      val hex = upper(substring(p, 1, 2))
+      val tail = substring(p, 3, Int.MaxValue)
+      when(hex.rlike(UnreservedHexRe), concat(decode(unhex(hex), "UTF-8"), tail))
+        .when(hex.rlike("^[0-9A-F]{2}$"), concat(lit("%"), hex, tail))
+        .otherwise(concat(lit("%"), p))
+    })
+    concat(element_at(parts, 1), array_join(rest, ""))
+  }
+
+  /** The regex formulation of the canonical URL form described on
+    * [[graft.functions.Urls]]; Round14Spec diffs `url_parts.canon`
+    * against it. */
+  def canonicalUrl(u: Column): Column = {
+    val noFrag = regexp_replace(pctNormalize(u), "#.*$", "")
+    val scheme = lower(regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+    val hostPort = lower(regexp_extract(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?]*)", 1))
+    val host = when(scheme === "http", regexp_replace(hostPort, ":80$", ""))
+      .when(scheme === "https", regexp_replace(hostPort, ":443$", ""))
+      .otherwise(hostPort)
+    val path = regexp_extract(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://[^/?]*([^?]*)", 1)
+    val query = regexp_extract(noFrag, "\\?(.*)$", 1)
+    val kept = array_join(
+      array_sort(filter(split(query, "&"),
+        p => p =!= lit("") && !p.rlike(TrackingParamRe))), "&")
+    concat(scheme, lit("://"), host,
+      when(path === "", lit("/")).otherwise(path),
+      when(kept === "", lit("")).otherwise(concat(lit("?"), kept)))
+  }
 }

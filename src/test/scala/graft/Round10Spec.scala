@@ -69,7 +69,7 @@ class Round10Spec extends SparkSpec {
     import graft.streaming.DocStreams
     import graft.sources.Snapshots
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_lshmaint").toString
+    val root = SparkSpec.tempDir("graft_lshmaint").toString
     val indexDir = root + "/idx"
     def dirSize(p: String): Long = {
       val base = java.nio.file.Paths.get(p)
@@ -146,7 +146,7 @@ class Round10Spec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_lshcadence").toString
+    val root = SparkSpec.tempDir("graft_lshcadence").toString
     val indexDir = root + "/idx"
     val cp = root + "/cp"
     val source = MemoryStream[(Long, String)]

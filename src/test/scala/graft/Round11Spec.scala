@@ -21,7 +21,7 @@ class Round11Spec extends SparkSpec {
       (id / Warc.PagesPerShard, id, s"http://example.org/doc/$id",
         HtmlText.renderPage(id, text))
     }.toDF("shard", "doc_id", "url", "html")
-    val dir = java.nio.file.Files.createTempDirectory("warc_spec").toString
+    val dir = SparkSpec.tempDir("warc_spec").toString
     Warc.writeShards(spark, pages, dir)
     val files = new java.io.File(dir).list().filterNot(_.startsWith(".")).sorted.toSeq
     assert(files === Seq("shard-00000.warc", "shard-00001.warc.gz"))
@@ -38,7 +38,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("corrupt WARC framing fails loudly, never resyncs silently") {
-    val dir = java.nio.file.Files.createTempDirectory("warc_bad").toString
+    val dir = SparkSpec.tempDir("warc_bad").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "shard-00000.warc"),
       "WARC/1.0\r\nWARC-Type: response\r\nContent-Length: 99999\r\n\r\nshort"
         .getBytes("UTF-8"))
@@ -167,7 +167,7 @@ class Round11Spec extends SparkSpec {
     // never fragmented and maintenance must NOT rewrite it — the old
     // unconditional compact re-wrote the whole index every cadence for
     // zero benefit (vacuum alone reclaims the superseded dirs)
-    val dir = java.nio.file.Files.createTempDirectory("maint_spec").toString
+    val dir = SparkSpec.tempDir("maint_spec").toString
     val t = s"$dir/idx"
     for (i <- 1 to 4)
       Snapshots.commitUpsert(spark, t, Seq((i.toLong, "a")).toDF("doc_id", "v"), "doc_id")

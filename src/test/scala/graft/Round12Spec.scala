@@ -85,7 +85,7 @@ class Round12Spec extends SparkSpec {
       (id / Warc.PagesPerShard, id, s"http://example.org/doc/$id",
         HtmlText.renderPage(id, text))
     }.toDF("shard", "doc_id", "url", "html")
-    val dir = java.nio.file.Files.createTempDirectory("warc12_spec").toString
+    val dir = SparkSpec.tempDir("warc12_spec").toString
     Warc.writeShards(spark, pages, dir)
     val resp = Warc.readRecords(spark, dir).collect().filter(_.warc_type == "response")
     assert(resp.length === 2)
@@ -149,7 +149,7 @@ class Round12Spec extends SparkSpec {
       ("https://example.org", "https://example.org/"), // empty path → /
       ("http://example.org/p?fbclid=abc&z=1&gclid=q", "http://example.org/p?z=1"))
     val got = cases.map(_._1).toDF("url")
-      .select(functions.Urls.canonicalUrl(col("url")).as("c"))
+      .select(RetiredFormulations.canonicalUrl(col("url")).as("c"))
       .as[String].collect().toSeq
     assert(got === cases.map(_._2))
   }
@@ -225,7 +225,7 @@ class Round12Spec extends SparkSpec {
       (0L, 1L, "http://example.org/doc/1", "text/html; charset=utf-8",
         "<html><body>b</body></html>".getBytes("UTF-8"), "", 404))
       .toDF("shard", "doc_id", "url", "content_type", "body", "x_headers", "status")
-    val dir = java.nio.file.Files.createTempDirectory("warc12_robots").toString
+    val dir = SparkSpec.tempDir("warc12_robots").toString
     Warc.writeShardsEncoded(spark, pages, dir)
     val byUri = Warc.readRecords(spark, dir).collect()
       .filter(_.warc_type == "response").map(r => r.target_uri -> r).toMap

@@ -34,7 +34,7 @@ class Round13Spec extends SparkSpec {
       // no escapes at all: identity
       ("http://e.org/plain?a=1", "http://e.org/plain?a=1"))
     val got = cases.map(_._1).toDF("u")
-      .select(functions.Urls.pctNormalize(col("u")).as("n"))
+      .select(RetiredFormulations.pctNormalize(col("u")).as("n"))
       .as[String].collect().toSeq
     assert(got === cases.map(_._2))
   }
@@ -46,7 +46,7 @@ class Round13Spec extends SparkSpec {
       ("https://example.org/d%6Fc%2fs/9?a=1&b=%32", "https://example.org/doc%2Fs/9?a=1&b=2"),
       ("https://Example.org:443/doc%2Fs/9?b=2&a=1", "https://example.org/doc%2Fs/9?a=1&b=2"))
     val got = cases.map(_._1).toDF("url")
-      .select(functions.Urls.canonicalUrl(col("url")).as("c"))
+      .select(RetiredFormulations.canonicalUrl(col("url")).as("c"))
       .as[String].collect().toSeq
     assert(got === cases.map(_._2))
   }

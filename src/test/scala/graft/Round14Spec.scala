@@ -39,7 +39,7 @@ class Round14Spec extends SparkSpec {
     val df = zoo.toDF("u")
     val got = df.select(functions.Urls.parts(col("u")).getField("canon").as("c"))
       .as[String].collect().toSeq
-    val want = df.select(functions.Urls.canonicalUrl(col("u")).as("c"))
+    val want = df.select(RetiredFormulations.canonicalUrl(col("u")).as("c"))
       .as[String].collect().toSeq
     assert(got === want)
   }
@@ -52,7 +52,7 @@ class Round14Spec extends SparkSpec {
     val got = df.select(functions.Urls.parts(col("u")).getField("host_noport").as("h"))
       .as[String].collect().toSeq
     val want = df.select(
-        functions.Urls.hostOf(functions.Urls.canonicalUrl(col("u"))).as("h"))
+        functions.Urls.hostOf(RetiredFormulations.canonicalUrl(col("u"))).as("h"))
       .as[String].collect().toSeq
     assert(got === want)
   }

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -21,7 +20,7 @@ class Round3Spec extends SparkSpec {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   private def writeDocs(docs: Seq[(Long, String)]): String = {
-    val dir = Files.createTempDirectory("graft_r3docs").toString
+    val dir = SparkSpec.tempDir("graft_r3docs").toString
     docs.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -31,7 +30,7 @@ class Round3Spec extends SparkSpec {
   // ---------------------------------------------------------------- merge
 
   test("partitionScopedMerge rewrites ONLY touched partitions, merges correctly") {
-    val dir = Files.createTempDirectory("graft_pmerge").toString
+    val dir = SparkSpec.tempDir("graft_pmerge").toString
     val table = s"$dir/t"
     Seq((1L, "A", 10.0), (2L, "A", 20.0), (3L, "B", 30.0), (4L, "B", 40.0))
       .toDF("id", "part", "v")
@@ -55,7 +54,7 @@ class Round3Spec extends SparkSpec {
 
   test("partitionScopedMerge aligns widened delta types to the base schema") {
     import org.apache.spark.sql.types.DecimalType
-    val dir = Files.createTempDirectory("graft_pmerge2").toString
+    val dir = SparkSpec.tempDir("graft_pmerge2").toString
     val table = s"$dir/t"
     Seq((1L, "F", "10.00"), (2L, "P", "20.00"))
       .toDF("id", "part", "p")
@@ -76,7 +75,7 @@ class Round3Spec extends SparkSpec {
   }
 
   test("partitionScopedMerge deletes the stale row on a cross-partition key move") {
-    val dir = Files.createTempDirectory("graft_pmerge_move").toString
+    val dir = SparkSpec.tempDir("graft_pmerge_move").toString
     val table = s"$dir/t"
     Seq((1L, "A", 10.0), (2L, "A", 20.0), (3L, "B", 30.0))
       .toDF("id", "part", "v")
@@ -95,7 +94,7 @@ class Round3Spec extends SparkSpec {
   }
 
   test("partitionScopedMerge removes a partition dir emptied by a key move") {
-    val dir = Files.createTempDirectory("graft_pmerge_empty").toString
+    val dir = SparkSpec.tempDir("graft_pmerge_empty").toString
     val table = s"$dir/t"
     Seq((1L, "A", 10.0), (5L, "P", 50.0)).toDF("id", "part", "v")
       .write.partitionBy("part").parquet(table)
@@ -112,7 +111,7 @@ class Round3Spec extends SparkSpec {
   }
 
   test("partitionScopedMerge refuses extra incoming columns instead of silently dropping them") {
-    val dir = Files.createTempDirectory("graft_pmerge_extra").toString
+    val dir = SparkSpec.tempDir("graft_pmerge_extra").toString
     val table = s"$dir/t"
     Seq((1L, "A", 1.0)).toDF("id", "part", "v").write.partitionBy("part").parquet(table)
     val delta = Seq((2L, "A", 2.0, "note")).toDF("id", "part", "v", "extra")
@@ -123,7 +122,7 @@ class Round3Spec extends SparkSpec {
   }
 
   test("partitionScopedMerge refuses NULL partition values loudly") {
-    val dir = Files.createTempDirectory("graft_pmerge3").toString
+    val dir = SparkSpec.tempDir("graft_pmerge3").toString
     val table = s"$dir/t"
     Seq((1L, "A", 1.0)).toDF("id", "part", "v").write.partitionBy("part").parquet(table)
     val delta = Seq((2L, null.asInstanceOf[String], 2.0)).toDF("id", "part", "v")
@@ -210,7 +209,7 @@ class Round3Spec extends SparkSpec {
   // ---------------------------------------------------------- quantization
 
   test("quantizeInt8 codes are exact on a known vector") {
-    val dir = Files.createTempDirectory("graft_r3emb").toString
+    val dir = SparkSpec.tempDir("graft_r3emb").toString
     Seq((0L, Seq(0.0f, 1.0f, 0.5f, 0.25f), 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -326,7 +325,7 @@ class Round3Spec extends SparkSpec {
     // source a: ~10x the tokens of source b → a is rate-limited, b kept whole
     val docs = (0L until 100L).map(i => (i, Seq.fill(40)("tok").mkString(" "), "a")) ++
       (100L until 110L).map(i => (i, Seq.fill(40)("tok").mkString(" "), "b"))
-    val dir = Files.createTempDirectory("graft_mix").toString
+    val dir = SparkSpec.tempDir("graft_mix").toString
     docs.map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Relational, TextAnalysis}
@@ -12,7 +10,7 @@ class Round6Spec extends SparkSpec {
   import spark.implicits._
 
   test("fk audit: orphans, NULL keys and clean edges counted per FK edge") {
-    val dir = Files.createTempDirectory("graft_fk").toString
+    val dir = SparkSpec.tempDir("graft_fk").toString
     def w(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     w(Seq(1L).toDF("r_regionkey"), "region")
@@ -54,7 +52,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("longest streak: consecutive months merge across year boundary, gaps split") {
-    val dir = Files.createTempDirectory("graft_streak").toString
+    val dir = SparkSpec.tempDir("graft_streak").toString
     def d(s: String) = java.sql.Date.valueOf(s)
     // cust 1: Nov, Dec, Jan, Feb (4-streak over the year boundary),
     // then Apr (gap → own island); cust 2: two isolated months
@@ -72,7 +70,7 @@ class Round6Spec extends SparkSpec {
 
   test("join-view maintenance: the signed delta algebra survives deletes, updates, inserts and group moves") {
     import graft.sources.Snapshots
-    val root = Files.createTempDirectory("graft_ivm").toString
+    val root = SparkSpec.tempDir("graft_ivm").toString
     val a0 = Seq((1L, 10L, BigDecimal("5.00")), (2L, 10L, BigDecimal("7.00")),
       (3L, 20L, BigDecimal("9.00")))
       .toDF("ok", "ck", "price")
@@ -102,7 +100,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("readability: hand-computed Flesch, sentence clamp, empty docs excluded") {
-    val dir = Files.createTempDirectory("graft_read").toString
+    val dir = SparkSpec.tempDir("graft_read").toString
     Seq(
       (0L, "The cat sat. The dog ran!", "en", "s", 25L),
       (1L, "no punctuation here", "en", "s", 19L),
@@ -124,7 +122,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("containment: a short doc quoted whole inside a long one is caught; Jaccard would miss it") {
-    val dir = Files.createTempDirectory("graft_cont").toString
+    val dir = SparkSpec.tempDir("graft_cont").toString
     val quote = "alpha beta gamma delta epsilon zeta eta theta"
     val long = "intro words before the quote " + quote +
       " and a very long tail " + (1 to 30).map(i => s"filler$i").mkString(" ")
@@ -144,7 +142,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("item similarity: parts always bought together outrank popular-but-uncorrelated pairs") {
-    val dir = Files.createTempDirectory("graft_cf").toString
+    val dir = SparkSpec.tempDir("graft_cf").toString
     // parts 1,2 co-occur in all their 3 orders (cos=1); part 9 is in
     // every order (popular) so its pairs have low cosine
     val rows = Seq(
@@ -164,7 +162,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("drift days: a day missing a dominant type drifts more than a balanced day") {
-    val dir = Files.createTempDirectory("graft_drift").toString
+    val dir = SparkSpec.tempDir("graft_drift").toString
     val ts = java.sql.Timestamp.valueOf(_: String)
     // two balanced days (50/50 a,b) and one day of only 'a'
     val ev = (1 to 10).map(i => (i.toLong, 1L, "a", ts("2024-01-01 00:00:00"), 1.0)) ++
@@ -182,7 +180,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("weak labels: plurality wins, ties break lexicographically, all-abstain docs drop") {
-    val dir = Files.createTempDirectory("graft_weak").toString
+    val dir = SparkSpec.tempDir("graft_weak").toString
     Seq(
       (1L, "spark query stream", "en", "s", 10L),  // compute 2, streaming 1
       (2L, "table row words", "en", "s", 10L),     // storage 2
@@ -200,7 +198,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("target encoding shrinks small categories toward the prior; indexer ranks by frequency") {
-    val dir = Files.createTempDirectory("graft_feat").toString
+    val dir = SparkSpec.tempDir("graft_feat").toString
     // category A: 2 orders at 100.00; B: 1 order at 1000.00
     Seq(("A", 100.0), ("A", 100.0), ("B", 1000.0))
       .toDF("o_orderpriority", "o_totalprice")
@@ -225,7 +223,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("link prediction: the open corner of a wedge is predicted; existing edges never are") {
-    val dir = Files.createTempDirectory("graft_lp").toString
+    val dir = SparkSpec.tempDir("graft_lp").toString
     // orders 1,2 buy {1,2}; orders 3,4 buy {1,3} -> edges (1,2),(1,3)
     // (support 2 each); the open pair (2,3) shares neighbor 1
     Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L),
@@ -256,7 +254,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("vocab heavy hitters: exact under a capacity that forces evictions") {
-    val dir = Files.createTempDirectory("graft_hh").toString
+    val dir = SparkSpec.tempDir("graft_hh").toString
     // hot×40, warm×12, and 30 distinct cold terms: n = 82
     val text = (List.fill(40)("hot") ++ List.fill(12)("warm") ++
       (1 to 30).map(i => s"cold$i")).mkString(" ")
@@ -273,7 +271,7 @@ class Round6Spec extends SparkSpec {
 
   test("linear interpolation fills interior gaps from both neighbors") {
     import java.sql.Timestamp
-    val dir = Files.createTempDirectory("graft_interp").toString
+    val dir = SparkSpec.tempDir("graft_interp").toString
     def t(h: Int, m: Int) = Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
     // user 1: hours 0,1,3 observed (hour 1 from two events summing to
     // 20), hour 2 missing -> (2-1)/(3-1)=0.5 between 20 and 40 = 30
@@ -290,7 +288,7 @@ class Round6Spec extends SparkSpec {
   }
 
   test("decile lift: two-level compressed rank equals the direct global rank") {
-    val dir = Files.createTempDirectory("graft_lift").toString
+    val dir = SparkSpec.tempDir("graft_lift").toString
     // 25 orders; a 5-way tie at score 80 straddles a decile boundary,
     // so the per-bin tie ranks must land in DIFFERENT deciles
     val rows = (1L to 25L).map { k =>
@@ -318,7 +316,7 @@ class Round6Spec extends SparkSpec {
 
   test("mmr re-rank: step 2 prefers the diverse candidate over a " +
       "higher-relevance near-copy of the first pick") {
-    val dir = Files.createTempDirectory("graft_mmr").toString
+    val dir = SparkSpec.tempDir("graft_mmr").toString
     Seq(
       (0L, Array(1.0f, 0.0f)),     // query
       (1L, Array(0.99f, 0.14f)),   // most relevant -> step 1
@@ -361,7 +359,7 @@ class Round6Spec extends SparkSpec {
   test("sequence motif: session gap splits a would-be match; greedy " +
       "counts are non-overlapping") {
     import java.sql.Timestamp
-    val dir = Files.createTempDirectory("graft_motif").toString
+    val dir = SparkSpec.tempDir("graft_motif").toString
     def t(min: Int) = Timestamp.valueOf(f"2026-01-01 10:${0}%02d:00").toInstant
       .plusSeconds(min * 60L)
     def ts(min: Int) = Timestamp.from(t(min))

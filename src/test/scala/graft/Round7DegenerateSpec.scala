@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{Linkage, Relational, Sketches, TextAnalysis, TimeSeries}
 
 /** Degenerate-input hardening for the q172–q191 family: empty tables,
@@ -12,21 +10,21 @@ class Round7DegenerateSpec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = Files.createTempDirectory("graft_r7degen").toString
+    val dir = SparkSpec.tempDir("graft_r7degen").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
   }
 
   private def eventsDir(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double, String)]): String = {
-    val dir = Files.createTempDirectory("graft_r7degen_ev").toString
+    val dir = SparkSpec.tempDir("graft_r7degen_ev").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
   }
 
   private def ordersDir(rows: Seq[(Long, java.sql.Date, Double, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_r7degen_ord").toString
+    val dir = SparkSpec.tempDir("graft_r7degen_ord").toString
     rows.toDF("o_orderkey", "o_orderdate", "o_totalprice", "o_orderstatus", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     dir
@@ -128,11 +126,11 @@ class Round7DegenerateSpec extends SparkSpec {
   }
 
   test("entity match: empty master yields no rows; exact-duplicate feed matches itself") {
-    val dir = Files.createTempDirectory("graft_r7degen_cust").toString
+    val dir = SparkSpec.tempDir("graft_r7degen_cust").toString
     Seq.empty[(Long, String, Int)].toDF("c_custkey", "c_name", "c_nationkey")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     assert(Linkage.entityMatch(spark, dir).count() === 0L)
-    val dir2 = Files.createTempDirectory("graft_r7degen_cust2").toString
+    val dir2 = SparkSpec.tempDir("graft_r7degen_cust2").toString
     // keys NOT divisible by 2 or 3 → feed is byte-identical to master
     Seq((1L, "Customer#000000001", 5), (7L, "Customer#000000007", 5))
       .toDF("c_custkey", "c_name", "c_nationkey")

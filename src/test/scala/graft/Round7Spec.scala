@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{TextAnalysis, TimeSeries}
@@ -12,7 +10,7 @@ class Round7Spec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_r7docs").toString
+    val dir = SparkSpec.tempDir("graft_r7docs").toString
     rows.map { case (id, src, text) => (id, text, "en", src, text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -186,7 +184,7 @@ class Round7Spec extends SparkSpec {
   }
 
   test("best-split changepoint: level shift found at the exact boundary") {
-    val dir = Files.createTempDirectory("graft_r7orders").toString
+    val dir = SparkSpec.tempDir("graft_r7orders").toString
     def d(s: String) = java.sql.Date.valueOf(s)
     // 3 days at 100.00 then 3 days at 200.00 — split belongs after day 3
     val days = Seq("2024-01-01" -> 100.0, "2024-01-02" -> 100.0,

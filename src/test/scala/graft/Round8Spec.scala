@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.plans.KmvRegisters
@@ -44,7 +42,7 @@ class Round8Spec extends SparkSpec {
   }
 
   test("kmv set algebra: disjoint types estimate Jaccard 0, identical types 10000 bp") {
-    val dir = Files.createTempDirectory("graft_kmv_alg").toString
+    val dir = SparkSpec.tempDir("graft_kmv_alg").toString
     import java.sql.Timestamp
     val t0 = Timestamp.valueOf("2024-03-01 10:00:00")
     // 'a' and 'b' share every user (identical sets); 'c' is disjoint
@@ -98,7 +96,7 @@ class Round8Spec extends SparkSpec {
   // ---------------------------------------------------------------
 
   private def giantBasketDir(): String = {
-    val dir = Files.createTempDirectory("graft_giant_basket").toString
+    val dir = SparkSpec.tempDir("graft_giant_basket").toString
     // two IDENTICAL 70-part orders (so pair support reaches
     // itemSimilarity's minSupport = 2), parts 1..70
     val rows = for (ok <- Seq(10L, 20L); pk <- 1L to 70L) yield (ok, pk)
@@ -137,7 +135,7 @@ class Round8Spec extends SparkSpec {
   // ---------------------------------------------------------------
 
   test("duplicatedSpans: a 10^5-repeat boilerplate 8-gram is salted across sub-keys, coverage exact") {
-    val dir = Files.createTempDirectory("graft_boiler").toString
+    val dir = SparkSpec.tempDir("graft_boiler").toString
     // 100k documents all sharing ONE boilerplate 8-gram — without the
     // salt every one of these rows would hash to a single reduce task
     // in the semi-join back; with SpanJoinSalts sub-keys no task sees

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{LanguageModel, Sampling, SetSimJoin}
@@ -15,7 +13,7 @@ class Round8bSpec extends SparkSpec {
 
   /** Plant a documents.parquet fixture; rows = (doc_id, text, lang). */
   private def docsDir(rows: Seq[(Long, String, String)], source: Long => String = _ => "src0"): String = {
-    val dir = Files.createTempDirectory("graft_r8b").toString
+    val dir = SparkSpec.tempDir("graft_r8b").toString
     rows.map { case (id, text, lang) => (id, text, lang, source(id), text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -235,7 +233,7 @@ class Round8bSpec extends SparkSpec {
 
   test("bitmap skipping: point lookups open fewer files, results equal the plain filter") {
     import graft.sources.Snapshots
-    val dir = Files.createTempDirectory("graft_bm").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_bm").toString + "/t"
     // 4000 keys hash-distributed over 8 files: every file's [min,max]
     // spans ~the whole key range, so range stats CANNOT skip — only
     // membership can
@@ -262,7 +260,7 @@ class Round8bSpec extends SparkSpec {
 
   test("bitmap stat lines carry forward through stats-silent commits and compaction") {
     import graft.sources.Snapshots
-    val dir = Files.createTempDirectory("graft_bmc").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_bmc").toString + "/t"
     val df = spark.range(100L).selectExpr("id AS k", "id AS v").repartition(2, col("k"))
     Snapshots.commitOverwrite(spark, dir, df,
       statsCols = Seq(Snapshots.BitmapStatPrefix + "k"))
@@ -293,7 +291,7 @@ class Round8bSpec extends SparkSpec {
 
   test("bitmap index is maintained through a partitioned merge commit") {
     import graft.sources.Snapshots
-    val dir = Files.createTempDirectory("graft_bmm").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_bmm").toString + "/t"
     val base = spark.range(200L)
       .selectExpr("id AS k", "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS part", "id AS v")
     Snapshots.commitOverwritePartitioned(spark, dir, base, "part",
@@ -443,7 +441,7 @@ class Round8bSpec extends SparkSpec {
 
   test("degenerate: metadata min/max fails loudly without stats or with pending DVs") {
     import graft.sources.Snapshots
-    val dir = Files.createTempDirectory("graft_mmx").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_mmx").toString + "/t"
     spark.range(10L).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
       .write.mode("overwrite").parquet(s"$dir-src")
     Snapshots.commitOverwrite(spark, dir,
@@ -457,7 +455,7 @@ class Round8bSpec extends SparkSpec {
 
   test("metadata min/max answers with every data file physically deleted") {
     import graft.sources.Snapshots
-    val dir = Files.createTempDirectory("graft_mm").toString + "/t"
+    val dir = SparkSpec.tempDir("graft_mm").toString + "/t"
     val df = spark.range(1000L).selectExpr("id AS k",
       "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS part",
       "CAST(id AS DOUBLE) * 1.5 AS v")

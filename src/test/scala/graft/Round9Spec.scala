@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{SetSimJoin, Winnowing}
@@ -15,7 +13,7 @@ class Round9Spec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_r9").toString
+    val dir = SparkSpec.tempDir("graft_r9").toString
     rows.map { case (id, text, lang) => (id, text, lang, "src0", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -90,7 +88,7 @@ class Round9Spec extends SparkSpec {
     // 40 distinct parts / 50 distinct orders per flag — both under
     // K=64, so the sketch holds every distinct hash and the operator
     // must report est == true with zero error
-    val dir = Files.createTempDirectory("graft_r9_li").toString
+    val dir = SparkSpec.tempDir("graft_r9_li").toString
     val rows = for {
       f <- Seq("A", "N", "R"); i <- 0 until 200
     } yield (f, (i % 40).toLong, (i % 50).toLong)

@@ -20,7 +20,7 @@ class Round9bSpec extends SparkSpec {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   private def docsDir(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_r9b").toString
+    val dir = SparkSpec.tempDir("graft_r9b").toString
     rows.map { case (id, text, src) => (id, text, "en", src, text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -83,7 +83,7 @@ class Round9bSpec extends SparkSpec {
     (4L, "b c d e f", "src0")))
 
   private def builtIndex(dir: String): String = {
-    val idxDir = Files.createTempDirectory("graft_r9b_idx").toString
+    val idxDir = SparkSpec.tempDir("graft_r9b_idx").toString
     PhraseSearch.postings(spark, dir)
       .write.mode("overwrite").partitionBy("tb").parquet(idxDir)
     idxDir
@@ -118,7 +118,7 @@ class Round9bSpec extends SparkSpec {
     * u2: same transcript as u1's session 1 → deduped (keep-first).
     * u3: two user turns back-to-back → alternation violation. */
   private def convDir(): String = {
-    val dir = Files.createTempDirectory("graft_r9b_conv").toString
+    val dir = SparkSpec.tempDir("graft_r9b_conv").toString
     Seq(
       (1L, ts("2024-03-01 10:00:00"), 1L, "view", 1.0, "{}"),
       (2L, ts("2024-03-01 10:05:00"), 1L, "purchase", 1.0, "{}"),
@@ -292,7 +292,7 @@ class Round9bSpec extends SparkSpec {
   // ---------------------------------------------------------------- q222
 
   test("triplet mining: planted anchor gets its best positive and its hardest negative") {
-    val dir = Files.createTempDirectory("graft_r9b_emb").toString
+    val dir = SparkSpec.tempDir("graft_r9b_emb").toString
     Seq(
       (0L, Array(1f, 0f), 0),        // anchor
       (1L, Array(0.99f, 0.14f), 0),  // cos ≈ .990 → positive
@@ -312,7 +312,7 @@ class Round9bSpec extends SparkSpec {
     assert(a.getAs[Double]("margin") > 0.5)
     // an anchor whose cell holds no positive is dropped entirely:
     // re-plant with the positive removed
-    val dir2 = Files.createTempDirectory("graft_r9b_emb2").toString
+    val dir2 = SparkSpec.tempDir("graft_r9b_emb2").toString
     Seq((0L, Array(1f, 0f), 0), (2L, Array(0.3f, 0.954f), 0), (3L, Array(0f, 1f), 0))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir2/embeddings.parquet")
@@ -357,7 +357,7 @@ class Round9bSpec extends SparkSpec {
     import scala.sys.process._
     val tarBin = Seq("sh", "-c", "command -v tar || true").!!.trim
     assume(tarBin.nonEmpty, "no system tar available")
-    val dir = Files.createTempDirectory("graft_r9b_tar").toString
+    val dir = SparkSpec.tempDir("graft_r9b_tar").toString
     val bytes = TarShards.tarEntry("7.txt", "seven".getBytes("UTF-8")) ++
       TarShards.tarEntry("7.cls", "src7".getBytes("UTF-8")) ++
       new Array[Byte](1024)
@@ -506,7 +506,7 @@ class Round9bSpec extends SparkSpec {
 
   test("empty corpora: every round-9b operator returns zero rows, no errors") {
     val docs = docsDir(Seq.empty)
-    val events = Files.createTempDirectory("graft_r9b_ev0").toString
+    val events = SparkSpec.tempDir("graft_r9b_ev0").toString
     Seq.empty[(Long, Timestamp, Long, String, Double, String)]
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$events/events.parquet")

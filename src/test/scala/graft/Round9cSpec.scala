@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Multimodal, Sketches, TextAnalysis, Vectors}
@@ -52,7 +50,7 @@ class Round9cSpec extends SparkSpec {
   // ---------------------------------------------------------- q232
 
   private def reputationDir(): String = {
-    val dir = Files.createTempDirectory("graft_rep").toString
+    val dir = SparkSpec.tempDir("graft_rep").toString
     val long = "x " * 60 // 120 chars, above the short threshold
     val rows = Seq(
       // srcA: clean — all en, all long → keep
@@ -82,7 +80,7 @@ class Round9cSpec extends SparkSpec {
   // ---------------------------------------------------------- q233
 
   private def clusteredEmbDir(): String = {
-    val dir = Files.createTempDirectory("graft_cbal").toString
+    val dir = SparkSpec.tempDir("graft_cbal").toString
     (0L until 480L).map { vid =>
       val c = (vid % 4).toInt
       val emb = Array.tabulate(16) { i =>

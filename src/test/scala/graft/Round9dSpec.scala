@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -16,7 +15,7 @@ class Round9dSpec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
-    val dir = Files.createTempDirectory("graft_r9d").toString
+    val dir = SparkSpec.tempDir("graft_r9d").toString
     rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -69,7 +68,7 @@ class Round9dSpec extends SparkSpec {
 
   private def eventsDir(rows: Seq[(Long, Long, String, Int)]): String = {
     // (event_id, user_id, ts, k)
-    val dir = Files.createTempDirectory("graft_trim").toString
+    val dir = SparkSpec.tempDir("graft_trim").toString
     rows.map { case (eid, uid, ts, k) =>
       (eid, Timestamp.valueOf(ts), uid, "view", 1.0, s"""{"k": $k}""")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -112,7 +111,7 @@ class Round9dSpec extends SparkSpec {
   // ---------------------------------------------------------- q240
 
   test("group maxsim: a query's top document is its own cluster's label") {
-    val dir = Files.createTempDirectory("graft_maxsim").toString
+    val dir = SparkSpec.tempDir("graft_maxsim").toString
     (0L until 480L).map { vid =>
       val c = (vid % 4).toInt
       val emb = Array.tabulate(16) { i =>
@@ -177,7 +176,7 @@ class Round9dSpec extends SparkSpec {
   // ---------------------------------------------------------- q242
 
   private def ordersDir(prices: Seq[Double]): String = {
-    val dir = Files.createTempDirectory("graft_range").toString
+    val dir = SparkSpec.tempDir("graft_range").toString
     prices.zipWithIndex.map { case (p, i) => (i.toLong, p) }
       .toDF("o_orderkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -234,7 +233,7 @@ class Round9dSpec extends SparkSpec {
     assert(Relational.rangeBoundaries(spark, ord).count() === 0L)
     // corpus smaller than the codebook: the trained-kmeans consumers
     // still answer (3 vectors, 16 seeds)
-    val vdir = Files.createTempDirectory("graft_r9d_vec").toString
+    val vdir = SparkSpec.tempDir("graft_r9d_vec").toString
     (0L until 3L).map(v =>
       (v, Array.tabulate(16)(i => ((v * 31 + i * 7) % 13).toFloat / 13f), (v % 2).toInt))
       .toDF("vec_id", "embedding", "label")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
@@ -15,7 +13,7 @@ class Round9eSpec extends SparkSpec {
   // ---------------------------------------------------------- q244
 
   test("shallow clone: zero-copy read equality, pinned against source advance, CoW divergence") {
-    val root = Files.createTempDirectory("graft_clone").toString
+    val root = SparkSpec.tempDir("graft_clone").toString
     val src = s"$root/src"
     val dst = s"$root/dst"
     val base = (1L to 100L).map(k => (k, s"row$k", (k % 7).toDouble))
@@ -52,7 +50,7 @@ class Round9eSpec extends SparkSpec {
   // ---------------------------------------------------------- q245
 
   test("forecast backtest: hand-computed seasonal-naive errors; calendar gaps don't slip the season") {
-    val dir = Files.createTempDirectory("graft_fc").toString
+    val dir = SparkSpec.tempDir("graft_fc").toString
     import java.sql.Date
     // Mondays 1/1, 1/8, 1/15 revenue 10, 12, 9 → errors +2, −3 on
     // the two scored days; a gap day (1/9 Tue) has no d−7 → unscored
@@ -76,7 +74,7 @@ class Round9eSpec extends SparkSpec {
   // ---------------------------------------------------------- q246
 
   test("embedding drift: identical halves read zero; a planted shift reads the exact cross term") {
-    val dir = Files.createTempDirectory("graft_drift").toString
+    val dir = SparkSpec.tempDir("graft_drift").toString
     // even ids: all components 0.5; odd ids: dim 0 shifted to 0.75
     (0L until 8L).map { vid =>
       val emb = Array.tabulate(4)(i =>
@@ -124,7 +122,7 @@ class Round9eSpec extends SparkSpec {
   // ---------------------------------------------------------- q248
 
   test("modularity: two planted triangles read the textbook Q = 1/2 in scaled form") {
-    val dir = Files.createTempDirectory("graft_mod").toString
+    val dir = SparkSpec.tempDir("graft_mod").toString
     // two orders per triangle so co-purchase support >= 2
     val rows = for {
       (orders, parts) <- Seq((Seq(1L, 2L), Seq(1L, 2L, 3L)),
@@ -148,7 +146,7 @@ class Round9eSpec extends SparkSpec {
   // ---------------------------------------------------------- q249
 
   test("reshard plan: ustar footprints and the budget boundary land exactly where a tar writer would") {
-    val dir = Files.createTempDirectory("graft_reshard").toString
+    val dir = SparkSpec.tempDir("graft_reshard").toString
     // every doc: 2×512 headers + 512 text block + 512 cls block = 2048 B
     (0L until 33L).map(i => (i, "x" * 100, "en", "s", 100L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -167,7 +165,7 @@ class Round9eSpec extends SparkSpec {
   // ---------------------------------------------------------- q250
 
   test("batch padding audit: mixed arrival batches pay exact waste; bucketing eliminates it") {
-    val dir = Files.createTempDirectory("graft_pad").toString
+    val dir = SparkSpec.tempDir("graft_pad").toString
     // 16 docs, lengths alternating 10 and 100 tokens by parity — every
     // arrival batch mixes both lengths, every length bucket is pure
     (0L until 16L).map { i =>
@@ -186,7 +184,7 @@ class Round9eSpec extends SparkSpec {
   }
 
   test("shallow clone of a PARTITIONED table keeps pruning-by-construction reads working") {
-    val root = Files.createTempDirectory("graft_clone_part").toString
+    val root = SparkSpec.tempDir("graft_clone_part").toString
     val src = s"$root/src"
     val dst = s"$root/dst"
     val df = (1L to 60L).map(k => (k, if (k % 3 == 0) "A" else "B"))
@@ -201,7 +199,7 @@ class Round9eSpec extends SparkSpec {
   }
 
   test("clone of a clone resolves through chained relative references") {
-    val root = Files.createTempDirectory("graft_clone2").toString
+    val root = SparkSpec.tempDir("graft_clone2").toString
     Snapshots.commitOverwrite(spark, s"$root/src",
       (1L to 10L).map(k => (k, s"v$k")).toDF("k", "name"))
     Snapshots.shallowClone(spark, s"$root/src", s"$root/c1")
@@ -214,7 +212,7 @@ class Round9eSpec extends SparkSpec {
   }
 
   test("shallow clone carries deletion vectors") {
-    val root = Files.createTempDirectory("graft_clone_dv").toString
+    val root = SparkSpec.tempDir("graft_clone_dv").toString
     val src = s"$root/src"
     val dst = s"$root/dst"
     Snapshots.commitOverwrite(spark, src,

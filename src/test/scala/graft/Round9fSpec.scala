@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
@@ -31,7 +29,7 @@ class Round9fSpec extends SparkSpec {
   }
 
   test("tfrecord shards: end-to-end write/read equals the planted corpus") {
-    val dir = Files.createTempDirectory("graft_tfrec").toString
+    val dir = SparkSpec.tempDir("graft_tfrec").toString
     val docs = (0L until 250L).map(i => (i, s"doc number $i body", "en", "s", 10L))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

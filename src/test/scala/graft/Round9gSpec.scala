@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.operators.{Sampling, TextAnalysis, Vectors}
@@ -11,7 +10,7 @@ class Round9gSpec extends SparkSpec {
   import spark.implicits._
 
   private def clusteredEmb(): String = {
-    val dir = Files.createTempDirectory("graft_r9g").toString
+    val dir = SparkSpec.tempDir("graft_r9g").toString
     (0L until 480L).map { vid =>
       val c = (vid % 4).toInt
       val emb = Array.tabulate(16) { i =>
@@ -65,9 +64,9 @@ class Round9gSpec extends SparkSpec {
         .repartition(parts)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = (0L until 50L).map(i => (i, s"text body $i"))
-    val a = Files.createTempDirectory("graft_fp_a").toString
-    val b = Files.createTempDirectory("graft_fp_b").toString
-    val c = Files.createTempDirectory("graft_fp_c").toString
+    val a = SparkSpec.tempDir("graft_fp_a").toString
+    val b = SparkSpec.tempDir("graft_fp_b").toString
+    val c = SparkSpec.tempDir("graft_fp_c").toString
     write(a, rows, 1)
     write(b, scala.util.Random.shuffle(rows), 7) // order + layout differ
     write(c, rows.updated(13, (13L, "text body 13!")), 1) // one char changed
@@ -82,7 +81,7 @@ class Round9gSpec extends SparkSpec {
   // ---------------------------------------------------------- q257
 
   test("rfm features: recency/frequency/monetary and segments match the planted purchases") {
-    val dir = Files.createTempDirectory("graft_rfm").toString
+    val dir = SparkSpec.tempDir("graft_rfm").toString
     val rows = Seq(
       (1L, 9L, "2024-01-28 10:00:00", 10.50, "purchase"),
       (2L, 9L, "2024-01-29 10:00:00", 20.25, "purchase"),
@@ -109,7 +108,7 @@ class Round9gSpec extends SparkSpec {
   // ---------------------------------------------------------- q258
 
   test("dim variance prune: constant and near-constant dims pruned, a real signal kept — exact scaled variances") {
-    val dir = Files.createTempDirectory("graft_var").toString
+    val dir = SparkSpec.tempDir("graft_var").toString
     (0L until 8L).map { vid =>
       val sign = if (vid % 2 == 0) 1f else -1f
       (vid, Array(0.5f, 0.1f * sign, 0.01f * sign))
@@ -140,7 +139,7 @@ class Round9gSpec extends SparkSpec {
   // ---------------------------------------------------------- q259
 
   test("dataset diff: planted add/remove/change census, and identical snapshots read all-same") {
-    val dir = Files.createTempDirectory("graft_diff").toString
+    val dir = SparkSpec.tempDir("graft_diff").toString
     def docs(rows: Seq[(Long, String)]) =
       rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -158,7 +157,7 @@ class Round9gSpec extends SparkSpec {
   // ---------------------------------------------------------- q256
 
   test("temporal embargo split: planted user splits exactly; gap is the audited train-to-test distance") {
-    val dir = Files.createTempDirectory("graft_emb").toString
+    val dir = SparkSpec.tempDir("graft_emb").toString
     val rows = Seq(
       (1L, 1L, "2024-01-20 10:00:00"), // train
       (2L, 1L, "2024-01-23 10:00:00"), // embargo zone

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Sinks
@@ -11,7 +9,7 @@ import graft.sources.Sinks
 class SinksSpec extends SparkSpec {
 
   test("writeSorted range-clusters files: per-file spans are a fraction of global") {
-    val dir = Files.createTempDirectory("graft_sorted").toString
+    val dir = SparkSpec.tempDir("graft_sorted").toString
     val li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
       .repartition(8) // scatter dates across partitions first
     Sinks.writeSorted(li, s"$dir/sorted", Seq("l_shipdate"))
@@ -31,7 +29,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("writeSortedCompressed: zstd shrinks sorted text tables vs default codec, losslessly") {
-    val dir = Files.createTempDirectory("graft_zstd").toString
+    val dir = SparkSpec.tempDir("graft_zstd").toString
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     def dirBytes(p: String): Long = {
       val hp = new org.apache.hadoop.fs.Path(p)
@@ -61,7 +59,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compact merges many small files into few, losslessly") {
-    val dir = Files.createTempDirectory("graft_compact").toString
+    val dir = SparkSpec.tempDir("graft_compact").toString
     val li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
     li.repartition(64).write.parquet(s"$dir/t") // 64 tiny files
     val before = new java.io.File(s"$dir/t").listFiles().count(_.getName.endsWith(".parquet"))
@@ -75,7 +73,7 @@ class SinksSpec extends SparkSpec {
 
   test("writePartitionedCounted: the in-flight observe count equals the read-back truth") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_obs").toString
+    val dir = SparkSpec.tempDir("graft_obs").toString
     val df = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("id", "p")
     val counted = Sinks.writePartitionedCounted(df, s"$dir/t", "p")
     assert(counted === 3L)
@@ -96,7 +94,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("atomicOverwrite: a failing staging write leaves the target readable and unchanged") {
-    val dir = Files.createTempDirectory("graft_atomic").toString
+    val dir = SparkSpec.tempDir("graft_atomic").toString
     spark.range(100).toDF("id").write.parquet(s"$dir/t")
     val boom = udf((_: Long) => { throw new RuntimeException("boom"); true })
     val bad = spark.range(10).toDF("id").filter(boom(col("id")))
@@ -105,7 +103,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compact: recovers from a crash between the rename-aside and rename-into-place") {
-    val dir = Files.createTempDirectory("graft_recover").toString
+    val dir = SparkSpec.tempDir("graft_recover").toString
     spark.range(1000).toDF("id").repartition(16).write.parquet(s"$dir/t")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
@@ -122,7 +120,7 @@ class SinksSpec extends SparkSpec {
 
   test("z-order write narrows per-file spans on BOTH key dimensions") {
     import graft.sources.ZOrder
-    val dir = Files.createTempDirectory("graft_zorder").toString
+    val dir = SparkSpec.tempDir("graft_zorder").toString
     val li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey")
     def avgSpans(path: String): (Double, Double) = {
@@ -146,7 +144,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("atomicOverwrite clears a stale ._old left by a crash AFTER a completed swap") {
-    val dir = Files.createTempDirectory("graft_staleold").toString
+    val dir = SparkSpec.tempDir("graft_staleold").toString
     spark.range(100).toDF("id").write.parquet(s"$dir/t") // live generation
     spark.range(7).toDF("id").write.parquet(s"$dir/t._old") // stale leftover
     Sinks.atomicOverwrite(spark, spark.range(500).toDF("id"), s"$dir/t")
@@ -161,7 +159,7 @@ class SinksSpec extends SparkSpec {
 
   test("Dims.run recovers a mid-swap crash before merging (no silent truncate-load)") {
     import graft.etl.Dims
-    val dwh = Files.createTempDirectory("graft_dims_recover").toString
+    val dwh = SparkSpec.tempDir("graft_dims_recover").toString
     // first load populates the dims
     Dims.run(spark, SparkSpec.ReferenceDataDir, dwh)
     val before = spark.read.parquet(s"$dwh/routes").count()

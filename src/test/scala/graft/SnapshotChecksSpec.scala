@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.{CheckConstraintViolationException, Snapshots}
 
 /** CHECK constraints on snapshot tables: install-time validation of
@@ -13,7 +11,7 @@ class SnapshotChecksSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft_check").toString + "/t"
+    SparkSpec.tempDir("graft_check").toString + "/t"
 
   test("violating upsert is refused loudly and publishes nothing") {
     val dir = freshDir()

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
 import graft.sources.{SnapshotGroups, Snapshots}
 
@@ -10,7 +10,7 @@ class SnapshotGroupsSpec extends SparkSpec {
   import spark.implicits._
 
   test("group pin freezes a mutually consistent set across later member commits") {
-    val root = Files.createTempDirectory("graft_grp").toString
+    val root = SparkSpec.tempDir("graft_grp").toString
     val (ta, tb, g) = (s"$root/a", s"$root/b", s"$root/g")
     Snapshots.commitOverwrite(spark, ta, Seq((1L, "a1")).toDF("k", "v"))
     Snapshots.commitOverwrite(spark, tb, Seq((1L, "b1")).toDF("k", "v"))
@@ -35,7 +35,7 @@ class SnapshotGroupsSpec extends SparkSpec {
   }
 
   test("reading an unknown member or an empty group fails loudly") {
-    val root = Files.createTempDirectory("graft_grp2").toString
+    val root = SparkSpec.tempDir("graft_grp2").toString
     val (ta, g) = (s"$root/a", s"$root/g")
     intercept[java.io.IOException] { SnapshotGroups.read(spark, g, "a") }
     Snapshots.commitOverwrite(spark, ta, Seq((1L, "x")).toDF("k", "v"))
@@ -45,7 +45,7 @@ class SnapshotGroupsSpec extends SparkSpec {
   }
 
   test("a vacuumed member version fails the group read loudly, never reads newer data") {
-    val root = Files.createTempDirectory("graft_grp3").toString
+    val root = SparkSpec.tempDir("graft_grp3").toString
     val (ta, g) = (s"$root/a", s"$root/g")
     Snapshots.commitOverwrite(spark, ta, Seq((1L, "old")).toDF("k", "v"))
     val pin = SnapshotGroups.pin(spark, g, Map("a" -> ta))
@@ -56,5 +56,30 @@ class SnapshotGroupsSpec extends SparkSpec {
       SnapshotGroups.read(spark, g, "a", Some(pin)).collect()
     }
     assert(e.getMessage.contains("retained"))
+  }
+
+  test("concurrent pins each claim a distinct version that reads back their own map") {
+    val root = SparkSpec.tempDir("graft_grp4").toString
+    val (ta, g) = (s"$root/a", s"$root/g")
+    val tv = Snapshots.commitOverwrite(spark, ta, Seq((1L, "x")).toDF("k", "v"))
+    val n = 16
+    val pool = Executors.newFixedThreadPool(n)
+    val start = new CountDownLatch(1)
+    try {
+      val pins = (0 until n).map { i =>
+        pool.submit(new Callable[String] {
+          def call(): String = {
+            start.await()
+            SnapshotGroups.pin(spark, g, Map(s"m$i" -> ta))
+          }
+        })
+      }
+      start.countDown()
+      val versions = pins.map(_.get(120, TimeUnit.SECONDS))
+      assert(versions.distinct.size === n)
+      versions.zipWithIndex.foreach { case (v, i) =>
+        assert(SnapshotGroups.members(spark, g, Some(v)) === Map(s"m$i" -> ((ta, tv))))
+      }
+    } finally pool.shutdownNow()
   }
 }

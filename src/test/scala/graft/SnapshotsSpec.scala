@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.{ConcurrentSnapshotCommitException, Snapshots}
@@ -14,7 +12,7 @@ class SnapshotsSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft_snap").toString + "/t"
+    SparkSpec.tempDir("graft_snap").toString + "/t"
 
   /** (relative path, length, mtime) of every data file under a table —
     * the byte-identity fingerprint for untouched-partition proofs. */

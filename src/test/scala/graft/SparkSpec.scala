@@ -15,6 +15,12 @@ object SparkSpec {
   lazy val session: SparkSession =
     GraftSession.builder(master = "local[4]").getOrCreate()
 
+  /** A fresh directory under the per-JVM [[GraftSession.scratchRoot]],
+    * which is deleted when the JVM exits — so a spec run leaves no
+    * temp dir behind. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(GraftSession.scratchRoot, prefix)
+
   /** The reference's own five CSVs (read-only), read by the
     * reference-count goldens in EtlGoldenSpec and SinksSpec. */
   val ReferenceDataDir = "/root/reference/data"

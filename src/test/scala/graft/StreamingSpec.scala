@@ -102,9 +102,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-sink round trip: stop + restart from checkpoint is exactly-once") {
-    import java.nio.file.Files
     import org.apache.spark.sql.types._
-    val root = Files.createTempDirectory("graft_stream").toString
+    val root = SparkSpec.tempDir("graft_stream").toString
     val (in, out, cp) = (s"$root/in", s"$root/out", s"$root/cp")
     val schema = StructType(Seq(StructField("ts", TimestampType),
       StructField("event_type", StringType), StructField("value", DoubleType)))
@@ -299,9 +298,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("maxFilesPerTrigger bounds per-batch rows under a file burst; totals unchanged") {
-    import java.nio.file.Files
     import org.apache.spark.sql.types._
-    val root = Files.createTempDirectory("graft_bp").toString
+    val root = SparkSpec.tempDir("graft_bp").toString
     val in = s"$root/in"
     val schema = StructType(Seq(StructField("ts", TimestampType),
       StructField("event_type", StringType), StructField("value", DoubleType)))
@@ -328,9 +326,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("AvailableNow backfill drains a rate-limited backlog to completion, then terminates") {
-    import java.nio.file.Files
     import org.apache.spark.sql.types._
-    val root = Files.createTempDirectory("graft_an").toString
+    val root = SparkSpec.tempDir("graft_an").toString
     val in = s"$root/in"
     val schema = StructType(Seq(StructField("ts", TimestampType),
       StructField("event_type", StringType), StructField("value", DoubleType)))
@@ -367,7 +364,7 @@ class StreamingSpec extends SparkSpec {
   test("snapshot merge sink: every micro-batch is a reader-atomic version; external commits survive; replay converges") {
     import graft.sources.Snapshots
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_snapsink").toString
+    val dir = SparkSpec.tempDir("graft_snapsink").toString
     val table = s"$dir/t"
     val source = MemoryStream[(Long, String, Double)]
     val events = source.toDF().toDF("id", "part", "v")
@@ -419,7 +416,7 @@ class StreamingSpec extends SparkSpec {
   test("two snapshot merge sinks on one table: CAS serializes them, no batch is lost") {
     import graft.sources.Snapshots
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_snapsink2").toString
+    val dir = SparkSpec.tempDir("graft_snapsink2").toString
     val table = s"$dir/t"
     val srcA = MemoryStream[(Long, String, Double)]
     val srcB = MemoryStream[(Long, String, Double)]
@@ -448,7 +445,7 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch merge sink upserts micro-batches partition-scoped, replay-idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_msink").toString
+    val dir = SparkSpec.tempDir("graft_msink").toString
     val table = s"$dir/t"
     val source = MemoryStream[(Long, String, Double)]
     val events = source.toDF().toDF("id", "part", "v")
@@ -483,7 +480,7 @@ class StreamingSpec extends SparkSpec {
 
   test("trending top-k sink emits finalized windows once, overwrite-idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_trend").toString
+    val dir = SparkSpec.tempDir("graft_trend").toString
     val source = MemoryStream[(Timestamp, String, Double)]
     val events = source.toDF().toDF("ts", "event_type", "value")
     val q = EventStreams.trendingTopKSink(events, s"$dir/out", k = 2)
@@ -524,7 +521,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("snapshot enrichment re-resolves the dimension per batch; each row records its version") {
-    val root = java.nio.file.Files.createTempDirectory("graft_senrich").toString
+    val root = SparkSpec.tempDir("graft_senrich").toString
     val dimDir = s"$root/dim"
     graft.sources.Snapshots.commitOverwrite(spark, dimDir,
       Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "segment"))
@@ -553,7 +550,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming EWMA closes a day on its successor and matches the batch operator bit-for-bit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sewma").toString
+    val dir = SparkSpec.tempDir("graft_sewma").toString
     def ev(id: Long, dayMin: Int, ty: String, v: Double) =
       (id, new Timestamp(1700000000000L + dayMin * 1440L * 60000L), 1L, ty, v, "{}")
     // type a: 3 days; type b: 2 days; values exercise cent rounding
@@ -596,8 +593,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming LSH dedup ingest: near-dups of earlier batches are dropped, index converges") {
     import graft.streaming.DocStreams
     implicit val sqlCtx = spark.sqlContext
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_lshstream").toString + "/idx"
-    val cp = java.nio.file.Files.createTempDirectory("graft_lshstream_cp").toString
+    val indexDir = SparkSpec.tempDir("graft_lshstream").toString + "/idx"
+    val cp = SparkSpec.tempDir("graft_lshstream_cp").toString
     val a = "the quick brown fox jumps over the lazy dog near the river today"
     val b = "completely different second document with its own distinct words entirely"
     val c = "a third body of text unrelated to either of the previous ones"
@@ -636,7 +633,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.DocStreams
     import graft.sources.Snapshots
     import spark.implicits._
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_lshforget").toString + "/idx"
+    val indexDir = SparkSpec.tempDir("graft_lshforget").toString + "/idx"
     val a = "some original content that was later subject to an erasure request entirely"
     DocStreams.ingestBatch(Seq((1L, a)).toDF("doc_id", "text"), indexDir)
     // near-dup of the indexed doc is suppressed…
@@ -672,7 +669,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("fpstream").collect().head
       // batch ground truth: the q255 operator over the same docs
-      val dir = java.nio.file.Files.createTempDirectory("graft_fps").toString
+      val dir = SparkSpec.tempDir("graft_fps").toString
       docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
