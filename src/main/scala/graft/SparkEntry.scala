@@ -975,7 +975,7 @@ object SparkEntry {
         o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path))
       val delta = q79Delta(o)
       graft.etl.Dims.partitionScopedMerge(s, base, delta, "o_orderkey", "o_orderstatus")
-      priceTotalsBy("o_orderstatus")(s.read.parquet(base))
+      priceTotalsBy("o_orderstatus")(graft.sources.Tables.parquet(s, Seq(base)))
     }, oracle =
       // merge semantics expressed directly; the Spark side additionally
       // proves only the touched partition was rewritten (MergeSpec)

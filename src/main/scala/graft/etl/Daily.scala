@@ -101,15 +101,16 @@ object Daily {
     *
     * The two slice counts (which fill the caches) run at the same
     * time, then the three sinks do, through [[Pipeline.concurrently]];
-    * the dimension reads sit inside the `agg_by_route` task so their
-    * schema inference overlaps the other sinks. The caches are dropped
-    * whether or not a sink failed. */
+    * the dimension reads sit inside the `agg_by_route` task, so a
+    * missing dimension fails that sink alone. They start no Spark job:
+    * [[Tables.parquet]] reads each schema from a footer on the driver.
+    * The caches are dropped whether or not a sink failed. */
   def run(spark: SparkSession, csvDir: String, dwhDir: String, ds: LocalDate): RunReport = {
     val bus = daySlice(cleanseBus(
       Tables.csvAllString(spark, s"$csvDir/dummy_transaksi_bus.csv", Schemas.busColumns)), ds).cache()
     val halte = daySlice(cleanseHalte(
       Tables.csvAllString(spark, s"$csvDir/dummy_transaksi_halte.csv", Schemas.halteColumns)), ds).cache()
-    def dim(name: String): DataFrame = spark.read.parquet(s"$dwhDir/$name")
+    def dim(name: String): DataFrame = Tables.parquet(spark, Seq(s"$dwhDir/$name"))
 
     // audit counts ride the write job itself (Dataset.observe) — the
     // df holds exactly the ds slice, so rows-written IS the

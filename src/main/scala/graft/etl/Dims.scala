@@ -127,7 +127,7 @@ object Dims {
     // must propagate, or the upsert silently degrades to truncate-load
     // and discards previously merged rows
     def existing(name: String): Option[DataFrame] =
-      try Some(spark.read.parquet(s"$dwhDir/$name"))
+      try Some(Tables.parquet(spark, Seq(s"$dwhDir/$name")))
       catch {
         case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "PATH_NOT_FOUND" => None
@@ -182,6 +182,9 @@ object Dims {
     val touchedRaw = touchedPartitions(incoming, partCol, "partitionScopedMerge: incoming batch")
     // empty batch: a no-op — skip the scan/merge/overwrite machinery
     if (touchedRaw.isEmpty) return Nil
+    // one read of the base serves the key-type check, the moved-key
+    // scan and the merge
+    val table = Tables.parquet(spark, Seq(basePath))
     // Cross-partition key moves (an incoming row whose key already
     // lives in a partition the batch does NOT touch): the stale row
     // must be deleted or the table holds the key twice. Detect by
@@ -194,7 +197,7 @@ object Dims {
     // incoming key range is conservative-safe; pushed to parquet it
     // engages row-group pruning on key-clustered bases (numeric keys
     // only — a non-numeric min/max would compare lexically)
-    val keyIsNumeric = spark.read.parquet(basePath).schema.fields
+    val keyIsNumeric = table.schema.fields
       .exists(f => f.name == key &&
         f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
     val keyBounds: Column = if (!keyIsNumeric) lit(true) else {
@@ -202,11 +205,10 @@ object Dims {
       if (b.isNullAt(0)) lit(false)
       else col(key) >= lit(b.get(0)) && col(key) <= lit(b.get(1))
     }
-    val movedParts = movedPartitions(spark.read.parquet(basePath)
+    val movedParts = movedPartitions(table
       .filter(!col(partCol).isin(touchedRaw: _*) && keyBounds), incoming, key, partCol)
     val touched = (touchedRaw ++ movedParts).distinct.sorted
-    val base = spark.read.parquet(basePath)
-      .filter(col(partCol).isin(touched: _*))
+    val base = table.filter(col(partCol).isin(touched: _*))
     // align the incoming batch to the base's EXACT column types: a
     // delta produced by arithmetic (e.g. price + 50) carries widened
     // types (decimal(19,2) vs decimal(18,2)); writing those into some
@@ -232,7 +234,7 @@ object Dims {
     val fs = stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       merged.write.mode("overwrite").parquet(staging)
-      val stagedBack = spark.read.parquet(staging)
+      val stagedBack = Tables.parquet(spark, Seq(staging))
       graft.sources.Sinks.writePartitioned(stagedBack, basePath, partCol)
       // a moved-from partition can be EMPTIED (every row moved out);
       // dynamic overwrite only replaces partitions PRESENT in the

@@ -20,7 +20,7 @@ import org.apache.spark.sql.execution.SQLExecution
   * — but the independent writes WITHIN a stage run at the same time
   * through [[concurrently]]: at daily-batch sizes each write is a few
   * one-to-four-task jobs whose cost is driver-side (planning, AQE
-  * re-optimisation, output commit, renames, schema inference), so
+  * re-optimisation, output commit, renames), so
   * overlapping them fills otherwise idle cores.
   */
 object Pipeline {

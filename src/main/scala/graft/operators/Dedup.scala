@@ -772,7 +772,7 @@ object Dedup {
                      deltaMod: Int = 10, deltaRes: Int = 3,
                      cap: Int = BandBucketCap,
                      minEqual: Int = MinSigAgreement): DataFrame =
-    incrementalLshFrom(spark.read.parquet(indexPath),
+    incrementalLshFrom(Tables.parquet(spark, Seq(indexPath)),
       lshDeltaDocs(spark, dir, deltaMod, deltaRes), cap, minEqual)
 
   /** Candidate pairs from band buckets of size ≤ cap. Exposed

@@ -79,7 +79,7 @@ object PhraseSearch {
   def phraseSearch(spark: SparkSession, dir: String,
                    postingsPath: String): DataFrame = {
     val q = topBigramQuery(spark, dir)
-    val idx = spark.read.parquet(postingsPath)
+    val idx = Tables.parquet(spark, Seq(postingsPath))
     // broadcast query join on (tb, w): tb is the partition column, so
     // the scan is dynamically pruned to the query terms' buckets
     val probed = idx.join(broadcast(q),

@@ -187,7 +187,7 @@ object Sinks {
     recoverSwap(fs, hadoopPath)
     val bytes = fs.getContentSummary(hadoopPath).getLength
     val parts = math.max(1, math.ceil(bytes.toDouble / (targetMb.toLong << 20)).toInt)
-    atomicOverwrite(spark, spark.read.parquet(path).coalesce(parts), path)
+    atomicOverwrite(spark, Tables.parquet(spark, Seq(path)).coalesce(parts), path)
     parts.toLong
   }
 }

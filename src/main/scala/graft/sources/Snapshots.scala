@@ -202,7 +202,7 @@ object Snapshots {
     val m = readManifest(spark, tableDir, version)
     val raw = m.dataDir match {
       case Some(dd) => applyDv(spark, new Path(tableDir), m, dd,
-        spark.read.parquet(new Path(tableDir, dd).toString))
+        Tables.parquet(spark, Seq(new Path(tableDir, dd).toString)))
       case None =>
         // one read per owning data dir with basePath so the partition
         // column is inferred exactly as for a plain partitioned-parquet
@@ -580,7 +580,7 @@ object Snapshots {
       .flatMap(v => referencedDirs(readManifest(spark, tableDir, v))).toSet
     val newDirs = referencedDirs(manifest).filterNot(prevDirs.contains)
     newDirs.foreach { dd =>
-      val df = spark.read.parquet(new Path(tableDir, dd).toString)
+      val df = Tables.parquet(spark, Seq(new Path(tableDir, dd).toString))
       cs.foreach { case (name, ce) =>
         val bad = df.filter(!coalesce(expr(ce), lit(false))).limit(1).collect()
         if (bad.nonEmpty) throw new CheckConstraintViolationException(
@@ -749,7 +749,7 @@ object Snapshots {
     val hits = m.dvs.filter(_._2 == owner).map(_._1).distinct
     if (hits.isEmpty) df
     else {
-      val keys = hits.map(dv => spark.read.parquet(new Path(root, dv).toString))
+      val keys = hits.map(dv => Tables.parquet(spark, Seq(new Path(root, dv).toString)))
         .reduce(_.unionByName(_)).select(col(m.dvKey)).distinct()
       df.join(keys, Seq(m.dvKey), "left_anti")
     }
@@ -770,7 +770,7 @@ object Snapshots {
         val paths = vls.map(vl =>
           new Path(ownerPath, partDirName(m.partCol, vl)).toString)
         applyDv(spark, new Path(tableDir), m, ownerDir,
-          spark.read.option("basePath", ownerPath.toString).parquet(paths: _*))
+          Tables.parquet(spark, paths, Map("basePath" -> ownerPath.toString)))
         // allowMissingColumns: after an add-column evolution, dirs that
         // predate the new column union with NULLs for it
       }.reduce(_.unionByName(_, allowMissingColumns = true)))
@@ -1412,7 +1412,7 @@ object Snapshots {
   private def computeFileStats(spark: SparkSession, tableDir: Path, dd: String,
                                statsCols: Seq[String]): Seq[FileStat] = {
     if (statsCols.isEmpty) return Nil
-    val df = spark.read.parquet(new Path(tableDir, dd).toString)
+    val df = Tables.parquet(spark, Seq(new Path(tableDir, dd).toString))
     // RowCountCol and bitmap:<col> are VIRTUAL: per-file row counts
     // and membership bitmaps riding the same stat-line machinery
     // (and the same carry-forward rules) as the min/max skipping index
@@ -1547,8 +1547,8 @@ object Snapshots {
       dirs.find(d => rel.startsWith(d + "/")).getOrElse(rel.takeWhile(_ != '/'))
     rels.groupBy(ownerOf).map { case (owner, rs) =>
       applyDv(spark, root, m, owner,
-        spark.read.option("basePath", new Path(root, owner).toString)
-          .parquet(rs.map(new Path(root, _).toString): _*))
+        Tables.parquet(spark, rs.map(new Path(root, _).toString),
+          Map("basePath" -> new Path(root, owner).toString)))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -1602,7 +1602,7 @@ object Snapshots {
     val root = new Path(tableDir)
     val raw = m.dataDir match {
       case Some(dd) => applyDv(spark, root, m, dd,
-        spark.read.parquet(selected.map(new Path(root, _).toString): _*))
+        Tables.parquet(spark, selected.map(new Path(root, _).toString)))
       case None => readFilesByOwner(spark, root, m, selected)
     }
     manifestSchema(m).map(alignTo(raw, _)).getOrElse(raw).filter(predicate)
@@ -1683,7 +1683,7 @@ object Snapshots {
   def readStaged(spark: SparkSession, tableDir: String, staged: String): DataFrame = {
     require(staged.startsWith("d-"),
       s"Snapshots.readStaged: '$staged' is not a staged data dir name")
-    spark.read.parquet(new Path(new Path(tableDir), staged).toString)
+    Tables.parquet(spark, Seq(new Path(new Path(tableDir), staged).toString))
   }
 
   /** Publish a staged dir as the next table version — the commit half

@@ -82,7 +82,7 @@ object ScaleUp {
     val unique = args.length > 3 && args(3) == "unique"
     val spark = GraftSession.get()
     for (t <- allTables) {
-      val base = spark.read.parquet(s"$src/$t.parquet")
+      val base = graft.sources.Tables.parquet(spark, Seq(s"$src/$t.parquet"))
       val scaled: DataFrame = keyCols.get(t) match {
         case None => base
         case Some(keys) =>

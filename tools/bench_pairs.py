@@ -22,8 +22,15 @@ declares:
     unresolved, whatever the medians say.
 
 Every run's values, failed operations and oracle result are printed as
-they arrive. A run that prints no result line stops the tool. Only the
-Python standard library is used; perfbench/ is run, never modified.
+they arrive. A run that prints no result line stops the tool.
+
+After the timed pairs it makes one traced run per side
+(`--trace 1`, the first seed, parent first) and prints their
+count metrics side by side: exec.jobs, exec.stages, exec.tasks,
+op.build_jobs and every callsite.<Class>.jobs (a missing one reads 0),
+so a change can cite its job counts from the same tool as its pairs.
+Only the Python standard library is used; perfbench/ is run, never
+modified.
 """
 import argparse
 import json
@@ -33,16 +40,31 @@ import sys
 from pathlib import Path
 
 
-def run_once(checkout, workload, seed):
-    """One benchmark run; returns its parsed result line."""
+JOB_COUNTS = ["exec.jobs", "exec.stages", "exec.tasks", "op.build_jobs"]
+
+
+def run_once(checkout, workload, seed, trace=0):
+    """One benchmark run; returns its parsed result line and its stdout."""
     cmd = ["python3", "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--trace", "0"]
+           "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                        text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if not lines:
         sys.exit(f"no result line from {checkout} (seed {seed}, exit {p.returncode})")
-    return json.loads(lines[-1])
+    return json.loads(lines[-1]), p.stdout
+
+
+def job_counts(checkout, workload, seed):
+    """One traced run; its job counts, read from run.py's full result file."""
+    _, out = run_once(checkout, workload, seed, trace=1)
+    files = [l.split("full result:", 1)[1].strip() for l in out.splitlines()
+             if "full result:" in l]
+    if not files:
+        sys.exit(f"no full result file from the traced run in {checkout} (seed {seed})")
+    metrics = json.loads((Path(checkout) / files[-1]).read_text())["metrics"]
+    return {k: v for k, v in metrics.items()
+            if k in JOB_COUNTS or (k.startswith("callsite.") and k.endswith(".jobs"))}
 
 
 def quartiles(xs):
@@ -89,7 +111,7 @@ def main():
     runs = []
     for seed in range(a.first_seed, a.first_seed + a.pairs):
         order = ["parent", "change"] if seed % 2 else ["change", "parent"]
-        got = {side: run_once(getattr(a, side), a.workload, seed) for side in order}
+        got = {side: run_once(getattr(a, side), a.workload, seed)[0] for side in order}
         runs.append((seed, got["parent"], got["change"]))
         for side in ("parent", "change"):
             r = got[side]
@@ -111,11 +133,20 @@ def main():
     failed = [(seed, side) for seed, p, c in runs for side, r in (("parent", p), ("change", c))
               if r["failed"] or not r["correct"]]
     print(f"runs with failed operations or a failed oracle: {failed or 'none'}")
+
+    counts = {side: job_counts(getattr(a, side), a.workload, a.first_seed)
+              for side in ("parent", "change")}
+    callsites = sorted((counts["parent"].keys() | counts["change"].keys()) - set(JOB_COUNTS))
+    print(f"\n{a.workload}: job counts of one traced run a side (--trace 1, seed {a.first_seed})")
+    print(f"{'metric':28s} {'parent':>8s} {'change':>8s}")
+    for k in JOB_COUNTS + callsites:
+        p, c = (counts[side].get(k, 0.0) for side in ("parent", "change"))
+        print(f"{k:28s} {p:8g} {c:8g}")
     if a.json:
         Path(a.json).write_text(json.dumps(
             {"workload": a.workload, "runs": [{"seed": s, "parent": p, "change": c}
                                               for s, p, c in runs],
-             "summary": summary}, indent=1))
+             "summary": summary, "job_counts": counts}, indent=1))
 
 
 if __name__ == "__main__":
