@@ -80,7 +80,7 @@ object SparkEntry {
     * snapshot table partitioned by status. */
   private def ordersByStatus(kind: String, s: SparkSession, d: String): String =
     fixture(kind, s, d, "orders")(path => graft.sources.Snapshots
-      .commitOverwritePartitioned(s, path, ordersPriced(s, d), "o_orderstatus"))
+      .commitOverwrite(s, path, ordersPriced(s, d), partCol = "o_orderstatus"))
 
   /** A fixture of `kind`: (o_orderkey, o_orderstatus) committed as v1
     * partitioned by status with per-file row counts. Every call then
@@ -91,9 +91,9 @@ object SparkEntry {
   private def countedOrdersAfterDelete(kind: String, s: SparkSession, d: String): String = {
     import org.apache.spark.sql.functions.col
     import graft.sources.Snapshots
-    val table = fixture(kind, s, d, "orders")(path => Snapshots.commitOverwritePartitioned(s, path,
+    val table = fixture(kind, s, d, "orders")(path => Snapshots.commitOverwrite(s, path,
       graft.sources.Tables.load(s, d, "orders").select(col("o_orderkey"), col("o_orderstatus")),
-      "o_orderstatus", statsCols = Seq(Snapshots.RowCountCol)))
+      partCol = "o_orderstatus", statsCols = Seq(Snapshots.RowCountCol)))
     Snapshots.commitDelete(s, table,
       col("o_orderstatus") === "O" && col("o_orderkey") % 5 === 0)
     table
@@ -107,8 +107,8 @@ object SparkEntry {
     fixture("snapcdf", s, d, "orders") { path =>
       import org.apache.spark.sql.functions.col
       val o = ordersPriced(s, d)
-      graft.sources.Snapshots.commitOverwritePartitioned(s, path,
-        o.filter(col("o_orderkey") % 3 =!= 0), "o_orderstatus")
+      graft.sources.Snapshots.commitOverwrite(s, path,
+        o.filter(col("o_orderkey") % 3 =!= 0), partCol = "o_orderstatus")
       graft.sources.Snapshots.commitMergePartitioned(s, path, q79Delta(o),
         "o_orderkey", "o_orderstatus")
     }
@@ -1546,7 +1546,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       val o = ordersPriced(s, d)
       val table = fixture("snaprst", s, d, "orders") { path =>
-        val v1 = graft.sources.Snapshots.commitOverwritePartitioned(s, path, o, "o_orderstatus")
+        val v1 = graft.sources.Snapshots.commitOverwrite(s, path, o, partCol = "o_orderstatus")
         graft.sources.Snapshots.commitDelete(s, path, col("o_orderstatus") === "F")
         graft.sources.Snapshots.restore(s, path, v1)
       }
@@ -1606,7 +1606,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       val o = ordersPriced(s, d)
       val table = fixture("snapdv", s, d, "orders") { path =>
-        graft.sources.Snapshots.commitOverwritePartitioned(s, path, o, "o_orderstatus")
+        graft.sources.Snapshots.commitOverwrite(s, path, o, partCol = "o_orderstatus")
         graft.sources.Snapshots.commitDeleteVector(s, path,
           o.filter(col("o_orderkey") % 13 === 0).select(col("o_orderkey")),
           "o_orderkey")
@@ -3504,8 +3504,8 @@ object SparkEntry {
       val o = graft.sources.Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
       val table = fixture("snapevo", s, d, "orders") { path =>
-        Snapshots.commitOverwritePartitioned(s, path, o, "o_orderstatus")
-        Snapshots.commitOverwritePartitioned(s, path, o, "o_orderpriority")
+        Snapshots.commitOverwrite(s, path, o, partCol = "o_orderstatus")
+        Snapshots.commitOverwrite(s, path, o, partCol = "o_orderpriority")
       }
       Snapshots.read(s, table)
         .groupBy(col("o_orderstatus"), col("o_orderpriority"))
@@ -4082,8 +4082,8 @@ object SparkEntry {
       val o = graft.sources.Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val table = fixture("snapmm", s, d, "orders") { path =>
-        graft.sources.Snapshots.commitOverwritePartitioned(s, path, o,
-          "o_orderstatus", statsCols = Seq("o_totalprice"))
+        graft.sources.Snapshots.commitOverwrite(s, path, o,
+          partCol = "o_orderstatus", statsCols = Seq("o_totalprice"))
       }
       val v = graft.sources.Snapshots.currentVersion(s, table).get
       graft.sources.Snapshots.metadataMinMax(s, table, v, "o_totalprice")

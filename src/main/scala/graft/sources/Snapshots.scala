@@ -2,7 +2,8 @@ package graft.sources
 
 import java.io.IOException
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, LocalFileSystem,
+  Path, RawLocalFileSystem}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -77,6 +78,12 @@ class SnapshotWriteConflictException(msg: String)
   * leaves only an unreferenced data dir (reclaimed by [[vacuum]]'s
   * orphan sweep), never a partial version.
   *
+  * Write paths: [[commitOverwrite]] publishes either layout over
+  * either layout. [[commitDelete]], [[commitUpdate]], [[compact]] and
+  * [[compactZOrdered]] differ only in the partitions they touch and
+  * the transform they apply; one rewrite path republishes those in
+  * the manifest's own layout, schema and tracked stats columns.
+  *
   * Concurrency contract:
   *   - readers: unlimited; a reader resolves the max `_commits` entry
   *     once and then reads immutable dirs — it can never observe a
@@ -85,8 +92,8 @@ class SnapshotWriteConflictException(msg: String)
   *   - [[commitOverwrite]]: multi-writer safe — the payload does not
   *     depend on the base, so a claim collision just retries with the
   *     next number; concurrent overwriters serialize, last number wins.
-  *   - [[commitUpsert]] / [[commitMergePartitioned]] (read-modify-
-  *     write): optimistic CAS — the claim targets exactly base+1; if
+  *   - merges and in-place rewrites (read-modify-write):
+  *     optimistic CAS — the claim targets exactly base+1; if
   *     another writer got there first the commit FAILS with
   *     [[ConcurrentSnapshotCommitException]] and the caller re-runs
   *     against the new live snapshot. Retrying the stale merge under
@@ -200,18 +207,22 @@ object Snapshots {
     * readers pinned to the snapshot they resolved). */
   def readVersion(spark: SparkSession, tableDir: String, version: String): DataFrame = {
     val m = readManifest(spark, tableDir, version)
+    readSlice(spark, tableDir, m, m.partitions.map(_._1)).get
+  }
+
+  /** The rows of manifest `m` in partitions `values` — every row of a
+    * whole-table manifest, which ignores `values` — with deletion
+    * vectors applied, conformed to the declared schema (stable column
+    * order, typed NULLs for columns that postdate a dir's files). None
+    * when no listed partition is live. */
+  private def readSlice(spark: SparkSession, tableDir: String, m: Manifest,
+                        values: Seq[String]): Option[DataFrame] = {
     val raw = m.dataDir match {
-      case Some(dd) => applyDv(spark, new Path(tableDir), m, dd,
-        Tables.parquet(spark, Seq(new Path(tableDir, dd).toString)))
-      case None =>
-        // one read per owning data dir with basePath so the partition
-        // column is inferred exactly as for a plain partitioned-parquet
-        // read, then union by name
-        readPartitionsSubset(spark, tableDir, m, m.partitions.map(_._1)).get
+      case Some(dd) => Some(applyDv(spark, new Path(tableDir), m, dd,
+        Tables.parquet(spark, Seq(new Path(tableDir, dd).toString))))
+      case None => readPartitionsSubset(spark, tableDir, m, values)
     }
-    // conform to the manifest's declared schema: stable column order,
-    // typed NULLs for columns that postdate a dir's files
-    manifestSchema(m).map(alignTo(raw, _)).getOrElse(raw)
+    raw.map(r => manifestSchema(m).map(alignTo(r, _)).getOrElse(r))
   }
 
   /** The latest version committed at or before `tsMillis` — the
@@ -432,39 +443,47 @@ object Snapshots {
   }
   private def versionName(n: Int): String = f"v$n%08d"
 
-  /** Serializes same-JVM claimants. HDFS rejects a rename onto an
-    * existing file atomically server-side, but the LOCAL filesystem
-    * maps it to rename(2), which silently REPLACES the target — two
-    * in-process claimants of the same number could both "succeed".
-    * The lock closes the in-process race; the read-back below closes
-    * (to a narrow window) the cross-process one on local filesystems.
-    * On HDFS neither is needed and both are cheap. */
+  /** Serializes same-JVM claimants (CHECK validation plus claim). */
   private val claimLock = new Object
 
   /** Atomically claim version number `n` of the commit log under
-    * `dir`: write a tmp file and rename it to `_commits/vN` WITHOUT
-    * overwrite, then read the target back and verify it carries OUR
-    * body (data dir names are attempt-unique, so bodies distinguish
-    * claimants). Exactly one of two concurrent claimants of the same
-    * number wins. Returns false when the number was already taken.
-    * The one claim of both table versions and [[SnapshotGroups]]
-    * pins. */
+    * `dir`: write a tmp file, publish it as `_commits/vN` only if that
+    * name is free, then read it back and verify it carries OUR body
+    * (data dir names are attempt-unique, so bodies distinguish
+    * claimants). HDFS and object stores publish by a rename WITHOUT
+    * overwrite. The local filesystem's rename replaces its target and
+    * moves a file and its `.crc` separately, so there the tmp file is
+    * written raw (no `.crc`) and published by a hard link, which fails
+    * atomically if the target exists. Exactly one claimant of a number
+    * wins, across JVMs too; false when it was already taken. The one
+    * claim of both table versions and [[SnapshotGroups]] pins. */
   private[sources] def claimFile(spark: SparkSession, dir: String, n: Int,
                                  body: String): Boolean = claimLock.synchronized {
     val commits = new Path(dir, CommitDir)
     val fs = fsOf(spark, commits)
     fs.mkdirs(commits)
     val target = new Path(commits, versionName(n))
-    if (fs.exists(target)) return false // cheap pre-check; the rename is the gate
+    if (fs.exists(target)) return false // cheap pre-check; the publish is the gate
+    val raw = fs match {
+      case l: LocalFileSystem => Some(l.getRaw.asInstanceOf[RawLocalFileSystem])
+      case _ => None
+    }
+    val tmpFs = raw.getOrElse(fs)
     val tmp = new Path(commits, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
+    val out = tmpFs.create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(commits.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val renamed =
-      try { fc.rename(tmp, target); true }
-      catch {
-        case _: FileAlreadyExistsException | _: org.apache.hadoop.fs.PathExistsException =>
+    val published =
+      try {
+        raw match {
+          case Some(r) =>
+            java.nio.file.Files.createLink(r.pathToFile(target).toPath, r.pathToFile(tmp).toPath)
+          case None => FileContext.getFileContext(commits.toUri,
+            spark.sparkContext.hadoopConfiguration).rename(tmp, target)
+        }
+        true
+      } catch {
+        case _: FileAlreadyExistsException | _: org.apache.hadoop.fs.PathExistsException |
+             _: java.nio.file.FileAlreadyExistsException =>
           false
         case _: IOException if fs.exists(target) => // HDFS rename-to-existing variants
           false
@@ -472,21 +491,11 @@ object Snapshots {
         // any failure path (including transient IOExceptions that
         // propagate) must not leak the tmp manifest forever; vacuum
         // additionally sweeps aged .tmp-* strays as a backstop
-        if (fs.exists(tmp)) fs.delete(tmp, false)
+        if (tmpFs.exists(tmp)) tmpFs.delete(tmp, false)
       }
-    renamed && {
-      // full read-back (short reads are legal for InputStream.read on
-      // HDFS-like filesystems; a winner that misreports as loser would
-      // double-publish or spuriously fail an already-landed commit)
+    published && {
       val in = fs.open(target)
-      val readBack = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val bytes = new Array[Byte](8192)
-        var n = in.read(bytes)
-        while (n >= 0) { buf.write(bytes, 0, n); n = in.read(bytes) }
-        buf.toString("UTF-8")
-      } finally in.close()
-      readBack == body // lost a cross-process replace race → behave as loser
+      try new String(in.readAllBytes(), "UTF-8") == body finally in.close()
     }
   }
 
@@ -622,26 +631,25 @@ object Snapshots {
     * it, the `touched` partitions it does not hold drop out, and all
     * other partitions of `base` keep their owning dirs, together with
     * their stat lines and deletion vectors. `dd` is stat-scanned for
-    * the caller's `statsCols`, else whatever `base` tracked. */
+    * the caller's `statsCols`, else for whatever `base` tracked that
+    * is still a data column of the new layout. */
   private def manifestFor(spark: SparkSession, tableDir: String, dd: String,
                           base: Option[Manifest], schemaJson: Option[String],
                           statsCols: Seq[String], partCol: String = "",
                           touched: Seq[String] = Nil): Manifest = {
     val root = new Path(tableDir)
-    val cols = base.map(effectiveStatsCols(statsCols, _)).getOrElse(statsCols)
-    if (partCol.isEmpty)
-      return Manifest(Some(dd), "", Nil, schemaJson, computeFileStats(spark, root, dd, cols))
+    lazy val stats = computeFileStats(spark, root, dd, partCol, statsCols,
+      carried = base.toSeq.flatMap(_.stats.map(_.col)).distinct)
+    if (partCol.isEmpty) return Manifest(Some(dd), "", Nil, schemaJson, stats)
     // a partition left with no row writes no subdir in `dd` and drops
     // out of the manifest entirely, never pointing at a missing path
     val present = listPartitionValues(fsOf(spark, root), new Path(root, dd), partCol)
-    require(present.nonEmpty || base.isDefined,
-      "Snapshots: empty dataframe — no partition to publish")
     val parts = (base.map(_.partitions.toMap).getOrElse(Map.empty[String, String]) --
       touched ++ present.map(_ -> dd)).toSeq
+    require(parts.nonEmpty, "Snapshots: empty dataframe — no partition to publish")
     val dvs = base.map(carriedDvs(_, parts.map(_._2).toSet)).getOrElse(Nil)
     Manifest(None, partCol, parts, schemaJson,
-      base.map(carriedStats(_, parts.toMap)).getOrElse(Nil) ++
-        computeFileStats(spark, root, dd, cols),
+      base.map(carriedStats(_, parts.toMap)).getOrElse(Nil) ++ stats,
       if (dvs.nonEmpty) base.get.dvKey else "", dvs)
   }
 
@@ -649,20 +657,24 @@ object Snapshots {
     * [[writeDataDir]], then [[manifestFor]] the new dir. */
   private def writeVersion(spark: SparkSession, tableDir: String, df: DataFrame,
                            base: Option[Manifest], schemaJson: Option[String],
-                           statsCols: Seq[String] = Nil, partCol: String = "",
+                           statsCols: Seq[String], partCol: String = "",
                            touched: Seq[String] = Nil): Manifest =
     manifestFor(spark, tableDir, writeDataDir(spark, tableDir, df, partCol), base,
       schemaJson, statsCols, partCol, touched)
 
-  /** Publish `df` as the next whole-table version. Safe under
-    * concurrent writers: the payload is base-independent, so a claim
-    * collision retries with the next number until it wins. Returns the
-    * claimed version name. */
+  /** Publish `df` as the next version, whole-table or (with
+    * `partCol`) written `partitionBy(partCol)` with every partition
+    * mapped to the new dir; an empty partitioned `df` and NULL or
+    * empty partition values are refused. Every partition of the live
+    * version is replaced, and the stats columns it tracks stay tracked
+    * unless `statsCols` names others. Safe under concurrent writers:
+    * the rows are base-independent, so a claim collision retries with
+    * the next number until it wins. Returns the claimed version. */
   def commitOverwrite(spark: SparkSession, tableDir: String, df: DataFrame,
-                      statsCols: Seq[String] = Nil): String = {
-    // keep maintaining whatever skipping index the table already tracks
+                      statsCols: Seq[String] = Nil, partCol: String = ""): String = {
     val base = currentVersion(spark, tableDir).map(readManifest(spark, tableDir, _))
-    val m = writeVersion(spark, tableDir, df, base, Some(df.schema.json), statsCols)
+    val m = writeVersion(spark, tableDir, df, base, Some(df.schema.json), statsCols, partCol,
+      base.toSeq.flatMap(_.partitions.map(_._1)))
     claimNext(spark, tableDir)(tryClaim(spark, tableDir, _, m))
   }
 
@@ -715,9 +727,11 @@ object Snapshots {
           writeVersion(spark, tableDir, deduped, None, Some(deduped.schema.json), statsCols))
       case Some(v) =>
         val baseDf = readVersion(spark, tableDir, v)
-        val aligned = evolveDeltaTo(baseDf.schema, delta)
+        // one row per key, merged as in the bootstrap; the dedupe is
+        // delta-sized, so the base scan stays map-only
+        val aligned = graft.etl.Dims.upsert(None, evolveDeltaTo(baseDf.schema, delta), key)
         val merged = baseDf
-          .join(aligned.select(col(key)).distinct(), Seq(key), "left_anti")
+          .join(aligned.select(col(key)), Seq(key), "left_anti")
           // allowMissingColumns: an ADDED delta column reads as NULL on
           // the surviving base rows (add-column schema evolution)
           .unionByName(aligned, allowMissingColumns = true)
@@ -725,17 +739,6 @@ object Snapshots {
           writeVersion(spark, tableDir, merged, Some(readManifest(spark, tableDir, v)),
             Some(merged.schema.json), statsCols))
     }
-  }
-
-  /** Publish `df` as the next version of a PARTITIONED table: the data
-    * dir is written `partitionBy(partCol)` and the manifest maps every
-    * partition value to it. NULL partition values are refused (same
-    * contract as [[graft.etl.Dims.partitionScopedMerge]]). */
-  def commitOverwritePartitioned(spark: SparkSession, tableDir: String,
-                                 df: DataFrame, partCol: String,
-                                 statsCols: Seq[String] = Nil): String = {
-    val m = writeVersion(spark, tableDir, df, None, Some(df.schema.json), statsCols, partCol)
-    claimNext(spark, tableDir)(tryClaim(spark, tableDir, _, m))
   }
 
   /** Anti-join away the deletion-vector keys targeting rows that were
@@ -856,7 +859,7 @@ object Snapshots {
           case Some(unt) => graft.etl.Dims.movedPartitions(unt, delta, key, partCol)
         }
         val touched = (touchedRaw ++ movedParts).distinct.sorted
-        val baseSubset = readPartitionsSubset(spark, tableDir, m, touched)
+        val baseSubset = readSlice(spark, tableDir, m, touched)
         // align the delta to the declared schema's exact column types
         // (arithmetic widens decimals; a forked schema would break
         // later reads); EXTRA delta columns are add-column evolution.
@@ -867,13 +870,11 @@ object Snapshots {
           case Some(sch) => evolveDeltaTo(sch, delta)
           case None => delta
         }
-        // pad the base subset: conform to the declared schema, then
-        // materialize the delta's added columns as typed NULLs so the
-        // in-partition merge unions cleanly
+        // pad the (conformed) base subset with the delta's added columns
+        // as typed NULLs so the in-partition merge unions cleanly
         val paddedBase = baseSubset.map { b =>
-          val conformed = manifestSchema(m).map(alignTo(b, _)).getOrElse(b)
-          aligned.schema.fields.filterNot(f => conformed.columns.contains(f.name))
-            .foldLeft(conformed)((df, f) => df.withColumn(f.name, lit(null).cast(f.dataType)))
+          aligned.schema.fields.filterNot(f => b.columns.contains(f.name))
+            .foldLeft(b)((df, f) => df.withColumn(f.name, lit(null).cast(f.dataType)))
         }
         val merged = graft.etl.Dims.upsert(paddedBase, aligned, key, tieBreak)
         // a moved-from partition can end up EMPTY (every row moved
@@ -988,6 +989,28 @@ object Snapshots {
   private def keepCond(predicate: Column): Column =
     !coalesce(predicate, lit(false))
 
+  /** The partitions holding `rows` (rows of a version with manifest
+    * `m`): the slice a rewrite of those rows must cover. A whole-table
+    * version is one slice, named "", touched iff `rows` is non-empty. */
+  private def partitionsOf(m: Manifest, rows: DataFrame): Seq[String] =
+    if (m.dataDir.isDefined) { if (rows.isEmpty) Nil else Seq("") }
+    else rows.select(col(m.partCol).cast("string")).distinct()
+      .collect().map(_.getString(0)).toSeq
+
+  /** The one rewrite path of delete, update and both compactions: read
+    * the `touched` slice of live version `v` ([[readSlice]]), apply
+    * `f`, write it in the manifest's own layout, schema and tracked
+    * stats columns (or `statsCols`), and claim exactly `v`+1. Untouched
+    * partitions keep their files, stats and deletion vectors; a touched
+    * partition left empty drops out. No live touched partition → `v`. */
+  private def rewrite(spark: SparkSession, tableDir: String, v: String, m: Manifest,
+                      touched: Seq[String], statsCols: Seq[String] = Nil)(
+      f: DataFrame => DataFrame): String =
+    readSlice(spark, tableDir, m, touched).fold(v) { slice =>
+      claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir, f(slice), Some(m),
+        m.schemaJson, statsCols, m.partCol, touched))
+    }
+
   /** DELETE WHERE on the live snapshot, partition-scoped: only
     * partitions that actually CONTAIN matching rows are rewritten
     * (minus the deleted rows) into a new data dir; every other
@@ -1015,24 +1038,9 @@ object Snapshots {
     val detect =
       if (prunePreds.isEmpty) readVersion(spark, tableDir, v).filter(predicate)
       else readVersionPrunedMulti(spark, tableDir, v, prunePreds).filter(predicate)
-    m.dataDir match {
-      case Some(_) =>
-        if (detect.isEmpty) return v // no match → no-op, don't publish a copy
-        val kept = readVersion(spark, tableDir, v).filter(keepCond(predicate))
-        claimExactlyAfter(spark, tableDir, v,
-          writeVersion(spark, tableDir, kept, Some(m), m.schemaJson))
-      case None =>
-        val touched = detect.select(col(m.partCol).cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-        if (touched.isEmpty) return v
-        val subset = readPartitionsSubset(spark, tableDir, m, touched)
-          .getOrElse(return v)
-        val conformed = manifestSchema(m).map(alignTo(subset, _)).getOrElse(subset)
-        // a fully-deleted partition writes no dir and leaves the manifest
-        claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir,
-          conformed.filter(keepCond(predicate)), Some(m), m.schemaJson,
-          partCol = m.partCol, touched = touched))
-    }
+    val touched = partitionsOf(m, detect).sorted
+    if (touched.isEmpty) v // no match → no-op, don't publish a copy
+    else rewrite(spark, tableDir, v, m, touched)(_.filter(keepCond(predicate)))
   }
 
   /** UPDATE ... SET ... WHERE on the live snapshot, partition-scoped.
@@ -1072,36 +1080,17 @@ object Snapshots {
         }
       }.toSeq: _*)
     }
-    m.dataDir match {
-      case Some(_) =>
-        if (readVersion(spark, tableDir, v).filter(predicate).isEmpty) return v
-        val updated = applySets(readVersion(spark, tableDir, v))
-        claimExactlyAfter(spark, tableDir, v,
-          writeVersion(spark, tableDir, updated, Some(m), m.schemaJson))
-      case None =>
-        val matched = readVersion(spark, tableDir, v).filter(predicate)
-        val srcParts = matched.select(col(m.partCol).cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        if (srcParts.isEmpty) return v
-        // rows moving INTO a partition force its rewrite too — the
-        // target's existing rows must land in the same owning dir
-        val tgtParts =
-          if (!setMap.contains(m.partCol)) Nil
-          else applySets(matched).select(col(m.partCol).cast("string")).distinct()
-            .collect().map(_.getString(0)).toSeq
-        require(!tgtParts.contains(null) && !tgtParts.contains(""),
-          s"Snapshots.commitUpdate: SET would assign NULL or empty ${m.partCol}; " +
-            "null partitions are not supported")
-        val owned = m.partitions.toMap
-        val touched = (srcParts ++ tgtParts).distinct.filter(p =>
-          owned.contains(p) || tgtParts.contains(p)).sorted
-        val subset = readPartitionsSubset(spark, tableDir, m, touched)
-          .getOrElse(return v)
-        val conformed = manifestSchema(m).map(alignTo(subset, _)).getOrElse(subset)
-        claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir,
-          applySets(conformed), Some(m), m.schemaJson, partCol = m.partCol,
-          touched = touched))
-    }
+    val matched = readVersion(spark, tableDir, v).filter(predicate)
+    val srcParts = partitionsOf(m, matched)
+    if (srcParts.isEmpty) return v
+    // rows moving INTO a partition force its rewrite too — the
+    // target's existing rows must land in the same owning dir
+    val tgtParts =
+      if (setMap.contains(m.partCol)) partitionsOf(m, applySets(matched)) else Nil
+    require(!tgtParts.contains(null) && !tgtParts.contains(""),
+      s"Snapshots.commitUpdate: SET would assign NULL or empty ${m.partCol}; " +
+        "null partitions are not supported")
+    rewrite(spark, tableDir, v, m, (srcParts ++ tgtParts).distinct.sorted)(applySets)
   }
 
   /** DV entries of a previous manifest still valid under a new set of
@@ -1254,9 +1243,7 @@ object Snapshots {
     val v = liveVersion(spark, tableDir, "compact")
     val m = readManifest(spark, tableDir, v)
     // every partition is touched, so each one re-points at the new dir
-    claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir,
-      readVersion(spark, tableDir, v), Some(m), m.schemaJson, partCol = m.partCol,
-      touched = m.partitions.map(_._1)))
+    rewrite(spark, tableDir, v, m, m.partitions.map(_._1))(identity)
   }
 
   /** OPTIMIZE ZORDER analog: consolidate the live version into one
@@ -1266,27 +1253,28 @@ object Snapshots {
     * recorded on BOTH RAW columns. Each output file then covers a
     * small (x, y) rectangle, so [[readVersionPrunedMulti]] prunes 2D
     * box reads on both dimensions directly; no curve key is
-    * materialized into the schema. Same CAS/read-modify-write
-    * semantics as [[compact]]; existing stats columns stay tracked. */
+    * materialized into the schema. On a partitioned table the
+    * `numFiles` ranges run on (partition column, Morton key), so the
+    * layout is kept. Same CAS/read-modify-write semantics as
+    * [[compact]]; existing stats columns stay tracked. */
   def compactZOrdered(spark: SparkSession, tableDir: String, xCol: String,
                       yCol: String, numFiles: Int): String = {
     val v = liveVersion(spark, tableDir, "compactZOrdered")
     val m = readManifest(spark, tableDir, v)
-    val df = readVersion(spark, tableDir, v)
-    val bits = 16
-    val r = df.agg(min(col(xCol)).cast("long"), max(col(xCol)).cast("long"),
-      min(col(yCol)).cast("long"), max(col(yCol)).cast("long")).head()
-    val clustered =
+    val statsCols = (m.stats.map(_.col) ++ Seq(xCol, yCol)).distinct
+    rewrite(spark, tableDir, v, m, m.partitions.map(_._1), statsCols) { df =>
+      val bits = 16
+      val r = df.agg(min(col(xCol)).cast("long"), max(col(xCol)).cast("long"),
+        min(col(yCol)).cast("long"), max(col(yCol)).cast("long")).head()
+      val keys = (if (m.partCol.isEmpty) Nil else Seq(col(m.partCol))) :+ col("_zkey")
       if (r.isNullAt(0)) df
       else df.withColumn("_zkey", ZOrder.zkey2(
           ZOrder.scaled(col(xCol), r.getLong(0), r.getLong(1), bits),
           ZOrder.scaled(col(yCol), r.getLong(2), r.getLong(3), bits), bits))
-        .repartitionByRange(numFiles, col("_zkey"))
-        .sortWithinPartitions(col("_zkey"))
+        .repartitionByRange(numFiles, keys: _*)
+        .sortWithinPartitions(keys: _*)
         .drop("_zkey")
-    val statsCols = (m.stats.map(_.col) ++ Seq(xCol, yCol)).distinct
-    claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir, clustered, Some(m),
-      Some(df.schema.json), statsCols))
+    }
   }
 
   /** Auto-OPTIMIZE policy: compact only when the live manifest
@@ -1408,11 +1396,21 @@ object Snapshots {
     * data dir — one delta-sized scan of files that are still hot from
     * the write. Numeric data columns only (partition columns live in
     * dir names, not files). A file where a column is all-NULL gets no
-    * entry and is conservatively always read. */
+    * entry and is conservatively always read. Without `explicit`
+    * columns, those `carried` from the base that are still data
+    * columns here (not, e.g., a new partition column) are scanned. */
   private def computeFileStats(spark: SparkSession, tableDir: Path, dd: String,
-                               statsCols: Seq[String]): Seq[FileStat] = {
-    if (statsCols.isEmpty) return Nil
+                               partCol: String, explicit: Seq[String],
+                               carried: Seq[String]): Seq[FileStat] = {
+    if (explicit.isEmpty && carried.isEmpty) return Nil
     val df = Tables.parquet(spark, Seq(new Path(tableDir, dd).toString))
+    val data = df.schema.fields.filterNot(_.name == partCol)
+    val statsCols = if (explicit.nonEmpty) explicit else carried.filter { c =>
+      val name = c.stripPrefix(BitmapStatPrefix)
+      c == RowCountCol || data.exists(f => f.name == name && (name != c ||
+        f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]))
+    }
+    if (statsCols.isEmpty) return Nil
     // RowCountCol and bitmap:<col> are VIRTUAL: per-file row counts
     // and membership bitmaps riding the same stat-line machinery
     // (and the same carry-forward rules) as the min/max skipping index
@@ -1471,13 +1469,6 @@ object Snapshots {
         } else Nil)
       }
   }
-
-  /** The stats columns a follow-up commit should maintain: the
-    * caller's explicit choice, else whatever the previous manifest
-    * tracked — so the skipping index survives commits that don't
-    * mention it. */
-  private def effectiveStatsCols(statsCols: Seq[String], prev: Manifest): Seq[String] =
-    if (statsCols.nonEmpty) statsCols else prev.stats.map(_.col).distinct
 
   /** List the parquet files under `p`, as paths relative to `root`. */
   private def listParquetRel(fs: FileSystem, root: Path, p: Path): Seq[String] = {
@@ -1569,8 +1560,9 @@ object Snapshots {
     * hi) holds, reading only files whose recorded range intersects
     * every predicate's range. With a Z-ordered layout
     * ([[compactZOrdered]]) each file covers a small rectangle in the
-    * clustered columns, so a 2D box prunes on BOTH dimensions without
-    * materializing a curve key. Files lacking a stat for some column
+    * clustered columns (within one partition, on a partitioned table),
+    * so a 2D box prunes on BOTH dimensions without materializing a
+    * curve key. Files lacking a stat for some column
     * survive that predicate (conservative); the row filter applies
     * inside survivors, so results equal the plain filtered read. */
   def readVersionPrunedMulti(spark: SparkSession, tableDir: String, version: String,
@@ -1599,12 +1591,7 @@ object Snapshots {
                            predicate: Column): DataFrame = {
     if (selected.isEmpty)
       return readVersion(spark, tableDir, version).filter(lit(false)).filter(predicate)
-    val root = new Path(tableDir)
-    val raw = m.dataDir match {
-      case Some(dd) => applyDv(spark, root, m, dd,
-        Tables.parquet(spark, selected.map(new Path(root, _).toString)))
-      case None => readFilesByOwner(spark, root, m, selected)
-    }
+    val raw = readFilesByOwner(spark, new Path(tableDir), m, selected)
     manifestSchema(m).map(alignTo(raw, _)).getOrElse(raw).filter(predicate)
   }
 

@@ -182,8 +182,8 @@ class Round11Spec extends SparkSpec {
     // partitions on their old dirs — the chain genuinely fragments,
     // and once past the threshold maintenance compacts it to one dir
     val tp = s"$dir/idx_part"
-    Snapshots.commitOverwritePartitioned(spark, tp,
-      Seq((1L, "p0", "a")).toDF("doc_id", "day", "v"), "day")
+    Snapshots.commitOverwrite(spark, tp,
+      Seq((1L, "p0", "a")).toDF("doc_id", "day", "v"), partCol = "day")
     for (i <- 2 to DocStreams.CompactMinDataDirs + 1)
       Snapshots.commitMergePartitioned(spark, tp,
         Seq((i.toLong, s"p${i - 1}", "b")).toDF("doc_id", "day", "v"),

@@ -270,7 +270,7 @@ class Round8bSpec extends SparkSpec {
     val v2 = Snapshots.currentVersion(spark, dir).get
     val m2 = Snapshots.readManifest(spark, dir, v2)
     assert(m2.stats.exists(_.col === "bitmap:k"),
-      "effectiveStatsCols must carry the bitmap column forward")
+      "an overwrite must carry the bitmap column forward")
     // lookups against the carried index stay exact
     val got = Snapshots.readVersionKeyPruned(spark, dir, v2, "k", Seq(150L))
       .collect().map(_.getLong(0)).toSeq
@@ -294,7 +294,7 @@ class Round8bSpec extends SparkSpec {
     val dir = SparkSpec.tempDir("graft_bmm").toString + "/t"
     val base = spark.range(200L)
       .selectExpr("id AS k", "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS part", "id AS v")
-    Snapshots.commitOverwritePartitioned(spark, dir, base, "part",
+    Snapshots.commitOverwrite(spark, dir, base, partCol = "part",
       statsCols = Seq(Snapshots.BitmapStatPrefix + "k"))
     // merge a delta into one partition; the rewritten partition's
     // files must get FRESH bitmap lines (same rules as min/max carry)
@@ -459,7 +459,7 @@ class Round8bSpec extends SparkSpec {
     val df = spark.range(1000L).selectExpr("id AS k",
       "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS part",
       "CAST(id AS DOUBLE) * 1.5 AS v")
-    Snapshots.commitOverwritePartitioned(spark, dir, df, "part",
+    Snapshots.commitOverwrite(spark, dir, df, partCol = "part",
       statsCols = Seq("v"))
     val v = Snapshots.currentVersion(spark, dir).get
     // physically delete every parquet data file — the manifest path

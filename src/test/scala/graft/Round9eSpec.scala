@@ -189,7 +189,7 @@ class Round9eSpec extends SparkSpec {
     val dst = s"$root/dst"
     val df = (1L to 60L).map(k => (k, if (k % 3 == 0) "A" else "B"))
       .toDF("k", "part")
-    Snapshots.commitOverwritePartitioned(spark, src, df, "part")
+    Snapshots.commitOverwrite(spark, src, df, partCol = "part")
     Snapshots.shallowClone(spark, src, dst)
     val all = Snapshots.readVersion(spark, dst, "v00000001")
     assert(all.count() === 60L)

@@ -50,8 +50,8 @@ class SnapshotChecksSpec extends SparkSpec {
 
   test("partitioned merge enforces checks on the partitions it rewrites") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir,
-      Seq((1L, "p1", 10L), (2L, "p2", 20L)).toDF("k", "p", "v"), "p")
+    Snapshots.commitOverwrite(spark, dir,
+      Seq((1L, "p1", 10L), (2L, "p2", 20L)).toDF("k", "p", "v"), partCol = "p")
     Snapshots.setCheck(spark, dir, "v_cap", "v <= 100")
     intercept[CheckConstraintViolationException] {
       Snapshots.commitMergePartitioned(spark, dir,

@@ -85,7 +85,8 @@ class SnapshotManifestSpec extends SparkSpec {
       |stat:k|1|1|D1/p=A/part-*.c000.snappy.parquet
       |stat:k|2|2|D1/p=B/part-*.c000.snappy.parquet""")
 
-    // upsert bootstrap, then an upsert against it
+    // upsert bootstrap, then an upsert against it (its delta is
+    // deduplicated by key, one shuffle, so it lands as one file)
     val v1 = Snapshots.commitUpsert(spark, t,
       rows((1, "A", 10), (2, "A", 20), (3, "B", 30)), "k", statsCols = stats)
     check(t, v1, s"""
@@ -97,12 +98,10 @@ class SnapshotManifestSpec extends SparkSpec {
     check(t, v2, s"""
       |$allNullable
       |dir=D3
-      |stat:_rows|1|1|D3/part-*-c000.snappy.parquet
-      |stat:_rows|1|1|D3/part-*-c000.snappy.parquet
+      |stat:_rows|2|2|D3/part-*-c000.snappy.parquet
       |stat:_rows|2|2|D3/part-*-c000.snappy.parquet
       |stat:k|1|2|D3/part-*-c000.snappy.parquet
-      |stat:k|3|3|D3/part-*-c000.snappy.parquet
-      |stat:k|4|4|D3/part-*-c000.snappy.parquet""")
+      |stat:k|3|4|D3/part-*-c000.snappy.parquet""")
 
     // whole-table overwrite keeps the tracked stats columns
     val v3 = Snapshots.commitOverwrite(spark, t,
@@ -120,9 +119,9 @@ class SnapshotManifestSpec extends SparkSpec {
       |stat:k|4|4|D4/part-*-c000.snappy.parquet""")
 
     // partitioned overwrite
-    val v4 = Snapshots.commitOverwritePartitioned(spark, t,
+    val v4 = Snapshots.commitOverwrite(spark, t,
       rows((1, "A", 10), (2, "A", 20), (3, "B", 30), (4, "B", 40), (5, "C", 50),
-        (6, "D", 60)), "p", statsCols = stats)
+        (6, "D", 60)), partCol = "p", statsCols = stats)
     check(t, v4, s"""
       |$keyNotNull
       |partcol=p
@@ -221,65 +220,86 @@ class SnapshotManifestSpec extends SparkSpec {
       |stat:k|1|5|D10/p=A/part-*.c000.snappy.parquet
       |stat:k|4|4|D10/p=E/part-*.c000.snappy.parquet
       |stat:k|7|7|D10/p=E/part-*.c000.snappy.parquet""")
+    // Z-order compaction keeps the partitioned layout
     val v10 = Snapshots.compactZOrdered(spark, t, "k", "x", numFiles = 2)
     check(t, v10, s"""
       |$allNullable
-      |dir=D11
-      |stat:_rows|2|2|D11/part-*-c000.snappy.parquet
-      |stat:_rows|2|2|D11/part-*-c000.snappy.parquet
-      |stat:k|1|4|D11/part-*-c000.snappy.parquet
-      |stat:k|5|7|D11/part-*-c000.snappy.parquet
-      |stat:x|10|40|D11/part-*-c000.snappy.parquet
-      |stat:x|51|70|D11/part-*-c000.snappy.parquet""")
+      |partcol=p
+      |part:A=D11
+      |part:E=D11
+      |stat:_rows|2|2|D11/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|2|2|D11/p=E/part-*.c000.snappy.parquet
+      |stat:k|1|5|D11/p=A/part-*.c000.snappy.parquet
+      |stat:k|4|7|D11/p=E/part-*.c000.snappy.parquet
+      |stat:x|10|51|D11/p=A/part-*.c000.snappy.parquet
+      |stat:x|40|70|D11/p=E/part-*.c000.snappy.parquet""")
 
-    // whole-table delete and update
-    val v11 = Snapshots.commitDelete(spark, t, col("k") === 1)
+    // whole-table overwrite carrying the tracked stats, then a
+    // whole-table Z-order compaction, delete and update
+    val v11 = Snapshots.commitOverwrite(spark, t, Snapshots.read(spark, t).coalesce(1))
     check(t, v11, s"""
       |$allNullable
       |dir=D12
-      |stat:_rows|1|1|D12/part-*-c000.snappy.parquet
-      |stat:_rows|2|2|D12/part-*-c000.snappy.parquet
-      |stat:k|4|4|D12/part-*-c000.snappy.parquet
-      |stat:k|5|7|D12/part-*-c000.snappy.parquet
-      |stat:x|40|40|D12/part-*-c000.snappy.parquet
-      |stat:x|51|70|D12/part-*-c000.snappy.parquet""")
-    val v12 = Snapshots.commitUpdate(spark, t, col("k") === 5, Seq("x" -> lit(55L)))
+      |stat:_rows|4|4|D12/part-*-c000.snappy.parquet
+      |stat:k|1|7|D12/part-*-c000.snappy.parquet
+      |stat:x|10|70|D12/part-*-c000.snappy.parquet""")
+    val v12 = Snapshots.compactZOrdered(spark, t, "k", "x", numFiles = 2)
     check(t, v12, s"""
       |$allNullable
       |dir=D13
-      |stat:_rows|1|1|D13/part-*-c000.snappy.parquet
       |stat:_rows|2|2|D13/part-*-c000.snappy.parquet
-      |stat:k|4|4|D13/part-*-c000.snappy.parquet
+      |stat:_rows|2|2|D13/part-*-c000.snappy.parquet
+      |stat:k|1|4|D13/part-*-c000.snappy.parquet
       |stat:k|5|7|D13/part-*-c000.snappy.parquet
-      |stat:x|40|40|D13/part-*-c000.snappy.parquet
-      |stat:x|55|70|D13/part-*-c000.snappy.parquet""")
-
-    // write-audit-publish
-    val staged = Snapshots.stageOverwrite(spark, t, rows((8, "F", 80), (9, "F", 90)))
-    val v13 = Snapshots.publishStaged(spark, t, staged)
+      |stat:x|10|40|D13/part-*-c000.snappy.parquet
+      |stat:x|51|70|D13/part-*-c000.snappy.parquet""")
+    val v13 = Snapshots.commitDelete(spark, t, col("k") === 1)
     check(t, v13, s"""
       |$allNullable
       |dir=D14
       |stat:_rows|1|1|D14/part-*-c000.snappy.parquet
-      |stat:_rows|1|1|D14/part-*-c000.snappy.parquet
-      |stat:k|8|8|D14/part-*-c000.snappy.parquet
-      |stat:k|9|9|D14/part-*-c000.snappy.parquet
-      |stat:x|80|80|D14/part-*-c000.snappy.parquet
-      |stat:x|90|90|D14/part-*-c000.snappy.parquet""")
+      |stat:_rows|2|2|D14/part-*-c000.snappy.parquet
+      |stat:k|4|4|D14/part-*-c000.snappy.parquet
+      |stat:k|5|7|D14/part-*-c000.snappy.parquet
+      |stat:x|40|40|D14/part-*-c000.snappy.parquet
+      |stat:x|51|70|D14/part-*-c000.snappy.parquet""")
+    val v14 = Snapshots.commitUpdate(spark, t, col("k") === 5, Seq("x" -> lit(55L)))
+    check(t, v14, s"""
+      |$allNullable
+      |dir=D15
+      |stat:_rows|1|1|D15/part-*-c000.snappy.parquet
+      |stat:_rows|2|2|D15/part-*-c000.snappy.parquet
+      |stat:k|4|4|D15/part-*-c000.snappy.parquet
+      |stat:k|5|7|D15/part-*-c000.snappy.parquet
+      |stat:x|40|40|D15/part-*-c000.snappy.parquet
+      |stat:x|55|70|D15/part-*-c000.snappy.parquet""")
+
+    // write-audit-publish
+    val staged = Snapshots.stageOverwrite(spark, t, rows((8, "F", 80), (9, "F", 90)))
+    val v15 = Snapshots.publishStaged(spark, t, staged)
+    check(t, v15, s"""
+      |$allNullable
+      |dir=D16
+      |stat:_rows|1|1|D16/part-*-c000.snappy.parquet
+      |stat:_rows|1|1|D16/part-*-c000.snappy.parquet
+      |stat:k|8|8|D16/part-*-c000.snappy.parquet
+      |stat:k|9|9|D16/part-*-c000.snappy.parquet
+      |stat:x|80|80|D16/part-*-c000.snappy.parquet
+      |stat:x|90|90|D16/part-*-c000.snappy.parquet""")
 
     // shallow clone of the live version, restore of the partitioned one
     val c1 = Snapshots.shallowClone(spark, t, c)
     check(c, c1, s"""
       |$allNullable
-      |dir=SRC/D14
-      |stat:_rows|1|1|SRC/D14/part-*-c000.snappy.parquet
-      |stat:_rows|1|1|SRC/D14/part-*-c000.snappy.parquet
-      |stat:k|8|8|SRC/D14/part-*-c000.snappy.parquet
-      |stat:k|9|9|SRC/D14/part-*-c000.snappy.parquet
-      |stat:x|80|80|SRC/D14/part-*-c000.snappy.parquet
-      |stat:x|90|90|SRC/D14/part-*-c000.snappy.parquet""")
-    val v14 = Snapshots.restore(spark, t, v7)
-    check(t, v14, s"""
+      |dir=SRC/D16
+      |stat:_rows|1|1|SRC/D16/part-*-c000.snappy.parquet
+      |stat:_rows|1|1|SRC/D16/part-*-c000.snappy.parquet
+      |stat:k|8|8|SRC/D16/part-*-c000.snappy.parquet
+      |stat:k|9|9|SRC/D16/part-*-c000.snappy.parquet
+      |stat:x|80|80|SRC/D16/part-*-c000.snappy.parquet
+      |stat:x|90|90|SRC/D16/part-*-c000.snappy.parquet""")
+    val v16 = Snapshots.restore(spark, t, v7)
+    check(t, v16, s"""
       |$allNullable
       |partcol=p
       |part:A=D6

@@ -85,6 +85,12 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitUpsert(spark, dir, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), "k")
     assert(Snapshots.read(spark, dir).orderBy("k").as[(Long, String)].collect()
       .toSeq === Seq((1L, "a"), (2L, "B"), (3L, "c")))
+    // a delta repeating a key leaves one row per key, picked as the
+    // bootstrap picks it
+    Snapshots.commitUpsert(spark, dir,
+      Seq((3L, "d"), (3L, "C"), (4L, "e"), (4L, "e")).toDF("k", "v"), "k")
+    assert(Snapshots.read(spark, dir).orderBy("k").as[(Long, String)].collect()
+      .toSeq === Seq((1L, "a"), (2L, "B"), (3L, "C"), (4L, "e")))
   }
 
   test("tryClaim is a CAS: exactly one claimant of a version number wins") {
@@ -142,7 +148,7 @@ class SnapshotsSpec extends SparkSpec {
       (1L, "F", 10.0), (2L, "F", 20.0),
       (3L, "O", 30.0), (4L, "O", 40.0),
       (5L, "P", 50.0)).toDF("k", "status", "amount")
-    val v1 = Snapshots.commitOverwritePartitioned(spark, dir, base, "status")
+    val v1 = Snapshots.commitOverwrite(spark, dir, base, partCol = "status")
     assert(v1 === "v00000001")
     assert(Snapshots.read(spark, dir).count() === 5)
     val before = fileStates(dir, "d-")
@@ -179,8 +185,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("partitioned read-modify-write also loses loudly to an interleaved commit") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir,
-      Seq((1L, "F", 1.0)).toDF("k", "status", "amount"), "status")
+    Snapshots.commitOverwrite(spark, dir,
+      Seq((1L, "F", 1.0)).toDF("k", "status", "amount"), partCol = "status")
     val stale = Snapshots.currentVersion(spark, dir).get
     Snapshots.commitMergePartitioned(spark, dir,
       Seq((2L, "F", 2.0)).toDF("k", "status", "amount"), "k", "status")
@@ -193,9 +199,9 @@ class SnapshotsSpec extends SparkSpec {
 
   test("version diff labels added/removed/changed; manifest-pruned diff equals the naive one") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
+    Snapshots.commitOverwrite(spark, dir, Seq(
       (1L, "F", 10.0), (2L, "F", 20.0), (3L, "O", 30.0),
-      (5L, "P", 50.0)).toDF("k", "status", "amount"), "status")
+      (5L, "P", 50.0)).toDF("k", "status", "amount"), partCol = "status")
     // v2: update k=2, insert k=6 (F), insert a brand-new partition X;
     // O and P untouched → their manifest entries (and files) unchanged
     Snapshots.commitMergePartitioned(spark, dir, Seq(
@@ -246,8 +252,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("compact consolidates a merge chain into one data dir so vacuum can reclaim it") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
-      (1L, "F", 1.0), (2L, "O", 2.0), (3L, "P", 3.0)).toDF("k", "status", "amount"), "status")
+    Snapshots.commitOverwrite(spark, dir, Seq(
+      (1L, "F", 1.0), (2L, "O", 2.0), (3L, "P", 3.0)).toDF("k", "status", "amount"), partCol = "status")
     (1 to 3).foreach(i => Snapshots.commitMergePartitioned(spark, dir,
       Seq((1L, "F", i * 10.0), (10L + i, "O", i.toDouble))
         .toDF("k", "status", "amount"), "k", "status"))
@@ -278,9 +284,9 @@ class SnapshotsSpec extends SparkSpec {
 
   test("cross-partition key move: stale row is deleted, key never duplicated") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
+    Snapshots.commitOverwrite(spark, dir, Seq(
       (1L, "F", 10.0), (2L, "F", 20.0), (3L, "O", 30.0)).toDF("k", "status", "amount"),
-      "status")
+      partCol = "status")
     // key 2 MOVES F→O (the dimension-attribute move): partition F is
     // not in the delta's partition set, yet its stale row must go
     Snapshots.commitMergePartitioned(spark, dir,
@@ -296,8 +302,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("key move that empties a partition drops it from the manifest") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
-      (1L, "F", 10.0), (5L, "P", 50.0)).toDF("k", "status", "amount"), "status")
+    Snapshots.commitOverwrite(spark, dir, Seq(
+      (1L, "F", 10.0), (5L, "P", 50.0)).toDF("k", "status", "amount"), partCol = "status")
     // P's only row moves to F → P must vanish from manifest and reads
     val v2 = Snapshots.commitMergePartitioned(spark, dir,
       Seq((5L, "F", 55.0)).toDF("k", "status", "amount"), "k", "status")
@@ -311,8 +317,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("no key moves → untouched partitions still never rewritten (byte-identity preserved)") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
-      (1L, "F", 10.0), (3L, "O", 30.0)).toDF("k", "status", "amount"), "status")
+    Snapshots.commitOverwrite(spark, dir, Seq(
+      (1L, "F", 10.0), (3L, "O", 30.0)).toDF("k", "status", "amount"), partCol = "status")
     val before = fileStates(dir, "d-")
     Snapshots.commitMergePartitioned(spark, dir,
       Seq((1L, "F", 11.0)).toDF("k", "status", "amount"), "k", "status")
@@ -397,10 +403,10 @@ class SnapshotsSpec extends SparkSpec {
 
   test("shallow clone carries file stats: skipping still prunes source files from the clone") {
     val src = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, src,
+    Snapshots.commitOverwrite(spark, src,
       spark.range(1, 101).selectExpr("id AS k", "CASE WHEN id <= 50 THEN 'L' ELSE 'H' END AS p",
         "CAST(id AS DOUBLE) AS amount"),
-      "p", statsCols = Seq("k"))
+      partCol = "p", statsCols = Seq("k"))
     val tgt = freshDir()
     Snapshots.shallowClone(spark, src, tgt)
     val pruned = Snapshots.readVersionPruned(spark, tgt, "v00000001",
@@ -506,7 +512,7 @@ class SnapshotsSpec extends SparkSpec {
     val dir = freshDir()
     val hostile = Seq((1L, "a=b", 1.0), (2L, "x\ny", 2.0), (3L, "c:d%e", 3.0))
       .toDF("k", "status", "amount")
-    val v1 = Snapshots.commitOverwritePartitioned(spark, dir, hostile, "status")
+    val v1 = Snapshots.commitOverwrite(spark, dir, hostile, partCol = "status")
     assert(Snapshots.readVersion(spark, dir, v1).orderBy("k")
       .select(col("k"), col("status"))
       .as[(Long, String)].collect().toSeq
@@ -520,8 +526,8 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.vacuum(spark, dir, keep = 1, orphanGraceMs = 0L)
     assert(Snapshots.read(spark, dir).count() === 3)
     intercept[IllegalArgumentException] {
-      Snapshots.commitOverwritePartitioned(spark, freshDir(),
-        Seq((1L, "", 1.0)).toDF("k", "status", "amount"), "status")
+      Snapshots.commitOverwrite(spark, freshDir(),
+        Seq((1L, "", 1.0)).toDF("k", "status", "amount"), partCol = "status")
     }
   }
 
@@ -569,8 +575,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("add-column evolution: partitioned merge carries a new column; untouched partitions read typed NULLs") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
-      (1L, "F", 10.0), (3L, "O", 30.0)).toDF("k", "status", "amount"), "status")
+    Snapshots.commitOverwrite(spark, dir, Seq(
+      (1L, "F", 10.0), (3L, "O", 30.0)).toDF("k", "status", "amount"), partCol = "status")
     // delta adds a `note` column, touching only F — O's files predate
     // the column and are NOT rewritten
     val before = fileStates(dir, "d-")
@@ -656,7 +662,7 @@ class SnapshotsSpec extends SparkSpec {
     val base = (1L to 300L).map(k => (k, if (k <= 200) "F" else "O", k.toDouble))
       .toDF("k", "status", "amount")
       .repartitionByRange(3, col("k"))
-    Snapshots.commitOverwritePartitioned(spark, dir, base, "status",
+    Snapshots.commitOverwrite(spark, dir, base, partCol = "status",
       statsCols = Seq("k"))
     // merge touches O only; F's stats must carry forward verbatim
     val v2 = Snapshots.commitMergePartitioned(spark, dir,
@@ -688,7 +694,7 @@ class SnapshotsSpec extends SparkSpec {
     // speed detection up but never miss a move.
     val base = (1L to 300L).map(k => (k, if (k % 3 == 0) "O" else "F", k.toDouble))
       .toDF("k", "status", "amount").repartitionByRange(3, col("k"))
-    Snapshots.commitOverwritePartitioned(spark, dir, base, "status",
+    Snapshots.commitOverwrite(spark, dir, base, partCol = "status",
       statsCols = Seq("k"))
     // key 150 (F) moves to O; delta touches only O
     val v2 = Snapshots.commitMergePartitioned(spark, dir,
@@ -735,8 +741,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("empty delta merge is a no-op (no new version published)") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir,
-      Seq((1L, "F", 1.0)).toDF("k", "status", "amount"), "status")
+    Snapshots.commitOverwrite(spark, dir,
+      Seq((1L, "F", 1.0)).toDF("k", "status", "amount"), partCol = "status")
     val v = Snapshots.commitMergePartitioned(spark, dir,
       Seq.empty[(Long, String, Double)].toDF("k", "status", "amount"),
       "k", "status")
@@ -747,8 +753,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("key move into a brand-new partition deletes the stale row too") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
-      (1L, "F", 10.0), (2L, "F", 20.0)).toDF("k", "status", "amount"), "status")
+    Snapshots.commitOverwrite(spark, dir, Seq(
+      (1L, "F", 10.0), (2L, "F", 20.0)).toDF("k", "status", "amount"), partCol = "status")
     // key 2 moves to partition X which does not exist yet
     Snapshots.commitMergePartitioned(spark, dir,
       Seq((2L, "X", 99.0)).toDF("k", "status", "amount"), "k", "status")
@@ -773,31 +779,43 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("compactZOrdered: 2D box reads prune on BOTH raw columns, results exact") {
-    val dir = freshDir()
     // committed in x-major order: without re-clustering, every file
     // spans the full y domain and a y-filter prunes nothing
     val grid = (for { x <- 0L to 63L; y <- 0L to 63L } yield (x, y, x * 64 + y))
       .toDF("x", "y", "payload").repartitionByRange(16, col("x"))
-    Snapshots.commitOverwrite(spark, dir, grid)
-    val cv = Snapshots.compactZOrdered(spark, dir, "x", "y", numFiles = 16)
-    // the z-clustered rewrite preserves content exactly
-    assert(Snapshots.readVersion(spark, dir, cv).count() === 64 * 64)
+      .withColumn("band", when(col("x") < 32, "lo").otherwise("hi"))
     def box(q: org.apache.spark.sql.DataFrame) = q.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.relation.location.inputFiles.toSeq
     }.flatten.distinct.size
-    val read = Snapshots.readVersionPrunedMulti(spark, dir, cv, Seq(
-      ("x", BigDecimal(8), BigDecimal(15)), ("y", BigDecimal(40), BigDecimal(47))))
-    assert(read.count() === 64)
-    assert(read.agg(sum(col("payload"))).head.getLong(0)
-      === (for { x <- 8L to 15L; y <- 40L to 47L } yield x * 64 + y).sum)
-    assert(box(read) < 16, "2D box read should not open every file")
+    // whole-table, and partitioned by band: the Z-order keeps the layout
+    for (partCol <- Seq("", "band")) {
+      val dir = freshDir()
+      Snapshots.commitOverwrite(spark, dir, grid, partCol = partCol)
+      val cv = Snapshots.compactZOrdered(spark, dir, "x", "y", numFiles = 16)
+      assert(Snapshots.readManifest(spark, dir, cv).partCol === partCol)
+      // the z-clustered rewrite preserves content exactly
+      assert(Snapshots.readVersion(spark, dir, cv).count() === 64 * 64)
+      val read = Snapshots.readVersionPrunedMulti(spark, dir, cv, Seq(
+        ("x", BigDecimal(8), BigDecimal(15)), ("y", BigDecimal(40), BigDecimal(47))))
+      assert(read.count() === 64)
+      assert(read.agg(sum(col("payload"))).head.getLong(0)
+        === (for { x <- 8L to 15L; y <- 40L to 47L } yield x * 64 + y).sum)
+      val files = box(Snapshots.readVersion(spark, dir, cv))
+      assert(files >= 16 && box(read) < 16, s"2D box read opened ${box(read)} of $files files")
+      if (partCol.nonEmpty) {
+        // the table is still partitioned by band, so a merge lands
+        Snapshots.commitMergePartitioned(spark, dir,
+          Seq((1L, 1L, -1L, "lo")).toDF("x", "y", "payload", "band"), "payload", "band")
+        assert(Snapshots.read(spark, dir).count() === 64 * 64 + 1)
+      }
+    }
   }
 
   test("partition-scoped vacuum never deletes a data dir the live manifest still references") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
-      (1L, "F", 1.0), (2L, "O", 2.0)).toDF("k", "status", "amount"), "status")
+    Snapshots.commitOverwrite(spark, dir, Seq(
+      (1L, "F", 1.0), (2L, "O", 2.0)).toDF("k", "status", "amount"), partCol = "status")
     // 3 partition-F-only merge commits — the ORIGINAL dir still owns O
     (1 to 3).foreach(i => Snapshots.commitMergePartitioned(spark, dir,
       Seq((1L, "F", i.toDouble)).toDF("k", "status", "amount"), "k", "status"))
@@ -817,7 +835,7 @@ class SnapshotsSpec extends SparkSpec {
       (1L, "F", 10.0), (2L, "F", 20.0),
       (3L, "O", 30.0), (4L, "O", 40.0),
       (5L, "P", 50.0)).toDF("k", "status", "amount")
-    Snapshots.commitOverwritePartitioned(spark, dir, base, "status")
+    Snapshots.commitOverwrite(spark, dir, base, partCol = "status")
   }
 
   test("commitDelete rewrites only partitions with matches; untouched files byte-identical") {
@@ -851,7 +869,14 @@ class SnapshotsSpec extends SparkSpec {
     val v4 = Snapshots.commitDelete(spark, dir,
       when(col("k") === 1L, lit(null).cast("boolean")).otherwise(col("k") > 100L))
     assert(v4 === v2)
+    // a version with no partition left cannot be published, whether a
+    // delete or an empty overwrite empties the table
+    intercept[IllegalArgumentException] { Snapshots.commitDelete(spark, dir, lit(true)) }
+    intercept[IllegalArgumentException] {
+      Snapshots.commitOverwrite(spark, dir, Snapshots.read(spark, dir).limit(0), partCol = "status")
+    }
     assert(Snapshots.currentVersion(spark, dir) === Some(v2))
+    assert(Snapshots.read(spark, dir).count() === 4)
   }
 
   test("commitDelete on a non-partitioned table; stats-bounded detection never under-deletes in range") {
@@ -1124,9 +1149,9 @@ class SnapshotsSpec extends SparkSpec {
   test("forget: after DV delete + compact + vacuum the forgotten bytes are physically gone") {
     val dir = freshDir()
     val sentinel = "FORGET_ME_7f3a9c"
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
+    Snapshots.commitOverwrite(spark, dir, Seq(
       (1L, "F", "keep-a"), (2L, "F", sentinel),
-      (3L, "O", "keep-b")).toDF("k", "status", "payload"), "status")
+      (3L, "O", "keep-b")).toDF("k", "status", "payload"), partCol = "status")
     // a merge creates a second version still carrying the sentinel
     Snapshots.commitMergePartitioned(spark, dir,
       Seq((4L, "O", "keep-c")).toDF("k", "status", "payload"), "k", "status")
@@ -1196,9 +1221,9 @@ class SnapshotsSpec extends SparkSpec {
 
   test("changeFeed emits insert/delete/update pre+post rows; equals the diff it derives from") {
     val dir = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dir, Seq(
+    Snapshots.commitOverwrite(spark, dir, Seq(
       (1L, "F", 10.0), (2L, "F", 20.0), (3L, "O", 30.0),
-      (5L, "P", 50.0)).toDF("k", "status", "amount"), "status")
+      (5L, "P", 50.0)).toDF("k", "status", "amount"), partCol = "status")
     // k=2 changed, k=6 inserted (F); k=5 deleted (P emptied)
     Snapshots.commitMergePartitioned(spark, dir,
       Seq((2L, "F", 99.0), (6L, "F", 60.0)).toDF("k", "status", "amount"), "k", "status")
@@ -1217,7 +1242,7 @@ class SnapshotsSpec extends SparkSpec {
     val dir = freshDir()
     val base = Seq((1L, "A", 1.0), (2L, "A", 2.0), (3L, "B", 3.0),
       (4L, "B", 4.0), (5L, "B", 5.0), (6L, "C", 6.0)).toDF("k", "p", "v")
-    Snapshots.commitOverwritePartitioned(spark, dir, base, "p",
+    Snapshots.commitOverwrite(spark, dir, base, partCol = "p",
       statsCols = Seq(Snapshots.RowCountCol, "v"))
     val v1 = Snapshots.currentVersion(spark, dir).get
     assert(counts(dir, v1) === Map("A" -> 2L, "B" -> 3L, "C" -> 1L))
@@ -1232,7 +1257,7 @@ class SnapshotsSpec extends SparkSpec {
   test("metadataRowCounts opens ZERO data files: still answers after they are physically gone") {
     val dir = freshDir()
     val base = Seq((1L, "A", 1.0), (2L, "A", 2.0), (3L, "B", 3.0)).toDF("k", "p", "v")
-    Snapshots.commitOverwritePartitioned(spark, dir, base, "p",
+    Snapshots.commitOverwrite(spark, dir, base, partCol = "p",
       statsCols = Seq(Snapshots.RowCountCol))
     val v1 = Snapshots.currentVersion(spark, dir).get
     // vaporize every parquet data file; only the commit log remains
@@ -1253,16 +1278,16 @@ class SnapshotsSpec extends SparkSpec {
 
   test("metadataRowCounts refuses tables without _rows stats or with pending DVs") {
     val noStats = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, noStats,
-      Seq((1L, "A", 1.0)).toDF("k", "p", "v"), "p")
+    Snapshots.commitOverwrite(spark, noStats,
+      Seq((1L, "A", 1.0)).toDF("k", "p", "v"), partCol = "p")
     val v = Snapshots.currentVersion(spark, noStats).get
     val e1 = intercept[IllegalArgumentException] {
       Snapshots.metadataRowCounts(spark, noStats, v)
     }
     assert(e1.getMessage.contains(Snapshots.RowCountCol))
     val dv = freshDir()
-    Snapshots.commitOverwritePartitioned(spark, dv,
-      Seq((1L, "A", 1.0), (2L, "A", 2.0)).toDF("k", "p", "v"), "p",
+    Snapshots.commitOverwrite(spark, dv,
+      Seq((1L, "A", 1.0), (2L, "A", 2.0)).toDF("k", "p", "v"), partCol = "p",
       statsCols = Seq(Snapshots.RowCountCol))
     Snapshots.commitDeleteVector(spark, dv, Seq(1L).toDF("k"), "k")
     val vdv = Snapshots.currentVersion(spark, dv).get
@@ -1279,10 +1304,10 @@ class SnapshotsSpec extends SparkSpec {
   test("partition evolution: each version owns its layout; pinned readers keep the old one") {
     val dir = freshDir()
     val rows = Seq((1L, "A", "x"), (2L, "A", "y"), (3L, "B", "x")).toDF("k", "p1", "p2")
-    Snapshots.commitOverwritePartitioned(spark, dir, rows, "p1",
-      statsCols = Seq(Snapshots.RowCountCol))
-    Snapshots.commitOverwritePartitioned(spark, dir, rows, "p2",
-      statsCols = Seq(Snapshots.RowCountCol))
+    Snapshots.commitOverwrite(spark, dir, rows, partCol = "p1",
+      statsCols = Seq(Snapshots.RowCountCol, "k"))
+    // the stats columns v1 tracks carry into the new layout
+    Snapshots.commitOverwrite(spark, dir, rows, partCol = "p2")
     // both layouts read the same logical rows
     assert(Snapshots.readVersion(spark, dir, "v00000001")
       .collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L))
@@ -1295,6 +1320,12 @@ class SnapshotsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Snapshots.metadataPartitionDrift(spark, dir, "v00000001", "v00000002")
     }
+    def tracked(v: String) = Snapshots.readManifest(spark, dir, v).stats.map(_.col).distinct.sorted
+    assert(tracked("v00000002") === Seq(Snapshots.RowCountCol, "k"))
+    // a carried column that becomes the partition column drops out
+    Snapshots.commitOverwrite(spark, dir, rows, partCol = "k")
+    assert(tracked("v00000003") === Seq(Snapshots.RowCountCol))
+    assert(counts(dir, "v00000003") === Map("1" -> 1L, "2" -> 1L, "3" -> 1L))
   }
 
   test("WAP: staged data is invisible to every reader until published") {

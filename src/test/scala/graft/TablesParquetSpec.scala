@@ -178,8 +178,8 @@ class TablesParquetSpec extends SparkSpec {
 
   test("Snapshots reads after an add-column commit, and basePath reads over dirs whose footers differ") {
     val dir = SparkSpec.tempDir("graft_tables_snap").toString
-    Snapshots.commitOverwritePartitioned(spark, dir,
-      Seq((1L, "F", 10.0), (3L, "O", 30.0), (5L, "P", 50.0)).toDF("k", "status", "amount"), "status")
+    Snapshots.commitOverwrite(spark, dir,
+      Seq((1L, "F", 10.0), (3L, "O", 30.0), (5L, "P", 50.0)).toDF("k", "status", "amount"), partCol = "status")
     val v2 = Snapshots.commitMergePartitioned(spark, dir,
       Seq((1L, "F", 11.0, "updated")).toDF("k", "status", "amount", "note"), "k", "status")
     val m = Snapshots.readManifest(spark, dir, v2)
