@@ -109,7 +109,7 @@ object SparkEntry {
       val o = ordersPriced(s, d)
       graft.sources.Snapshots.commitOverwrite(s, path,
         o.filter(col("o_orderkey") % 3 =!= 0), partCol = "o_orderstatus")
-      graft.sources.Snapshots.commitMergePartitioned(s, path, q79Delta(o),
+      graft.sources.Snapshots.commitMerge(s, path, q79Delta(o),
         "o_orderkey", "o_orderstatus")
     }
 
@@ -1181,7 +1181,7 @@ object SparkEntry {
       }
       val delta = o.filter(col("o_orderkey") % 3 === 0 || col("o_orderkey") % 97 === 0)
         .withColumn("price", col("price") + lit(50).cast(DecimalType(18, 2)))
-      graft.sources.Snapshots.commitUpsert(s, table, delta, "o_orderkey")
+      graft.sources.Snapshots.commitMerge(s, table, delta, "o_orderkey")
       val out = priceTotalsBy("o_orderstatus")(graft.sources.Snapshots.read(s, table))
       graft.sources.Snapshots.vacuum(s, table) // live version is protected
       out
@@ -1258,7 +1258,7 @@ object SparkEntry {
       val o = ordersPriced(s, d)
       val table = ordersByStatus("snapp", s, d)
       val delta = q79Delta(o)
-      graft.sources.Snapshots.commitMergePartitioned(s, table, delta,
+      graft.sources.Snapshots.commitMerge(s, table, delta,
         "o_orderkey", "o_orderstatus")
       val out = priceTotalsBy("o_orderstatus")(graft.sources.Snapshots.read(s, table))
       graft.sources.Snapshots.vacuum(s, table) // manifests bounded across reps
@@ -2184,10 +2184,10 @@ object SparkEntry {
         val bad = o.filter(col("o_orderkey") % 2 === 1)
           .withColumn("price", -col("price"))
         val refused =
-          try { graft.sources.Snapshots.commitUpsert(s, path, bad, "o_orderkey"); false }
+          try { graft.sources.Snapshots.commitMerge(s, path, bad, "o_orderkey"); false }
           catch { case _: graft.sources.CheckConstraintViolationException => true }
         require(refused, "q125: violating commit was NOT refused")
-        graft.sources.Snapshots.commitUpsert(s, path,
+        graft.sources.Snapshots.commitMerge(s, path,
           o.filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 3 === 0),
           "o_orderkey")
       }
@@ -2409,12 +2409,12 @@ object SparkEntry {
       val root = fixture("snapjoin", s, d, "orders") { path =>
         graft.sources.Snapshots.commitOverwrite(s, s"$path/a",
           o.filter(col("o_orderkey") % 3 =!= 0))
-        graft.sources.Snapshots.commitUpsert(s, s"$path/a",
+        graft.sources.Snapshots.commitMerge(s, s"$path/a",
           o.filter(col("o_orderkey") % 3 =!= 0 && col("o_orderkey") % 97 === 0)
             .withColumn("price", col("price") + lit(50).cast(D182))
             .unionByName(o.filter(col("o_orderkey") % 15 === 0)), "o_orderkey")
         graft.sources.Snapshots.commitOverwrite(s, s"$path/b", c)
-        graft.sources.Snapshots.commitUpsert(s, s"$path/b",
+        graft.sources.Snapshots.commitMerge(s, s"$path/b",
           c.filter(col("c_custkey") % 13 === 0)
             .withColumn("c_nationkey", (col("c_nationkey") + 7) % 25), "c_custkey")
       }

@@ -172,8 +172,9 @@ object Dims {
     * write uses dynamic partition overwrite, which replaces exactly
     * the partitions present in the merged frame. Single-writer,
     * crash-safe per partition (Spark stages each partition dir); a
-    * transaction-log format (Delta/Iceberg MERGE) is the
-    * concurrent-writer answer.
+    * transaction-log format ([[graft.sources.Snapshots.commitMerge]],
+    * Delta/Iceberg MERGE) is the concurrent-writer answer. A missing
+    * `basePath` is bootstrapped from the deduplicated batch.
     *
     * Returns the touched partition values. */
   def partitionScopedMerge(spark: SparkSession, basePath: String,
@@ -182,6 +183,14 @@ object Dims {
     val touchedRaw = touchedPartitions(incoming, partCol, "partitionScopedMerge: incoming batch")
     // empty batch: a no-op — skip the scan/merge/overwrite machinery
     if (touchedRaw.isEmpty) return Nil
+    // no table yet: the deduplicated batch bootstraps it, past the
+    // same NULL/empty partition refusal as every later batch
+    val baseDir = new org.apache.hadoop.fs.Path(basePath)
+    val fs = baseDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(baseDir)) {
+      graft.sources.Sinks.writePartitioned(upsert(None, incoming, key, tieBreak), basePath, partCol)
+      return touchedRaw.sorted
+    }
     // one read of the base serves the key-type check, the moved-key
     // scan and the merge
     val table = Tables.parquet(spark, Seq(basePath))
@@ -215,13 +224,13 @@ object Dims {
     // partitions would fork the table into per-partition schemas and
     // break non-mergeSchema reads. EXTRA incoming columns are refused
     // loudly — silently dropping them would look like data loss; the
-    // snapshot commit log (Snapshots.commitMergePartitioned) is the
-    // add-column evolution path
+    // snapshot commit log (Snapshots.commitMerge) is the add-column
+    // evolution path
     val extras = incoming.columns.filterNot(c => base.columns.contains(c))
     require(extras.isEmpty,
       s"partitionScopedMerge: incoming batch has columns ${extras.mkString(", ")} " +
         "absent from the base table; plain-parquet merges do not evolve schemas — " +
-        "use Snapshots.commitMergePartitioned for add-column evolution")
+        "use Snapshots.commitMerge for add-column evolution")
     val aligned = incoming.select(
       base.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
     val merged = upsert(Some(base), aligned, key, tieBreak)
@@ -231,7 +240,6 @@ object Dims {
     // touched partitions' rows pass through it)
     val staging = s"$basePath._merge_staging"
     val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       merged.write.mode("overwrite").parquet(staging)
       val stagedBack = Tables.parquet(spark, Seq(staging))
@@ -240,8 +248,8 @@ object Dims {
       // dynamic overwrite only replaces partitions PRESENT in the
       // written frame, so the stale dir must be dropped explicitly.
       // (Not atomic with the overwrite — this operator is documented
-      // single-writer; Snapshots.commitMergePartitioned is the
-      // manifest-atomic answer.)
+      // single-writer; Snapshots.commitMerge is the manifest-atomic
+      // answer.)
       val present = stagedBack.select(col(partCol).cast("string")).distinct()
         .collect().map(_.getString(0)).toSet
       graft.sources.Sinks.dropPartitions(spark, basePath, partCol, touched.filterNot(present))

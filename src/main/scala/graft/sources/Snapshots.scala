@@ -22,7 +22,7 @@ class CheckConstraintViolationException(msg: String) extends IOException(msg)
   * also reads or writes, so replaying the delta against the new base
   * would not be serializable. The caller must re-derive its delta from
   * the live snapshot. Distinct from its parent, which only signals a
-  * version-number race that [[Snapshots.commitMergePartitionedOcc]]
+  * version-number race that [[Snapshots.commitMergeOcc]]
   * resolves automatically when the write sets are disjoint. */
 class SnapshotWriteConflictException(msg: String)
   extends ConcurrentSnapshotCommitException(msg)
@@ -79,7 +79,8 @@ class SnapshotWriteConflictException(msg: String)
   * orphan sweep), never a partial version.
   *
   * Write paths: [[commitOverwrite]] publishes either layout over
-  * either layout. [[commitDelete]], [[commitUpdate]], [[compact]] and
+  * either layout. [[commitMerge]] merges into either layout by one
+  * rule and keeps it. [[commitDelete]], [[commitUpdate]], [[compact]] and
   * [[compactZOrdered]] differ only in the partitions they touch and
   * the transform they apply; one rewrite path republishes those in
   * the manifest's own layout, schema and tracked stats columns.
@@ -657,7 +658,7 @@ object Snapshots {
     * [[writeDataDir]], then [[manifestFor]] the new dir. */
   private def writeVersion(spark: SparkSession, tableDir: String, df: DataFrame,
                            base: Option[Manifest], schemaJson: Option[String],
-                           statsCols: Seq[String], partCol: String = "",
+                           statsCols: Seq[String], partCol: String,
                            touched: Seq[String] = Nil): Manifest =
     manifestFor(spark, tableDir, writeDataDir(spark, tableDir, df, partCol), base,
       schemaJson, statsCols, partCol, touched)
@@ -694,51 +695,6 @@ object Snapshots {
     val added = delta.schema.fields.filterNot(f => sch.fieldNames.contains(f.name))
       .map(f => col(f.name))
     delta.select((declared ++ added).toSeq: _*)
-  }
-
-  /** Merge `delta` into the live snapshot by `key` (delta wins on key
-    * collision, unmatched delta rows are inserts) and publish the
-    * result as a new version; the whole table is rewritten (use
-    * [[commitMergePartitioned]] when deltas are partition-local). On an
-    * empty table the delta becomes v1.
-    *
-    * Read-modify-write: the claim targets exactly base+1 (or
-    * `expectedVersion`+1 when the caller pins the snapshot it read) —
-    * if another writer commits in between, this throws
-    * [[ConcurrentSnapshotCommitException]] and the caller re-runs.
-    *
-    * The anti-join keeps base rows whose key is absent from the delta;
-    * with a small delta Catalyst broadcasts its key set, so the base
-    * scan is map-only — one full-table write, zero full-table
-    * shuffles. */
-  def commitUpsert(spark: SparkSession, tableDir: String, delta: DataFrame,
-                   key: String, expectedVersion: Option[String] = None,
-                   statsCols: Seq[String] = Nil): String = {
-    val base = expectedVersion.orElse(currentVersion(spark, tableDir))
-    base match {
-      case None =>
-        // bootstrap is CAS-protected too: claim EXACTLY v1 (not
-        // retry-next-number) so of two concurrent first writers one
-        // fails loudly instead of silently hiding the other's rows
-        // behind a higher version; within-batch duplicate keys are
-        // merged the same way a non-empty-table upsert would
-        val deduped = graft.etl.Dims.upsert(None, delta, key)
-        claimExactly(spark, tableDir, 1,
-          writeVersion(spark, tableDir, deduped, None, Some(deduped.schema.json), statsCols))
-      case Some(v) =>
-        val baseDf = readVersion(spark, tableDir, v)
-        // one row per key, merged as in the bootstrap; the dedupe is
-        // delta-sized, so the base scan stays map-only
-        val aligned = graft.etl.Dims.upsert(None, evolveDeltaTo(baseDf.schema, delta), key)
-        val merged = baseDf
-          .join(aligned.select(col(key)), Seq(key), "left_anti")
-          // allowMissingColumns: an ADDED delta column reads as NULL on
-          // the surviving base rows (add-column schema evolution)
-          .unionByName(aligned, allowMissingColumns = true)
-        claimExactlyAfter(spark, tableDir, v,
-          writeVersion(spark, tableDir, merged, Some(readManifest(spark, tableDir, v)),
-            Some(merged.schema.json), statsCols))
-    }
   }
 
   /** Anti-join away the deletion-vector keys targeting rows that were
@@ -779,65 +735,63 @@ object Snapshots {
       }.reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 
-  /** Partition-scoped merge commit: upsert `delta` by `key` into ONLY
-    * the partitions it touches, inside a NEW data dir, and publish a
-    * manifest where untouched partitions keep referencing their
-    * existing files — which therefore stay byte-identical across the
-    * commit (proved in SnapshotsSpec), while the reader-atomic
-    * single-claim publish is unchanged. Commit cost scales with the
-    * delta: at 100 TB, a daily one-partition delta rewrites one
-    * partition, not the table.
+  /** MERGE `delta` into the live snapshot by `key` (INSERT … ON
+    * CONFLICT DO UPDATE) and publish the result as a new version, in
+    * the table's own layout: `partCol` must name the live version's
+    * partition column ("" for a whole-table version), so a merge never
+    * changes the layout. One rule on both layouts: the delta is
+    * deduplicated to one row per key (`tieBreak`, as [[graft.etl.Dims.upsert]]
+    * picks), a base row survives if and only if the delta lacks its
+    * key, and every delta row is written. An empty delta publishes
+    * nothing and returns the live version. On an empty table the
+    * deduplicated delta becomes v1, claimed exactly (of two concurrent
+    * first writers one fails loudly).
     *
-    * Cross-partition key moves are handled with full MERGE semantics
-    * (delete-and-reinsert): a delta row whose key already lives in a
-    * DIFFERENT partition pulls that partition into the rewrite and the
-    * stale row is dropped, so a key is never duplicated across
-    * partitions (proved in SnapshotsSpec). The detection scan reads
-    * only the (key, partCol) columns of untouched partitions — when no
-    * key moves (the daily-delta common case) nothing extra is
-    * rewritten and untouched files stay byte-identical.
+    * Only the slice the delta touches is rewritten, into a new data
+    * dir: the whole table of a whole-table version; of a partitioned
+    * one, the delta's partitions plus every partition holding a key
+    * the delta moves to another partition (delete-and-reinsert, so a
+    * key is never duplicated across partitions). Untouched partitions
+    * keep referencing their existing files byte-identically, so at
+    * 100 TB a daily one-partition delta rewrites one partition, not
+    * the table. The moved-key scan reads only (key, partCol) of the
+    * untouched partitions, pruned by the key's file stats when the
+    * manifest tracks them. The anti-join broadcasts a small delta's
+    * key set, so the slice scan is map-only.
     *
-    * Read-modify-write CAS semantics as [[commitUpsert]]. */
-  def commitMergePartitioned(spark: SparkSession, tableDir: String,
-                             delta: DataFrame, key: String, partCol: String,
-                             tieBreak: Seq[Column] = Nil,
-                             expectedVersion: Option[String] = None,
-                             statsCols: Seq[String] = Nil): String = {
-    val base = expectedVersion.orElse(currentVersion(spark, tableDir))
-    base match {
+    * Read-modify-write: the claim targets exactly base+1 (or
+    * `expectedVersion`+1 when the caller pins the snapshot it read) —
+    * if another writer commits in between, this throws
+    * [[ConcurrentSnapshotCommitException]] and the caller re-runs. */
+  def commitMerge(spark: SparkSession, tableDir: String, delta: DataFrame, key: String,
+                  partCol: String = "", tieBreak: Seq[Column] = Nil,
+                  expectedVersion: Option[String] = None,
+                  statsCols: Seq[String] = Nil): String =
+    expectedVersion.orElse(currentVersion(spark, tableDir)) match {
       case None =>
-        // bootstrap claims EXACTLY v1 (CAS) — see commitUpsert — and
-        // merges within-batch duplicate keys like any later commit
         val deduped = graft.etl.Dims.upsert(None, delta, key, tieBreak)
         claimExactly(spark, tableDir, 1, writeVersion(spark, tableDir, deduped, None,
           Some(deduped.schema.json), statsCols, partCol))
       case Some(v) =>
         val m = readManifest(spark, tableDir, v)
-        require(m.dataDir.isEmpty && m.partCol == partCol,
-          s"commitMergePartitioned: version $v of $tableDir is not partitioned by $partCol")
-        val touchedRaw = graft.etl.Dims.touchedPartitions(delta, partCol,
-          "commitMergePartitioned: delta")
-        // empty delta: a no-op — don't publish an identical version
+        require(m.partCol == partCol, s"commitMerge: version $v of $tableDir is not " +
+          s"partitioned by '$partCol' (its partition column: '${m.partCol}')")
+        val touchedRaw =
+          if (partCol.isEmpty) partitionsOf(m, delta)
+          else graft.etl.Dims.touchedPartitions(delta, partCol, "commitMerge: delta")
         if (touchedRaw.isEmpty) return v
-        val owned = m.partitions.toMap
         // Cross-partition key moves (a delta row carrying an existing
-        // key whose partition value CHANGED — the dimension-attribute
-        // move): the stale row lives in a partition the delta does not
-        // touch and must be deleted, or the table holds the key twice.
-        // Detect by scanning ONLY (key, partCol) of the untouched
-        // partitions — column pruning keeps this a narrow map-only
-        // read — semi-joined against the broadcast delta key set; any
-        // partition holding a moved key joins the touched set, and the
-        // global delta-wins upsert below then drops its stale rows
-        // (delete-and-reinsert, the Delta/Iceberg MERGE semantics).
-        val untouchedVals = owned.keys.toSeq.filterNot(touchedRaw.contains)
+        // key whose partition value CHANGED): the stale row lives in a
+        // partition the delta does not touch, which then joins the
+        // touched set so the anti-join below drops it. A whole-table
+        // version has no untouched partition.
+        val untouchedVals = m.partitions.map(_._1).filterNot(touchedRaw.contains)
         // When the manifest tracks file stats on the merge key, prune
         // the detection scan to files whose key range intersects the
         // delta's key range. This is SAFE: a stale row shares its key
         // with some delta row, so its file's [min,max] necessarily
         // contains a value inside [delta min, delta max] — a pruned
-        // file cannot hold a moved key. At 100 TB this turns the
-        // untouched scan into a handful of file opens.
+        // file cannot hold a moved key.
         val keyStats = m.stats.filter(_.col == key).map(s => s.relPath -> s).toMap
         val untouchedScan: Option[DataFrame] =
           if (untouchedVals.isEmpty) None
@@ -854,38 +808,28 @@ object Snapshots {
               else Some(readFilesByOwner(spark, new Path(tableDir), m, files))
             }
           }
-        val movedParts = untouchedScan match {
-          case None => Nil
-          case Some(unt) => graft.etl.Dims.movedPartitions(unt, delta, key, partCol)
-        }
+        val movedParts = untouchedScan.fold(Seq.empty[String])(
+          graft.etl.Dims.movedPartitions(_, delta, key, partCol))
         val touched = (touchedRaw ++ movedParts).distinct.sorted
-        val baseSubset = readSlice(spark, tableDir, m, touched)
-        // align the delta to the declared schema's exact column types
-        // (arithmetic widens decimals; a forked schema would break
-        // later reads); EXTRA delta columns are add-column evolution.
-        // The declared schema comes from the manifest (new manifests),
-        // falling back to the touched subset's physical schema
-        val declared = manifestSchema(m).orElse(baseSubset.map(_.schema))
-        val aligned = declared match {
-          case Some(sch) => evolveDeltaTo(sch, delta)
-          case None => delta
-        }
-        // pad the (conformed) base subset with the delta's added columns
-        // as typed NULLs so the in-partition merge unions cleanly
-        val paddedBase = baseSubset.map { b =>
-          aligned.schema.fields.filterNot(f => b.columns.contains(f.name))
-            .foldLeft(b)((df, f) => df.withColumn(f.name, lit(null).cast(f.dataType)))
-        }
-        val merged = graft.etl.Dims.upsert(paddedBase, aligned, key, tieBreak)
-        // a moved-from partition can end up EMPTY (every row moved
-        // out) and drops out of the manifest; data-skipping stats of
-        // files whose (dir, partition) the new manifest still
-        // references carry forward verbatim (immutable files, unchanged
-        // ranges); the new data dir gets a fresh delta-sized stats scan
+        val slice = readSlice(spark, tableDir, m, touched)
+        // the delta is cast to the declared schema's exact column types
+        // (arithmetic widens decimals; a forked schema would break later
+        // reads); EXTRA delta columns are add-column evolution. The
+        // declared schema is the manifest's, else the slice's
+        val declared = manifestSchema(m).orElse(slice.map(_.schema))
+        val aligned = graft.etl.Dims.upsert(None,
+          declared.fold(delta)(evolveDeltaTo(_, delta)), key, tieBreak)
+        // allowMissingColumns: an ADDED delta column reads as NULL on
+        // the surviving base rows
+        val merged = slice.fold(aligned)(
+          _.join(aligned.select(col(key)), Seq(key), "left_anti")
+            .unionByName(aligned, allowMissingColumns = true))
+        // a moved-from partition can end up EMPTY (every row moved out)
+        // and drops out of the manifest; stats of files the new
+        // manifest still references carry forward verbatim
         claimExactlyAfter(spark, tableDir, v, writeVersion(spark, tableDir, merged, Some(m),
           Some(merged.schema.json), statsCols, partCol, touched))
     }
-  }
 
   /** Partitions whose content differs between two versions, or None
     * when the range cannot be reasoned about partition-wise (an
@@ -914,7 +858,7 @@ object Snapshots {
     }
   }
 
-  /** [[commitMergePartitioned]] with Delta-style optimistic concurrency:
+  /** [[commitMerge]] with Delta-style optimistic concurrency:
     * on losing the CAS race, diff the winning commits' changed
     * partitions (manifest-only) against this merge's read+write set —
     * the delta's partitions plus any changed partition now holding one
@@ -927,19 +871,19 @@ object Snapshots {
     * never see each other": the conflict check costs two manifest reads
     * plus, only when partitions changed at all, a key semi-join bounded
     * by the changed partitions' size. */
-  def commitMergePartitionedOcc(spark: SparkSession, tableDir: String,
-                                delta: DataFrame, key: String, partCol: String,
-                                tieBreak: Seq[Column] = Nil,
-                                statsCols: Seq[String] = Nil,
-                                maxAttempts: Int = 5,
-                                expectedVersion: Option[String] = None): String = {
+  def commitMergeOcc(spark: SparkSession, tableDir: String,
+                     delta: DataFrame, key: String, partCol: String,
+                     tieBreak: Seq[Column] = Nil,
+                     statsCols: Seq[String] = Nil,
+                     maxAttempts: Int = 5,
+                     expectedVersion: Option[String] = None): String = {
     // `expectedVersion` pins the snapshot the delta was DERIVED from —
     // the conflict check then covers every commit that landed since,
     // not just ones racing the claim itself
     var base = expectedVersion.orElse(currentVersion(spark, tableDir))
     var attempt = 0
     while (true) {
-      try return commitMergePartitioned(spark, tableDir, delta, key, partCol,
+      try return commitMerge(spark, tableDir, delta, key, partCol,
         tieBreak, base, statsCols)
       catch {
         case e: SnapshotWriteConflictException => throw e
@@ -956,7 +900,7 @@ object Snapshots {
                 s"(${base.getOrElse("<empty>")} -> ${newBase.get}) conflicts with " +
                 "a partition-scoped merge; re-derive the delta from the live snapshot"))
           val ours = graft.etl.Dims.touchedPartitions(delta, partCol,
-            "commitMergePartitionedOcc: delta")
+            "commitMergeOcc: delta")
           val overlap = changed.intersect(ours)
           if (overlap.nonEmpty) throw new SnapshotWriteConflictException(
             s"Snapshots: concurrent commit ${newBase.get} on $tableDir changed " +
@@ -1029,7 +973,7 @@ object Snapshots {
     * ranges are NEVER deleted, so an over-narrow bound silently
     * under-deletes: it is the caller's contract, not a hint.
     *
-    * Read-modify-write CAS semantics as [[commitUpsert]]: concurrent
+    * Read-modify-write CAS semantics as [[commitMerge]]: concurrent
     * commit → [[ConcurrentSnapshotCommitException]], re-run. */
   def commitDelete(spark: SparkSession, tableDir: String, predicate: Column,
                    prunePreds: Seq[(String, BigDecimal, BigDecimal)] = Nil): String = {
@@ -1057,7 +1001,7 @@ object Snapshots {
     * is a no-op. NULL/empty partition-column results are refused
     * (same contract as every partitioned commit).
     *
-    * Read-modify-write CAS semantics as [[commitUpsert]]. */
+    * Read-modify-write CAS semantics as [[commitMerge]]. */
   def commitUpdate(spark: SparkSession, tableDir: String, predicate: Column,
                    sets: Seq[(String, Column)]): String = {
     require(sets.nonEmpty, "Snapshots.commitUpdate: no SET assignments")
@@ -1112,7 +1056,7 @@ object Snapshots {
     * deletes and merges; [[compact]] materializes the live rows and
     * clears them (the REWRITE step of the Delta DV lifecycle). All
     * DVs of a table must share one key column. Read-modify-write CAS
-    * semantics as [[commitUpsert]]. */
+    * semantics as [[commitMerge]]. */
   def commitDeleteVector(spark: SparkSession, tableDir: String, keys: DataFrame,
                          key: String): String = {
     val v = liveVersion(spark, tableDir, "commitDeleteVector")
@@ -1172,7 +1116,7 @@ object Snapshots {
     * readable until vacuumed, exactly like Delta's RESTORE. Restoring
     * a vacuumed version fails loudly in [[readManifest]]; restoring
     * the live version is a no-op. Read-modify-write CAS semantics as
-    * [[commitUpsert]] — a concurrent commit between resolving the
+    * [[commitMerge]] — a concurrent commit between resolving the
     * live version and the claim throws, re-run. */
   def restore(spark: SparkSession, tableDir: String, version: String): String = {
     val live = liveVersion(spark, tableDir, "restore")
@@ -1237,7 +1181,7 @@ object Snapshots {
     * single new dir, after which vacuum can reclaim the whole chain.
     * Readers are untouched until the one-claim publish (same protocol
     * as every commit); read-modify-write CAS semantics as
-    * [[commitUpsert]] — a racing committer makes this throw, re-run.
+    * [[commitMerge]] — a racing committer makes this throw, re-run.
     * Returns the new version name. */
   def compact(spark: SparkSession, tableDir: String): String = {
     val v = liveVersion(spark, tableDir, "compact")
@@ -1968,7 +1912,7 @@ object Snapshots {
     * names the SAME data dir in both manifests is byte-identical by
     * construction (data dirs are immutable) and is skipped without
     * reading a row. After a daily single-partition
-    * [[commitMergePartitioned]], diffing the two versions of a 100 TB
+    * [[commitMerge]], diffing the two versions of a 100 TB
     * table reads two copies of ONE partition — the manifest does the
     * partition pruning that a naive diff would pay a full-table
     * full-outer join for. */

@@ -12,7 +12,7 @@ import graft.sources.Snapshots
   * Structured Streaming sink over the batch operators it composes —
   * [[Dedup.incrementalLshFrom]] (index-vs-delta candidate pairs
   * without re-shingling the indexed corpus), [[Components.dropIds]]
-  * (within-batch keep-min-per-cluster), and [[Snapshots.commitUpsert]]
+  * (within-batch keep-min-per-cluster), and [[Snapshots.commitMerge]]
   * (the signature index as a reader-atomic CAS table).
   *
   * Exactly-once across restarts for free: foreachBatch may replay a
@@ -39,7 +39,8 @@ object DocStreams {
     val spark = batch.sparkSession
     val sigSchema = "doc_id BIGINT, " +
       (0 until Dedup.NumHashes).map(i => s"h$i STRING").mkString(", ")
-    val index = Snapshots.currentVersion(spark, indexTableDir) match {
+    val live = Snapshots.currentVersion(spark, indexTableDir)
+    val index = live match {
       case Some(_) => Snapshots.read(spark, indexTableDir)
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row],
@@ -65,8 +66,9 @@ object DocStreams {
     val dropIds = vsIndexA.unionByName(vsIndexB).unionByName(withinBatch).distinct()
     val novel = batch.join(dropIds, Seq("doc_id"), "left_anti")
     val novelSigs = Dedup.minhashRawFrom(Dedup.shingleRowsOf(novel))
-    if (!novelSigs.isEmpty)
-      Snapshots.commitUpsert(spark, indexTableDir, novelSigs, "doc_id")
+    // an empty merge publishes nothing; only the bootstrap must skip it
+    if (live.isDefined || !novelSigs.isEmpty)
+      Snapshots.commitMerge(spark, indexTableDir, novelSigs, "doc_id")
     novel
     } finally {
       // the cache serves only this batch's three pair consumers — a

@@ -75,29 +75,20 @@ object EventStreams {
     * idempotent (keep-newest by key): replaying a micro-batch after a
     * crash converges to the same table. Only partitions the batch
     * touches are rewritten — the stream's write amplification scales
-    * with batch size, not table size. */
+    * with batch size, not table size. The first batch bootstraps the
+    * table through the same merge, so a NULL partition value fails the
+    * query on every batch alike. */
   def mergeSink(events: DataFrame, basePath: String, key: String, partCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream.outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val fs = new org.apache.hadoop.fs.Path(basePath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(new org.apache.hadoop.fs.Path(basePath))) {
-            // first batch bootstraps the table (with within-batch dedup)
-            graft.etl.Dims.upsert(None, batch, key)
-              .write.partitionBy(partCol).parquet(basePath)
-          } else {
-            graft.etl.Dims.partitionScopedMerge(spark, basePath, batch, key, partCol)
-            ()
-          }
-        }
+        graft.etl.Dims.partitionScopedMerge(batch.sparkSession, basePath, batch, key, partCol)
+        ()
       }
 
   /** Streaming merge sink over the SNAPSHOT commit log: each
-    * micro-batch lands as one [[graft.sources.Snapshots]] partition-
-    * scoped merge commit — so unlike [[mergeSink]]'s plain-parquet
+    * micro-batch lands as one partition-scoped
+    * [[graft.sources.Snapshots.commitMerge]] commit — so unlike [[mergeSink]]'s plain-parquet
     * table, a concurrent reader always resolves a complete committed
     * version (reader atomicity) and CONCURRENT WRITERS are safe: a
     * batch-time writer racing the stream makes the commit CAS-fail
@@ -117,7 +108,7 @@ object EventStreams {
           var done = false
           while (!done) {
             try {
-              graft.sources.Snapshots.commitMergePartitioned(
+              graft.sources.Snapshots.commitMerge(
                 batch.sparkSession, tableDir, batch, key, partCol)
               done = true
             } catch {

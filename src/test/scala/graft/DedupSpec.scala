@@ -284,13 +284,13 @@ class DedupSpec extends SparkSpec {
     val d1 = docs.filter(col("doc_id").isin(2L, 3L))
     val p1 = Dedup.incrementalLshFrom(Snapshots.read(spark, table), d1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Snapshots.commitUpsert(spark, table,
+    Snapshots.commitMerge(spark, table,
       Dedup.minhashRawFrom(Dedup.shingleRowsOf(d1)), "doc_id")
     // ingest batch 2 (docs 0,1 — exact dups, near-dup cluster with 2,3)
     val d2 = docs.filter(col("doc_id") < 2L)
     val p2 = Dedup.incrementalLshFrom(Snapshots.read(spark, table), d2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Snapshots.commitUpsert(spark, table,
+    Snapshots.commitMerge(spark, table,
       Dedup.minhashRawFrom(Dedup.shingleRowsOf(d2)), "doc_id")
     // the maintained index equals the batch recompute over everything
     val idx = Snapshots.read(spark, table).collect()

@@ -170,7 +170,7 @@ class Round11Spec extends SparkSpec {
     val dir = SparkSpec.tempDir("maint_spec").toString
     val t = s"$dir/idx"
     for (i <- 1 to 4)
-      Snapshots.commitUpsert(spark, t, Seq((i.toLong, "a")).toDF("doc_id", "v"), "doc_id")
+      Snapshots.commitMerge(spark, t, Seq((i.toLong, "a")).toDF("doc_id", "v"), "doc_id")
     assert(Snapshots.liveDataDirCount(spark, t) === 1)
     val vBefore = Snapshots.currentVersion(spark, t).get
     DocStreams.maintainIndex(spark, t)
@@ -185,7 +185,7 @@ class Round11Spec extends SparkSpec {
     Snapshots.commitOverwrite(spark, tp,
       Seq((1L, "p0", "a")).toDF("doc_id", "day", "v"), partCol = "day")
     for (i <- 2 to DocStreams.CompactMinDataDirs + 1)
-      Snapshots.commitMergePartitioned(spark, tp,
+      Snapshots.commitMerge(spark, tp,
         Seq((i.toLong, s"p${i - 1}", "b")).toDF("doc_id", "day", "v"),
         "doc_id", "day")
     assert(Snapshots.liveDataDirCount(spark, tp) >= DocStreams.CompactMinDataDirs)

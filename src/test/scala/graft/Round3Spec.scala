@@ -52,6 +52,16 @@ class Round3Spec extends SparkSpec {
     assert(bAfter === bBefore, "untouched partition's files must not be rewritten")
   }
 
+  test("partitionScopedMerge on a missing path bootstraps a deduplicated table") {
+    val table = SparkSpec.tempDir("graft_pmerge_boot").toString + "/t"
+    val touched = Dims.partitionScopedMerge(spark, table,
+      Seq((1L, "A", 2.0), (1L, "A", 1.0), (2L, "B", 3.0)).toDF("id", "part", "v"), "id", "part")
+    assert(touched === Seq("A", "B"))
+    // one row per key, picked by the default tie-break (lowest v)
+    assert(spark.read.parquet(table).select(col("id"), col("part"), col("v"))
+      .as[(Long, String, Double)].collect().toSet === Set((1L, "A", 1.0), (2L, "B", 3.0)))
+  }
+
   test("partitionScopedMerge aligns widened delta types to the base schema") {
     import org.apache.spark.sql.types.DecimalType
     val dir = SparkSpec.tempDir("graft_pmerge2").toString

@@ -77,14 +77,14 @@ class Round6Spec extends SparkSpec {
     Snapshots.commitOverwrite(spark, s"$root/a", a0)
     // A v2: delete ok=2 (via deletion vector), update ok=3 price, insert ok=4
     Snapshots.commitDeleteVector(spark, s"$root/a", Seq(2L).toDF("ok"), "ok")
-    Snapshots.commitUpsert(spark, s"$root/a",
+    Snapshots.commitMerge(spark, s"$root/a",
       Seq((3L, 20L, BigDecimal("11.00")), (4L, 20L, BigDecimal("1.00")))
         .toDF("ok", "ck", "price"), "ok")
     val vA1 = Snapshots.currentVersion(spark, s"$root/a").get
     val b0 = Seq((10L, "N1"), (20L, "N2")).toDF("ck", "nation")
     Snapshots.commitOverwrite(spark, s"$root/b", b0)
     // B v2: customer 10 moves to nation N3
-    Snapshots.commitUpsert(spark, s"$root/b",
+    Snapshots.commitMerge(spark, s"$root/b",
       Seq((10L, "N3")).toDF("ck", "nation"), "ck")
     val baseAgg = Snapshots.readVersion(spark, s"$root/a", "v00000001")
       .join(Snapshots.readVersion(spark, s"$root/b", "v00000001"), Seq("ck"))

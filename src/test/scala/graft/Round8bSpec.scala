@@ -300,7 +300,7 @@ class Round8bSpec extends SparkSpec {
     // files must get FRESH bitmap lines (same rules as min/max carry)
     val delta = spark.range(200L, 210L)
       .selectExpr("id AS k", "'a' AS part", "id * 10 AS v")
-    Snapshots.commitMergePartitioned(spark, dir, delta, "k", "part")
+    Snapshots.commitMerge(spark, dir, delta, "k", "part")
     val v2 = Snapshots.currentVersion(spark, dir).get
     val m2 = Snapshots.readManifest(spark, dir, v2)
     assert(m2.stats.exists(_.col === "bitmap:k"), "bitmap lines must survive the merge")

@@ -19,13 +19,13 @@ class SnapshotChecksSpec extends SparkSpec {
     Snapshots.setCheck(spark, dir, "v_positive", "v > 0")
     val before = Snapshots.currentVersion(spark, dir)
     val e = intercept[CheckConstraintViolationException] {
-      Snapshots.commitUpsert(spark, dir, Seq((3L, -5L)).toDF("k", "v"), "k")
+      Snapshots.commitMerge(spark, dir, Seq((3L, -5L)).toDF("k", "v"), "k")
     }
     assert(e.getMessage.contains("v_positive"))
     assert(Snapshots.currentVersion(spark, dir) === before)
     assert(Snapshots.read(spark, dir).count() === 2)
     // a conforming delta still lands
-    Snapshots.commitUpsert(spark, dir, Seq((3L, 5L)).toDF("k", "v"), "k")
+    Snapshots.commitMerge(spark, dir, Seq((3L, 5L)).toDF("k", "v"), "k")
     assert(Snapshots.read(spark, dir).count() === 3)
   }
 
@@ -43,7 +43,7 @@ class SnapshotChecksSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir, Seq((1L, Some(1L))).toDF("k", "v"))
     Snapshots.setCheck(spark, dir, "v_positive", "v > 0")
     intercept[CheckConstraintViolationException] {
-      Snapshots.commitUpsert(spark, dir,
+      Snapshots.commitMerge(spark, dir,
         Seq((2L, None: Option[Long])).toDF("k", "v"), "k")
     }
   }
@@ -54,11 +54,11 @@ class SnapshotChecksSpec extends SparkSpec {
       Seq((1L, "p1", 10L), (2L, "p2", 20L)).toDF("k", "p", "v"), partCol = "p")
     Snapshots.setCheck(spark, dir, "v_cap", "v <= 100")
     intercept[CheckConstraintViolationException] {
-      Snapshots.commitMergePartitioned(spark, dir,
+      Snapshots.commitMerge(spark, dir,
         Seq((3L, "p1", 999L)).toDF("k", "p", "v"), "k", "p")
     }
     assert(Snapshots.read(spark, dir).count() === 2)
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((3L, "p1", 99L)).toDF("k", "p", "v"), "k", "p")
     assert(Snapshots.read(spark, dir).count() === 3)
   }
@@ -82,10 +82,10 @@ class SnapshotChecksSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir, Seq((1L, 1L)).toDF("k", "v"))
     Snapshots.setCheck(spark, dir, "v_positive", "v > 0")
     intercept[CheckConstraintViolationException] {
-      Snapshots.commitUpsert(spark, dir, Seq((2L, -1L)).toDF("k", "v"), "k")
+      Snapshots.commitMerge(spark, dir, Seq((2L, -1L)).toDF("k", "v"), "k")
     }
     Snapshots.dropCheck(spark, dir, "v_positive")
-    Snapshots.commitUpsert(spark, dir, Seq((2L, -1L)).toDF("k", "v"), "k")
+    Snapshots.commitMerge(spark, dir, Seq((2L, -1L)).toDF("k", "v"), "k")
     assert(Snapshots.read(spark, dir).count() === 2)
   }
 
@@ -97,7 +97,7 @@ class SnapshotChecksSpec extends SparkSpec {
     Snapshots.setCheck(spark, dir, "v_positive", "v >= 1") // replace
     assert(Snapshots.checks(spark, dir).map(_._1).sorted === Seq("k_positive", "v_positive"))
     intercept[CheckConstraintViolationException] {
-      Snapshots.commitUpsert(spark, dir, Seq((-2L, 5L)).toDF("k", "v"), "k")
+      Snapshots.commitMerge(spark, dir, Seq((-2L, 5L)).toDF("k", "v"), "k")
     }
   }
 }

@@ -73,7 +73,7 @@ class SnapshotManifestSpec extends SparkSpec {
     val allNullable = schemaLine(nullable = true)
 
     // partitioned merge bootstrap (claims exactly v1)
-    val w1 = Snapshots.commitMergePartitioned(spark, w,
+    val w1 = Snapshots.commitMerge(spark, w,
       rows((1, "A", 10), (2, "B", 20), (2, "B", 21)), "k", "p", statsCols = stats)
     check(w, w1, s"""
       |$keyNotNull
@@ -87,14 +87,14 @@ class SnapshotManifestSpec extends SparkSpec {
 
     // upsert bootstrap, then an upsert against it (its delta is
     // deduplicated by key, one shuffle, so it lands as one file)
-    val v1 = Snapshots.commitUpsert(spark, t,
+    val v1 = Snapshots.commitMerge(spark, t,
       rows((1, "A", 10), (2, "A", 20), (3, "B", 30)), "k", statsCols = stats)
     check(t, v1, s"""
       |$keyNotNull
       |dir=D2
       |stat:_rows|3|3|D2/part-*-c000.snappy.parquet
       |stat:k|1|3|D2/part-*-c000.snappy.parquet""")
-    val v2 = Snapshots.commitUpsert(spark, t, rows((3, "B", 31), (4, "C", 40)), "k")
+    val v2 = Snapshots.commitMerge(spark, t, rows((3, "B", 31), (4, "C", 40)), "k")
     check(t, v2, s"""
       |$allNullable
       |dir=D3
@@ -142,8 +142,9 @@ class SnapshotManifestSpec extends SparkSpec {
       |stat:k|5|5|D5/p=C/part-*.c000.snappy.parquet
       |stat:k|6|6|D5/p=D/part-*.c000.snappy.parquet""")
 
-    // partitioned merge: key 5 moves C -> A (C empties), E is new
-    val v5 = Snapshots.commitMergePartitioned(spark, t,
+    // partitioned merge: key 5 moves C -> A (C empties), E is new; the
+    // surviving slice rows and the delta are written as separate files
+    val v5 = Snapshots.commitMerge(spark, t,
       rows((5, "A", 51), (7, "E", 70)), "k", "p")
     check(t, v5, s"""
       |$allNullable
@@ -155,11 +156,15 @@ class SnapshotManifestSpec extends SparkSpec {
       |stat:_rows|1|1|D5/p=B/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D5/p=B/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D5/p=D/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D6/p=E/part-*.c000.snappy.parquet
-      |stat:_rows|3|3|D6/p=A/part-*.c000.snappy.parquet
-      |stat:k|1|5|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|2|2|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|3|3|D5/p=B/part-*.c000.snappy.parquet
       |stat:k|4|4|D5/p=B/part-*.c000.snappy.parquet
+      |stat:k|5|5|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|6|6|D5/p=D/part-*.c000.snappy.parquet
       |stat:k|7|7|D6/p=E/part-*.c000.snappy.parquet""")
 
@@ -171,11 +176,15 @@ class SnapshotManifestSpec extends SparkSpec {
       |part:A=D6
       |part:B=D7
       |part:E=D6
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D6/p=E/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D7/p=B/part-*.c000.snappy.parquet
-      |stat:_rows|3|3|D6/p=A/part-*.c000.snappy.parquet
-      |stat:k|1|5|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|2|2|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|4|4|D7/p=B/part-*.c000.snappy.parquet
+      |stat:k|5|5|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|7|7|D6/p=E/part-*.c000.snappy.parquet""")
 
     // partitioned update: every B row moves to E (B empties)
@@ -185,11 +194,15 @@ class SnapshotManifestSpec extends SparkSpec {
       |partcol=p
       |part:A=D6
       |part:E=D8
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D8/p=E/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D8/p=E/part-*.c000.snappy.parquet
-      |stat:_rows|3|3|D6/p=A/part-*.c000.snappy.parquet
-      |stat:k|1|5|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|2|2|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|4|4|D8/p=E/part-*.c000.snappy.parquet
+      |stat:k|5|5|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|7|7|D8/p=E/part-*.c000.snappy.parquet""")
 
     // deletion vector, then compaction materializes and clears it
@@ -199,11 +212,15 @@ class SnapshotManifestSpec extends SparkSpec {
       |partcol=p
       |part:A=D6
       |part:E=D8
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D8/p=E/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D8/p=E/part-*.c000.snappy.parquet
-      |stat:_rows|3|3|D6/p=A/part-*.c000.snappy.parquet
-      |stat:k|1|5|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|2|2|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|4|4|D8/p=E/part-*.c000.snappy.parquet
+      |stat:k|5|5|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|7|7|D8/p=E/part-*.c000.snappy.parquet
       |dvkey=k
       |dv:D9|D6
@@ -214,11 +231,13 @@ class SnapshotManifestSpec extends SparkSpec {
       |partcol=p
       |part:A=D10
       |part:E=D10
+      |stat:_rows|1|1|D10/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D10/p=A/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D10/p=E/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D10/p=E/part-*.c000.snappy.parquet
-      |stat:_rows|2|2|D10/p=A/part-*.c000.snappy.parquet
-      |stat:k|1|5|D10/p=A/part-*.c000.snappy.parquet
+      |stat:k|1|1|D10/p=A/part-*.c000.snappy.parquet
       |stat:k|4|4|D10/p=E/part-*.c000.snappy.parquet
+      |stat:k|5|5|D10/p=A/part-*.c000.snappy.parquet
       |stat:k|7|7|D10/p=E/part-*.c000.snappy.parquet""")
     // Z-order compaction keeps the partitioned layout
     val v10 = Snapshots.compactZOrdered(spark, t, "k", "x", numFiles = 2)
@@ -304,11 +323,15 @@ class SnapshotManifestSpec extends SparkSpec {
       |partcol=p
       |part:A=D6
       |part:E=D8
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|1|1|D6/p=A/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D8/p=E/part-*.c000.snappy.parquet
       |stat:_rows|1|1|D8/p=E/part-*.c000.snappy.parquet
-      |stat:_rows|3|3|D6/p=A/part-*.c000.snappy.parquet
-      |stat:k|1|5|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|1|1|D6/p=A/part-*.c000.snappy.parquet
+      |stat:k|2|2|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|4|4|D8/p=E/part-*.c000.snappy.parquet
+      |stat:k|5|5|D6/p=A/part-*.c000.snappy.parquet
       |stat:k|7|7|D8/p=E/part-*.c000.snappy.parquet""")
     assert(Snapshots.read(spark, t).select("k", "p", "x").orderBy("k")
       .as[(Long, String, Long)].collect().toSeq ===

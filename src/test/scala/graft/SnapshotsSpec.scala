@@ -80,17 +80,50 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("commitUpsert: delta wins on collision, inserts new keys, first commit bootstraps") {
-    val dir = freshDir()
-    Snapshots.commitUpsert(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k")
-    Snapshots.commitUpsert(spark, dir, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), "k")
-    assert(Snapshots.read(spark, dir).orderBy("k").as[(Long, String)].collect()
-      .toSeq === Seq((1L, "a"), (2L, "B"), (3L, "c")))
-    // a delta repeating a key leaves one row per key, picked as the
-    // bootstrap picks it
-    Snapshots.commitUpsert(spark, dir,
-      Seq((3L, "d"), (3L, "C"), (4L, "e"), (4L, "e")).toDF("k", "v"), "k")
-    assert(Snapshots.read(spark, dir).orderBy("k").as[(Long, String)].collect()
-      .toSeq === Seq((1L, "a"), (2L, "B"), (3L, "C"), (4L, "e")))
+    // one merge rule on both layouts, and every merge keeps its layout
+    for (partCol <- Seq("", "p")) {
+      val dir = freshDir()
+      def merge(rows: (Long, String)*): String = Snapshots.commitMerge(spark, dir,
+        rows.toDF("k", "v").withColumn("p", (col("k") % 2).cast("string")), "k", partCol)
+      def live: Seq[(Long, String)] = Snapshots.read(spark, dir).orderBy("k")
+        .select("k", "v").as[(Long, String)].collect().toSeq
+      merge((1L, "a"), (2L, "b"))
+      merge((2L, "B"), (3L, "c"))
+      assert(live === Seq((1L, "a"), (2L, "B"), (3L, "c")))
+      // a delta repeating a key leaves one row per key, picked as the
+      // bootstrap picks it
+      merge((3L, "d"), (3L, "C"), (4L, "e"), (4L, "e"))
+      assert(live === Seq((1L, "a"), (2L, "B"), (3L, "C"), (4L, "e")))
+      val v = Snapshots.currentVersion(spark, dir).get
+      assert(Snapshots.readManifest(spark, dir, v).partCol === partCol)
+      // a merge naming the other layout is refused and publishes nothing
+      val e = intercept[IllegalArgumentException] {
+        Snapshots.commitMerge(spark, dir, Seq((5L, "f", "1")).toDF("k", "v", "p"), "k",
+          if (partCol.isEmpty) "p" else "")
+      }
+      assert(e.getMessage.contains("is not partitioned by"))
+      assert(Snapshots.currentVersion(spark, dir) === Some(v))
+      // a later merge in the table's own layout lands
+      merge((5L, "f"))
+      assert(live.last === ((5L, "f")))
+      assert(Snapshots.readManifest(spark, dir,
+        Snapshots.currentVersion(spark, dir).get).partCol === partCol)
+    }
+  }
+
+  test("commitMerge keeps a duplicated base key the delta does not carry, on both layouts") {
+    for (partCol <- Seq("", "status")) {
+      val dir = freshDir()
+      Snapshots.commitOverwrite(spark, dir, Seq((1L, "F", 1.0), (1L, "F", 2.0), (2L, "F", 3.0))
+        .toDF("k", "status", "amount"), partCol = partCol)
+      Snapshots.commitMerge(spark, dir,
+        Seq((2L, "F", 30.0), (3L, "F", 4.0)).toDF("k", "status", "amount"), "k", partCol)
+      // a base row survives iff the delta lacks its key (SQL MERGE)
+      assert(Snapshots.read(spark, dir).orderBy("k", "amount")
+        .select(col("k"), col("status"), col("amount"))
+        .as[(Long, String, Double)].collect().toSeq ===
+        Seq((1L, "F", 1.0), (1L, "F", 2.0), (2L, "F", 30.0), (3L, "F", 4.0)), partCol)
+    }
   }
 
   test("tryClaim is a CAS: exactly one claimant of a version number wins") {
@@ -113,12 +146,12 @@ class SnapshotsSpec extends SparkSpec {
     // A's upsert against its stale base must FAIL, not silently drop
     // B's rows under the next number
     intercept[ConcurrentSnapshotCommitException] {
-      Snapshots.commitUpsert(spark, dir, Seq((2L, "x")).toDF("k", "v"), "k",
+      Snapshots.commitMerge(spark, dir, Seq((2L, "x")).toDF("k", "v"), "k",
         expectedVersion = Some(aBase))
     }
     // A re-runs against the new live snapshot and lands v3 with B's
     // rows intact
-    assert(Snapshots.commitUpsert(spark, dir,
+    assert(Snapshots.commitMerge(spark, dir,
       Seq((2L, "x")).toDF("k", "v"), "k") === "v00000003")
     assert(Snapshots.read(spark, dir).orderBy("k").as[(Long, String)].collect()
       .toSeq === Seq((1L, "B"), (2L, "x")))
@@ -156,7 +189,7 @@ class SnapshotsSpec extends SparkSpec {
     val pinned = Snapshots.currentVersion(spark, dir).get
     // delta touches ONLY partition F: one update, one insert
     val delta = Seq((2L, "F", 99.0), (6L, "F", 60.0)).toDF("k", "status", "amount")
-    val v2 = Snapshots.commitMergePartitioned(spark, dir, delta, "k", "status")
+    val v2 = Snapshots.commitMerge(spark, dir, delta, "k", "status")
     assert(v2 === "v00000002")
     val after = fileStates(dir, "d-")
     // every pre-commit file still exists, with identical length+mtime
@@ -177,7 +210,7 @@ class SnapshotsSpec extends SparkSpec {
     // the pinned reader still sees the complete v1 snapshot
     assert(Snapshots.readVersion(spark, dir, pinned).count() === 5)
     // a new partition value arriving in a later delta is an insert
-    val v3 = Snapshots.commitMergePartitioned(spark, dir,
+    val v3 = Snapshots.commitMerge(spark, dir,
       Seq((7L, "X", 70.0)).toDF("k", "status", "amount"), "k", "status")
     assert(Snapshots.readVersion(spark, dir, v3).filter(col("status") === "X").count() === 1)
     assert(Snapshots.read(spark, dir).count() === 7)
@@ -188,10 +221,10 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir,
       Seq((1L, "F", 1.0)).toDF("k", "status", "amount"), partCol = "status")
     val stale = Snapshots.currentVersion(spark, dir).get
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((2L, "F", 2.0)).toDF("k", "status", "amount"), "k", "status")
     intercept[ConcurrentSnapshotCommitException] {
-      Snapshots.commitMergePartitioned(spark, dir,
+      Snapshots.commitMerge(spark, dir,
         Seq((3L, "F", 3.0)).toDF("k", "status", "amount"), "k", "status",
         expectedVersion = Some(stale))
     }
@@ -204,7 +237,7 @@ class SnapshotsSpec extends SparkSpec {
       (5L, "P", 50.0)).toDF("k", "status", "amount"), partCol = "status")
     // v2: update k=2, insert k=6 (F), insert a brand-new partition X;
     // O and P untouched → their manifest entries (and files) unchanged
-    Snapshots.commitMergePartitioned(spark, dir, Seq(
+    Snapshots.commitMerge(spark, dir, Seq(
       (2L, "F", 99.0), (6L, "F", 60.0), (7L, "X", 70.0))
       .toDF("k", "status", "amount"), "k", "status")
     def collectDiff(df: org.apache.spark.sql.DataFrame) = df
@@ -254,7 +287,7 @@ class SnapshotsSpec extends SparkSpec {
     val dir = freshDir()
     Snapshots.commitOverwrite(spark, dir, Seq(
       (1L, "F", 1.0), (2L, "O", 2.0), (3L, "P", 3.0)).toDF("k", "status", "amount"), partCol = "status")
-    (1 to 3).foreach(i => Snapshots.commitMergePartitioned(spark, dir,
+    (1 to 3).foreach(i => Snapshots.commitMerge(spark, dir,
       Seq((1L, "F", i * 10.0), (10L + i, "O", i.toDouble))
         .toDF("k", "status", "amount"), "k", "status"))
     def owners(v: String) =
@@ -289,7 +322,7 @@ class SnapshotsSpec extends SparkSpec {
       partCol = "status")
     // key 2 MOVES F→O (the dimension-attribute move): partition F is
     // not in the delta's partition set, yet its stale row must go
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((2L, "O", 99.0)).toDF("k", "status", "amount"), "k", "status")
     val rows = Snapshots.read(spark, dir).orderBy("k")
       .select(col("k"), col("status"), col("amount"))
@@ -305,7 +338,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir, Seq(
       (1L, "F", 10.0), (5L, "P", 50.0)).toDF("k", "status", "amount"), partCol = "status")
     // P's only row moves to F → P must vanish from manifest and reads
-    val v2 = Snapshots.commitMergePartitioned(spark, dir,
+    val v2 = Snapshots.commitMerge(spark, dir,
       Seq((5L, "F", 55.0)).toDF("k", "status", "amount"), "k", "status")
     val m2 = Snapshots.readManifest(spark, dir, v2)
     assert(!m2.partitions.map(_._1).contains("P"))
@@ -320,7 +353,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir, Seq(
       (1L, "F", 10.0), (3L, "O", 30.0)).toDF("k", "status", "amount"), partCol = "status")
     val before = fileStates(dir, "d-")
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((1L, "F", 11.0)).toDF("k", "status", "amount"), "k", "status")
     val after = fileStates(dir, "d-")
     before.foreach { case (rel, st) => assert(after.get(rel) === Some(st), rel) }
@@ -333,7 +366,7 @@ class SnapshotsSpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     val attempts = Await.result(
       Future.sequence((1 to 4).toList.map(i => Future {
-        try Right(Snapshots.commitUpsert(spark, dir,
+        try Right(Snapshots.commitMerge(spark, dir,
           Seq((i.toLong, s"w$i")).toDF("k", "v"), "k"))
         catch { case e: ConcurrentSnapshotCommitException => Left(e) }
       })), 120.seconds)
@@ -349,10 +382,10 @@ class SnapshotsSpec extends SparkSpec {
 
   test("maybeCompact triggers only past the dir-count threshold and is then a no-op") {
     val dir = freshDir()
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((1L, "A", 1.0)).toDF("k", "p", "amount"), "k", "p")
     (2 to 4).foreach { i =>
-      Snapshots.commitMergePartitioned(spark, dir,
+      Snapshots.commitMerge(spark, dir,
         Seq((i.toLong, s"P$i", i.toDouble)).toDF("k", "p", "amount"), "k", "p")
     }
     // live manifest references 4 dirs — below a threshold of 4 nothing runs
@@ -366,7 +399,7 @@ class SnapshotsSpec extends SparkSpec {
 
   test("shallow clone: zero-copy read equality, independent divergence, partition-scoped borrow") {
     val src = freshDir()
-    Snapshots.commitMergePartitioned(spark, src,
+    Snapshots.commitMerge(spark, src,
       Seq((1L, "A", 1.0), (2L, "B", 2.0), (3L, "B", 3.0)).toDF("k", "p", "amount"),
       "k", "p")
     val tgt = freshDir()
@@ -380,7 +413,7 @@ class SnapshotsSpec extends SparkSpec {
     // a partition-scoped merge on the CLONE rewrites only partition B
     // locally; partition A keeps reading the SOURCE's bytes
     val srcBytes = fileStates(src, "d-")
-    Snapshots.commitMergePartitioned(spark, tgt,
+    Snapshots.commitMerge(spark, tgt,
       Seq((3L, "B", 33.0)).toDF("k", "p", "amount"), "k", "p")
     assert(fileStates(src, "d-") === srcBytes, "source files untouched by clone write")
     val cloneRows = Snapshots.read(spark, tgt).orderBy("k").collect()
@@ -438,22 +471,22 @@ class SnapshotsSpec extends SparkSpec {
 
   test("OCC auto-rebase: a merge that lost the CAS race to a DISJOINT-partition commit retries and lands") {
     val dir = freshDir()
-    val base = Snapshots.commitMergePartitioned(spark, dir,
+    val base = Snapshots.commitMerge(spark, dir,
       Seq((1L, "A", 1.0), (2L, "B", 2.0)).toDF("k", "p", "amount"), "k", "p")
     // winner commits into partition A while our writer still holds `base`
-    val winner = Snapshots.commitMergePartitioned(spark, dir,
+    val winner = Snapshots.commitMerge(spark, dir,
       Seq((3L, "A", 3.0)).toDF("k", "p", "amount"), "k", "p")
     assert(winner === "v00000002")
     // plain CAS path: stale expectedVersion throws
     intercept[ConcurrentSnapshotCommitException] {
-      Snapshots.commitMergePartitioned(spark, dir,
+      Snapshots.commitMerge(spark, dir,
         Seq((4L, "C", 4.0)).toDF("k", "p", "amount"), "k", "p",
         expectedVersion = Some(base))
     }
     // deterministic rebase: the delta was derived from the pre-winner
     // base but targets a partition the winner never touched — the OCC
     // path MUST land it without caller involvement
-    val rebased = Snapshots.commitMergePartitionedOcc(spark, dir,
+    val rebased = Snapshots.commitMergeOcc(spark, dir,
       Seq((5L, "X", 5.0)).toDF("k", "p", "amount"), "k", "p",
       expectedVersion = Some(base))
     assert(rebased === "v00000003")
@@ -465,7 +498,7 @@ class SnapshotsSpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     val results = Await.result(Future.sequence(List("C", "D", "E").zipWithIndex.map {
       case (p, i) => Future {
-        Snapshots.commitMergePartitionedOcc(spark, dir,
+        Snapshots.commitMergeOcc(spark, dir,
           Seq((10L + i, p, 10.0 + i)).toDF("k", "p", "amount"), "k", "p")
       }
     }), 300.seconds)
@@ -477,11 +510,11 @@ class SnapshotsSpec extends SparkSpec {
 
   test("OCC auto-rebase: overlapping write sets conflict loudly instead of silently serializing") {
     val dir = freshDir()
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((1L, "A", 1.0), (2L, "B", 2.0)).toDF("k", "p", "amount"), "k", "p")
     val stale = Snapshots.currentVersion(spark, dir)
     // winner rewrites partition A
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((1L, "A", 99.0)).toDF("k", "p", "amount"), "k", "p")
     // loser also writes partition A from the stale base: the OCC path
     // must refuse (the loser's delta may be derived from pre-winner A)
@@ -489,7 +522,7 @@ class SnapshotsSpec extends SparkSpec {
       // the delta was derived from the stale base: the claim against it
       // fails, and the rebase finds A in both the winner's changed set
       // and our write set
-      Snapshots.commitMergePartitionedOcc(spark, dir,
+      Snapshots.commitMergeOcc(spark, dir,
         Seq((7L, "A", 7.0)).toDF("k", "p", "amount"), "k", "p",
         expectedVersion = stale)
     }
@@ -498,10 +531,10 @@ class SnapshotsSpec extends SparkSpec {
     // stale merge carrying key 2 (targeting fresh partition Z) must
     // also conflict — the winner's row would be resurrected otherwise
     val stale2 = Snapshots.currentVersion(spark, dir)
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((2L, "M", 22.0)).toDF("k", "p", "amount"), "k", "p")
     val e2 = intercept[graft.sources.SnapshotWriteConflictException] {
-      Snapshots.commitMergePartitionedOcc(spark, dir,
+      Snapshots.commitMergeOcc(spark, dir,
         Seq((2L, "Z", 0.0)).toDF("k", "p", "amount"), "k", "p",
         expectedVersion = stale2)
     }
@@ -518,7 +551,7 @@ class SnapshotsSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq
       === Seq((1L, "a=b"), (2L, "x\ny"), (3L, "c:d%e")))
     // a merge against a hostile-valued table resolves partitions correctly
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((1L, "a=b", 9.0)).toDF("k", "status", "amount"), "k", "status")
     assert(Snapshots.read(spark, dir).filter(col("k") === 1)
       .select(col("amount")).as[Double].collect().toSeq === Seq(9.0))
@@ -580,7 +613,7 @@ class SnapshotsSpec extends SparkSpec {
     // delta adds a `note` column, touching only F — O's files predate
     // the column and are NOT rewritten
     val before = fileStates(dir, "d-")
-    val v2 = Snapshots.commitMergePartitioned(spark, dir,
+    val v2 = Snapshots.commitMerge(spark, dir,
       Seq((1L, "F", 11.0, "updated"), (2L, "F", 20.0, "new"))
         .toDF("k", "status", "amount", "note"), "k", "status")
     val after = fileStates(dir, "d-")
@@ -594,7 +627,7 @@ class SnapshotsSpec extends SparkSpec {
       (3L, "O", 30.0, None))) // pre-evolution partition → typed NULL
     // a later merge WITHOUT the new column is refused (dropping ≠ evolving)
     val e = intercept[IllegalArgumentException] {
-      Snapshots.commitMergePartitioned(spark, dir,
+      Snapshots.commitMerge(spark, dir,
         Seq((4L, "F", 40.0)).toDF("k", "status", "amount"), "k", "status")
     }
     assert(e.getMessage.contains("missing base columns"))
@@ -614,8 +647,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("add-column evolution on whole-table upsert commits") {
     val dir = freshDir()
-    Snapshots.commitUpsert(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k")
-    Snapshots.commitUpsert(spark, dir,
+    Snapshots.commitMerge(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k")
+    Snapshots.commitMerge(spark, dir,
       Seq((2L, "B", 7L), (3L, "c", 9L)).toDF("k", "v", "score"), "k")
     assert(Snapshots.read(spark, dir).orderBy("k")
       .select(col("k"), col("v"), col("score"))
@@ -665,7 +698,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir, base, partCol = "status",
       statsCols = Seq("k"))
     // merge touches O only; F's stats must carry forward verbatim
-    val v2 = Snapshots.commitMergePartitioned(spark, dir,
+    val v2 = Snapshots.commitMerge(spark, dir,
       Seq((250L, "O", 999.0)).toDF("k", "status", "amount"), "k", "status")
     val pruned = Snapshots.readVersionPruned(spark, dir, v2,
       "k", BigDecimal(250), BigDecimal(250))
@@ -697,7 +730,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir, base, partCol = "status",
       statsCols = Seq("k"))
     // key 150 (F) moves to O; delta touches only O
-    val v2 = Snapshots.commitMergePartitioned(spark, dir,
+    val v2 = Snapshots.commitMerge(spark, dir,
       Seq((150L, "O", 999.0)).toDF("k", "status", "amount"), "k", "status")
     val rows = Snapshots.read(spark, dir).filter(col("k") === 150L)
       .select(col("status"), col("amount")).as[(String, Double)].collect().toSeq
@@ -740,15 +773,17 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("empty delta merge is a no-op (no new version published)") {
-    val dir = freshDir()
-    Snapshots.commitOverwrite(spark, dir,
-      Seq((1L, "F", 1.0)).toDF("k", "status", "amount"), partCol = "status")
-    val v = Snapshots.commitMergePartitioned(spark, dir,
-      Seq.empty[(Long, String, Double)].toDF("k", "status", "amount"),
-      "k", "status")
-    assert(v === "v00000001")
-    assert(Snapshots.listVersions(spark, dir) === Seq("v00000001"))
-    assert(Snapshots.read(spark, dir).count() === 1)
+    for (partCol <- Seq("status", "")) {
+      val dir = freshDir()
+      Snapshots.commitOverwrite(spark, dir,
+        Seq((1L, "F", 1.0)).toDF("k", "status", "amount"), partCol = partCol)
+      val v = Snapshots.commitMerge(spark, dir,
+        Seq.empty[(Long, String, Double)].toDF("k", "status", "amount"),
+        "k", partCol)
+      assert(v === "v00000001")
+      assert(Snapshots.listVersions(spark, dir) === Seq("v00000001"))
+      assert(Snapshots.read(spark, dir).count() === 1)
+    }
   }
 
   test("key move into a brand-new partition deletes the stale row too") {
@@ -756,7 +791,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir, Seq(
       (1L, "F", 10.0), (2L, "F", 20.0)).toDF("k", "status", "amount"), partCol = "status")
     // key 2 moves to partition X which does not exist yet
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((2L, "X", 99.0)).toDF("k", "status", "amount"), "k", "status")
     assert(Snapshots.read(spark, dir).orderBy("k")
       .select(col("k"), col("status"), col("amount"))
@@ -805,7 +840,7 @@ class SnapshotsSpec extends SparkSpec {
       assert(files >= 16 && box(read) < 16, s"2D box read opened ${box(read)} of $files files")
       if (partCol.nonEmpty) {
         // the table is still partitioned by band, so a merge lands
-        Snapshots.commitMergePartitioned(spark, dir,
+        Snapshots.commitMerge(spark, dir,
           Seq((1L, 1L, -1L, "lo")).toDF("x", "y", "payload", "band"), "payload", "band")
         assert(Snapshots.read(spark, dir).count() === 64 * 64 + 1)
       }
@@ -817,7 +852,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir, Seq(
       (1L, "F", 1.0), (2L, "O", 2.0)).toDF("k", "status", "amount"), partCol = "status")
     // 3 partition-F-only merge commits — the ORIGINAL dir still owns O
-    (1 to 3).foreach(i => Snapshots.commitMergePartitioned(spark, dir,
+    (1 to 3).foreach(i => Snapshots.commitMerge(spark, dir,
       Seq((1L, "F", i.toDouble)).toDF("k", "status", "amount"), "k", "status"))
     Snapshots.vacuum(spark, dir, keep = 1, orphanGraceMs = 0L)
     // the live version reads completely: partition O's files (owned by
@@ -1039,7 +1074,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitDeleteVector(spark, dir, Seq(Tuple1(2L)).toDF("k"), "k")
     assert(Snapshots.read(spark, dir).filter(col("k") === 2L).count() === 0)
     // the re-insert lands in a NEW dir — the dir-scoped DV cannot mask it
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((2L, "F", 99.0)).toDF("k", "status", "amount"), "k", "status")
     assert(Snapshots.read(spark, dir).orderBy("k")
       .as[(Long, String, Double)].collect().toSeq === Seq(
@@ -1108,7 +1143,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitOverwrite(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     val (v1, none) = Snapshots.pollChanges(spark, dir, "v00000001", "k")
     assert(v1 === "v00000001" && none.isEmpty)
-    Snapshots.commitUpsert(spark, dir, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), "k")
+    Snapshots.commitMerge(spark, dir, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), "k")
     Snapshots.commitDelete(spark, dir, col("k") === 1L)
     val (v3, Some(cdf)) = Snapshots.pollChanges(spark, dir, "v00000001", "k")
     assert(v3 === "v00000003")
@@ -1127,7 +1162,7 @@ class SnapshotsSpec extends SparkSpec {
     // add-column merge on the DV'd table: delta adds `note`; the DV'd
     // dir is untouched and its vector still applies; old rows read the
     // new column as typed NULLs
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((6L, "F", 60.0, "new")).toDF("k", "status", "amount", "note"),
       "k", "status")
     val live = Snapshots.read(spark, dir)
@@ -1140,8 +1175,8 @@ class SnapshotsSpec extends SparkSpec {
     val stale = Snapshots.currentVersion(spark, dir).get
     Snapshots.commitDeleteVector(spark, dir, Seq(Tuple1(1L)).toDF("k"), "k")
     intercept[ConcurrentSnapshotCommitException] {
-      Snapshots.commitUpsert(spark, dir,
-        Seq((9L, "F", 9.0, "x")).toDF("k", "status", "amount", "note"), "k",
+      Snapshots.commitMerge(spark, dir,
+        Seq((9L, "F", 9.0, "x")).toDF("k", "status", "amount", "note"), "k", "status",
         expectedVersion = Some(stale))
     }
   }
@@ -1153,7 +1188,7 @@ class SnapshotsSpec extends SparkSpec {
       (1L, "F", "keep-a"), (2L, "F", sentinel),
       (3L, "O", "keep-b")).toDF("k", "status", "payload"), partCol = "status")
     // a merge creates a second version still carrying the sentinel
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((4L, "O", "keep-c")).toDF("k", "status", "payload"), "k", "status")
     def bytesContain(needle: String): Boolean = {
       val root = new org.apache.hadoop.fs.Path(dir)
@@ -1199,7 +1234,7 @@ class SnapshotsSpec extends SparkSpec {
       .groupBy(col("status"))
       .agg(count(lit(1)).as("n"), sum(col("amount")).as("value_sum"))
     // v2: update k=2 (F), insert k=6 (O), delete ALL of P
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((2L, "F", 99.0), (6L, "O", 60.0)).toDF("k", "status", "amount"), "k", "status")
     Snapshots.commitDelete(spark, dir, col("status") === "P")
     val live = Snapshots.currentVersion(spark, dir).get
@@ -1225,7 +1260,7 @@ class SnapshotsSpec extends SparkSpec {
       (1L, "F", 10.0), (2L, "F", 20.0), (3L, "O", 30.0),
       (5L, "P", 50.0)).toDF("k", "status", "amount"), partCol = "status")
     // k=2 changed, k=6 inserted (F); k=5 deleted (P emptied)
-    Snapshots.commitMergePartitioned(spark, dir,
+    Snapshots.commitMerge(spark, dir,
       Seq((2L, "F", 99.0), (6L, "F", 60.0)).toDF("k", "status", "amount"), "k", "status")
     Snapshots.commitDelete(spark, dir, col("k") === 5L)
     val cdf = Snapshots.changeFeed(spark, dir, "v00000001", "v00000003", "k")

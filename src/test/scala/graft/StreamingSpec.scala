@@ -378,7 +378,7 @@ class StreamingSpec extends SparkSpec {
       val pinned = Snapshots.currentVersion(spark, table).get
       // an EXTERNAL batch writer lands between micro-batches — the
       // stream's next merge must build on it, not lose it
-      Snapshots.commitMergePartitioned(spark, table,
+      Snapshots.commitMerge(spark, table,
         Seq((9L, "C", 9.0)).toDF("id", "part", "v"), "id", "part")
       source.addData((1L, "A", 10.0), (3L, "A", 3.0))
       q.processAllAvailable()
@@ -478,6 +478,25 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
+  test("merge sink: a first batch with a NULL partition value fails the query loudly") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = SparkSpec.tempDir("graft_msink_null").toString
+    val table = s"$dir/t"
+    val source = MemoryStream[(Long, Option[String], Double)]
+    val events = source.toDF().toDF("id", "part", "v")
+    val q = EventStreams.mergeSink(events, table, "id", "part")
+      .option("checkpointLocation", s"$dir/ckpt").start()
+    try {
+      source.addData((1L, Some("A"), 1.0), (2L, None, 2.0))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("NULL or empty part")), e)
+      assert(!new java.io.File(table).exists(), "the failed batch wrote a table")
+    } finally q.stop()
+  }
+
   test("trending top-k sink emits finalized windows once, overwrite-idempotent") {
     implicit val sqlCtx = spark.sqlContext
     val dir = SparkSpec.tempDir("graft_trend").toString
@@ -534,7 +553,7 @@ class StreamingSpec extends SparkSpec {
       source.addData((1L, 1L, 5.0), (2L, 2L, 6.0))
       q.processAllAvailable()
       // dimension advances between batches: user 1 moves to platinum
-      graft.sources.Snapshots.commitUpsert(spark, dimDir,
+      graft.sources.Snapshots.commitMerge(spark, dimDir,
         Seq((1L, "platinum")).toDF("user_id", "segment"), "user_id")
       source.addData((3L, 1L, 7.0), (4L, 9L, 8.0)) // 9 = unknown key
       q.processAllAvailable()

@@ -180,7 +180,7 @@ class TablesParquetSpec extends SparkSpec {
     val dir = SparkSpec.tempDir("graft_tables_snap").toString
     Snapshots.commitOverwrite(spark, dir,
       Seq((1L, "F", 10.0), (3L, "O", 30.0), (5L, "P", 50.0)).toDF("k", "status", "amount"), partCol = "status")
-    val v2 = Snapshots.commitMergePartitioned(spark, dir,
+    val v2 = Snapshots.commitMerge(spark, dir,
       Seq((1L, "F", 11.0, "updated")).toDF("k", "status", "amount", "note"), "k", "status")
     val m = Snapshots.readManifest(spark, dir, v2)
     val owners = m.partitions.groupBy(_._2)

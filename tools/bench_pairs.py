@@ -21,8 +21,12 @@ declares:
     metric's bound. A spread above the bound makes the metric
     unresolved, whatever the medians say.
 
-Every run's values, failed operations and oracle result are printed as
-they arrive. A run that prints no result line stops the tool.
+Every run's values, timed-pass count, failed operations and oracle
+result are printed as they arrive. run.py takes `wall_s` as the median
+over however many timed passes fit its run, so a pair whose two sides
+timed a different number of passes compares unlike medians: its change
+line ends in `PASSES DIFFER`, and the summary counts such pairs. A run
+that prints no result line stops the tool.
 
 After the timed pairs it makes one traced run per side
 (`--trace 1`, the first seed, parent first) and prints their
@@ -44,25 +48,23 @@ JOB_COUNTS = ["exec.jobs", "exec.stages", "exec.tasks", "op.build_jobs"]
 
 
 def run_once(checkout, workload, seed, trace=0):
-    """One benchmark run; returns its parsed result line and its stdout."""
+    """One benchmark run; returns its parsed result line and the metrics
+    of run.py's full result file (which also carry `passes`)."""
     cmd = ["python3", "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                        text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
-    if not lines:
-        sys.exit(f"no result line from {checkout} (seed {seed}, exit {p.returncode})")
-    return json.loads(lines[-1]), p.stdout
+    files = [l.split("full result:", 1)[1].strip() for l in p.stdout.splitlines()
+             if "full result:" in l]
+    if not lines or not files:
+        sys.exit(f"no result from {checkout} (seed {seed}, trace {trace}, exit {p.returncode})")
+    return json.loads(lines[-1]), json.loads((Path(checkout) / files[-1]).read_text())["metrics"]
 
 
 def job_counts(checkout, workload, seed):
     """One traced run; its job counts, read from run.py's full result file."""
-    _, out = run_once(checkout, workload, seed, trace=1)
-    files = [l.split("full result:", 1)[1].strip() for l in out.splitlines()
-             if "full result:" in l]
-    if not files:
-        sys.exit(f"no full result file from the traced run in {checkout} (seed {seed})")
-    metrics = json.loads((Path(checkout) / files[-1]).read_text())["metrics"]
+    _, metrics = run_once(checkout, workload, seed, trace=1)
     return {k: v for k, v in metrics.items()
             if k in JOB_COUNTS or (k.startswith("callsite.") and k.endswith(".jobs"))}
 
@@ -111,13 +113,19 @@ def main():
     runs = []
     for seed in range(a.first_seed, a.first_seed + a.pairs):
         order = ["parent", "change"] if seed % 2 else ["change", "parent"]
-        got = {side: run_once(getattr(a, side), a.workload, seed)[0] for side in order}
+        got = {}
+        for side in order:
+            r, full = run_once(getattr(a, side), a.workload, seed)
+            got[side] = {**r, "passes": int(full["passes"])}
         runs.append((seed, got["parent"], got["change"]))
+        differ = got["parent"]["passes"] != got["change"]["passes"]
         for side in ("parent", "change"):
             r = got[side]
             vals = " ".join(f"{n}={r['metrics'][n]['value']:.3f}" for n in names)
-            print(f"seed {seed:3d} {side:6s} {vals} failed={r['failed']}/{r['attempted']} "
-                  f"correct={r['correct']}", flush=True)
+            mark = "  PASSES DIFFER" if differ and side == "change" else ""
+            print(f"seed {seed:3d} {side:6s} {vals} passes={r['passes']} "
+                  f"failed={r['failed']}/{r['attempted']} correct={r['correct']}{mark}",
+                  flush=True)
 
     summary = summarize(metrics, runs)
     print(f"\n{a.workload}: {len(runs)} pairs, seeds {a.first_seed}-{a.first_seed + a.pairs - 1}, "
@@ -133,6 +141,8 @@ def main():
     failed = [(seed, side) for seed, p, c in runs for side, r in (("parent", p), ("change", c))
               if r["failed"] or not r["correct"]]
     print(f"runs with failed operations or a failed oracle: {failed or 'none'}")
+    differ = [seed for seed, p, c in runs if p["passes"] != c["passes"]]
+    print(f"pairs whose sides timed a different number of passes: {differ or 'none'}")
 
     counts = {side: job_counts(getattr(a, side), a.workload, a.first_seed)
               for side in ("parent", "change")}
