@@ -178,15 +178,23 @@ object Sinks {
       throw new IOException(s"recoverSwap: failed to restore $old to $target")
   }
 
-  /** Compact a parquet directory to ~`targetMb` files: read, coalesce
-    * to ceil(bytes/target) partitions (coalesce, not repartition — no
+  /** Target size of one compacted file: 128 MB. */
+  private[graft] val CompactedFileBytes: Long = 128L << 20
+
+  /** The number of files a compaction writes `bytes` of data into:
+    * ceil(bytes / [[CompactedFileBytes]]), at least one. The one
+    * sizing rule of [[compact]] and [[Snapshots.compact]]. */
+  private[graft] def compactedFileCount(bytes: Long): Int =
+    math.max(1L, (bytes + CompactedFileBytes - 1) / CompactedFileBytes).toInt
+
+  /** Compact a parquet directory to ~128 MB files: read, coalesce to
+    * [[compactedFileCount]] partitions (coalesce, not repartition — no
     * shuffle), swap in atomically via [[atomicOverwrite]]. */
-  def compact(spark: SparkSession, path: String, targetMb: Int = 128): Long = {
+  def compact(spark: SparkSession, path: String): Long = {
     val hadoopPath = new Path(path)
     val fs = fsOf(spark, hadoopPath)
     recoverSwap(fs, hadoopPath)
-    val bytes = fs.getContentSummary(hadoopPath).getLength
-    val parts = math.max(1, math.ceil(bytes.toDouble / (targetMb.toLong << 20)).toInt)
+    val parts = compactedFileCount(fs.getContentSummary(hadoopPath).getLength)
     atomicOverwrite(spark, Tables.parquet(spark, Seq(path)).coalesce(parts), path)
     parts.toLong
   }

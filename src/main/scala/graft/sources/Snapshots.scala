@@ -85,6 +85,15 @@ class SnapshotWriteConflictException(msg: String)
   * the transform they apply; one rewrite path republishes those in
   * the manifest's own layout, schema and tracked stats columns.
   *
+  * Read path: every read of a committed version's rows — plain and
+  * time-travel reads, min/max- and bitmap-pruned reads, rewrite and
+  * merge slices, the moved-key and OCC key scans, pruned diffs — goes
+  * through one reader, [[readRows]]: it takes table-root-relative
+  * paths (a data dir, partition dirs or single files, as listed by
+  * [[liveFiles]]), reads each owning dir's group with that dir as
+  * `basePath`, applies the owner's deletion vectors, unions the
+  * groups and conforms the result to the declared schema.
+  *
   * Concurrency contract:
   *   - readers: unlimited; a reader resolves the max `_commits` entry
   *     once and then reads immutable dirs — it can never observe a
@@ -187,15 +196,23 @@ object Snapshots {
 
   /** All published version names, ascending (bounded by [[vacuum]]
     * retention). */
-  private[graft] def listVersions(spark: SparkSession, tableDir: String): Seq[String] = {
+  private[graft] def listVersions(spark: SparkSession, tableDir: String): Seq[String] =
+    versionsWithMtime(spark, tableDir).map(_._1)
+
+  /** Every published version with its commit instant, ascending: one
+    * listing of `_commits`. A version's commit instant is its manifest
+    * file's modification time: the create-exclusive publish is the
+    * single atomic commit point, so the file's mtime IS the publish
+    * time (set by the filesystem, not the writer — consistent even
+    * across writers with skewed clocks). */
+  private def versionsWithMtime(spark: SparkSession, tableDir: String): Seq[(String, Long)] = {
     val dir = new Path(tableDir, CommitDir)
     val fs = fsOf(spark, dir)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq
-      .filter(_.isFile)
-      .map(_.getPath.getName)
-      .collect { case n @ VersionRe(_) => n }
-      .sorted
+      .collect { case st if st.isFile && VersionRe.matches(st.getPath.getName) =>
+        st.getPath.getName -> st.getModificationTime }
+      .sortBy(_._1)
   }
 
   /** Read the live snapshot. Fails with a clear message when the table
@@ -212,36 +229,112 @@ object Snapshots {
   }
 
   /** The rows of manifest `m` in partitions `values` — every row of a
-    * whole-table manifest, which ignores `values` — with deletion
-    * vectors applied, conformed to the declared schema (stable column
-    * order, typed NULLs for columns that postdate a dir's files). None
-    * when no listed partition is live. */
+    * whole-table manifest, which ignores `values` — read by
+    * [[readRows]]. None when no listed partition is live. */
   private def readSlice(spark: SparkSession, tableDir: String, m: Manifest,
-                        values: Seq[String]): Option[DataFrame] = {
-    val raw = m.dataDir match {
-      case Some(dd) => Some(applyDv(spark, new Path(tableDir), m, dd,
-        Tables.parquet(spark, Seq(new Path(tableDir, dd).toString))))
-      case None => readPartitionsSubset(spark, tableDir, m, values)
+                        values: Seq[String]): Option[DataFrame] =
+    readRows(spark, tableDir, m, sliceDirs(m, values))
+
+  /** A zero-row frame with the rows' schema of manifest `m`. */
+  private def noRows(spark: SparkSession, tableDir: String, m: Manifest): DataFrame =
+    readSlice(spark, tableDir, m, m.partitions.map(_._1)).get.filter(lit(false))
+
+  /** The dirs, relative to the table root, that hold partitions
+    * `values` of `m` — the data dir of a whole-table manifest, which
+    * ignores `values`. Partitions that are not live are skipped. */
+  private def sliceDirs(m: Manifest, values: Seq[String]): Seq[String] =
+    m.dataDir match {
+      case Some(dd) => Seq(dd)
+      case None =>
+        val owned = m.partitions.toMap
+        values.filter(owned.contains).map(v => s"${owned(v)}/${partDirName(m.partCol, v)}")
     }
-    raw.map(r => manifestSchema(m).map(alignTo(r, _)).getOrElse(r))
+
+  /** The one file lister: the data files of partitions `values` of `m`
+    * (of the whole version for a whole-table manifest, as
+    * [[sliceDirs]]), relative to the table root, with their lengths.
+    * Driver-side listing only — no Spark job. */
+  private def liveFiles(spark: SparkSession, tableDir: String, m: Manifest,
+                        values: Seq[String]): Seq[(String, Long)] = {
+    val root = new Path(tableDir)
+    val fs = fsOf(spark, root)
+    val qualifiedRoot = fs.makeQualified(root).toString
+    sliceDirs(m, values).map(new Path(root, _)).filter(fs.exists).flatMap { dir =>
+      val it = fs.listFiles(dir, true)
+      val b = Seq.newBuilder[(String, Long)]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isFile && st.getPath.getName.endsWith(".parquet"))
+          b += fs.makeQualified(st.getPath).toString
+            .stripPrefix(qualifiedRoot).stripPrefix("/") -> st.getLen
+      }
+      b.result()
+    }
   }
 
-  /** The latest version committed at or before `tsMillis` — the
-    * `TIMESTAMP AS OF` analog. A version's commit instant is its
-    * manifest file's modification time: the create-exclusive rename
-    * that published it is the single atomic commit point, so the
-    * file's mtime IS the publish time (set by the filesystem, not
-    * the writer — consistent even across writers with skewed
-    * clocks). */
-  def versionAt(spark: SparkSession, tableDir: String, tsMillis: Long): Option[String] = {
-    val commits = new Path(tableDir, CommitDir)
-    val fs = fsOf(spark, commits)
-    if (!fs.exists(commits)) None
-    else fs.listStatus(commits).toSeq.filter(_.isFile)
-      .collect { case st if VersionRe.matches(st.getPath.getName) &&
-          st.getModificationTime <= tsMillis => st.getPath.getName }
-      .sorted.lastOption
+  /** The one reader of committed rows: `paths` of manifest `m`,
+    * relative to the table root (a data dir, partition dirs or single
+    * files), grouped by owning data dir. Each group is read with its
+    * owner as `basePath`, so partition-column inference matches an
+    * unpruned read, and gets that owner's deletion vectors; the groups
+    * are unioned and conformed to the declared schema (stable column
+    * order, typed NULLs for columns that postdate a dir's files).
+    * Owners resolve against the manifest's dir set, so clone-borrowed
+    * absolute dirs resolve too. None when `paths` is empty. */
+  private def readRows(spark: SparkSession, tableDir: String, m: Manifest,
+                       paths: Seq[String]): Option[DataFrame] =
+    if (paths.isEmpty) None
+    else {
+      val root = new Path(tableDir)
+      val dirs = referencedDirs(m)
+      def ownerOf(p: String): String =
+        dirs.find(d => p == d || p.startsWith(d + "/")).getOrElse(p.takeWhile(_ != '/'))
+      // allowMissingColumns: after an add-column evolution, dirs that
+      // predate the new column union with NULLs for it
+      val raw = paths.groupBy(ownerOf).map { case (owner, ps) =>
+        applyDv(spark, root, m, owner, Tables.parquet(spark,
+          ps.map(new Path(root, _).toString), Map("basePath" -> new Path(root, owner).toString)))
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+      Some(manifestSchema(m).map(alignTo(raw, _)).getOrElse(raw))
+    }
+
+  /** Anti-join away the deletion-vector keys targeting rows that were
+    * read from `owner`'s files. DVs are scoped to the data dir that
+    * existed when the delete committed, so a later re-insert of the
+    * same key — which lands in a NEW dir — is never masked (the
+    * reason Delta/Iceberg DVs are file-scoped). The key frames are
+    * delete-sized; Catalyst broadcasts them against the corpus side. */
+  private def applyDv(spark: SparkSession, root: Path, m: Manifest,
+                      owner: String, df: DataFrame): DataFrame = {
+    val hits = m.dvs.filter(_._2 == owner).map(_._1).distinct
+    if (hits.isEmpty) df
+    else {
+      val keys = hits.map(dv => Tables.parquet(spark, Seq(new Path(root, dv).toString)))
+        .reduce(_.unionByName(_)).select(col(m.dvKey)).distinct()
+      df.join(keys, Seq(m.dvKey), "left_anti")
+    }
   }
+
+  /** The files among `files` whose recorded range of every `(col, lo,
+    * hi)` in `ranges` intersects it — the min/max data-skipping
+    * selection. A file with no stat entry for a column survives that
+    * range (conservative), and so does one whose manifest range fails
+    * to parse (a hand-edited manifest must fail OPEN, never fail the
+    * read). */
+  private def filterByStats(m: Manifest, files: Seq[String],
+                            ranges: Seq[(String, BigDecimal, BigDecimal)]): Seq[String] =
+    ranges.foldLeft(files) { case (fs, (c, lower, upper)) =>
+      val stats = m.stats.filter(_.col == c).map(s => s.relPath -> s).toMap
+      fs.filter(rel => stats.get(rel).forall(s =>
+        scala.util.Try(BigDecimal(s.min) <= upper && BigDecimal(s.max) >= lower)
+          .getOrElse(true)))
+    }
+
+  /** The latest version committed at or before `tsMillis` — the
+    * `TIMESTAMP AS OF` analog (commit instant = manifest mtime, see
+    * [[versionsWithMtime]]). */
+  def versionAt(spark: SparkSession, tableDir: String, tsMillis: Long): Option[String] =
+    versionsWithMtime(spark, tableDir).filter(_._2 <= tsMillis).lastOption.map(_._1)
 
   /** Time travel by timestamp: read the snapshot as of `tsMillis`.
     * Fails loudly when no version existed yet (or the ones that did
@@ -260,11 +353,8 @@ object Snapshots {
     * are opened. */
   def history(spark: SparkSession, tableDir: String): DataFrame = {
     import spark.implicits._
-    val commits = new Path(tableDir, CommitDir)
-    val fs = fsOf(spark, commits)
-    listVersions(spark, tableDir).map { v =>
+    versionsWithMtime(spark, tableDir).map { case (v, mtime) =>
       val m = readManifest(spark, tableDir, v)
-      val mtime = fs.getFileStatus(new Path(commits, v)).getModificationTime
       (v, new java.sql.Timestamp(mtime),
         if (m.dataDir.isDefined) "whole-table" else s"partitioned:${m.partCol}",
         m.partitions.size.toLong,
@@ -324,6 +414,15 @@ object Snapshots {
   /** The data dirs a manifest reads (deletion-vector dirs excluded). */
   private def referencedDirs(m: Manifest): Seq[String] =
     (m.dataDir.toSeq ++ m.partitions.map(_._2)).distinct
+
+  /** Every dir the given versions of the table reference: the data
+    * dirs they read and their deletion-vector dirs. */
+  private def dirsOf(spark: SparkSession, tableDir: String,
+                     versions: Seq[String]): Set[String] =
+    versions.flatMap { v =>
+      val m = readManifest(spark, tableDir, v)
+      referencedDirs(m) ++ m.dvs.map(_._1)
+    }.toSet
 
   private def manifestSchema(m: Manifest): Option[org.apache.spark.sql.types.StructType] =
     m.schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
@@ -586,8 +685,7 @@ object Snapshots {
     // compaction writes a NEW dir, so compacting restored
     // pre-constraint data re-validates — drop the check first if that
     // is intended
-    val prevDirs: Set[String] = listVersions(spark, tableDir)
-      .flatMap(v => referencedDirs(readManifest(spark, tableDir, v))).toSet
+    val prevDirs = dirsOf(spark, tableDir, listVersions(spark, tableDir))
     val newDirs = referencedDirs(manifest).filterNot(prevDirs.contains)
     newDirs.foreach { dd =>
       val df = Tables.parquet(spark, Seq(new Path(tableDir, dd).toString))
@@ -697,44 +795,6 @@ object Snapshots {
     delta.select((declared ++ added).toSeq: _*)
   }
 
-  /** Anti-join away the deletion-vector keys targeting rows that were
-    * read from `owner`'s files. DVs are scoped to the data dir that
-    * existed when the delete committed, so a later re-insert of the
-    * same key — which lands in a NEW dir — is never masked (the
-    * reason Delta/Iceberg DVs are file-scoped). The key frames are
-    * delete-sized; Catalyst broadcasts them against the corpus side. */
-  private def applyDv(spark: SparkSession, root: Path, m: Manifest,
-                      owner: String, df: DataFrame): DataFrame = {
-    val hits = m.dvs.filter(_._2 == owner).map(_._1).distinct
-    if (hits.isEmpty) df
-    else {
-      val keys = hits.map(dv => Tables.parquet(spark, Seq(new Path(root, dv).toString)))
-        .reduce(_.unionByName(_)).select(col(m.dvKey)).distinct()
-      df.join(keys, Seq(m.dvKey), "left_anti")
-    }
-  }
-
-  /** Read a subset of a partitioned version's partitions from their
-    * owning data dirs (partition pruning by construction — only those
-    * dirs' partition subdirectories are ever listed), with each
-    * owner's deletion vectors applied. */
-  private def readPartitionsSubset(spark: SparkSession, tableDir: String,
-                                   m: Manifest,
-                                   values: Seq[String]): Option[DataFrame] = {
-    val owned = m.partitions.toMap
-    val present = values.filter(owned.contains)
-    if (present.isEmpty) None else Some(
-      present.groupBy(owned).map { case (ownerDir, vls) =>
-        val ownerPath = new Path(new Path(tableDir), ownerDir)
-        val paths = vls.map(vl =>
-          new Path(ownerPath, partDirName(m.partCol, vl)).toString)
-        applyDv(spark, new Path(tableDir), m, ownerDir,
-          Tables.parquet(spark, paths, Map("basePath" -> ownerPath.toString)))
-        // allowMissingColumns: after an add-column evolution, dirs that
-        // predate the new column union with NULLs for it
-      }.reduce(_.unionByName(_, allowMissingColumns = true)))
-  }
-
   /** MERGE `delta` into the live snapshot by `key` (INSERT … ON
     * CONFLICT DO UPDATE) and publish the result as a new version, in
     * the table's own layout: `partCol` must name the live version's
@@ -792,22 +852,17 @@ object Snapshots {
         // with some delta row, so its file's [min,max] necessarily
         // contains a value inside [delta min, delta max] — a pruned
         // file cannot hold a moved key.
-        val keyStats = m.stats.filter(_.col == key).map(s => s.relPath -> s).toMap
-        val untouchedScan: Option[DataFrame] =
+        val keyRanges: Option[Seq[(String, BigDecimal, BigDecimal)]] =
           if (untouchedVals.isEmpty) None
-          else if (keyStats.isEmpty)
-            readPartitionsSubset(spark, tableDir, m, untouchedVals)
+          else if (!m.stats.exists(_.col == key)) Some(Nil)
           else {
             val b = delta.agg(min(col(key)).cast("string"), max(col(key)).cast("string")).head
-            if (b.isNullAt(0)) None // no non-null delta keys → nothing can move
-            else {
-              val files = filterByStats(keyStats,
-                partitionFilesRel(spark, tableDir, m, untouchedVals),
-                BigDecimal(b.getString(0)), BigDecimal(b.getString(1)))
-              if (files.isEmpty) None
-              else Some(readFilesByOwner(spark, new Path(tableDir), m, files))
-            }
+            // no non-null delta keys → nothing can move
+            if (b.isNullAt(0)) None
+            else Some(Seq((key, BigDecimal(b.getString(0)), BigDecimal(b.getString(1)))))
           }
+        val untouchedScan = keyRanges.flatMap(r => readRows(spark, tableDir, m,
+          filterByStats(m, liveFiles(spark, tableDir, m, untouchedVals).map(_._1), r)))
         val movedParts = untouchedScan.fold(Seq.empty[String])(
           graft.etl.Dims.movedPartitions(_, delta, key, partCol))
         val touched = (touchedRaw ++ movedParts).distinct.sorted
@@ -909,8 +964,7 @@ object Snapshots {
           // key-level read-set check: a delta key now living in a
           // partition the winner changed means the winner wrote rows
           // this merge would delete-and-reinsert — order matters
-          val keyHits = readPartitionsSubset(spark, tableDir, mN,
-            changed.filter(mN.partitions.toMap.contains)) match {
+          val keyHits = readSlice(spark, tableDir, mN, changed) match {
             case None => 0L
             case Some(ch) => ch.select(col(key))
               .join(broadcast(delta.select(col(key)).distinct()), Seq(key), "left_semi")
@@ -1179,15 +1233,20 @@ object Snapshots {
     * is pinned against [[vacuum]] for as long as any live partition
     * entry points at it. Compaction re-points every partition at a
     * single new dir, after which vacuum can reclaim the whole chain.
-    * Readers are untouched until the one-claim publish (same protocol
-    * as every commit); read-modify-write CAS semantics as
-    * [[commitMerge]] — a racing committer makes this throw, re-run.
-    * Returns the new version name. */
+    * The files are bin-packed too: the live rows are coalesced (no
+    * shuffle) to [[Sinks.compactedFileCount]] of the live files'
+    * bytes, so small files a merge chain left behind become one file
+    * per partition per 128 MB. Readers are untouched until the
+    * one-claim publish (same protocol as every commit);
+    * read-modify-write CAS semantics as [[commitMerge]] — a racing
+    * committer makes this throw, re-run. Returns the new version name. */
   def compact(spark: SparkSession, tableDir: String): String = {
     val v = liveVersion(spark, tableDir, "compact")
     val m = readManifest(spark, tableDir, v)
     // every partition is touched, so each one re-points at the new dir
-    rewrite(spark, tableDir, v, m, m.partitions.map(_._1))(identity)
+    val all = m.partitions.map(_._1)
+    val files = Sinks.compactedFileCount(liveFiles(spark, tableDir, m, all).map(_._2).sum)
+    rewrite(spark, tableDir, v, m, all)(_.coalesce(files))
   }
 
   /** OPTIMIZE ZORDER analog: consolidate the live version into one
@@ -1414,79 +1473,6 @@ object Snapshots {
       }
   }
 
-  /** List the parquet files under `p`, as paths relative to `root`. */
-  private def listParquetRel(fs: FileSystem, root: Path, p: Path): Seq[String] = {
-    if (!fs.exists(p)) return Nil
-    val qualifiedRoot = fs.makeQualified(root).toString
-    val it = fs.listFiles(p, true)
-    val b = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-        b += fs.makeQualified(st.getPath).toString
-          .stripPrefix(qualifiedRoot).stripPrefix("/")
-    }
-    b.result()
-  }
-
-  /** Data files of a subset of a partitioned version's partitions,
-    * relative to the table root. */
-  private def partitionFilesRel(spark: SparkSession, tableDir: String,
-                                m: Manifest, values: Seq[String]): Seq[String] = {
-    val root = new Path(tableDir)
-    val fs = fsOf(spark, root)
-    val owned = m.partitions.toMap
-    values.filter(owned.contains).flatMap { value =>
-      listParquetRel(fs, root,
-        new Path(new Path(root, owned(value)), partDirName(m.partCol, value)))
-    }
-  }
-
-  /** List every data file of a version, relative to the table root. */
-  private def versionFiles(spark: SparkSession, tableDir: String,
-                           m: Manifest): Seq[String] = {
-    val root = new Path(tableDir)
-    val fs = fsOf(spark, root)
-    m.dataDir match {
-      case Some(dd) => listParquetRel(fs, root, new Path(root, dd))
-      case None => partitionFilesRel(spark, tableDir, m, m.partitions.map(_._1))
-    }
-  }
-
-  /** Keep the files whose recorded [min,max] for `statCol` intersects
-    * [lower, upper]; files with no entry survive (conservative). */
-  private def filterByStats(stats: Map[String, FileStat], files: Seq[String],
-                            lower: BigDecimal, upper: BigDecimal): Seq[String] =
-    files.filter { rel =>
-      stats.get(rel) match {
-        case Some(s) =>
-          // a manifest hand-edited into an unparseable range must fail
-          // OPEN (read the file), never fail the whole read
-          scala.util.Try(
-            BigDecimal(s.min) <= upper && BigDecimal(s.max) >= lower
-          ).getOrElse(true)
-        case None => true
-      }
-    }
-
-  /** Read a set of relative file paths grouped by their owning data
-    * dir, with basePath per owner so partition-column inference matches
-    * the unpruned read; each owner's deletion vectors applied. */
-  private def readFilesByOwner(spark: SparkSession, root: Path, m: Manifest,
-                               rels: Seq[String]): DataFrame = {
-    // resolve each file's owning dir against the manifest's dir set —
-    // clone-borrowed dirs are absolute URIs, so "first path segment"
-    // would misparse them
-    val dirs = referencedDirs(m)
-    def ownerOf(rel: String): String =
-      dirs.find(d => rel.startsWith(d + "/")).getOrElse(rel.takeWhile(_ != '/'))
-    rels.groupBy(ownerOf).map { case (owner, rs) =>
-      applyDv(spark, root, m, owner,
-        Tables.parquet(spark, rs.map(new Path(root, _).toString),
-          Map("basePath" -> new Path(root, owner).toString)))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
   /** Range read with manifest-level data skipping: return the rows of
     * `version` where `statCol` ∈ [lower, upper], reading ONLY the
     * files whose recorded [min,max] intersects the range (plus any
@@ -1500,15 +1486,18 @@ object Snapshots {
                         statCol: String, lower: BigDecimal, upper: BigDecimal): DataFrame =
     readVersionPrunedMulti(spark, tableDir, version, Seq((statCol, lower, upper)))
 
-  /** Conjunctive multi-column range read: rows where EVERY (col, lo,
-    * hi) holds, reading only files whose recorded range intersects
-    * every predicate's range. With a Z-ordered layout
-    * ([[compactZOrdered]]) each file covers a small rectangle in the
-    * clustered columns (within one partition, on a partitioned table),
-    * so a 2D box prunes on BOTH dimensions without materializing a
-    * curve key. Files lacking a stat for some column
-    * survive that predicate (conservative); the row filter applies
-    * inside survivors, so results equal the plain filtered read. */
+  /** Conjunctive multi-column range read: rows of `version` where
+    * EVERY (col, lo, hi) holds. [[filterByStats]] keeps the live files
+    * whose recorded range intersects every predicate's range (a file
+    * lacking a stat for some column survives that predicate; a version
+    * that tracks no stats reads every file), and [[readRows]] reads
+    * them with deletion vectors applied, conformed to the declared
+    * schema. The row filter applies inside the survivors, so results
+    * equal `readVersion(...).filter(...)` exactly. With a Z-ordered
+    * layout ([[compactZOrdered]]) each file covers a small rectangle
+    * in the clustered columns (within one partition, on a partitioned
+    * table), so a 2D box prunes on BOTH dimensions without
+    * materializing a curve key. */
   def readVersionPrunedMulti(spark: SparkSession, tableDir: String, version: String,
                              preds: Seq[(String, BigDecimal, BigDecimal)]): DataFrame = {
     require(preds.nonEmpty, "readVersionPrunedMulti: no predicates")
@@ -1517,27 +1506,18 @@ object Snapshots {
       col(c) >= lit(lo.underlying) && col(c) <= lit(hi.underlying)
     }.reduce(_ && _)
     if (m.stats.isEmpty) return readVersion(spark, tableDir, version).filter(predicate)
-    val selected = preds.foldLeft(versionFiles(spark, tableDir, m)) {
-      case (files, (c, lo, hi)) =>
-        val colStats = m.stats.filter(_.col == c).map(s => s.relPath -> s).toMap
-        filterByStats(colStats, files, lo, hi)
-    }
-    readSelected(spark, tableDir, version, m, selected, predicate)
+    readSelected(spark, tableDir, m, filterByStats(m,
+      liveFiles(spark, tableDir, m, m.partitions.map(_._1)).map(_._1), preds), predicate)
   }
 
-  /** The tail of every file-pruned read: the `selected` files of
-    * `version` (relative to the table root) with deletion vectors
-    * applied, conformed to the declared schema and filtered by the
-    * row-level `predicate`. No file selected → an empty frame with the
-    * version's schema. */
-  private def readSelected(spark: SparkSession, tableDir: String, version: String,
-                           m: Manifest, selected: Seq[String],
-                           predicate: Column): DataFrame = {
-    if (selected.isEmpty)
-      return readVersion(spark, tableDir, version).filter(lit(false)).filter(predicate)
-    val raw = readFilesByOwner(spark, new Path(tableDir), m, selected)
-    manifestSchema(m).map(alignTo(raw, _)).getOrElse(raw).filter(predicate)
-  }
+  /** The tail of every file-pruned read: the `selected` files of `m`
+    * (relative to the table root) read by [[readRows]] and filtered by
+    * the row-level `predicate`. No file selected → an empty frame with
+    * the version's schema. */
+  private def readSelected(spark: SparkSession, tableDir: String, m: Manifest,
+                           selected: Seq[String], predicate: Column): DataFrame =
+    readRows(spark, tableDir, m, selected).getOrElse(noRows(spark, tableDir, m))
+      .filter(predicate)
 
   /** The files of `m` a key-set lookup must open: those whose
     * membership bitmap for `keyCol` has ANY probed key's bucket bit
@@ -1560,9 +1540,11 @@ object Snapshots {
   }
 
   /** Point/key-set lookup with bitmap file skipping: rows of
-    * `version` where `keyCol` ∈ `keys`, opening ONLY the files whose
-    * per-file membership bitmap ([[BitmapStatPrefix]] stat) hits a
-    * probed bucket. Unlike [[readVersionPruned]]'s min/max ranges,
+    * `version` where `keyCol` ∈ `keys`, opening ONLY the live files
+    * whose per-file membership bitmap ([[BitmapStatPrefix]] stat) hits
+    * a probed bucket, plus files with no bitmap line; [[readRows]]
+    * reads them with deletion vectors applied, conformed to the
+    * declared schema. Unlike [[readVersionPruned]]'s min/max ranges,
     * this skips under ANY physical layout — hash-distributed keys
     * included — because membership, not ordering, is what's indexed.
     * The row filter still applies inside survivors, so the result
@@ -1591,8 +1573,9 @@ object Snapshots {
     }
     val selected =
       if (probeStrings.isEmpty) Nil
-      else bitmapSelectedFiles(m, versionFiles(spark, tableDir, m), keyCol, probeStrings)
-    readSelected(spark, tableDir, version, m, selected, predicate)
+      else bitmapSelectedFiles(m,
+        liveFiles(spark, tableDir, m, m.partitions.map(_._1)).map(_._1), keyCol, probeStrings)
+    readSelected(spark, tableDir, m, selected, predicate)
   }
 
   // ------------------------------------------------ write-audit-publish
@@ -1642,14 +1625,35 @@ object Snapshots {
   def abandonStaged(spark: SparkSession, tableDir: String, staged: String): Unit = {
     require(staged.startsWith("d-"),
       s"Snapshots.abandonStaged: '$staged' is not a staged data dir name")
-    val referenced = listVersions(spark, tableDir).flatMap { v =>
-      val m = readManifest(spark, tableDir, v)
-      referencedDirs(m) ++ m.dvs.map(_._1)
-    }.toSet
-    require(!referenced.contains(staged),
+    require(!dirsOf(spark, tableDir, listVersions(spark, tableDir)).contains(staged),
       s"Snapshots.abandonStaged: $staged is referenced by a published version")
     fsOf(spark, new Path(tableDir)).delete(new Path(new Path(tableDir), staged), true)
   }
+
+  /** The stat lines of column `c` in `version` (manifest `m`), per
+    * live partition — a whole-table version is the one partition "" —
+    * after the guard every manifest-only aggregate shares: `c` must be
+    * tracked, and no deletion vector may be pending (its rows are still
+    * physically in the files the stats describe; compact first). */
+  private def statsByPartition(op: String, version: String, m: Manifest,
+                               c: String): Seq[(String, Seq[FileStat])] = {
+    require(m.dvs.isEmpty, s"Snapshots.$op: pending deletion vectors make the " +
+      s"file stats of $version stale; compact (or read the data path) first")
+    val sts = m.stats.filter(_.col == c)
+    require(sts.nonEmpty, s"Snapshots.$op: version $version tracks no '$c' " +
+      "stats — commit with statsCols including it")
+    m.dataDir match {
+      case Some(_) => Seq("" -> sts)
+      case None => m.partitions.map { case (value, dd) =>
+        value -> sts.filter(statInPartition(_, value, dd)) }
+    }
+  }
+
+  /** Per-partition row counts of `version` from its [[RowCountCol]]
+    * stats (see [[statsByPartition]]). */
+  private def rowCounts(op: String, version: String, m: Manifest): Seq[(String, Long)] =
+    statsByPartition(op, version, m, RowCountCol)
+      .map { case (p, sts) => p -> sts.map(_.min.toLong).sum }
 
   /** COUNT(*) per partition from the MANIFEST alone — zero data files
     * opened. Requires the table to track [[RowCountCol]] stats and to
@@ -1666,21 +1670,8 @@ object Snapshots {
   def metadataRowCounts(spark: SparkSession, tableDir: String,
                         version: String): DataFrame = {
     import spark.implicits._
-    val m = readManifest(spark, tableDir, version)
-    require(m.dvs.isEmpty,
-      "Snapshots.metadataRowCounts: pending deletion vectors would make " +
-        "file counts overcount; compact (or read the data path) first")
-    val rows = m.stats.filter(_.col == RowCountCol)
-    require(rows.nonEmpty,
-      s"Snapshots.metadataRowCounts: version $version tracks no $RowCountCol " +
-        "stats — commit with statsCols including Snapshots.RowCountCol")
-    m.dataDir match {
-      case Some(_) =>
-        Seq(("", rows.map(s => s.min.toLong).sum)).toDF("partition", "n_rows")
-      case None =>
-        partitionRowCounts(m, rows).toDF("partition", "n_rows")
-          .orderBy(col("partition"))
-    }
+    rowCounts("metadataRowCounts", version, readManifest(spark, tableDir, version))
+      .toDF("partition", "n_rows").orderBy(col("partition"))
   }
 
   /** Does stat line `st` belong to partition `value` owned by data
@@ -1697,12 +1688,6 @@ object Snapshots {
       }
     }
 
-  private def partitionRowCounts(m: Manifest,
-                                 rows: Seq[FileStat]): Seq[(String, Long)] =
-    m.partitions.map { case (value, dd) =>
-      (value, rows.filter(statInPartition(_, value, dd)).map(_.min.toLong).sum)
-    }
-
   /** Manifest-only MIN/MAX per partition for a tracked stats column:
     * min of the per-file mins / max of the per-file maxes — the
     * Iceberg-style aggregate pushdown that answers a MIN/MAX query
@@ -1715,30 +1700,11 @@ object Snapshots {
   def metadataMinMax(spark: SparkSession, tableDir: String,
                      version: String, statCol: String): DataFrame = {
     import spark.implicits._
-    val m = readManifest(spark, tableDir, version)
-    require(m.dvs.isEmpty,
-      "Snapshots.metadataMinMax: pending deletion vectors could have " +
-        "removed the extreme row; compact (or read the data path) first")
-    val sts = m.stats.filter(_.col == statCol)
-    require(sts.nonEmpty,
-      s"Snapshots.metadataMinMax: version $version tracks no '$statCol' " +
-        "stats — commit with statsCols including it")
-    def roll(group: Seq[FileStat]): (Double, Double) =
-      (group.map(s => BigDecimal(s.min)).min.toDouble,
-        group.map(s => BigDecimal(s.max)).max.toDouble)
-    m.dataDir match {
-      case Some(_) =>
-        val (lo, hi) = roll(sts)
-        Seq(("", lo, hi)).toDF("partition", "min_v", "max_v")
-      case None =>
-        m.partitions.flatMap { case (value, dd) =>
-          val here = sts.filter(statInPartition(_, value, dd))
-          if (here.isEmpty) None else {
-            val (lo, hi) = roll(here)
-            Some((value, lo, hi))
-          }
-        }.toDF("partition", "min_v", "max_v").orderBy(col("partition"))
-    }
+    statsByPartition("metadataMinMax", version, readManifest(spark, tableDir, version),
+      statCol).collect { case (p, sts) if sts.nonEmpty =>
+        (p, sts.map(s => BigDecimal(s.min)).min.toDouble,
+          sts.map(s => BigDecimal(s.max)).max.toDouble)
+      }.toDF("partition", "min_v", "max_v").orderBy(col("partition"))
   }
 
   /** Partition-level drift between two retained versions, computed
@@ -1762,17 +1728,8 @@ object Snapshots {
     require(mo.dataDir.isEmpty && mn.dataDir.isEmpty && mo.partCol == mn.partCol,
       "Snapshots.metadataPartitionDrift: both versions must be partitioned " +
         "layouts over the same partition column")
-    require(mo.dvs.isEmpty && mn.dvs.isEmpty,
-      "Snapshots.metadataPartitionDrift: pending deletion vectors would make " +
-        "file counts overcount; compact first")
-    def rowsOf(m: Manifest): Seq[FileStat] = {
-      val r = m.stats.filter(_.col == RowCountCol)
-      require(r.nonEmpty,
-        s"Snapshots.metadataPartitionDrift: no $RowCountCol stats tracked")
-      r
-    }
-    val co = partitionRowCounts(mo, rowsOf(mo)).toMap
-    val cn = partitionRowCounts(mn, rowsOf(mn)).toMap
+    val co = rowCounts("metadataPartitionDrift", vOld, mo).toMap
+    val cn = rowCounts("metadataPartitionDrift", vNew, mn).toMap
     val dirO = mo.partitions.toMap
     val dirN = mn.partitions.toMap
     (co.keySet ++ cn.keySet).toSeq.sorted.map { p =>
@@ -1908,13 +1865,15 @@ object Snapshots {
     diffFrames(readVersion(spark, tableDir, vOld),
       readVersion(spark, tableDir, vNew), key)
 
-  /** As [[diffVersions]] but manifest-pruned: a partition whose entry
-    * names the SAME data dir in both manifests is byte-identical by
-    * construction (data dirs are immutable) and is skipped without
-    * reading a row. After a daily single-partition
-    * [[commitMerge]], diffing the two versions of a 100 TB
-    * table reads two copies of ONE partition — the manifest does the
-    * partition pruning that a naive diff would pay a full-table
+  /** As [[diffVersions]], with the same columns and payload field
+    * order, but manifest-pruned: a partition whose entry names the
+    * SAME data dir in both manifests, with the same deletion vectors
+    * targeting it, has the same rows by construction (data dirs are
+    * immutable) and is skipped without reading a row. Both versions
+    * must be partitioned on the same column. After a daily
+    * single-partition [[commitMerge]], diffing the two versions of a
+    * 100 TB table reads two copies of ONE partition — the manifest does
+    * the partition pruning that a naive diff would pay a full-table
     * full-outer join for. */
   def diffVersionsPartitioned(spark: SparkSession, tableDir: String, vOld: String,
                               vNew: String, key: String): DataFrame = {
@@ -1927,10 +1886,9 @@ object Snapshots {
     // deletion vectors targeting it; a DV delete between the versions
     // changes a partition's effective rows without re-pointing its dir
     val changed = changedPartitionsBetween(Some(mo), mn).get.sorted
-    def side(m: Manifest, version: String): DataFrame =
-      readPartitionsSubset(spark, tableDir, m, changed)
-        .getOrElse(readVersion(spark, tableDir, version).filter(lit(false))) // schema-only
-    diffFrames(side(mo, vOld), side(mn, vNew), key)
+    def side(m: Manifest): DataFrame =
+      readSlice(spark, tableDir, m, changed).getOrElse(noRows(spark, tableDir, m))
+    diffFrames(side(mo), side(mn), key)
   }
 
   private def diffFrames(o0: DataFrame, n0: DataFrame, key: String): DataFrame = {
@@ -1974,10 +1932,7 @@ object Snapshots {
     val kept = versions.takeRight(math.max(keep, 1))
     val doomed = versions.dropRight(math.max(keep, 1))
     doomed.foreach(v => fs.delete(new Path(new Path(tableDir, CommitDir), v), false))
-    val referenced: Set[String] = kept.flatMap { v =>
-      val m = readManifest(spark, tableDir, v)
-      referencedDirs(m) ++ m.dvs.map(_._1)
-    }.toSet
+    val referenced = dirsOf(spark, tableDir, kept)
     val cutoff = System.currentTimeMillis() - math.max(orphanGraceMs, 0L)
     if (fs.exists(dir)) fs.listStatus(dir).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("d-"))

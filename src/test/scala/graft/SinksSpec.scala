@@ -65,10 +65,17 @@ class SinksSpec extends SparkSpec {
     val before = new java.io.File(s"$dir/t").listFiles().count(_.getName.endsWith(".parquet"))
     assert(before >= 32)
     val rowsBefore = spark.read.parquet(s"$dir/t").count()
-    val parts = Sinks.compact(spark, s"$dir/t", targetMb = 128)
+    val parts = Sinks.compact(spark, s"$dir/t")
     val after = new java.io.File(s"$dir/t").listFiles().count(_.getName.endsWith(".parquet"))
     assert(after.toLong === parts && after < before)
     assert(spark.read.parquet(s"$dir/t").count() === rowsBefore)
+  }
+
+  test("compactedFileCount: one file up to 128 MB, a second one past it") {
+    val target = 128L << 20
+    assert(Sinks.compactedFileCount(0L) === 1)
+    assert(Sinks.compactedFileCount(target) === 1)
+    assert(Sinks.compactedFileCount(target + 1) === 2)
   }
 
   test("writePartitionedCounted: the in-flight observe count equals the read-back truth") {
@@ -112,7 +119,7 @@ class SinksSpec extends SparkSpec {
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/t"),
       new org.apache.hadoop.fs.Path(s"$dir/t._old")))
     spark.range(5).toDF("id").write.parquet(s"$dir/t._staging")
-    val parts = Sinks.compact(spark, s"$dir/t", targetMb = 128)
+    val parts = Sinks.compact(spark, s"$dir/t")
     assert(parts >= 1)
     assert(spark.read.parquet(s"$dir/t").count() === 1000L)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/t._old")))

@@ -231,14 +231,10 @@ class SnapshotManifestSpec extends SparkSpec {
       |partcol=p
       |part:A=D10
       |part:E=D10
-      |stat:_rows|1|1|D10/p=A/part-*.c000.snappy.parquet
-      |stat:_rows|1|1|D10/p=A/part-*.c000.snappy.parquet
-      |stat:_rows|1|1|D10/p=E/part-*.c000.snappy.parquet
-      |stat:_rows|1|1|D10/p=E/part-*.c000.snappy.parquet
-      |stat:k|1|1|D10/p=A/part-*.c000.snappy.parquet
-      |stat:k|4|4|D10/p=E/part-*.c000.snappy.parquet
-      |stat:k|5|5|D10/p=A/part-*.c000.snappy.parquet
-      |stat:k|7|7|D10/p=E/part-*.c000.snappy.parquet""")
+      |stat:_rows|2|2|D10/p=A/part-*.c000.snappy.parquet
+      |stat:_rows|2|2|D10/p=E/part-*.c000.snappy.parquet
+      |stat:k|1|5|D10/p=A/part-*.c000.snappy.parquet
+      |stat:k|4|7|D10/p=E/part-*.c000.snappy.parquet""")
     // Z-order compaction keeps the partitioned layout
     val v10 = Snapshots.compactZOrdered(spark, t, "k", "x", numFiles = 2)
     check(t, v10, s"""

@@ -17,8 +17,10 @@ class SnapshotsSpec extends SparkSpec {
   /** (relative path, length, mtime) of every data file under a table —
     * the byte-identity fingerprint for untouched-partition proofs. */
   private def fileStates(dir: String, prefix: String): Map[String, (Long, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val local = new org.apache.hadoop.fs.Path(dir)
+    val fs = local.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // qualified like the listed paths (file:/…), so the prefix strips
+    val root = fs.makeQualified(local)
     val it = fs.listFiles(root, true)
     val b = Map.newBuilder[String, (Long, Long)]
     while (it.hasNext) {
@@ -313,6 +315,27 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.read(spark, dir).orderBy("k")
       .select(col("k"), col("status"), col("amount"))
       .as[(Long, String, Double)].collect().toSeq === before)
+  }
+
+  test("compact bin-packs a merge chain's small files into one file per partition") {
+    val dir = freshDir()
+    Snapshots.commitOverwrite(spark, dir, Seq(
+      (1L, "F", 1.0), (2L, "O", 2.0)).toDF("k", "status", "amount"), partCol = "status")
+    // each merge writes F's surviving rows and its delta row as
+    // separate files
+    (1 to 3).foreach(i => Snapshots.commitMerge(spark, dir,
+      Seq((10L + i, "F", i.toDouble)).toDF("k", "status", "amount"), "k", "status"))
+    def filesPerPartition(v: String): Map[String, Int] =
+      Snapshots.readManifest(spark, dir, v).partitions.map { case (p, dd) =>
+        p -> fileStates(dir, s"$dd/status=$p/").size }.toMap
+    def rows() = Snapshots.read(spark, dir).orderBy("k")
+      .select(col("k"), col("status"), col("amount"))
+      .as[(Long, String, Double)].collect().toSeq
+    assert(filesPerPartition(Snapshots.currentVersion(spark, dir).get)("F") > 1)
+    val before = rows()
+    val cv = Snapshots.compact(spark, dir)
+    assert(filesPerPartition(cv) === Map("F" -> 1, "O" -> 1))
+    assert(rows() === before)
   }
 
   test("cross-partition key move: stale row is deleted, key never duplicated") {
@@ -643,6 +666,12 @@ class SnapshotsSpec extends SparkSpec {
     val naive = Snapshots.diffVersions(spark, dir, "v00000001", v2, "k")
       .select(col("k"), col("change")).as[(Long, String)].collect().toMap
     assert(naive === Map(1L -> "changed", 2L -> "added", 3L -> "unchanged"))
+    // both diffs carry their payload structs in the same field order,
+    // though the partition column `status` is declared mid-schema
+    def payload(d: org.apache.spark.sql.DataFrame) =
+      Seq("_old", "_new").map(s => d.select(col(s"$s.*")).columns.toSeq)
+    assert(payload(Snapshots.diffVersionsPartitioned(spark, dir, "v00000001", v2, "k"))
+      === payload(Snapshots.diffVersions(spark, dir, "v00000001", v2, "k")))
   }
 
   test("add-column evolution on whole-table upsert commits") {
